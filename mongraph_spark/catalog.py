@@ -301,13 +301,5 @@ class MutableCatalog(GraphStore):
             raise ValueError(
                 f"collection {collection!r} needs an explicit schema to derive a DataFrame"
             )
-        rows = [tuple(_extract_path(d, f.name) for f in schema.fields) for d in docs]
+        rows = [tuple(d.get(f.name) for f in schema.fields) for d in docs]
         return self.spark.createDataFrame(rows, schema=schema)
-
-
-def _extract_path(doc: dict[str, Any], field: str) -> Any:
-    """Fetch a possibly-nested value; nested struct fields come back as dicts."""
-    val = doc.get(field)
-    if isinstance(val, dict):
-        return val
-    return val

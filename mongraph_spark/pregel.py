@@ -67,36 +67,25 @@ def _release_blocks(df: DataFrame) -> None:
     its RDD.  Only ever called on states the loop itself created and
     that nothing downstream can reference (the returned final state is
     never released).  Best-effort: any reflection surprise degrades to
-    the old keep-until-GC behavior."""
+    the old keep-until-GC behavior.
+
+    MapPartitionsRDD WARNs on every such release ("locally checkpointed
+    … cannot be recomputed after unpersisting"), which is exactly the
+    intended behavior here, so its logger is raised to ERROR for the
+    ``unpersist`` call only and restored afterwards; the warning stays
+    live for every other caller in the session."""
     try:
-        _quiet_unpersist_warning(df.sparkSession)
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        jvm = df.sparkSession.sparkContext._jvm
+        log4j = jvm.org.apache.logging.log4j
+        name = "org.apache.spark.rdd.MapPartitionsRDD"
+        before = log4j.LogManager.getLogger(name).getLevel()
+        log4j.core.config.Configurator.setLevel(name, log4j.Level.ERROR)
+        try:
+            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        finally:
+            log4j.core.config.Configurator.setLevel(name, before)
     except Exception:
         pass
-
-
-_QUIETED_SESSIONS: set[int] = set()
-
-
-def _quiet_unpersist_warning(spark) -> None:
-    """Mute MapPartitionsRDD's per-release WARN ("locally checkpointed …
-    cannot be recomputed after unpersisting") — that is exactly the
-    intended behavior here (the released state is dead by the loop
-    contract), and a 12-round loop would otherwise emit 12 warning lines
-    per query into any session's logs, the evaluation driver's vanilla
-    one included.  Scoped to that single class; set once per session."""
-    key = id(spark)
-    if key in _QUIETED_SESSIONS:
-        return
-    try:
-        jvm = spark.sparkContext._jvm
-        jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
-            "org.apache.spark.rdd.MapPartitionsRDD",
-            jvm.org.apache.logging.log4j.Level.ERROR,
-        )
-    except Exception:
-        pass
-    _QUIETED_SESSIONS.add(key)
 
 
 def iterate(

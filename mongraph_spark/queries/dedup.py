@@ -140,19 +140,6 @@ N_HASHES = 12
 N_BANDS = 4  # 3 rows per band
 
 
-_HEX = "0123456789abcdef"
-
-
-def _hex_permutation(i: int) -> str:
-    """Deterministic alphabet permutation for seed ``i`` (pure function of
-    the seed — identical in the Spark plan and the generated oracle SQL)."""
-    import hashlib
-
-    return "".join(
-        sorted(_HEX, key=lambda c: hashlib.md5(f"{i}:{c}".encode()).hexdigest())
-    )
-
-
 def _minhash_sig(shingles_col: str) -> list[Column]:
     """k independent min-hashes: lexicographic min of seeded md5 hex digests.
     String order statistics are engine-portable (no integer conversion).
@@ -1940,9 +1927,9 @@ def semdedup_report(
     spark: SparkSession, sf_dir: str, seed_ids: list[int]
 ) -> DataFrame:
     """The SemDeDup core with an explicit seed set — K = len(seed_ids) is
-    the Σ|c|² knob; tools/scale_stress.py drives this with K scaled ∝
-    corpus size to demonstrate the documented linear regime (fixed-K is
-    quadratic by construction).  FLAT Lloyd assignment: O(N·K·d) map-side
+    the Σ|c|² knob; ``tools/stress.py dedup_semdedup_scaledK`` drives this
+    with K scaled ∝ corpus size to demonstrate the documented linear
+    regime (fixed-K is quadratic by construction).  FLAT Lloyd assignment: O(N·K·d) map-side
     flops per round — with K ∝ N this itself turns quadratic at the next
     scale rung, which is what :func:`semdedup_hier_report` (IVF-style
     coarse→fine training, O(N·(K₁+K₂)·d)) is for."""
@@ -2282,7 +2269,8 @@ def dedup_semdedup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
     composed (cell0, sub) cell ids, and the shared pair stage + keep
     rule — so the hash checks the TRAINER, not just the report shape.
 
-    Measured at 16x corpus (tools/scale_stress.py): hierarchical 18.5 s
+    Measured at 16x corpus (tools/stress.py --repl 16
+    dedup_semdedup_hier_scaledK dedup_semdedup_scaledK): hierarchical 18.5 s
     vs flat scaled-K 27.0 s with planted recall at parity (pytest pin
     test_semdedup_hier_matches_flat_recall)."""
     return semdedup_hier_report(spark, sf_dir, HIER_COARSE_IDS, sub_k=HIER_SUB_K)

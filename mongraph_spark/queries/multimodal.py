@@ -7,9 +7,9 @@ binary columns, so this module (a) synthesizes deterministic binary payloads
 in-query from the documents table (mock "images": repeated md5 bytes; mock
 "videos": concatenated per-frame hashes), and (b) keeps the *Spark-side
 plumbing real* — binary schema, metadata structs, mapInPandas batch
-iteration, partition-size control — while the actual codec step is either a
-deterministic fake (oracle-checkable) or a clearly-marked stub that raises
-``NotImplementedError`` until a real library (PIL/ffmpeg) is present.
+iteration, partition-size control — while the actual codec step is a
+deterministic fake (oracle-checkable) except for the genuine PPM decoder;
+JPEG/PNG/audio codecs need a library (PIL/ffmpeg) this package does not use.
 
 Scale notes: mapInPandas streams Arrow batches — payload bytes never
 materialize on the driver; metadata-only predicates (width/height/codec)
@@ -308,28 +308,6 @@ FROM sized
 """
 
 
-# -- real-decoder stubs (plumbing ready; library absent in this container) --------------
-
-
-def decode_image(payload: bytes, codec: str):  # pragma: no cover - stub
-    """Decode an image payload.  STUB: requires PIL, not present here."""
-    try:
-        from PIL import Image  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "image decoding requires PIL; this container has no image libs — "
-            "the mapInPandas plumbing above is real, swap _extract_features' "
-            "fake with PIL.Image.open(io.BytesIO(payload))"
-        ) from exc
-
-
-def decode_audio(payload: bytes, codec: str):  # pragma: no cover - stub
-    """Decode an audio payload.  STUB: requires soundfile/ffmpeg."""
-    raise NotImplementedError(
-        "audio decoding requires soundfile/ffmpeg; not present in this container"
-    )
-
-
 # -- perceptual-hash near-dup (image dedup plumbing) -----------------------------------
 
 PHASH_PLANT_OFFSET = 1_000_001  # odd offset => planted copy gets a DIFFERENT low-bit
@@ -492,7 +470,7 @@ GROUP BY 1, 2
 # bytes — so this path synthesizes GENUINE P6 images and the mapInPandas
 # stage REALLY decodes them (header parse + numpy frombuffer + reshape),
 # computing channel statistics and a true nearest-neighbor 2× downsample
-# from the decoded array.  JPEG/PNG/audio stay behind the labeled stubs.
+# from the decoded array.  JPEG/PNG/audio decoding is not implemented.
 
 PPM_MAXW = 8  # decoded widths land in [8, 15], heights in [6, 11]
 

@@ -114,38 +114,6 @@ l{k} AS (
     return body, prev
 
 
-def dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cluster-size histogram of the deduplicated corpus: how many clusters
-    have 1, 2, 3… members.  The corpus-reduction headline number (docs in −
-    clusters out) is sum(cluster_size·n) − sum(n)."""
-    shingled = _shingled_corpus(spark, sf_dir, drop_last=1).persist()
-    try:
-        labels = _cluster_labels(shingled)
-        sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
-        return sizes.groupBy("cluster_size").agg(
-            F.count(F.lit(1)).alias("n_clusters")
-        )
-    finally:
-        shingled.unpersist()
-
-
-def _oracle_cluster_stats() -> str:
-    ctes, final = _oracle_cluster_ctes()
-    return f"""
-WITH {_oracle_corpus_droplast(1)},
-{_ORACLE_SHINGLES},
-{_oracle_minhash_sig_sql()},
-{_oracle_cands_sql()},
-{ctes}
-SELECT cluster_size, count(*) AS n_clusters FROM (
-  SELECT label, count(*) AS cluster_size FROM {final} GROUP BY label
-) GROUP BY cluster_size
-"""
-
-
-ORACLE_CLUSTER_STATS = _oracle_cluster_stats()
-
-
 # -- canonical selection: keep the best member of every cluster ------------------
 
 

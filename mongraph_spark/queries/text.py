@@ -276,39 +276,6 @@ SCAN_TERM_PATTERN = r"\b(table|key)\b"
 SCAN_EMAIL_PATTERN = r"[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}"
 
 
-def text_pattern_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Regex content scan per language — the PII-detection operator shape
-    (emails/phones/SSNs in production; here one vocabulary pattern that
-    hits and the email pattern that must come back zero on synthetic text).
-    Pure column expressions (`regexp_extract_all` is JVM-side codegen);
-    map-only until the per-language rollup."""
-    docs = read_table(spark, sf_dir, "documents")
-    term_hits = F.size(F.regexp_extract_all("text", F.lit(SCAN_TERM_PATTERN), F.lit(0)))
-    email_hits = F.size(
-        F.regexp_extract_all("text", F.lit(SCAN_EMAIL_PATTERN), F.lit(0))
-    )
-    return (
-        docs.select("lang", term_hits.alias("th"), email_hits.alias("eh"))
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("th").cast("long").alias("term_hits"),
-            F.sum((F.col("th") > 0).cast("int")).cast("long").alias("docs_with_term"),
-            F.sum("eh").cast("long").alias("email_hits"),
-        )
-    )
-
-
-ORACLE_PATTERN_SCAN = f"""
-SELECT lang, count(*) AS n_docs,
-       CAST(sum(len(regexp_extract_all(text, '{SCAN_TERM_PATTERN}'))) AS BIGINT) AS term_hits,
-       CAST(sum(CASE WHEN len(regexp_extract_all(text, '{SCAN_TERM_PATTERN}')) > 0 THEN 1 ELSE 0 END) AS BIGINT) AS docs_with_term,
-       CAST(sum(len(regexp_extract_all(text, '{SCAN_EMAIL_PATTERN}'))) AS BIGINT) AS email_hits
-FROM documents
-GROUP BY lang
-"""
-
-
 # -- PII redaction: mask matches, emit auditable redacted fingerprints -----------
 
 

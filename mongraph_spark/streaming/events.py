@@ -116,7 +116,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 # state-store metrics of the most recent run_to_table execution
 # (stateOperators from the final progress event): list of dicts with
 # operatorName / numRowsTotal / memoryUsedBytes.  Evidence channel for the
-# watermark-bounds-state claim — see tools/stream_state_stress.py.
+# watermark-bounds-state claim — see tools/stress.py (same_keys shape).
 LAST_STATE_METRICS: list[dict] = []
 
 

@@ -54,6 +54,27 @@ def test_invalid_args_raise(spark):
         pregel.iterate(df0, _inc, max_rounds=1, checkpoint_every=0)
 
 
+def test_release_restores_unpersist_logger_level(spark):
+    """Releasing dead loop states mutes MapPartitionsRDD's unpersist WARN
+    only around the call: the logger's level after iterate equals its
+    level before, so the warning stays live for the rest of the session."""
+    log4j = spark.sparkContext._jvm.org.apache.logging.log4j
+    name = "org.apache.spark.rdd.MapPartitionsRDD"
+
+    def level() -> str:
+        return log4j.LogManager.getLogger(name).getLevel().toString()
+
+    original = log4j.LogManager.getLogger(name).getLevel()
+    log4j.core.config.Configurator.setLevel(name, log4j.Level.WARN)
+    try:
+        df0 = spark.range(3).select(F.col("id").alias("v"))
+        out, rounds = pregel.iterate(df0, _inc, max_rounds=3)
+        assert rounds == 3
+        assert level() == "WARN"
+    finally:
+        log4j.core.config.Configurator.setLevel(name, original)
+
+
 def test_lineage_is_bounded_by_checkpoint_cadence(spark):
     """After N rounds at cadence k, the returned plan must hang off a
     checkpoint scan with at most one group (k rounds) of joins above it —

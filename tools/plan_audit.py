@@ -1,8 +1,7 @@
 """Physical-plan audit over the registered query surface: compile every
 ``queries()`` (and optionally extended) entry at a given SF and tabulate
 the plan-health signals the scale story depends on — shuffle count, join
-strategies, Python-eval stages, codegen coverage, parquet filter/column
-pushdown.
+strategies, Python-eval stages, cartesians and unpartitioned windows.
 
 This is the sweeping version of the per-query plan pins in tests/: those
 freeze specific properties of specific plans; this reports the whole
@@ -82,7 +81,6 @@ def audit_one(spark, name, fn, sf_dir) -> dict | None:
     for key, pat in SIGNALS:
         row[key] = len(re.findall(pat, plan))
     row["unpart_window"] = count_unpart_windows(plan)
-    row["codegen_spans"] = len(set(re.findall(r"WholeStageCodegen \((\d+)\)", plan)))
     return row
 
 
@@ -120,20 +118,18 @@ def main() -> None:
             f"at `{args.sf_dir}`.  Signals per executed plan: hash exchanges, "
             "broadcast exchanges, sort-merge vs broadcast joins, GLOBAL sorts, "
             "Python eval stages (row/scalar — should be 0 everywhere), Arrow "
-            "map stages (mapInPandas — multimodal/streaming only), distinct "
-            "WholeStageCodegen spans.\n\n"
+            "map stages (mapInPandas — multimodal/streaming only).\n\n"
         )
         fh.write(
             "| query | exch | bcast | SMJ | BHJ | global sort | pyEval | arrowMap "
-            "| cartesian | unpartWin | codegen |\n"
-            "|---|---|---|---|---|---|---|---|---|---|---|\n"
+            "| cartesian | unpartWin |\n"
+            "|---|---|---|---|---|---|---|---|---|---|\n"
         )
         for r in hot:
             fh.write(
                 f"| {r['query']} | {r['exchanges']} | {r['broadcasts']} | {r['smj']} "
                 f"| {r['bhj']} | {r['global_sorts']} | {r['py_eval']} | {r['arrow_map']} "
-                f"| {r['cartesian']} | {r['unpart_window']} "
-                f"| {r['codegen_spans']} |\n"
+                f"| {r['cartesian']} | {r['unpart_window']} |\n"
             )
         if errors:
             fh.write("\n## Compile errors\n\n")
