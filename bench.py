@@ -1,5 +1,6 @@
 """Benchmark harness: runs the headline (core) queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+$SPARK_GRAFT_CPUS defaults to the cores this process may use.
 
 Prints TWO JSON lines: first the fat per-query map, then — LAST, so a
 tail-buffered log capture always holds one complete parseable line — a

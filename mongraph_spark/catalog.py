@@ -7,6 +7,14 @@ layer (plain Python rows), and Spark DataFrames are *derived views* rebuilt
 lazily when a version counter moves.  Reads therefore always see their own
 writes; the analytic operators never know the difference.
 
+Each view is built by :func:`local_df`: the staged rows are type-checked
+against the view's schema and shipped to the JVM once as an Arrow table.
+Spark keeps that as a ``LocalRelation`` with real size statistics, so a scan
+starts no Python worker, joins against a view plan as broadcast hash joins,
+and Catalyst folds filters and projections over it on the driver.  Above
+``spark.sql.execution.arrow.localRelationThreshold`` Spark itself keeps the
+Arrow batches as an RDD instead, which still needs no Python worker.
+
 Two store flavors share one read interface:
 
 - :class:`MutableCatalog` — driver-side staging, for the reference's OLTP
@@ -22,9 +30,9 @@ format (Delta/Iceberg); the interface below is deliberately format-agnostic.
 from __future__ import annotations
 
 import itertools
-from typing import Any, Iterable
+from typing import Any, Callable, Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import types as T
 
 NODE_SCHEMA = T.StructType(
@@ -62,6 +70,70 @@ def _stringify_props(props: dict[str, Any] | None) -> dict[str, str] | None:
         else:
             out[k] = str(v)
     return out
+
+
+def _arrow_value(dtype: T.DataType) -> Callable[[Any], Any] | None:
+    """Converter from a value the Spark type verifier accepted to one
+    ``pyarrow.array`` accepts, or None where the two already agree.
+
+    They differ only on structs: Spark also takes a positional tuple or an
+    object's attributes, Arrow takes a mapping alone."""
+    if isinstance(dtype, T.StructType):
+        names = dtype.fieldNames()
+        subs = [_arrow_value(f.dataType) for f in dtype.fields]
+
+        def struct(v):
+            if v is None:
+                return None
+            if isinstance(v, Row) and hasattr(v, "__fields__"):
+                v = v.asDict()
+            if isinstance(v, dict):
+                vals = [v.get(n) for n in names]
+            elif isinstance(v, (tuple, list)):
+                vals = list(v)
+            else:
+                vals = [getattr(v, n, None) for n in names]
+            return {n: (c(x) if c else x) for n, c, x in zip(names, subs, vals)}
+
+        return struct
+    if isinstance(dtype, T.ArrayType):
+        elem = _arrow_value(dtype.elementType)
+        return None if elem is None else (lambda v: None if v is None else [elem(x) for x in v])
+    if isinstance(dtype, T.MapType):
+        key, val = _arrow_value(dtype.keyType), _arrow_value(dtype.valueType)
+        if key is None and val is None:
+            return None
+        key, val = key or (lambda x: x), val or (lambda x: x)
+        return lambda v: None if v is None else [(key(k), val(x)) for k, x in v.items()]
+    return None
+
+
+def local_df(
+    spark: SparkSession, rows: Iterable[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples in ``schema`` order, a
+    ``StructType`` or a DDL string), shipped to the JVM as one Arrow table.
+
+    Every row first passes PySpark's own type verifier, the check
+    ``createDataFrame`` applies to Python rows: Arrow alone would silently
+    coerce ``2.5`` into a ``long`` column, or accept a null in a
+    non-nullable one."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    verify = T._make_type_verifier(schema)
+    rows = list(rows)
+    for row in rows:
+        verify(row)
+    arrow_schema = to_arrow_schema(schema)
+    columns = []
+    for i, field in enumerate(schema.fields):
+        convert = _arrow_value(field.dataType)
+        values = [r[i] for r in rows] if convert is None else [convert(r[i]) for r in rows]
+        columns.append(pa.array(values, type=arrow_schema.field(i).type))
+    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow_schema), schema=schema)
 
 
 class GraphStore:
@@ -125,6 +197,9 @@ class MutableCatalog(GraphStore):
         self._doc_schemas: dict[str, T.StructType] = {}
         self._nodes: dict[int, dict[str, Any]] = {}
         self._edges: dict[int, dict[str, Any]] = {}
+        # (collection, _id) -> node_id of the document's one mirror node
+        # (find_or_create_node keeps it one; a re-upsert re-points the key)
+        self._node_by_doc: dict[tuple[str, str], int] = {}
         self._node_seq = itertools.count(1)  # tests assert _node_id > 0
         self._rel_seq = itertools.count(1)
         self._version = {"nodes": 0, "edges": 0}
@@ -174,7 +249,11 @@ class MutableCatalog(GraphStore):
             "_collection": collection,
             "props": dict(props or {}),
         }
+        old = self._nodes.get(node_id)
+        if old is not None:
+            self._unindex_node(old)
         self._nodes[node_id] = row
+        self._node_by_doc[(collection, _id)] = node_id
         self._version["nodes"] += 1
         return row
 
@@ -182,13 +261,18 @@ class MutableCatalog(GraphStore):
         return self._nodes.get(node_id)
 
     def find_node_by_document(self, collection: str, _id: str) -> dict[str, Any] | None:
-        for row in self._nodes.values():
-            if row["_id"] == _id and row["_collection"] == collection:
-                return row
-        return None
+        node_id = self._node_by_doc.get((collection, _id))
+        return None if node_id is None else self._nodes[node_id]
+
+    def _unindex_node(self, row: dict[str, Any]) -> None:
+        key = (row["_collection"], row["_id"])
+        if self._node_by_doc.get(key) == row["node_id"]:
+            del self._node_by_doc[key]
 
     def delete_node(self, node_id: int, include_relationships: bool = True) -> None:
-        if self._nodes.pop(node_id, None) is not None:
+        row = self._nodes.pop(node_id, None)
+        if row is not None:
+            self._unindex_node(row)
             self._version["nodes"] += 1
         if include_relationships:
             doomed = [
@@ -276,7 +360,7 @@ class MutableCatalog(GraphStore):
             (r["node_id"], r["_id"], r["_collection"], _stringify_props(r["props"]))
             for r in self._nodes.values()
         ]
-        return self.spark.createDataFrame(rows, schema=NODE_SCHEMA)
+        return local_df(self.spark, rows, NODE_SCHEMA)
 
     def _build_edges_df(self) -> DataFrame:
         rows = [
@@ -292,7 +376,7 @@ class MutableCatalog(GraphStore):
             )
             for r in self._edges.values()
         ]
-        return self.spark.createDataFrame(rows, schema=EDGE_SCHEMA)
+        return local_df(self.spark, rows, EDGE_SCHEMA)
 
     def _build_docs_df(self, collection: str) -> DataFrame:
         docs = list(self._docs.get(collection, {}).values())
@@ -302,4 +386,4 @@ class MutableCatalog(GraphStore):
                 f"collection {collection!r} needs an explicit schema to derive a DataFrame"
             )
         rows = [tuple(d.get(f.name) for f in schema.fields) for d in docs]
-        return self.spark.createDataFrame(rows, schema=schema)
+        return local_df(self.spark, rows, schema)

@@ -12,10 +12,12 @@ lexicographically-smallest node-id sequence, which `F.min` over the path
 array gives directly (Spark arrays order lexicographically).
 
 Scale notes: the frontier is re-keyed on the join key each hop; ``visited``
-pruning is a broadcastable anti-join at moderate frontier sizes.  Lineage is
-cut with ``localCheckpoint`` every few hops so 15-hop plans don't blow up
-the optimizer.  For all-pairs / landmark workloads you'd switch to a
-Pregel-style aggregate-messages loop over the same edges DataFrame.
+pruning is a broadcastable anti-join at moderate frontier sizes.  The
+single-pair search cuts each hop's frontier once and reads both the target
+hit and the frontier size from it in one aggregate, so no hop recomputes an
+earlier one and 15-hop plans don't blow up the optimizer.  For all-pairs /
+landmark workloads you'd switch to a Pregel-style aggregate-messages loop
+over the same edges DataFrame.
 """
 
 from __future__ import annotations
@@ -23,7 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mongraph_spark.catalog import GraphStore
+from mongraph_spark.catalog import GraphStore, local_df
+from mongraph_spark.sparkutil import lineage_cut, release_cut
 
 LEVEL_DEEPNESS = 15  # reference src/extendDocument.coffee:359
 
@@ -49,46 +52,56 @@ def shortest_path(
     types: list[str] | None = None,
     direction: str = "outgoing",
     max_hops: int = LEVEL_DEEPNESS,
-    checkpoint_every: int = 4,
 ) -> list[int] | None:
     """Return the node-id sequence of one shortest path, or None.
 
     The reference's query is directed (``a-[…]->b``); ``direction`` mirrors
     the traversal options for completeness.
+
+    Each hop's frontier is cut once; one aggregate over the cut reads both
+    the path to the target (if reached) and the frontier size.  The cuts are
+    released before returning.
     """
     if src_node_id == dst_node_id:
         return [src_node_id]
     spark = store.spark
     edges = _directed_edges(store.edges_df(), types, direction)
+    dst = F.lit(int(dst_node_id))
 
-    frontier = spark.createDataFrame(
-        [(int(src_node_id), [int(src_node_id)])], "node long, path array<long>"
-    )
+    seed = [(int(src_node_id), [int(src_node_id)])]
+    frontier = local_df(spark, seed, "node long, path array<long>")
     visited = frontier.select("node")
-
-    for hop in range(1, max_hops + 1):
-        expanded = (
-            frontier.join(edges, frontier["node"] == edges["src"], "inner")
-            .select(
-                F.col("dst").alias("node"),
-                F.concat(F.col("path"), F.array(F.col("dst"))).alias("path"),
+    cuts = []
+    try:
+        for _ in range(max_hops):
+            expanded = (
+                frontier.join(edges, frontier["node"] == edges["src"], "inner")
+                .select(
+                    F.col("dst").alias("node"),
+                    F.concat(F.col("path"), F.array(F.col("dst"))).alias("path"),
+                )
+                # smallest path per node → deterministic tie-breaking
+                .groupBy("node")
+                .agg(F.min("path").alias("path"))
+                .join(visited, on="node", how="left_anti")
             )
-        )
-        # smallest path per node → deterministic tie-breaking
-        expanded = expanded.groupBy("node").agg(F.min("path").alias("path"))
-        expanded = expanded.join(visited, on="node", how="left_anti")
-        if checkpoint_every and hop % checkpoint_every == 0:
-            expanded = expanded.localCheckpoint(eager=False)
-
-        hit = expanded.filter(F.col("node") == F.lit(int(dst_node_id))).select("path").take(1)
-        if hit:
-            return [int(x) for x in hit[0].path]
-
-        frontier = expanded
-        visited = visited.unionByName(expanded.select("node")).distinct()
-        if frontier.isEmpty():
-            return None
-    return None
+            frontier = lineage_cut(expanded, eager=False)
+            cuts.append(frontier)
+            # the first action over the lazy cut materializes it
+            probe = frontier.agg(
+                F.count(F.lit(1)).alias("size"),
+                F.min(F.when(F.col("node") == dst, F.col("path"))).alias("hit"),
+            ).first()
+            if probe.hit is not None:
+                return [int(x) for x in probe.hit]
+            if probe.size == 0:
+                return None
+            # frontier nodes are distinct and unvisited (grouped, anti-joined)
+            visited = visited.unionByName(frontier.select("node"))
+        return None
+    finally:
+        for cut in cuts:
+            release_cut(cut)
 
 
 def shortest_paths_from(
@@ -146,7 +159,7 @@ def shortest_paths_from(
         if frontier.isEmpty():
             break
     if done is None:
-        return spark.createDataFrame([], "origin long, path array<long>, hops int")
+        return local_df(spark, [], "origin long, path array<long>, hops int")
     return done.groupBy("origin").agg(
         F.min_by("path", "hops").alias("path"), F.min("hops").alias("hops")
     )

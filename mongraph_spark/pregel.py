@@ -48,44 +48,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
-from mongraph_spark.sparkutil import lineage_cut
-
-
-def _release_blocks(df: DataFrame) -> None:
-    """Free a DEAD loop state's checkpoint blocks immediately.
-
-    Each eager ``lineage_cut`` pins its materialized state (RDD blocks
-    for ``localCheckpoint``, a cached copy on top of the files for
-    reliable ``checkpoint``) until the DataFrame is garbage collected on
-    BOTH sides of py4j — which in practice is "never" within a session:
-    a 6-round loop leaked 7 persisted RDDs per query execution (measured
-    via ``getPersistentRDDs``: +7/trial, monotone across a session).
-    Locally that is driver-heap pressure across a 150-query bench
-    session; at scale it is executor storage holding EVERY round's state
-    instead of the 2 live ones (guide §5: unpersist when done).  The cut
-    frame's analyzed plan is exactly one ``LogicalRDD`` node; unpersist
-    its RDD.  Only ever called on states the loop itself created and
-    that nothing downstream can reference (the returned final state is
-    never released).  Best-effort: any reflection surprise degrades to
-    the old keep-until-GC behavior.
-
-    MapPartitionsRDD WARNs on every such release ("locally checkpointed
-    … cannot be recomputed after unpersisting"), which is exactly the
-    intended behavior here, so its logger is raised to ERROR for the
-    ``unpersist`` call only and restored afterwards; the warning stays
-    live for every other caller in the session."""
-    try:
-        jvm = df.sparkSession.sparkContext._jvm
-        log4j = jvm.org.apache.logging.log4j
-        name = "org.apache.spark.rdd.MapPartitionsRDD"
-        before = log4j.LogManager.getLogger(name).getLevel()
-        log4j.core.config.Configurator.setLevel(name, log4j.Level.ERROR)
-        try:
-            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        finally:
-            log4j.core.config.Configurator.setLevel(name, before)
-    except Exception:
-        pass
+from mongraph_spark.sparkutil import lineage_cut, release_cut
 
 
 def iterate(
@@ -123,7 +86,7 @@ def iterate(
         # state, probes run on the freshly cut state, callers get only
         # the final state) — release its blocks instead of holding every
         # round's state until session GC
-        _release_blocks(state)
+        release_cut(state)
         rounds += group
         state = cur
         if converged is not None and converged(cur):

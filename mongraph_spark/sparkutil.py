@@ -9,16 +9,37 @@ from pyspark.sql import SparkSession
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def get_spark(app_name: str = "mongraph_spark", cpus: int | None = None) -> SparkSession:
-    """Local session tuned for this container (single JVM, many cores).
+def _host_cpus() -> int:
+    """Cores this process may run on (its affinity mask, not the machine)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity call on this platform
+        return os.cpu_count() or 1
 
-    UTC timezone is load-bearing: oracle comparisons against DuckDB assume
-    epoch arithmetic agrees. AQE is on so skewed graph joins re-plan at
-    runtime; shuffle partitions match local cores instead of the 200 default
-    (at cluster scale this is set per-job or left to AQE coalescing).
+
+def _host_driver_mem() -> str:
+    """About 60% of physical memory, leaving the rest to Python workers,
+    the OS and off-heap buffers."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "4g"
+    return f"{max(1024, int(total * 0.6) >> 20)}m"
+
+
+def get_spark(app_name: str = "mongraph_spark", cpus: int | None = None) -> SparkSession:
+    """Local session sized to the host (single JVM, one task slot per core).
+
+    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or the cores this process may
+    use; driver memory to ``$SPARK_GRAFT_DRIVER_MEM`` or about 60% of
+    physical memory.  UTC timezone is load-bearing: oracle comparisons
+    against DuckDB assume epoch arithmetic agrees. AQE is on so skewed graph
+    joins re-plan at runtime; shuffle partitions match local cores instead
+    of the 200 default (at cluster scale this is set per-job or left to AQE
+    coalescing).
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or _host_cpus())
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -31,7 +52,10 @@ def get_spark(app_name: str = "mongraph_spark", cpus: int | None = None) -> Spar
         # the events table is written with TIMESTAMP(NANOS) which Spark's
         # vectorized reader rejects; read as long and convert (read_events)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
     )
     spark = builder.getOrCreate()
@@ -314,6 +338,41 @@ def lineage_cut(df, eager: bool = True):
             )
         )
     return df.checkpoint(eager=eager)
+
+
+def release_cut(df) -> None:
+    """Free a dead ``lineage_cut``'s blocks now instead of at session GC.
+
+    A cut pins its materialized state (RDD blocks for ``localCheckpoint``,
+    a cached copy on top of the files for reliable ``checkpoint``) until
+    the DataFrame is garbage collected on BOTH sides of py4j — which in
+    practice is "never" within a session: a 6-round loop leaked 7
+    persisted RDDs per query execution (measured via
+    ``getPersistentRDDs``: +7/trial, monotone across a session).  Locally
+    that is driver-heap pressure across a long session; at scale it is
+    executor storage holding EVERY round's state instead of the live ones.
+    The cut frame's analyzed plan is exactly one ``LogicalRDD`` node;
+    unpersist its RDD.  Only call it on cuts the caller created and that
+    nothing downstream can reference.  Best-effort: any reflection
+    surprise degrades to the old keep-until-GC behavior.
+
+    MapPartitionsRDD WARNs on every such release ("locally checkpointed
+    … cannot be recomputed after unpersisting"), which is exactly the
+    intended behavior here, so its logger is raised to ERROR for the
+    ``unpersist`` call only and restored afterwards; the warning stays
+    live for every other caller in the session."""
+    try:
+        jvm = df.sparkSession.sparkContext._jvm
+        log4j = jvm.org.apache.logging.log4j
+        name = "org.apache.spark.rdd.MapPartitionsRDD"
+        before = log4j.LogManager.getLogger(name).getLevel()
+        log4j.core.config.Configurator.setLevel(name, log4j.Level.ERROR)
+        try:
+            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        finally:
+            log4j.core.config.Configurator.setLevel(name, before)
+    except Exception:
+        pass
 
 
 def broadcast_row_cap() -> int:

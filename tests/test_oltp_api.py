@@ -6,7 +6,9 @@ from __future__ import annotations
 import re
 
 import pytest
+from pyspark.sql import types as T
 
+from mongraph_spark.catalog import MutableCatalog
 from mongraph_spark.document import MongraphError, NoGraphabilityError
 from mongraph_spark.schema import CollectionSchema, FieldSpec
 
@@ -153,6 +155,17 @@ def test_shortest_path_no_route(engine):
     d = engine.fixture_docs
     # visits edges only go alice->locations; no knows path zoe->bar
     assert d["zoe"].shortest_path_to(d["bar"], "knows") is None
+
+
+def test_shortest_path_releases_its_hop_cuts(engine, spark):
+    """Every hop's frontier cut is unpersisted before the search returns,
+    whether it found a route or ran out of frontier."""
+    d = engine.fixture_docs
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    assert d["alice"].shortest_path_to(d["zoe"], "knows") is not None
+    assert d["zoe"].shortest_path_to(d["bar"], "knows") is None
+    assert persisted().size() == before
 
 
 # -- creation semantics (tests.coffee:419-430) ---------------------------------------
@@ -437,3 +450,148 @@ def test_bounded_collect_cap(spark):
         bounded_collect(df, cap=10, context="test")
     # the cap is pushed into the plan as a limit, not filtered driver-side
     assert "GlobalLimit 11" in df.limit(11)._jdf.queryExecution().optimizedPlan().toString()
+
+
+# -- derived views: Arrow local relations ------------------------------------------------------
+
+
+def _views(cat, collection="people"):
+    return {
+        "nodes": cat.nodes_df(),
+        "edges": cat.edges_df(),
+        "documents": cat.documents_df(collection),
+    }
+
+
+def _plan_and_lineage(df):
+    qe = df._jdf.queryExecution()
+    return qe.optimizedPlan().toString(), qe.toRdd().toDebugString()
+
+
+def test_views_are_local_relations(engine):
+    """Every catalog view is a LocalRelation: no Python worker re-reads it."""
+    for name, df in _views(engine.catalog).items():
+        plan, lineage = _plan_and_lineage(df)
+        assert plan.startswith("LocalRelation"), (name, plan)
+        assert "PythonRDD" not in lineage, (name, lineage)
+
+
+def test_populated_read_plans_broadcast_joins(engine):
+    """A populated 1-hop read joins the endpoint documents by broadcast from
+    the first plan on: the views carry real size statistics."""
+    from mongraph_spark.populate import attach_endpoint_documents
+    from mongraph_spark.traversal import TraversalQuery
+
+    alice = engine.fixture_docs["alice"]
+    tq = TraversalQuery(anchor=alice.get_node_id(), direction="outgoing")
+    df = attach_endpoint_documents(engine.store, tq.apply(engine.store.edges_df()))
+    assert len(df.collect()) == 3
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" not in plan, plan
+    assert "BroadcastHashJoin" in plan, plan
+
+
+_TYPED = T.StructType(
+    [T.StructField("_id", T.StringType(), False), T.StructField("n", T.LongType(), True)]
+)
+
+
+@pytest.mark.parametrize(
+    "doc", [{"_id": "a", "n": 2.5}, {"_id": "a", "n": True}, {"_id": None, "n": 1}]
+)
+def test_view_build_rejects_mistyped_rows(spark, doc):
+    """The row check createDataFrame applies to Python rows still runs:
+    Arrow alone would store 2.5 or True as a long, or a null _id."""
+    cat = MutableCatalog(spark)
+    cat.register_collection("c", _TYPED)
+    cat.upsert_document("c", doc)
+    with pytest.raises((TypeError, ValueError)):
+        cat.documents_df("c")
+
+
+def test_view_build_keeps_exact_values(spark):
+    cat = MutableCatalog(spark)
+    cat.register_collection("c", _TYPED)
+    cat.upsert_document("c", {"_id": "a", "n": 2**62 + 1})
+    cat.upsert_document("c", {"_id": "b", "n": None})
+    assert sorted(cat.documents_df("c").collect()) == [("a", 2**62 + 1), ("b", None)]
+
+
+_PEOPLE = T.StructType(
+    [
+        T.StructField("_id", T.StringType(), False),
+        T.StructField("name", T.StringType(), True),
+        T.StructField(
+            "addr",
+            T.StructType(
+                [T.StructField("city", T.StringType()), T.StructField("zip", T.LongType())]
+            ),
+            True,
+        ),
+        T.StructField("tags", T.ArrayType(T.StructType([T.StructField("t", T.StringType())]))),
+        T.StructField(
+            "links", T.MapType(T.StringType(), T.StructType([T.StructField("w", T.LongType())]))
+        ),
+        T.StructField("_node_id", T.LongType(), True),
+    ]
+)
+
+
+def _filled_catalog(spark, n=40):
+    cat = MutableCatalog(spark)
+    cat.register_collection("people", _PEOPLE)
+    for i in range(1, n + 1):
+        # structs arrive as dicts or positional tuples, like createDataFrame takes them
+        addr = {"city": f"c{i % 3}", "zip": i} if i % 2 else (f"c{i % 3}", i)
+        tags = [("t",)] * (i % 3) if i % 2 else None
+        links = {f"p{i + 1}": (i,)} if i % 2 else {f"p{i + 1}": {"w": i}}
+        doc = {"_id": f"p{i}", "name": f"n{i}", "addr": addr, "tags": tags, "links": links}
+        cat.upsert_document("people", dict(doc, _node_id=i))
+        cat.upsert_node(i, f"p{i}", "people", {"name": f"n{i}", "odd": bool(i % 2)})
+    for i in range(1, n):
+        cat.insert_edge(i, i + 1, "knows", {"w": i}, _from=f"p{i}", _to=f"p{i + 1}", _created_at=i)
+    return cat
+
+
+def test_views_fall_back_to_arrow_rdd_above_threshold(spark):
+    """Above localRelationThreshold Spark keeps the Arrow batches as an RDD:
+    the same rows, still with no Python worker behind them."""
+    conf = "spark.sql.execution.arrow.localRelationThreshold"
+    expected = {k: sorted(df.collect()) for k, df in _views(_filled_catalog(spark)).items()}
+    first = expected["documents"][0]
+    assert (first.addr.city, first.tags, first.links) == ("c1", [("t",)], {"p2": (1,)})
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "1024")
+    try:
+        views = _views(_filled_catalog(spark))
+        for name, df in views.items():
+            plan, lineage = _plan_and_lineage(df)
+            assert not plan.startswith("LocalRelation"), (name, plan)
+            assert "PythonRDD" not in lineage, (name, lineage)
+            assert sorted(df.collect()) == expected[name], name
+    finally:
+        spark.conf.set(conf, before)
+
+
+def test_node_lookup_index_matches_scan(engine):
+    """find_node_by_document answers from a (collection, _id) index; it
+    agrees with a full scan of the nodes after save, remove_node and remove."""
+    cat = engine.catalog
+    d = dict(engine.fixture_docs)
+
+    def check():
+        scan = {(r._collection, r._id): r.node_id for r in cat.nodes_df().collect()}
+        for doc in d.values():
+            row = cat.find_node_by_document(doc._collection, doc._id)
+            assert (row and row["node_id"]) == scan.get((doc._collection, doc._id)), doc._id
+
+    check()
+    d["eve"] = engine.create_document("people", {"name": "eve"}).save()
+    assert cat.find_node_by_document("people", d["eve"]._id) is not None
+    check()
+    d["alice"].remove_node()
+    assert cat.find_node_by_document("people", d["alice"]._id) is None
+    check()
+    d["bob"].remove()
+    assert cat.find_node_by_document("people", d["bob"]._id) is None
+    check()

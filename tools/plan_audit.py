@@ -91,7 +91,7 @@ def main() -> None:
     ap.add_argument("--out", default="PLAN_AUDIT.md")
     args = ap.parse_args()
 
-    spark = get_spark("plan_audit", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    spark = get_spark("plan_audit")
     spark.sparkContext.setLogLevel("ERROR")
     selftest_unpart_window(spark)
 
