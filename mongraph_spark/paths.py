@@ -144,7 +144,7 @@ def shortest_paths_from(
             .groupBy("origin", "node")
             .agg(F.min("path").alias("path"))
             .join(visited, on=["origin", "node"], how="left_anti")
-            .localCheckpoint(eager=False)
+            .transform(lineage_cut, eager=False)
         )
         hits = (
             expanded.join(targets, on="node", how="left_semi")
@@ -155,7 +155,8 @@ def shortest_paths_from(
         done = hits if done is None else done.unionByName(hits)
         # origins that found a target stop expanding
         frontier = expanded.join(hits.select("origin"), on="origin", how="left_anti")
-        visited = visited.unionByName(frontier.select("origin", "node")).distinct()
+        # frontier rows are distinct and unvisited (grouped, anti-joined)
+        visited = visited.unionByName(frontier.select("origin", "node"))
         if frontier.isEmpty():
             break
     if done is None:

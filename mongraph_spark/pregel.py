@@ -1,14 +1,14 @@
 """Shared driver-coordinated iterative-DataFrame loop (Pregel-style).
 
-Every iterative graph algorithm in this repo — PageRank (fixed and
-delta-stop), connected components (fixed and fixed-point-stop), k-core
-peeling, label propagation — is the same control shape: a *state*
-DataFrame stepped through join-based rounds, with two scale hazards that
-each hand-rolled copy had to solve separately:
+Every round loop in this repo — PageRank (fixed and delta-stop),
+connected components, k-core peeling, label propagation, Louvain, k-truss,
+random walks, Bradley–Terry, k-means, power iteration — is the same control
+shape: a *state* DataFrame stepped through join-based rounds, with two
+scale hazards this driver solves once for all of them:
 
 1. **Lineage blowup**: N chained rounds = an N-deep plan; any action
    replays the whole chain and the optimizer re-analyzes a growing tree
-   every round.  Bounded here by an eager ``localCheckpoint`` every
+   every round.  Bounded here by an eager ``lineage_cut`` every
    ``checkpoint_every`` rounds (the cadence amortizes the per-checkpoint
    job against group size — the pagerank loop measured per-round driver
    actions as the dominant cost of small iterations).
@@ -36,10 +36,25 @@ The cut itself is deployment-switched via ``sparkutil.lineage_cut``:
 so the no-fallback tradeoff costs nothing), reliable ``checkpoint(dir)``
 on any non-local master (``SPARK_GRAFT_CHECKPOINT[_DIR]``) so a lost
 executor mid-loop recomputes from storage instead of failing the job.
-Used by: queries/graph_analytics.py (all four algorithm
-families) — reference has no iterative operators beyond shortestPath
-(src/extendDocument.coffee:352-366), which keeps its own BFS in paths.py
-because its per-hop visited-set bookkeeping is not a state-step loop.
+Dead states (every state but the returned one) are freed through
+``sparkutil.release_cut`` as soon as the next state is cut.
+
+Used by:
+
+- queries/graph_analytics.py — pagerank (fixed, converged, seeded),
+  connected components, k-core, label propagation, Louvain sweeps, HITS,
+  landmark BFS, random walks, k-truss, diameter BFS, eigenvector
+  centrality;
+- queries/inference.py — Bradley–Terry MM rounds, ER label propagation;
+- queries/similarity.py — k-means centroids, PCA power iteration;
+- queries/text.py — TextRank keyword scores.
+
+Two loops stay hand-rolled, each with its reason at the loop:
+``graph_betweenness_landmarks`` (its backward pass reads every BFS layer)
+and ``bpe_train_merges`` (each round's rewrite needs a driver-side
+collect).  The reference has no iterative operators beyond shortestPath
+(src/extendDocument.coffee:352-366), whose BFS lives in paths.py because
+its per-hop visited-set bookkeeping is not a state-step loop.
 """
 
 from __future__ import annotations

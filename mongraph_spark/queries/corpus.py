@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from mongraph_spark.queries.dedup import _shingles
 from mongraph_spark.queries.pipeline import TRAIN_PCT, VAL_PCT, _doc_hash
-from mongraph_spark.sparkutil import const_part, read_table, scale_out
+from mongraph_spark.sparkutil import const_part, lineage_cut, read_table, scale_out
 
 TEST_LO = TRAIN_PCT + VAL_PCT  # md5 bucket >= 90 -> test split
 
@@ -1154,9 +1154,8 @@ def corpus_ccnet_sketch_cutoffs(spark: SparkSession, sf_dir: str) -> DataFrame:
     synopsis rows.  Integer-exact end to end (xent centibits, integer
     bucket decode)."""
     docs = read_table(spark, sf_dir, "documents")
-    scored = ccnet_score(docs, *ccnet_model(docs)).localCheckpoint(
-        eager=True
-    )  # reused by the sketch, the exact terciles, and the assignment
+    # reused by the sketch, the exact terciles, and the assignment
+    scored = lineage_cut(ccnet_score(docs, *ccnet_model(docs)))
     binned = scored.select(
         "lang",
         "doc_id",
@@ -1561,7 +1560,7 @@ def corpus_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                 % DSIR_BUCKETS
             ).alias("b"),
         )
-        .localCheckpoint(eager=True)
+        .transform(lineage_cut)
     )
     counts_r = tok.groupBy("b").agg(F.count(F.lit(1)).alias("c_r"))
     counts_t = tok.filter(F.col("lang") == "en").groupBy("b").agg(

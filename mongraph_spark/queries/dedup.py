@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mongraph_spark.sparkutil import const_part, read_table, scale_out
+from mongraph_spark.sparkutil import const_part, lineage_cut, read_table, scale_out
 
 ID_SHIFT = 1_000_000
 
@@ -416,7 +416,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 33-aggregate fingerprint stage runs twice (measured ~2x end-to-end)
     fp = per_doc.select(
         "doc_id", F.conv(bits, 2, 10).cast("long").alias("fp")
-    ).localCheckpoint(eager=True)
+    ).transform(lineage_cut)
     a = fp.select(F.col("doc_id").alias("id_a"), F.col("fp").alias("fp_a"))
     b = fp.select(F.col("doc_id").alias("id_b"), F.col("fp").alias("fp_b"))
     # prefix bucket join (high 16 bits) keeps this linear-ish; then exact filter
@@ -520,7 +520,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bucketed = corpus.select(
         "vec_id", "vec", norm.alias("sn"), bucket.alias("bk")
-    ).localCheckpoint(eager=True)
+    ).transform(lineage_cut)
     a = bucketed.select(
         F.col("vec_id").alias("id_a"), F.col("vec").alias("vec_a"),
         F.col("sn").alias("sn_a"), "bk"
@@ -645,7 +645,7 @@ def corpus_semantic_decon(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bucketed = corpus.select(
         "vec_id", "vec", norm.alias("sn"), bucket.alias("bk"), split.alias("split")
-    ).localCheckpoint(eager=True)  # one build feeds both join sides
+    ).transform(lineage_cut)  # one build feeds both join sides
     train = bucketed.filter(F.col("split") == "train").select(
         F.col("vec_id").alias("train_id"), F.col("vec").alias("vec_a"),
         F.col("sn").alias("sn_a"), "bk"
@@ -841,7 +841,7 @@ def dedup_prefix_filter(
     # replays the corpus normalization + shingle build from the scan
     toks = shingled.select(
         "doc_id", F.explode("shingles").alias("token")
-    ).localCheckpoint(eager=True)
+    ).transform(lineage_cut)
     ntok = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     dfreq = toks.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy("doc_id").orderBy("df", "token")
@@ -1091,7 +1091,7 @@ def span_pairs(corpus: DataFrame, k: int, min_span: int) -> DataFrame:
         F.posexplode(_positioned_grams(F.split(F.col("text"), " "), k)).alias(
             "pos", "gram"
         ),
-    ).localCheckpoint(eager=True)  # feeds both sides of the self-join
+    ).transform(lineage_cut)  # feeds both sides of the self-join
     a = grams.select(
         F.col("doc_id").alias("id_a"), F.col("pos").alias("pa"), "gram"
     )
@@ -1204,7 +1204,7 @@ def dedup_span_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     once; the anti-join keys on doc_id with per-doc fanout = that doc's
     interval count; text rebuild is one doc-keyed agg whose in-group sort
     is bounded by document length.  Nothing global anywhere."""
-    spans = dedup_span_exact(spark, sf_dir).localCheckpoint(eager=True)
+    spans = lineage_cut(dedup_span_exact(spark, sf_dir))
     ivals = spans.select(
         F.col("id_b").alias("doc_id"),
         F.col("start_b").alias("s"),
@@ -1328,7 +1328,7 @@ def corpus_span_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode(_positioned_grams(F.split(F.col("text"), " "), SPAN_GRAM)).alias(
             "pos", "gram"
         ),
-    ).localCheckpoint(eager=True)
+    ).transform(lineage_cut)
     tr = grams.filter(F.col("split") == "train").select(
         F.col("doc_id").alias("train_id"), F.col("pos").alias("pt"), "gram"
     )
@@ -1469,7 +1469,7 @@ def span_pairs_capped(
             F.collect_list(F.struct("doc_id", "pos")).alias("occs"),
             F.countDistinct("doc_id").alias("gram_df"),
         )
-        .localCheckpoint(eager=True)  # feeds gram_stats AND the hit expansion
+        .transform(lineage_cut)  # feeds gram_stats AND the hit expansion
     )
     gram_stats = occ.agg(
         F.sum(F.size("occs")).cast("long").alias("n_gram_occurrences"),
@@ -1536,7 +1536,7 @@ def dedup_span_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 key fixes shuffle width regardless of gram length."""
     corpus = span_boiler_corpus(spark, sf_dir)
     spans, gram_stats = span_pairs_capped(corpus, SPAN_GRAM, MIN_SPAN, SPAN_DF_CAP)
-    spans = spans.localCheckpoint(eager=True)
+    spans = lineage_cut(spans)
 
     counts = corpus.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -1671,9 +1671,7 @@ def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     crosses the engines.  Scale: inherits dedup_ngram_jaccard's shapes;
     the sweep adds only per-threshold filters of the bounded scored
     set."""
-    shingled = _shingled_corpus(spark, sf_dir, drop_last=2).localCheckpoint(
-        eager=True
-    )
+    shingled = lineage_cut(_shingled_corpus(spark, sf_dir, drop_last=2))
     cands = _lsh_candidate_pairs(shingled)
     sa = shingled.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a"))
     sb = shingled.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b"))
@@ -1687,7 +1685,7 @@ def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             inter.alias("c"),
             (F.size("sh_a") + F.size("sh_b") - inter).alias("u"),
         )
-        .localCheckpoint(eager=True)  # one scoring pass feeds every threshold
+        .transform(lineage_cut)  # one scoring pass feeds every threshold
     )
     truth = (
         sa.join(sb, F.col("id_b") == F.col("id_a") + ID_SHIFT)
@@ -1697,7 +1695,7 @@ def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             inter.alias("c"),
             (F.size("sh_a") + F.size("sh_b") - inter).alias("u"),
         )
-        .localCheckpoint(eager=True)
+        .transform(lineage_cut)
     )
     out = None
     for t in DEDUP_THRESHOLDS_BP:
@@ -1787,7 +1785,7 @@ def dedup_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     through BOTH method branches and the truth join — the bake-off costs
     one shingle build, not three (the methods' own builds are for their
     standalone registrations)."""
-    shingled = _shingled_corpus(spark, sf_dir, drop_last=2).localCheckpoint(eager=True)
+    shingled = lineage_cut(_shingled_corpus(spark, sf_dir, drop_last=2))
     a = shingled.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a"))
     b = shingled.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
@@ -1920,7 +1918,7 @@ def _semdedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda v, i: F.when(i < n_dims - ZERO_TAIL, v).otherwise(F.lit(0.0)),
         ).alias("vec"),
     )
-    return vecs.unionByName(copies).localCheckpoint(eager=True)
+    return lineage_cut(vecs.unionByName(copies))
 
 
 def semdedup_report(
@@ -2009,7 +2007,7 @@ def _semdedup_finish(assigned: DataFrame, centroids: DataFrame) -> DataFrame:
             norm.alias("nrm"),
             _cos_bp("vec", "c_vec").alias("cs_bp"),
         )
-        .localCheckpoint(eager=True)
+        .transform(lineage_cut)
     )
     a = scored.select(
         "cell",
@@ -2037,7 +2035,7 @@ def _semdedup_finish(assigned: DataFrame, centroids: DataFrame) -> DataFrame:
         .filter(F.col("id_a") < F.col("id_b"))
         .filter(pair_cos >= COS_THRESHOLD_BP)
         .select("cell", "id_a", "id_b", "cs_a", "cs_b")
-        .localCheckpoint(eager=True)
+        .transform(lineage_cut)
     )
     # keep rule: the pair member with the smaller (cs_bp, vec_id) survives;
     # given id_a < id_b that collapses to: b drops when cs_a <= cs_b, a
@@ -2128,7 +2126,7 @@ def semdedup_hier_report(
             .join(corpus, "vec_id")
         )
         coarse = bp_mean(assign1, ["cell0"])
-    assign1 = assign1.localCheckpoint(eager=True)  # feeds level-2 rounds
+    assign1 = lineage_cut(assign1)  # feeds level-2 rounds
 
     # level 2: per-cell fine cells, seeded deterministically and refined
     # with the SAME number of Lloyd rounds (without refinement the raw
@@ -2709,7 +2707,7 @@ def dedup_bbit_minhash_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for i in range(N_HASHES)
             ],
         )
-        .localCheckpoint(eager=True)  # one build feeds every b
+        .transform(lineage_cut)  # one build feeds every b
     )
     out = None
     for b in BBIT_LEVELS:

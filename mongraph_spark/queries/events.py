@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mongraph_spark.sparkutil import const_part, read_table
+from mongraph_spark.sparkutil import const_part, lineage_cut, read_table
 
 SESSION_GAP_MIN = 30
 
@@ -1276,7 +1276,7 @@ def events_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.crossJoin(F.broadcast(d0))
         .groupBy(F.datediff(F.to_date("ts"), F.col("d0")).alias("x"))
         .agg(F.count(F.lit(1)).alias("y"))
-        .localCheckpoint(eager=True)  # reused by pairs (both sides) + OLS
+        .transform(lineage_cut)  # reused by pairs (both sides) + OLS
     )
     a = daily.select(F.col("x").alias("xa"), F.col("y").alias("ya"))
     b = daily.select(F.col("x").alias("xb"), F.col("y").alias("yb"))
@@ -1996,7 +1996,7 @@ def events_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         ev.select("user_id", F.to_date("ts").alias("day"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(lineage_cut)
     )
     days = pairs.select("day").distinct()
     dau = pairs.groupBy("day").agg(F.count(F.lit(1)).alias("dau"))
@@ -2064,7 +2064,7 @@ def events_dau_wau_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy(F.to_date("event_type").alias("day"), "reg")
         .agg(F.max("rho").alias("r"))
-        .localCheckpoint(eager=True)  # feeds the DAU estimate + every window slot
+        .transform(lineage_cut)  # feeds the DAU estimate + every window slot
     )
     days = day_regs.select("day").distinct()
     # daily/weekly actives sit squarely in the 2.5m-5m bias region for
@@ -2717,7 +2717,7 @@ def events_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
             "x",
             "y",
         )
-        .localCheckpoint(eager=True)  # feeds the moment reduce AND the adjustment
+        .transform(lineage_cut)  # feeds the moment reduce AND the adjustment
     )
     mom = per_user.agg(
         F.count(F.lit(1)).alias("n"),
@@ -4554,7 +4554,7 @@ def acf_finish(hourly: DataFrame) -> DataFrame:
     )
     # distinct column names on the two sides: frame-object join conditions
     # (a["x"] == b["x"]) resolve ambiguously when the shared lineage has
-    # been localCheckpointed (the streaming twin's state table)
+    # been cut by lineage_cut (the streaming twin's state table)
     a = pts.select("event_type", "t", F.col("dev").alias("dev_a"))
     b = pts.select(
         F.col("event_type").alias("event_type_b"),

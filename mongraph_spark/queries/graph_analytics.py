@@ -9,7 +9,7 @@ which is exactly what GraphX/GraphFrames compile to underneath).
   oracle expressible as chained SQL CTEs (no recursion).  At scale each
   iteration is one shuffle keyed on node id; lineage is cut by the
   materialized edge store being a parquet scan, and a production loop
-  would localCheckpoint every few iterations (see paths.py BFS).
+  would cut lineage every few iterations (see pregel.iterate).
 
 Float policy: ranks are floored to 1e-4 basis points — double error from
 engine-dependent sum order is ~1e-12, vastly below the grid, so the hash
@@ -18,12 +18,18 @@ compare is stable.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mongraph_spark import pregel
+from mongraph_spark.catalog import local_df
 from mongraph_spark.graphs import tpch
-from mongraph_spark.sparkutil import const_part, maybe_broadcast
+from mongraph_spark.sparkutil import (
+    const_part,
+    lineage_cut,
+    maybe_broadcast,
+    release_cut,
+)
 
 DAMPING = 0.85
 N_ITER = 3
@@ -133,7 +139,7 @@ def pagerank_until_convergence(
 ):
     """Production PageRank loop: iterate until max |Δrank| over a checkpoint
     group < tol_bp/10000.  ``check_every`` rounds run as ONE lazy chain
-    between eager ``localCheckpoint``s — lineage stays bounded at
+    between eager ``lineage_cut``s — lineage stays bounded at
     ``check_every`` joins, and the per-round driver-action overhead (the
     dominant cost of small iterations; at scale, the scheduler round-trip)
     is amortized across the group.  The delta test rides the checkpointed
@@ -350,7 +356,7 @@ def connected_components_until_convergence(
     spark: SparkSession, sf_dir: str, max_rounds: int = 50
 ):
     """Production CC loop: min-label propagation until a round changes ZERO
-    labels, with an eager ``localCheckpoint`` per round for bounded lineage
+    labels, with an eager ``lineage_cut`` per round for bounded lineage
     (the changed-count test materializes each round anyway).  Returns
     ``(labels DataFrame, rounds run)`` where rounds includes the final
     no-change round that proves the fixed point.
@@ -767,14 +773,14 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (
         graph_copurchase_pairs(spark, sf_dir)
         .select("part_a", "part_b")
-        .localCheckpoint(eager=True)
+        .transform(lineage_cut)
     )
     deg = (
         edges.select(F.col("part_a").alias("node"))
         .unionAll(edges.select(F.col("part_b").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint(eager=True)
+        .transform(lineage_cut)
     )
     # orientation: u -> v  iff  (deg(u), u) < (deg(v), v); deg is small
     # (one row per part) -> broadcast both endpoint lookups
@@ -859,7 +865,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     with degree < k and the edges touching them — the standard graph
     densification/degeneracy step before community or motif work.  Each
     round is one degree aggregation + one semi-join per endpoint, all keyed
-    on node id.  The pair graph is eagerly localCheckpoint'd FIRST so the
+    on node id.  The pair graph is eagerly cut FIRST so the
     rounds peel a materialized edge list instead of replaying the
     co-purchase self-join lineage N times (the same replay bug BENCHNOTES
     measured in the label-propagation loop).  Fixed ``N_PEEL_ROUNDS`` unroll
@@ -1034,7 +1040,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: each round is one node-keyed join + one (node,label)
     groupBy + one per-node top-1 window (window input = distinct neighbor
     labels per node, bounded by degree, NOT the corpus).  A production
-    loop would localCheckpoint every few rounds like the CC loop; the
+    loop would cut lineage every few rounds like the CC loop; the
     3-round unroll keeps lineage trivial and the oracle plain CTEs.
     Result: communities of size ≥ 2 with their member count (label =
     smallest attracting node id).
@@ -1053,7 +1059,7 @@ def _lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         graph_copurchase_pairs(spark, sf_dir)
         .select("part_a", "part_b")
-        .localCheckpoint(eager=True)
+        .transform(lineage_cut)
     )
     return _lpa_labels_from(pairs)
 
@@ -1073,7 +1079,7 @@ def _lpa_labels_from(pairs: DataFrame) -> DataFrame:
         )
         # every unrolled round joins against adj: without this checkpoint
         # the union re-executes once per round inside the fused lazy plan
-        .localCheckpoint(eager=True)
+        .transform(lineage_cut)
     )
     from pyspark.sql import Window
 
@@ -1185,9 +1191,9 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         graph_copurchase_pairs(spark, sf_dir)
         .select("part_a", "part_b")
-        .localCheckpoint(eager=True)
+        .transform(lineage_cut)
     )
-    labels = _lpa_labels_from(pairs).localCheckpoint(eager=True)
+    labels = lineage_cut(_lpa_labels_from(pairs))
     adj = pairs.select(
         F.col("part_a").alias("src"), F.col("part_b").alias("dst")
     ).unionByName(
@@ -1342,9 +1348,9 @@ def graph_louvain_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         graph_copurchase_pairs(spark, sf_dir)
         .select("part_a", "part_b")
-        .localCheckpoint(eager=True)
+        .transform(lineage_cut)
     )
-    labels = _lpa_labels_from(pairs).localCheckpoint(eager=True)
+    labels = lineage_cut(_lpa_labels_from(pairs))
     return louvain_refine_from(labels, pairs)
 
 
@@ -1489,8 +1495,8 @@ def louvain_refine_from(labels: DataFrame, pairs: DataFrame) -> DataFrame:
     # score.  Without these two checkpoints the whole move-selection
     # subtree (k_iC join + window argmax) compiled three times over —
     # 288 Exchanges / 126 SortMergeJoins in the formatted plan.
-    deg = deg.localCheckpoint(eager=True)
-    moves = _louvain_moves(labels, adj, deg, mm).localCheckpoint(eager=True)
+    deg = lineage_cut(deg)
+    moves = lineage_cut(_louvain_moves(labels, adj, deg, mm))
     new_labels = labels.join(moves, "node_id", "left").select(
         "node_id", F.coalesce("new_label", "label").alias("label")
     )
@@ -1631,16 +1637,16 @@ def graph_louvain_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stop rule with no conditional SQL (the
     graph_pagerank_converged discipline).
 
-    Per sweep the driver performs ONE scalar count action on the
-    checkpointed move set (the converged-iterator posture: bounded
-    lineage, one action per round); all gain arithmetic is the shared
-    :func:`_louvain_moves` step in exact integers."""
+    Each sweep is ONE job: ``pregel.iterate`` cuts the new labels and the
+    sweep's move count rides that cut as an ``Observation``; the loop
+    stops after the first sweep that moved nothing.  All gain arithmetic
+    is the shared :func:`_louvain_moves` step in exact integers."""
     pairs = (
         graph_copurchase_pairs(spark, sf_dir)
         .select("part_a", "part_b")
-        .localCheckpoint(eager=True)
+        .transform(lineage_cut)
     )
-    labels = _lpa_labels_from(pairs).localCheckpoint(eager=True)
+    labels = lineage_cut(_lpa_labels_from(pairs))
     return louvain_converge_from(labels, pairs)
 
 
@@ -1648,24 +1654,29 @@ def louvain_converge_from(labels: DataFrame, pairs: DataFrame) -> DataFrame:
     """Sweep-to-fixed-point over hand-suppliable frames (see
     graph_louvain_converged)."""
     adj, deg, mm = _louvain_frames(pairs)
-    adj = adj.localCheckpoint(eager=True)
-    deg = deg.localCheckpoint(eager=True)
+    adj = lineage_cut(adj)
+    deg = lineage_cut(deg)
     qb = _louvain_q_scaled(labels, pairs, deg, mm)
-    cur = labels
-    rounds_run = 0
-    n_moved_total = 0
-    for _ in range(LOUVAIN_MAX_SWEEPS):
-        moves = _louvain_moves(cur, adj, deg, mm).localCheckpoint(eager=True)
-        n = moves.count()
-        if n == 0:
-            break
-        rounds_run += 1
-        n_moved_total += n
-        cur = (
-            cur.join(moves, "node_id", "left")
+    moved: list[Observation] = []
+
+    def sweep(cur: DataFrame) -> DataFrame:
+        moved.append(Observation())
+        return (
+            cur.join(_louvain_moves(cur, adj, deg, mm), "node_id", "left")
+            # moves hold at most one row per node, so this counts them
+            .observe(moved[-1], F.count("new_label").alias("n"))
             .select("node_id", F.coalesce("new_label", "label").alias("label"))
-            .localCheckpoint(eager=True)
         )
+
+    cur, _ = pregel.iterate(
+        labels,
+        sweep,
+        max_rounds=LOUVAIN_MAX_SWEEPS,
+        converged=lambda _: moved[-1].get["n"] == 0,
+    )
+    counts = [obs.get["n"] for obs in moved]
+    rounds_run = sum(1 for n in counts if n)
+    n_moved_total = sum(counts)
     qa = _louvain_q_scaled(cur, pairs, deg, mm)
     return (
         qb.select(F.col("qn").alias("qn_before"))
@@ -1753,7 +1764,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_custkey").alias("src"), F.col("l_suppkey").alias("dst")
         )
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(lineage_cut)
     )
 
     def full_sweep(hubs: DataFrame) -> DataFrame:
@@ -1833,7 +1844,7 @@ def _landmark_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
         # materialized once: the adjacency is referenced by every BFS hop
-        .localCheckpoint(eager=True)
+        .transform(lineage_cut)
     )
     adj = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionByName(
         pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
@@ -1973,9 +1984,10 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the adjacency is ranked ONCE (row_number per src — one
     shuffle) and checkpointed; each step is one equi-join of the frontier
-    against (src, rank) — walks stay one row each, so the frontier is
-    |seeds| rows at every step, NOT multiplied by degree.  Output: the
-    walk string per seed (the "sentences" a skip-gram trainer consumes)."""
+    against (src, rank), cut by ``pregel.iterate`` — walks stay one row
+    each, so the frontier is |seeds| rows at every step, NOT multiplied by
+    degree.  Output: the walk string per seed (the "sentences" a skip-gram
+    trainer consumes)."""
     orders = tpch.read_table(spark, sf_dir, "orders")
     lineitem = tpch.read_table(spark, sf_dir, "lineitem")
     pairs = (
@@ -1993,7 +2005,7 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = (
         adj.withColumn("rk", F.row_number().over(w))
         .withColumn("deg", F.count(F.lit(1)).over(Window.partitionBy("src")))
-        .localCheckpoint(eager=True)
+        .transform(lineage_cut)
     )
     # (node, degree) — nodes << edges, so this side broadcasts; resolving the
     # neighbor RANK before touching the edge list turns each step into a
@@ -2003,47 +2015,47 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # past broadcast size, drop the F.broadcast below and both sides
     # shuffle once on the composite (src, rk) key — still never
     # |walkers|·deg rows.
-    degs = ranked.select("src", "deg").distinct().localCheckpoint(eager=True)
-    state = pairs.select("c").distinct().select(
+    degs = lineage_cut(ranked.select("src", "deg").distinct())
+    # the step number rides the state, so each step is a pure function of it
+    step = F.col("step") + 1
+    pick = (
+        F.conv(
+            F.substring(
+                F.md5(F.concat_ws(":", F.col("walk_id"), step, F.col("cur"))),
+                1,
+                8,
+            ),
+            16,
+            10,
+        ).cast("long")
+        % F.col("deg")
+        + 1
+    )
+
+    def walk(state: DataFrame) -> DataFrame:
+        picked = state.join(
+            F.broadcast(degs), state["cur"] == degs["src"]
+        ).select("walk_id", "cur", "path", step.alias("step"), pick.alias("pick"))
+        # walkers (one row per seed) broadcast against the checkpointed
+        # edge ranking: each step is a map-only pass over `ranked`, no
+        # per-step shuffle of the edge list
+        return F.broadcast(picked).join(
+            ranked,
+            (picked["cur"] == ranked["src"]) & (picked["pick"] == ranked["rk"]),
+        ).select(
+            "walk_id",
+            F.col("dst").alias("cur"),
+            F.concat_ws(">", "path", F.col("dst")).alias("path"),
+            "step",
+        )
+
+    start = pairs.select("c").distinct().select(
         F.col("c").alias("walk_id"),
         F.col("c").alias("cur"),
         F.col("c").cast("string").alias("path"),
+        F.lit(0).alias("step"),
     )
-    for step in range(1, WALK_STEPS + 1):
-        pick = (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            ":", F.col("walk_id"), F.lit(step), F.col("cur")
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % F.col("deg")
-            + 1
-        )
-        picked = state.join(
-            F.broadcast(degs), state["cur"] == degs["src"]
-        ).select("walk_id", "cur", "path", pick.alias("pick"))
-        state = (
-            # walkers (one row per seed) broadcast against the checkpointed
-            # edge ranking: each step is a map-only pass over `ranked`, no
-            # per-step shuffle of the edge list
-            F.broadcast(picked).join(
-                ranked,
-                (picked["cur"] == ranked["src"]) & (picked["pick"] == ranked["rk"]),
-            )
-            .select(
-                "walk_id",
-                F.col("dst").alias("cur"),
-                F.concat_ws(">", "path", F.col("dst")).alias("path"),
-            )
-        )
+    state, _ = pregel.iterate(start, walk, max_rounds=WALK_STEPS)
     return state.select(
         "walk_id", "path", F.col("cur").cast("bigint").alias("final_node")
     )
@@ -2165,7 +2177,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned in tests against the independent count."""
     pairs = graph_copurchase_pairs(spark, sf_dir).select(
         "part_a", "part_b"
-    ).localCheckpoint(eager=True)  # feeds sym twice + the closed-ness probe
+    ).transform(lineage_cut)  # feeds sym twice + the closed-ness probe
     sym = pairs.select(F.col("part_a").alias("u"), F.col("part_b").alias("v")).union(
         pairs.select(F.col("part_b").alias("u"), F.col("part_a").alias("v"))
     )
@@ -2292,39 +2304,35 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: each round is ONE wedge self-join + closed-wedge
     semi-join on the shrinking survivor set (Σ deg² candidates — the
-    graph_edge_support bound), with the survivor set eagerly checkpointed
-    between rounds (pregel's lineage posture; rounds cannot be fused
-    anyway because round r's support depends on r−1's deletions).  Peeling
+    graph_edge_support bound), with the survivor set cut between rounds
+    by ``pregel.iterate`` (rounds cannot be fused anyway because round r's
+    support depends on r−1's deletions) and its size observed on the same
+    job.  Peeling
     converges when a round deletes nothing; the fixed {R}-round unroll is
     what a SQL oracle can express, and the final count equals the fixed
     point on this corpus (pinned in tests)."""
-    pairs = (
-        graph_copurchase_pairs(spark, sf_dir)
-        .select("part_a", "part_b")
-        .localCheckpoint(eager=True)
-    )
-    e = pairs
-    rows = [
-        e.agg(F.count(F.lit(1)).alias("n_edges")).select(
-            F.lit(0).cast("bigint").alias("round"), "n_edges"
-        )
-    ]
-    for r in range(1, KTRUSS_ROUNDS + 1):
-        e = (
+    counts: list[Observation] = []
+
+    def observed(e: DataFrame) -> DataFrame:
+        counts.append(Observation())
+        return e.observe(counts[-1], F.count(F.lit(1)).alias("n_edges"))
+
+    def peel(e: DataFrame) -> DataFrame:
+        return observed(
             _truss_support(e)
             .filter(F.col("support") >= KTRUSS_K - 2)
             .select("part_a", "part_b")
-            .localCheckpoint(eager=True)
         )
-        rows.append(
-            e.agg(F.count(F.lit(1)).alias("n_edges")).select(
-                F.lit(r).cast("bigint").alias("round"), "n_edges"
-            )
-        )
-    out = rows[0]
-    for df in rows[1:]:
-        out = out.unionByName(df)
-    return out
+
+    final, _ = pregel.iterate(
+        observed(graph_copurchase_pairs(spark, sf_dir).select("part_a", "part_b")),
+        peel,
+        max_rounds=KTRUSS_ROUNDS,
+    )
+    # every round's edge count was observed as its cut materialized
+    rows = [(r, obs.get["n_edges"]) for r, obs in enumerate(counts)]
+    release_cut(final)
+    return local_df(spark, rows, "round BIGINT, n_edges BIGINT")
 
 
 graph_ktruss.__doc__ = graph_ktruss.__doc__.replace("{K}", str(KTRUSS_K)).replace(
@@ -2528,7 +2536,7 @@ def graph_bipartite_squares(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_suppkey").cast("long").alias("s"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(lineage_cut)
     )
 
     def side(base: DataFrame, key: str, other: str, name: str, bp: int) -> DataFrame:
@@ -2807,7 +2815,7 @@ def graph_betweenness_landmarks(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_suppkey") * 2 + 1).cast("long").alias("s"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(lineage_cut)
     )
     adj = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionByName(
         pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
@@ -2818,9 +2826,11 @@ def graph_betweenness_landmarks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     l0 = landmarks.select(
         "lm", F.col("lm").alias("node"), F.lit(1).cast("bigint").alias("sigma")
-    ).localCheckpoint(eager=True)
+    ).transform(lineage_cut)
     layers = [l0]
-    visited = l0.select("lm", "node").localCheckpoint(eager=True)
+    visited = lineage_cut(l0.select("lm", "node"))
+    # not pregel.iterate: the backward pass reads every layer, and iterate
+    # releases each round's state once the next one is cut
     for _ in range(BETW_HOPS):
         frontier = layers[-1]
         nxt = (
@@ -2829,12 +2839,10 @@ def graph_betweenness_landmarks(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("sigma").alias("sigma"))
             .select("lm", F.col("node2").alias("node"), "sigma")
             .join(visited, ["lm", "node"], "left_anti")
-            .localCheckpoint(eager=True)
+            .transform(lineage_cut)
         )
         layers.append(nxt)
-        visited = visited.unionByName(nxt.select("lm", "node")).localCheckpoint(
-            eager=True
-        )
+        visited = lineage_cut(visited.unionByName(nxt.select("lm", "node")))
     # backward: delta held in BETW_SCALE fixed point, deepest layer = 0
     delta = layers[BETW_HOPS].select(
         "lm", "node", "sigma", F.expr("CAST(0 AS DECIMAL(38,0))").alias("delta")
@@ -2872,7 +2880,7 @@ def graph_betweenness_landmarks(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sigma",
                 F.expr("CAST(coalesce(dsum, 0) AS DECIMAL(38,0))").alias("delta"),
             )
-            .localCheckpoint(eager=True)
+            .transform(lineage_cut)
         )
         deltas.append(delta)
     alld = deltas[0]
@@ -2977,7 +2985,7 @@ def graph_diameter_double_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_suppkey") * 2 + 1).cast("long").alias("s"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(lineage_cut)
     )
     adj = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionByName(
         pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
@@ -3085,7 +3093,7 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         graph_copurchase_pairs(spark, sf_dir)
         .select("part_a", "part_b")
-        .localCheckpoint(eager=True)  # feeds degrees + |K| edge counts
+        .transform(lineage_cut)  # feeds degrees + |K| edge counts
     )
     adj = pairs.select(F.col("part_a").alias("node_id")).unionByName(
         pairs.select(F.col("part_b").alias("node_id"))

@@ -25,6 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mongraph_spark import pregel
 from mongraph_spark.sparkutil import (
     const_part,
     lineage_cut,
@@ -763,8 +764,8 @@ def bt_from_wins(wins: DataFrame) -> DataFrame:
         F.sum("w").cast("long").alias("wins")
     )
     types = n_ij.select(F.col("i").alias("event_type")).distinct()
-    s = types.withColumn("s_ppm", F.lit(1_000_000).cast("long"))
-    for _ in range(BT_ROUNDS):
+
+    def mm_round(s: DataFrame) -> DataFrame:
         si = s.select(F.col("event_type").alias("i"), F.col("s_ppm").alias("si"))
         sj = s.select(F.col("event_type").alias("j"), F.col("s_ppm").alias("sj"))
         inv = (
@@ -791,15 +792,20 @@ def bt_from_wins(wins: DataFrame) -> DataFrame:
         total = raw.groupBy().agg(F.sum("raw").alias("tot"))
         # k-row state: collapse to ONE partition before materializing so the
         # per-round checkpoint writes 1 block, not |shuffle.partitions| files
-        s = (
+        return (
             raw.crossJoin(F.broadcast(total))
             .selectExpr(
                 "event_type",
                 "CAST((raw * 1000000) div tot AS BIGINT) AS s_ppm",
             )
             .coalesce(1)
-            .localCheckpoint(eager=True)
         )
+
+    s, _ = pregel.iterate(
+        types.withColumn("s_ppm", F.lit(1_000_000).cast("long")),
+        mm_round,
+        max_rounds=BT_ROUNDS,
+    )
     w_rank = Window.partitionBy(const_part(F.col("event_type"))).orderBy(
         F.desc("s_ppm"), "event_type"
     )
@@ -1891,10 +1897,10 @@ def _srp_cos_ppm(cands: DataFrame, ivecs: DataFrame) -> DataFrame:
 def srp_from_embeddings(spark: SparkSession, emb: DataFrame) -> DataFrame:
     """SRP top-K over a (vec_id, embedding) frame — factored so
     known-value pins can feed hand vectors."""
-    ivecs = _srp_int_vecs(emb).localCheckpoint(eager=True)
+    ivecs = lineage_cut(_srp_int_vecs(emb))
     # both join sides read bands: checkpoint so the 32-plane projection
     # pass runs once, not twice
-    bands = _srp_bands(spark, ivecs, SRP_BITS).localCheckpoint(eager=True)
+    bands = lineage_cut(_srp_bands(spark, ivecs, SRP_BITS))
     a = bands.select("band", "band_val", F.col("vec_id").alias("vec_a"))
     b = bands.select("band", "band_val", F.col("vec_id").alias("vec_b"))
     cands = (
@@ -2512,10 +2518,10 @@ def ann_srp_band_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus — so the sheet's cost is bounded at ANY corpus size."""
     emb = _srp_sheet_sample(read_table(spark, sf_dir, "embeddings"))
     micro_bits = SRP_PLANES // SRP_CURVE_MICRO
-    ivecs = _srp_int_vecs(emb).localCheckpoint(eager=True)
+    ivecs = lineage_cut(_srp_int_vecs(emb))
     # both join sides read bands: without the checkpoint the 32-plane
     # projection pass compiles (and runs) twice inside the bucket join
-    bands = _srp_bands(spark, ivecs, micro_bits).localCheckpoint(eager=True)
+    bands = lineage_cut(_srp_bands(spark, ivecs, micro_bits))
     a = bands.select("band", "band_val", F.col("vec_id").alias("vec_a"))
     b = bands.select("band", "band_val", F.col("vec_id").alias("vec_b"))
     cands = (
@@ -2531,7 +2537,7 @@ def ann_srp_band_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         _srp_cos_ppm(cands, ivecs)
         .select("bitmap", "cos_ppm")
-        .localCheckpoint(eager=True)  # one verify pass feeds every point
+        .transform(lineage_cut)  # one verify pass feeds every point
     )
     ref = scored.agg(
         F.count(F.when(F.col("cos_ppm") >= SRP_CURVE_TRUTH_PPM, 1))
@@ -2683,10 +2689,10 @@ def ann_srp_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 16× input unclamped — and a knob sheet ranks probe settings on a
     sample, so its cost is bounded at ANY corpus size."""
     emb = _srp_sheet_sample(read_table(spark, sf_dir, "embeddings"))
-    ivecs = _srp_int_vecs(emb).localCheckpoint(eager=True)
+    ivecs = lineage_cut(_srp_int_vecs(emb))
     # probes and exact both read bands: checkpoint so the projection
     # pass runs once, not twice
-    bands = _srp_bands(spark, ivecs, SRP_BITS).localCheckpoint(eager=True)
+    bands = lineage_cut(_srp_bands(spark, ivecs, SRP_BITS))
     # probe side: the exact value (flip = 0) plus each 1-bit flip
     probes = bands.select(
         "vec_id",
@@ -2721,7 +2727,7 @@ def ann_srp_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         _srp_cos_ppm(cands, ivecs)
         .select("min_hamming", "cos_ppm")
-        .localCheckpoint(eager=True)
+        .transform(lineage_cut)
     )
     out = None
     for radius in (0, 1):
@@ -2879,8 +2885,6 @@ def golden_labels(blocked: DataFrame) -> tuple[DataFrame, int]:
     Convergence = zero labels changed in the round just run (labels are
     monotone non-increasing, so a no-change round is a global fixpoint
     and the stop round is well-defined for the SQL replay)."""
-    from mongraph_spark import pregel
-
     a = blocked.select(
         "block_key", F.col("key").alias("key_a"), F.col("name").alias("name_a")
     )

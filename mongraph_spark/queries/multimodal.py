@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mongraph_spark.sparkutil import read_table, scale_out
+from mongraph_spark.sparkutil import lineage_cut, read_table, scale_out
 
 FRAME_COUNT = 8  # mock "video" frames per document
 FRAME_STEP = 3  # sample every 3rd frame
@@ -354,7 +354,7 @@ def mm_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = (
         media.unionByName(copies)
         .mapInPandas(_phash_batches, schema="doc_id long, phash long")
-        .localCheckpoint(eager=True)  # self-join below: don't hash twice
+        .transform(lineage_cut)  # self-join below: don't hash twice
     )
     a = fp.select(F.col("doc_id").alias("id_a"), F.col("phash").alias("fp_a"))
     b = fp.select(F.col("doc_id").alias("id_b"), F.col("phash").alias("fp_b"))

@@ -40,7 +40,7 @@ from mongraph_spark.queries.dedup import (
     _shingled_corpus,
     dup_corpus,
 )
-from mongraph_spark.sparkutil import const_part, read_table
+from mongraph_spark.sparkutil import const_part, lineage_cut, read_table
 
 N_CLUSTER_ROUNDS = 4  # planted dup clusters have diameter 1; 4 covers chains
 
@@ -54,7 +54,7 @@ def _cluster_labels(shingled: DataFrame) -> DataFrame:
     (singletons keep their own id).  Same join shape as
     graph_analytics.graph_connected_components — one shuffle per round.
 
-    The pair graph is materialized ONCE behind an eager ``localCheckpoint``
+    The pair graph is materialized ONCE behind an eager ``lineage_cut``
     before the loop: without it each propagation round replays the whole
     minhash + band self-join lineage (measured 16.7 s → ~4 s at sf0.1), and
     at 100 TB it would replay the corpus's dominant shuffle K times.  The
@@ -65,7 +65,7 @@ def _cluster_labels(shingled: DataFrame) -> DataFrame:
         pairs = _pairs_from_banded(banded)
         adj = pairs.unionByName(
             pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
-        ).localCheckpoint(eager=True)
+        ).transform(lineage_cut)
     finally:
         banded.unpersist()
     return _cluster_labels_from_pairs(shingled, adj)
@@ -274,7 +274,7 @@ def corpus_cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         banded = _banded_sigs(shingled).persist()
         try:
-            pairs = _pairs_from_banded(banded).localCheckpoint(eager=True)
+            pairs = lineage_cut(_pairs_from_banded(banded))
         finally:
             banded.unpersist()
         adj = pairs.unionByName(
@@ -285,7 +285,7 @@ def corpus_cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             _split_of("doc_id").alias("doc_split"),
             _split_of("label").alias("cluster_split"),
-        ).localCheckpoint(eager=True)  # reread by the matrix + both pair joins
+        ).transform(lineage_cut)  # reread by the matrix + both pair joins
 
         sa = shingled.select(
             F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a")
@@ -1261,7 +1261,7 @@ def pipeline_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(n_tokens AS BIGINT) AS n_tokens",
         )
         # materialize before the persisted input is released
-        rows = out.localCheckpoint(eager=True)
+        rows = lineage_cut(out)
         return rows
     finally:
         shingled.unpersist()

@@ -16,7 +16,7 @@ computable map-side per document:
    TakeOrderedAndProject (per-partition heaps merged on the driver — never
    a global sort).
 
-The narrow tf projection is eagerly localCheckpoint'd so passes 2 and 3
+The narrow tf projection is eagerly cut (``lineage_cut``) so passes 2 and 3
 share one corpus scan instead of re-reading the text column twice — the
 same narrow-table checkpoint trade the simhash/fingerprint suites measure
 in COVERAGE.md; the checkpointed table is (k+2) integers per doc, ~1e-4 of
@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mongraph_spark.sparkutil import read_table, scale_out
+from mongraph_spark.sparkutil import lineage_cut, read_table, scale_out
 
 QUERY_TERMS = ["scan", "merge", "window", "shuffle"]
 BM25_K1 = 1.2
@@ -64,7 +64,7 @@ def _tf_projection(docs: DataFrame) -> DataFrame:
 
 def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = scale_out(read_table(spark, sf_dir, "documents"))
-    tf = _tf_projection(docs).localCheckpoint(eager=True)
+    tf = lineage_cut(_tf_projection(docs))
     stats_aggs = [
         F.count(F.lit(1)).cast("double").alias("n_docs"),
         F.sum("dl").cast("double").alias("sum_dl"),
@@ -260,7 +260,7 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-        .localCheckpoint(eager=True)  # shared by dl, df, anchor terms, scoring
+        .transform(lineage_cut)  # shared by dl, df, anchor terms, scoring
     )
     dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).cast("double").alias("df"))

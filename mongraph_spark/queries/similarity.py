@@ -20,7 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mongraph_spark.sparkutil import const_part, read_table
+from mongraph_spark import pregel
+from mongraph_spark.sparkutil import const_part, lineage_cut, read_table
 
 N_QUERIES = 5  # anchors: the N smallest vec_ids
 TOP_K = 10
@@ -544,7 +545,8 @@ def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell — which the floor absorbs unless a mean sits exactly on a cell
     edge.  Assignment ties break on cell id.  Each round is one broadcast
     cross-join assignment (map-only, centroids are K rows) + one
-    (cell, dim)-keyed mean — the standard distributed Lloyd step; at
+    (cell, dim)-keyed mean — the standard distributed Lloyd step, with
+    the K-row centroid state cut each round by ``pregel.iterate``; at
     100 TB you run exactly this with K in the thousands and the
     assignment still map-side.
 
@@ -566,8 +568,8 @@ def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         - 1,
     ).select("cell", "c_vec")
     d = F.expr(_SQ_DIST.format(v="vec", c="c_vec"))
-    assigned = per_dim = None
-    for _ in range(KMEANS_ROUNDS):
+
+    def assign_and_average(centroids: DataFrame) -> tuple[DataFrame, DataFrame]:
         assigned = (
             vecs.crossJoin(F.broadcast(centroids))
             .withColumn("dist", d)
@@ -580,12 +582,23 @@ def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("cell", "dim")
             .agg(F.floor(F.lit(10000) * F.avg("v")).cast("long").alias("c_bp"))
         )
-        centroids = per_dim.groupBy("cell").agg(
+        return assigned, per_dim
+
+    def lloyd_round(centroids: DataFrame) -> DataFrame:
+        _, per_dim = assign_and_average(centroids)
+        return per_dim.groupBy("cell").agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("dim", "c_bp"))),
                 lambda s: s["c_bp"] / F.lit(10000.0),
             ).alias("c_vec")
         )
+
+    # the last round's centroids are never read: only its assignment and
+    # integer bp means are, so the loop stops one round early
+    centroids, _ = pregel.iterate(
+        centroids, lloyd_round, max_rounds=KMEANS_ROUNDS - 1
+    )
+    assigned, per_dim = assign_and_average(centroids)
     counts = assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("n_vectors"))
     # head dims come from the last round's INTEGER bp table directly — a
     # bp/1e4*1e4 round-trip through double can land one grid cell low
@@ -691,7 +704,7 @@ def ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute = (
         ann_cosine_topk(spark, sf_dir)
         .select("q_id", "c_id")
-        .localCheckpoint(eager=True)
+        .transform(lineage_cut)
     )
     emb = read_table(spark, sf_dir, "embeddings")
     vecs = emb.select(
@@ -700,7 +713,7 @@ def ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = _ivf_centroids(emb)
     scored = _ivf_scored(
         vecs, centroids, max(RECALL_CURVE_PROBES)
-    ).localCheckpoint(eager=True)
+    ).transform(lineage_cut)
     w = Window.partitionBy("q_id").orderBy(F.desc("cos_bp"), F.asc("c_id"))
     out = None
     for nprobe in RECALL_CURVE_PROBES:
@@ -970,9 +983,7 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     real dominant direction converges in a handful, and a genuinely flat
     spectrum calls for block power iteration / Lanczos, which compose
     from this same matvec primitive."""
-    from mongraph_spark import pregel
-
-    s = _pca_scatter(spark, sf_dir).localCheckpoint(eager=True)
+    s = lineage_cut(_pca_scatter(spark, sf_dir))
     dims = s.select(F.col("i")).distinct()
     v0 = dims.select("i", F.lit(PCA_VSCALE).cast("bigint").alias("v"))
 
@@ -1570,7 +1581,7 @@ def ann_matryoshka_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     topk = (
         long.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= TOP_K)
-        .localCheckpoint(eager=True)
+        .transform(lineage_cut)
     )
     full = MATRYOSHKA_DIMS[-1]
     truth = topk.filter(F.col("dim") == full).select("q_id", "c_id")

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mongraph_spark.queries.dedup import _shingles, dup_corpus
-from mongraph_spark.sparkutil import read_table, scale_out
+from mongraph_spark.sparkutil import lineage_cut, read_table, scale_out
 
 # function words whose density signals English-like text
 STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it"]
@@ -464,13 +464,11 @@ def text_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inline the whole md5 transform into EVERY window position — O(n²)
     # md5 per document in an interpreted expression tree (measured 388 s
     # for the sf0.1 scan; a plain two-select split gets re-collapsed and
-    # stays ~270 s).  The eager localCheckpoint cuts the projection chain
+    # stays ~270 s).  The eager lineage_cut cuts the projection chain
     # so the gram pass runs ONCE (total ~5 s) — the same fingerprint-once
     # pattern dedup.py uses, and the honest production shape too: a MOSS
     # index build materializes its fingerprint table anyway.
-    with_grams = docs.select("source", grams.alias("grams")).localCheckpoint(
-        eager=True
-    )
+    with_grams = lineage_cut(docs.select("source", grams.alias("grams")))
     wins = F.transform(
         F.sequence(F.lit(0), F.greatest(F.size("grams") - WINNOW_W, F.lit(0))),
         lambda j: F.array_min(F.slice("grams", j + 1, WINNOW_W)),
@@ -558,9 +556,7 @@ def text_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             gram_text, F.slice(words, _k, n_grams), lambda a, b: F.concat_ws(" ", a, b)
         )
     grams = F.transform(gram_text, lambda g: F.md5(g))
-    with_grams = corpus.select("doc_id", grams.alias("grams")).localCheckpoint(
-        eager=True
-    )
+    with_grams = lineage_cut(corpus.select("doc_id", grams.alias("grams")))
     wins = F.transform(
         F.sequence(F.lit(0), F.greatest(F.size("grams") - WINNOW_W, F.lit(0))),
         lambda j: F.array_min(F.slice("grams", j + 1, WINNOW_W)),
@@ -815,7 +811,7 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair count (shuffle width = |distinct pairs|, vocabulary-bounded, not
     corpus-bounded) → ``TakeOrderedAndProject(1)`` for the argmax (per-
     partition top-1 + driver merge — never a global sort) → a map-only
-    literal ``replace`` rewrite, localCheckpointed so round k+1 scans the
+    literal ``replace`` rewrite, cut (``lineage_cut``) so round k+1 scans the
     merged text rather than a k-deep expression chain.  Only the single
     winning pair ever reaches the driver (1 row/round).  At a production
     32k-merge vocabulary you batch the top-J non-conflicting pairs per
@@ -835,7 +831,7 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = (
         docs.select(F.regexp_replace(F.lower("text"), "(.)", "$1 ").alias("t"))
         .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint(eager=False)
+        .transform(lineage_cut, eager=False)
     )
     learned = bpe_train_merges(state, BPE_TRAIN_ROUNDS)
     return spark.createDataFrame(
@@ -853,6 +849,8 @@ def bpe_train_merges(
     early when no adjacent pair remains (degenerate corpora — all docs a
     single symbol)."""
     learned: list[tuple[int, str, str, int, int]] = []
+    # not pregel.iterate: each round's rewrite needs the pair this round's
+    # collect picked, and iterate's step only builds a plan
     for rank in range(1, rounds + 1):
         toks = F.split(F.col("t"), " ")
         n = F.size(toks)
@@ -892,7 +890,7 @@ def bpe_train_merges(
                     F.lit(0),
                 ).alias("n"),
             )
-            .localCheckpoint(eager=True)
+            .transform(lineage_cut)
         )
         n_after = obs.get["n"]
         learned.append((rank, best["w1"], best["w2"], int(best["c"]), int(n_after)))
@@ -919,7 +917,7 @@ def _bpe_learned_merges(
         state = (
             docs.select(F.regexp_replace(F.lower("text"), "(.)", "$1 ").alias("t"))
             .repartition(spark.sparkContext.defaultParallelism)
-            .localCheckpoint(eager=False)
+            .transform(lineage_cut, eager=False)
         )
         _BPE_MERGE_CACHE[key] = bpe_train_merges(state, BPE_TRAIN_ROUNDS)
     return _BPE_MERGE_CACHE[key]

@@ -302,24 +302,17 @@ _SALT_PROFILE_CACHE: dict[tuple, bool] = {}
 
 
 def lineage_cut(df, eager: bool = True):
-    """Deployment-appropriate lineage cut (VERDICT r12 order #5).
+    """The one lineage cut every library site takes (VERDICT r12 order #5).
 
     ``localCheckpoint`` stores blocks on executors with NO lineage
     fallback: on a cluster, losing one executor mid-query fails the job
     instead of recomputing.  On a local master that is a non-tradeoff —
     executor loss IS driver loss — so the fast path stays the default
-    there.  On any non-local master this helper switches the
-    reliability-critical cut sites (the pregel loop states, the store
-    commit path, the ER edge frame) to reliable ``checkpoint()`` into
-    ``$SPARK_GRAFT_CHECKPOINT_DIR`` (default ``<tmp>/mg_ckpt_<appId>``),
+    there.  On any non-local master every cut (loop states, commit
+    batches, a query's reused subplans) becomes a reliable ``checkpoint()``
+    into ``$SPARK_GRAFT_CHECKPOINT_DIR`` (default ``<tmp>/mg_ckpt_<appId>``),
     which survives executor loss.  Override with
-    ``SPARK_GRAFT_CHECKPOINT=local|reliable`` (``auto`` = by master).
-
-    Remaining single-shot ``localCheckpoint`` sites (scan-shaped ops that
-    cut a plan once) keep the fast call deliberately: their loss window is
-    one query, the retry is re-running that query, and a reliable
-    checkpoint would pay a full write+read through the checkpoint dir per
-    cut — the documented tradeoff (README/COVERAGE)."""
+    ``SPARK_GRAFT_CHECKPOINT=local|reliable`` (``auto`` = by master)."""
     import tempfile
 
     mode = os.environ.get("SPARK_GRAFT_CHECKPOINT", "auto")
@@ -341,20 +334,23 @@ def lineage_cut(df, eager: bool = True):
 
 
 def release_cut(df) -> None:
-    """Free a dead ``lineage_cut``'s blocks now instead of at session GC.
+    """Free a dead ``lineage_cut`` now instead of at session GC.
 
     A cut pins its materialized state (RDD blocks for ``localCheckpoint``,
-    a cached copy on top of the files for reliable ``checkpoint``) until
-    the DataFrame is garbage collected on BOTH sides of py4j — which in
+    a cached copy plus the files for reliable ``checkpoint``) until the
+    DataFrame is garbage collected on BOTH sides of py4j — which in
     practice is "never" within a session: a 6-round loop leaked 7
     persisted RDDs per query execution (measured via
     ``getPersistentRDDs``: +7/trial, monotone across a session).  Locally
     that is driver-heap pressure across a long session; at scale it is
-    executor storage holding EVERY round's state instead of the live ones.
+    executor storage holding EVERY round's state instead of the live ones,
+    and checkpoint-dir disk holding every round's files.
     The cut frame's analyzed plan is exactly one ``LogicalRDD`` node;
-    unpersist its RDD.  Only call it on cuts the caller created and that
-    nothing downstream can reference.  Best-effort: any reflection
-    surprise degrades to the old keep-until-GC behavior.
+    unpersist its RDD and, for a reliable cut that was materialized, delete
+    its checkpoint directory (``getCheckpointFile`` is empty for a local
+    cut and for a lazy cut nothing has read yet).  Only call it on cuts the
+    caller created and that nothing downstream can reference.  Best-effort:
+    any reflection surprise degrades to the old keep-until-GC behavior.
 
     MapPartitionsRDD WARNs on every such release ("locally checkpointed
     … cannot be recomputed after unpersisting"), which is exactly the
@@ -362,15 +358,21 @@ def release_cut(df) -> None:
     ``unpersist`` call only and restored afterwards; the warning stays
     live for every other caller in the session."""
     try:
-        jvm = df.sparkSession.sparkContext._jvm
+        sc = df.sparkSession.sparkContext
+        jvm = sc._jvm
+        rdd = df._jdf.queryExecution().analyzed().rdd()
         log4j = jvm.org.apache.logging.log4j
         name = "org.apache.spark.rdd.MapPartitionsRDD"
         before = log4j.LogManager.getLogger(name).getLevel()
         log4j.core.config.Configurator.setLevel(name, log4j.Level.ERROR)
         try:
-            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+            rdd.unpersist(False)
         finally:
             log4j.core.config.Configurator.setLevel(name, before)
+        ckpt = rdd.getCheckpointFile()
+        if ckpt.isDefined():
+            path = jvm.org.apache.hadoop.fs.Path(ckpt.get())
+            path.getFileSystem(sc._jsc.hadoopConfiguration()).delete(path, True)
     except Exception:
         pass
 

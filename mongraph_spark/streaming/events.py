@@ -27,7 +27,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from mongraph_spark.sparkutil import const_part, normalize_event_ts, scale_out
+from mongraph_spark.sparkutil import (
+    const_part,
+    lineage_cut,
+    normalize_event_ts,
+    scale_out,
+)
 
 _sink_seq = itertools.count(1)
 
@@ -1035,10 +1040,10 @@ def streaming_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = run_to_table(agg, output_mode="complete")
     # the finisher self-joins its input (calibration rank vs test
     # audit); through the memory-sink view the shared attribute ids
-    # conflict — localCheckpoint the BOUNDED rollup (the acf-twin fix)
+    # conflict — cut the BOUNDED rollup's lineage (the acf-twin fix)
     daily = out.select(
         "event_type", F.col("w.start").alias("day"), "y"
-    ).localCheckpoint(eager=True)
+    ).transform(lineage_cut)
     return conformal_finish(daily)
 
 
@@ -1078,11 +1083,11 @@ def streaming_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     with _state_partitioning(spark, sf_dir):
         out = run_to_table(agg, output_mode="complete")
     # the finisher self-joins its input; through the memory-sink view the
-    # shared attribute ids defeat Spark's self-join dedup — localCheckpoint
+    # shared attribute ids defeat Spark's self-join dedup — a lineage cut
     # of the BOUNDED rollup detaches the lineage (the acf-twin pattern)
     hourly = out.select(
         "event_type", F.col("w.start").alias("hour"), "y"
-    ).localCheckpoint(eager=True)
+    ).transform(lineage_cut)
     return mann_kendall_finish(hourly)
 
 
@@ -1141,7 +1146,7 @@ def streaming_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (|types|x|hours| rows) detaches the lineage cleanly instead
     hourly = out.select(
         "event_type", F.col("w.start").alias("hour"), "y"
-    ).localCheckpoint(eager=True)
+    ).transform(lineage_cut)
     return acf_finish(hourly)
 
 
@@ -1579,7 +1584,7 @@ def streaming_ccnet_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.ntile(4).over(
             Window.partitionBy(const_part(F.col("doc_id"))).orderBy("doc_id")
         ),
-    ).localCheckpoint(eager=True)
+    ).transform(lineage_cut)
     for i in range(1, 5):
         batched.filter(F.col("arrival") == i).drop("arrival").coalesce(1).write.mode(
             "append"
@@ -1835,7 +1840,7 @@ def streaming_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.posexplode(
                 _positioned_grams(F.split(F.col("text"), " "), SPAN_GRAM)
             ).alias("pos", "gram"),
-        ).localCheckpoint(eager=True)  # feeds cross join, intra join, index append
+        ).transform(lineage_cut)  # feeds cross join, intra join, index append
         a = grams_b.select(
             F.col("doc_id").alias("id_x"), F.col("pos").alias("px"), "gram"
         )
@@ -1997,7 +2002,7 @@ def streaming_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
                 ).alias("band_cell"),
             )
-            .localCheckpoint(eager=True)  # feeds intra, cross, index append
+            .transform(lineage_cut)  # feeds intra, cross, index append
         )
         cands = (
             bl.select("band_cell", F.col("doc_id").alias("id_a"))
@@ -2023,7 +2028,7 @@ def streaming_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
             cands = cands.unionByName(cross)
-        cands = cands.distinct().localCheckpoint(eager=True)  # feeds need + verify
+        cands = lineage_cut(cands.distinct())  # feeds need + verify
         # verify only what the bands surfaced: the candidate id set is
         # band-collision-sized, so it broadcasts into a scan of the
         # arrivals log (every candidate has arrived by construction) and
@@ -2040,7 +2045,7 @@ def streaming_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(
                 "doc_id", _shingles(F.split(F.col("text"), " ")).alias("shingles")
             )
-            .localCheckpoint(eager=True)  # feeds BOTH sides of the verify
+            .transform(lineage_cut)  # feeds BOTH sides of the verify
             # join — without this the arrivals scan + shingle HOF run twice
         )
         sa = lookup.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a"))
@@ -2123,7 +2128,7 @@ def streaming_ivm_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     view0 = v0.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_chars").cast("long").alias("sum_chars"),
-    ).localCheckpoint(eager=True)
+    ).transform(lineage_cut)
     view_root = root + "_view"
     shutil.rmtree(view_root, ignore_errors=True)
     merge_store.init_table(view0, view_root, key="source", n_buckets=4)
@@ -2257,7 +2262,7 @@ def streaming_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
-        batch_df = batch_df.localCheckpoint(eager=True)  # 4 consumers below
+        batch_df = lineage_cut(batch_df)  # 4 consumers below
         ver = batch_df.agg(F.max("_commit_version")).collect()[0][0]
         if ver is None:
             return
@@ -2419,7 +2424,7 @@ def streaming_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.ntile(4).over(
             Window.partitionBy(const_part(F.col("vec_id"))).orderBy("vec_id")
         ),
-    ).localCheckpoint(eager=True)  # staged once; 4 filtered writes
+    ).transform(lineage_cut)  # staged once; 4 filtered writes
     for i in range(1, 5):
         batched.filter(F.col("arrival") == i).drop("arrival").coalesce(
             1
@@ -2492,10 +2497,10 @@ def streaming_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     with _state_partitioning(spark, sf_dir):
         out = run_to_table(agg, output_mode="complete")
     # hurst_finish joins the rollup against its own per-type hour counts;
-    # localCheckpoint detaches the memory-sink lineage (the acf pattern)
+    # lineage_cut detaches the memory-sink lineage (the acf pattern)
     hourly = out.select(
         "event_type", F.col("w.start").alias("hour"), "y"
-    ).localCheckpoint(eager=True)
+    ).transform(lineage_cut)
     return hurst_finish(hourly)
 
 
@@ -2548,10 +2553,10 @@ def streaming_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     with _state_partitioning(spark, sf_dir):
         out = run_to_table(agg, output_mode="complete")
     # ccf_finish self-joins the rollup (x vs y legs + the top-2 ranking);
-    # localCheckpoint detaches the memory-sink lineage (the acf pattern)
+    # lineage_cut detaches the memory-sink lineage (the acf pattern)
     hourly = out.select(
         "event_type", F.col("w.start").alias("hour"), "y"
-    ).localCheckpoint(eager=True)
+    ).transform(lineage_cut)
     return ccf_finish(hourly)
 
 
@@ -2579,10 +2584,10 @@ def streaming_theta_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     with _state_partitioning(spark, sf_dir):
         out = run_to_table(agg, output_mode="complete")
     # theta_finish joins the rollup against its own per-type trend fit;
-    # localCheckpoint detaches the memory-sink lineage (the acf pattern)
+    # lineage_cut detaches the memory-sink lineage (the acf pattern)
     daily = out.select(
         "event_type", F.col("w.start").cast("date").alias("day"), "y"
-    ).localCheckpoint(eager=True)
+    ).transform(lineage_cut)
     return theta_finish(daily)
 
 
@@ -2611,7 +2616,7 @@ def streaming_granger_causality(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = run_to_table(agg, output_mode="complete")
     hourly = out.select(
         "event_type", F.col("w.start").alias("hour"), "y"
-    ).localCheckpoint(eager=True)
+    ).transform(lineage_cut)
     return granger_finish(hourly)
 
 
@@ -2639,7 +2644,7 @@ def streaming_dickey_fuller(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = run_to_table(agg, output_mode="complete")
     hourly = out.select(
         "event_type", F.col("w.start").alias("hour"), "y"
-    ).localCheckpoint(eager=True)
+    ).transform(lineage_cut)
     return dickey_fuller_finish(hourly)
 
 
@@ -2667,7 +2672,7 @@ def streaming_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = run_to_table(agg, output_mode="complete")
     hourly = out.select(
         "event_type", F.col("w.start").alias("hour"), "y"
-    ).localCheckpoint(eager=True)
+    ).transform(lineage_cut)
     return kendall_finish(hourly)
 
 

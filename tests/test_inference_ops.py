@@ -97,7 +97,11 @@ def test_bradley_terry_two_player_ratio(spark):
     wins = spark.createDataFrame(
         [("a", "b", 3), ("b", "a", 1)], "winner string, loser string, w long"
     )
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
     rows = {r["event_type"]: r for r in bt_from_wins(wins).collect()}
+    # the round loop frees every dead strength state: only the final one stays
+    assert persisted().size() - before <= 1
     assert rows["a"]["rank"] == 1 and rows["b"]["rank"] == 2
     assert rows["a"]["wins"] == 3 and rows["a"]["n_duels"] == 4
     assert abs(rows["a"]["s_ppm"] - 750_000) < 2_000

@@ -109,11 +109,13 @@ def test_lineage_is_bounded_by_checkpoint_cadence(spark):
 
 
 def test_graph_queries_share_the_loop():
-    """All five iterative graph families route through pregel.iterate —
-    no residual hand-rolled driver loops (source-level pin)."""
+    """The iterative graph families, Bradley–Terry and k-means route
+    through pregel.iterate — no residual hand-rolled driver loops
+    (source-level pin)."""
     import inspect
 
     from mongraph_spark.queries import graph_analytics as ga
+    from mongraph_spark.queries import inference, similarity
 
     for fn in (
         ga.graph_pagerank,
@@ -123,7 +125,39 @@ def test_graph_queries_share_the_loop():
         ga._kcore_degree_hist,
         ga._lpa_labels_from,  # the loop carrier behind label_propagation/modularity
         ga.graph_ppr_seeded,
+        ga.louvain_converge_from,
+        ga.graph_ktruss,
+        ga.graph_random_walks,
+        inference.bt_from_wins,
+        similarity.embedding_kmeans,
     ):
         src = inspect.getsource(fn)
         assert "pregel.iterate(" in src, fn.__name__
         assert "for _ in range" not in src.replace("for _ in range(group)", ""), fn.__name__
+
+
+def test_no_local_checkpoint_outside_lineage_cut():
+    """Every lineage cut goes through sparkutil.lineage_cut, the one place
+    that picks local or reliable checkpointing for the deployment."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    offenders = []
+    for path in sorted([*root.glob("mongraph_spark/**/*.py"), *root.glob("tools/**/*.py")]):
+        tree = ast.parse(path.read_text())
+        allowed = set()
+        if path.name == "sparkutil.py":
+            cut = next(
+                n for n in tree.body
+                if isinstance(n, ast.FunctionDef) and n.name == "lineage_cut"
+            )
+            allowed = {id(n) for n in ast.walk(cut)}
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "localCheckpoint"
+                and id(node) not in allowed
+            ):
+                offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert offenders == []

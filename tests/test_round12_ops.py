@@ -102,7 +102,11 @@ def test_louvain_converged_reaches_fixed_point(spark):
         [(1, 1), (2, 1), (3, 10), (4, 10), (5, 10), (6, 10)],
         "node_id long, label long",
     )
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
     row = louvain_converge_from(labels, pairs).collect()[0]
+    # adj, deg and the final labels stay cut; every dead sweep state is freed
+    assert persisted().size() - before <= 3
     assert row["rounds_run"] == 1
     assert row["n_moved_total"] == 1
     assert row["q_after_micro"] == (1_000_000 * 70) // 196
@@ -111,7 +115,9 @@ def test_louvain_converged_reaches_fixed_point(spark):
         [(1, 1), (2, 1), (3, 1), (4, 4), (5, 4), (6, 4)],
         "node_id long, label long",
     )
+    before = persisted().size()
     row0 = louvain_converge_from(opt, pairs).collect()[0]
+    assert persisted().size() - before <= 3
     assert row0["rounds_run"] == 0
     assert row0["n_moved_total"] == 0
     assert row0["q_before_micro"] == row0["q_after_micro"]

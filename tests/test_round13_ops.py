@@ -122,6 +122,37 @@ def test_pregel_releases_dead_loop_states(spark):
     assert {(r["k"], r["v"]) for r in out.collect()} == {(1, 5), (2, 15)}
 
 
+def test_release_cut_removes_reliable_checkpoint_files(spark, monkeypatch, tmp_path):
+    # a released reliable cut drops its checkpoint directory too, not only
+    # its cached blocks: after a 3-round loop the checkpoint dir holds the
+    # final state's files and nothing from the initial cut or rounds 1-2.
+    # The session keeps the first checkpoint dir it was given, so compare
+    # the rdd-* entries of whichever dir is live before and after.
+    from mongraph_spark import pregel
+
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT", "reliable")
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ck"))
+    sc = spark.sparkContext
+
+    def rdd_dirs() -> set[str]:
+        ckdir = sc.getCheckpointDir()
+        if ckdir is None:
+            return set()
+        local = ckdir.removeprefix("file:")
+        return {d for d in os.listdir(local) if d.startswith("rdd-")}
+
+    before = rdd_dirs()
+    out, rounds = pregel.iterate(
+        spark.createDataFrame([(1, 0), (2, 10)], "k long, v long"),
+        lambda s: s.select("k", (F.col("v") + 1).alias("v")),
+        max_rounds=3,
+    )
+    assert rounds == 3
+    final = out._jdf.queryExecution().analyzed().rdd().getCheckpointFile().get()
+    assert rdd_dirs() - before == {final.rsplit("/", 1)[-1]}
+    assert {(r["k"], r["v"]) for r in out.collect()} == {(1, 3), (2, 13)}
+
+
 def test_srp_int_vecs_guard_raises_out_of_bound(spark):
     # the BIGINT dot folds are only exact while |component| <= 100
     # (64·(100·10⁶)² = 6.4e17 < 2⁶³); the grid transform must fail
