@@ -2,11 +2,12 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 $SPARK_GRAFT_CPUS defaults to the cores this process may use.
 
-Prints TWO JSON lines: first the fat per-query map, then — LAST, so a
-tail-buffered log capture always holds one complete parseable line — a
-compact summary {"metric", "value", "unit", "sf", "n_queries"}.  (Round 2's
-single fat line lost its front, including "value", to the driver's tail
-buffer.)
+Prints one JSON line per query as measured, then the detail lines (first
+pass, best-of-3, anchors), then — LAST, so a tail-buffered log capture
+always holds them complete — a compact summary {"metric", "value", "unit",
+"sf", "n_queries"} followed by the bare {query: best-of-3 wall} map.
+(Round 2's single fat line lost its front, including "value", to such a
+tail buffer.)
 
 Each query is materialized with the noop writer (full execution, no driver
 collect overhead) after a warm-up of the session.
@@ -188,7 +189,9 @@ def main() -> None:
         )
     )
     sys.stdout.flush()
-    # compact line LAST: survives tail-buffer truncation intact
+    # the compact total, then the bare {query: best-of-3 wall} map: the two
+    # last lines survive tail-buffer truncation intact, so the per-query
+    # comparison no longer depends on the detail lines above fitting in it
     print(
         json.dumps(
             {
@@ -200,6 +203,7 @@ def main() -> None:
             }
         )
     )
+    print(json.dumps(timings, separators=(",", ":")), flush=True)
 
 
 if __name__ == "__main__":

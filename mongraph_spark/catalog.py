@@ -153,6 +153,10 @@ class GraphStore:
     def collection_names(self) -> list[str]:
         raise NotImplementedError
 
+    def frame_collections(self) -> list[str]:
+        """The collections ``documents_df`` can build a frame for."""
+        return self.collection_names()
+
 
 class BulkGraph(GraphStore):
     """Immutable store over existing DataFrames (the scale path)."""
@@ -216,6 +220,9 @@ class MutableCatalog(GraphStore):
 
     def collection_names(self) -> list[str]:
         return list(self._docs)
+
+    def frame_collections(self) -> list[str]:
+        return [c for c in self._docs if c in self._doc_schemas]
 
     # -- document mutations --------------------------------------------------
 

@@ -21,12 +21,10 @@ Grammar (whitespace-insensitive):
 
 from __future__ import annotations
 
-import json
 import re
 from typing import Any
 
-from mongraph_spark.node import Relationship
-from mongraph_spark.populate import attach_endpoint_documents
+from mongraph_spark.populate import attach_endpoint_documents, relationships
 from mongraph_spark.sparkutil import OLTP_COLLECT_CAP, bounded_collect
 
 _START_ITEM = re.compile(
@@ -224,25 +222,14 @@ def execute_cypher(engine, cypher: str, options: dict | None = None):
     if q["action"] == "DELETE":
         return engine.delete_edges(tq)
 
-    df = tq.apply(edges)
-    load_documents = options.get("loadDocuments", True)
-    if load_documents:
-        # ONE enrichment join before the collect — not a find_document pair
-        # per collected row (the reference's N+1 populate anti-pattern,
-        # src/processtools.coffee:184-212, solved by construction here).
-        df = attach_endpoint_documents(store, df)
     rows = bounded_collect(
-        df,
+        tq.apply(edges),
         cap=options.get("maxRows", OLTP_COLLECT_CAP),
         context="Mongraph.queryGraph",
     )
-    out = []
-    for r in rows:
-        rel = Relationship(
-            r.rel_id, r.src, r.dst, r.type, dict(r.props or {}), r._from, r._to, r._created_at
-        )
-        if load_documents:
-            rel.from_ = json.loads(r.from_doc) if r.from_doc is not None else None
-            rel.to = json.loads(r.to_doc) if r.to_doc is not None else None
-        out.append(rel)
-    return out
+    # ONE batched lookup per touched collection after the collect — not a
+    # find_document pair per collected row (the reference's N+1 populate
+    # anti-pattern, src/processtools.coffee:184-212, solved by construction).
+    load_documents = options.get("loadDocuments", True)
+    docs = attach_endpoint_documents(store, rows) if load_documents else None
+    return relationships(rows, docs)

@@ -1,24 +1,26 @@
-"""Populate: the cross-store enrichment / semi join (SURVEY.md §2.4).
+"""Populate: the cross-store document lookups (SURVEY.md §2.4).
 
 The reference loads, per graph result row, each endpoint document with an
 N+1 ``findOne`` (reference src/processtools.coffee:119-256) and *drops the
 whole relationship row* when an endpoint fails the document predicate or the
-collection filter.  Here that is one declarative join pipeline:
+collection filter.  Here that splits in two:
 
-    edges ⋈ D[from_coll] ⋈ D[to_coll]
+- :func:`semi_populate` is the drop semantics as a declarative plan: two
+  left-semi joins of the edges against the predicate-filtered
+  ``(collection, _id)`` keys, the predicate pushed into each document scan.
+- :func:`attach_endpoint_documents` loads the documents of edges already
+  collected: one batched ``_id IN (...)`` lookup per touched collection,
+  not one per row.  On a catalog view the lookup folds into the view's
+  ``LocalRelation`` and runs no Spark job.
 
-with the document predicate pushed down as a ``filter`` on each document
-DataFrame *before* the join (Catalyst pushes it into the scan), and
-inner-join semantics giving the drop-if-no-match behavior for free.
-Dimension-sized document sets get broadcast automatically by Catalyst/AQE;
-``F.broadcast`` is applied when the store declares a side small.
-
+:func:`enrich_edges` is the typed join form for homogeneous bulk edge sets.
 The reference document itself is exempt from the predicate
 (reference src/processtools.coffee:171,194,201).
 """
 
 from __future__ import annotations
 
+import json
 from typing import Any
 
 from pyspark.sql import Column, DataFrame
@@ -26,12 +28,16 @@ from pyspark.sql import functions as F
 
 from mongraph_spark.catalog import GraphStore
 from mongraph_spark.mongo_expr import mongo_to_column
+from mongraph_spark.node import Relationship
+from mongraph_spark.sparkutil import bounded_collect
 
 
 def split_locator(col: Column) -> tuple[Column, Column]:
     """Split a ``"<collection>:<_id>"`` composite (extractCollectionAndId,
-    reference src/processtools.coffee:56-57)."""
-    return F.split(col, ":", 2).getItem(0), F.split(col, ":", 2).getItem(1)
+    reference src/processtools.coffee:56-57); the ``_id`` of a locator
+    without ``:`` is null (``getItem`` raises there under ANSI)."""
+    parts = F.split(col, ":", 2)
+    return parts.getItem(0), F.get(parts, 1)
 
 
 def with_endpoint_locators(edges: DataFrame) -> DataFrame:
@@ -45,12 +51,15 @@ def with_endpoint_locators(edges: DataFrame) -> DataFrame:
     )
 
 
-def _filtered_docs(
+def filtered_documents(
     store: GraphStore,
     collection: str,
     where_document: dict[str, Any] | None,
-    reference_id: str | None,
+    reference_id: str | None = None,
 ) -> DataFrame:
+    """``collection``'s documents matching a Mongo predicate (compiled to a
+    Column filter Catalyst pushes into the scan); ``reference_id``'s
+    document always matches."""
     df = store.documents_df(collection)
     if where_document:
         cols = set(df.columns)
@@ -83,7 +92,8 @@ def semi_populate(
 
     ``collections`` restricts which collections may appear at the non-anchor
     endpoint (the reference's ``options.collection`` skip,
-    src/processtools.coffee:173,196) — endpoints in other collections fail.
+    src/processtools.coffee:173,196) — endpoints in other collections fail,
+    and so do endpoints in a collection the store has no frame for.
 
     Plan shape: exactly two left-semi joins (one per endpoint side) against a
     single union of (collection, _id) key pairs — not one join per collection.
@@ -91,11 +101,12 @@ def semi_populate(
     columns, so it broadcasts cheaply even when document tables are huge.
     """
     e = with_endpoint_locators(edges)
-    touched = collections or store.collection_names()
+    frames = store.frame_collections()
+    touched = [c for c in collections or frames if c in frames]
 
     keys: DataFrame | None = None
     for coll in touched:
-        part = _filtered_docs(store, coll, where_document, reference_id).select(
+        part = filtered_documents(store, coll, where_document, reference_id).select(
             F.lit(coll).alias("__coll"), F.col("_id").alias("__doc_id")
         )
         keys = part if keys is None else keys.unionByName(part)
@@ -119,62 +130,60 @@ def semi_populate(
     return e.drop("_from_collection", "_from_id", "_to_collection", "_to_id")
 
 
-def attach_endpoint_documents(
-    store: GraphStore,
-    edges: DataFrame,
-    collections: list[str] | None = None,
-) -> DataFrame:
-    """Attach both endpoint documents to a (possibly mixed-collection) edge
-    set in ONE declarative plan — the batched replacement for the reference's
-    per-relationship ``findOne`` pair (src/processtools.coffee:184-212).
+def attach_endpoint_documents(store: GraphStore, rows: list) -> dict[str, str]:
+    """Look up the endpoint documents of collected edge ``rows``: one
+    batched lookup per touched collection, the replacement for the
+    reference's per-relationship ``findOne`` pair
+    (src/processtools.coffee:184-212).
 
-    Collections have heterogeneous schemas, so each document is carried as a
-    JSON-encoded struct in a single unioned ``(collection, _id, doc_json)``
-    side, joined once per endpoint side (left join: an edge whose endpoint
-    document is missing keeps the row with a null doc, matching the
-    point-lookup behavior).  The join side is |docs| rows of three narrow
-    columns regardless of collection count — no per-row lookups, no
-    per-collection join fan-out, and the same plan runs distributed on a
-    BulkGraph store where a driver-side lookup would not work at all.
+    Returns ``{"<collection>:<_id>": doc_json}`` for every ``_from``/``_to``
+    locator whose document exists.  Each lookup is one
+    ``_id IN (...)`` filter plus a ``to_json`` projection over the
+    collection's frame: over a catalog view Catalyst folds both into the
+    ``LocalRelation`` and the collect runs no Spark job; over a bulk store
+    it is one filtered scan.  A locator without a ``:``, a missing document
+    and a collection the store has no frame for all leave the endpoint
+    unpopulated (``None``), as a failed point lookup would.  A duplicate
+    ``_id`` raises instead of fanning the edge out; the collect is capped at
+    the number of ids asked for.
     """
-    e = with_endpoint_locators(edges)
-    touched = collections or store.collection_names()
-
-    docs: DataFrame | None = None
-    for coll in touched:
+    wanted: dict[str, set[str]] = {}
+    for r in rows:
+        for loc in (r._from, r._to):
+            coll, sep, _id = (loc or "").partition(":")
+            if sep:
+                wanted.setdefault(coll, set()).add(_id)
+    docs: dict[str, str] = {}
+    for coll in wanted.keys() & set(store.frame_collections()):
+        ids = wanted[coll]
         d = store.documents_df(coll)
-        part = d.select(
-            F.lit(coll).alias("__coll"),
-            F.col("_id").alias("__doc_id"),
-            F.to_json(F.struct(*[F.col(c) for c in d.columns])).alias("__doc_json"),
+        found = bounded_collect(
+            d.filter(F.col("_id").isin(sorted(ids))).select(
+                "_id", F.to_json(F.struct(*[F.col(c) for c in d.columns]))
+            ),
+            cap=len(ids),
+            context=f"attach_endpoint_documents({coll!r})",
         )
-        docs = part if docs is None else docs.unionByName(part)
-    if docs is None:
-        out = e.withColumn("from_doc", F.lit(None).cast("string"))
-        out = out.withColumn("to_doc", F.lit(None).cast("string"))
-    else:
-        fdocs = docs.select(
-            F.col("__coll").alias("__f_coll"),
-            F.col("__doc_id").alias("__f_id"),
-            F.col("__doc_json").alias("from_doc"),
+        for _id, doc in found:
+            if f"{coll}:{_id}" in docs:
+                raise RuntimeError(f"collection {coll!r} holds _id {_id!r} twice")
+            docs[f"{coll}:{_id}"] = doc
+    return docs
+
+
+def relationships(rows: list, docs: dict[str, str] | None = None) -> list[Relationship]:
+    """Relationship objects for collected edge rows; with ``docs`` (from
+    :func:`attach_endpoint_documents`) each carries its endpoint documents."""
+    out = []
+    for r in rows:
+        rel = Relationship(
+            r.rel_id, r.src, r.dst, r.type, dict(r.props or {}), r._from, r._to, r._created_at
         )
-        tdocs = docs.select(
-            F.col("__coll").alias("__t_coll"),
-            F.col("__doc_id").alias("__t_id"),
-            F.col("__doc_json").alias("to_doc"),
-        )
-        out = e.join(
-            fdocs,
-            (F.col("_from_collection") == F.col("__f_coll"))
-            & (F.col("_from_id") == F.col("__f_id")),
-            "left",
-        ).join(
-            tdocs,
-            (F.col("_to_collection") == F.col("__t_coll"))
-            & (F.col("_to_id") == F.col("__t_id")),
-            "left",
-        ).drop("__f_coll", "__f_id", "__t_coll", "__t_id")
-    return out.drop("_from_collection", "_from_id", "_to_collection", "_to_id")
+        if docs is not None:
+            rel.from_ = json.loads(docs[r._from]) if r._from in docs else None
+            rel.to = json.loads(docs[r._to]) if r._to in docs else None
+        out.append(rel)
+    return out
 
 
 def enrich_edges(
@@ -198,8 +207,8 @@ def enrich_edges(
         (F.col("_from_collection") == from_collection)
         & (F.col("_to_collection") == to_collection)
     )
-    fdocs = _filtered_docs(store, from_collection, where_from, reference_id)
-    tdocs = _filtered_docs(store, to_collection, where_to, reference_id)
+    fdocs = filtered_documents(store, from_collection, where_from, reference_id)
+    tdocs = filtered_documents(store, to_collection, where_to, reference_id)
     fdocs = fdocs.select([F.col(c).alias(f"{from_prefix}{c}") for c in fdocs.columns])
     tdocs = tdocs.select([F.col(c).alias(f"{to_prefix}{c}") for c in tdocs.columns])
     out = e.join(fdocs, e["_from_id"] == fdocs[f"{from_prefix}_id"], "inner")

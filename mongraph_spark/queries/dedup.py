@@ -98,8 +98,11 @@ def _shingles(words: Column, n: int = 3) -> Column:
     return F.array_distinct(acc)
 
 
+# The shingles, the LSH bands and the candidate pairs are each read more
+# than once downstream (one band self-join per band; both pair sides), so
+# their CTEs are MATERIALIZED: DuckDB otherwise inlines a CTE per reference.
 _ORACLE_SHINGLES = """
-shingled AS (
+shingled AS MATERIALIZED (
   SELECT doc_id,
          list_distinct(list_transform(
            range(1, greatest(len(words) - 3, 0) + 2),
@@ -239,7 +242,7 @@ def _oracle_lsh_sql() -> str:
         for b in range(N_BANDS)
     )
     return (
-        f"banded AS (\n  SELECT doc_id,\n         {bands}\n  FROM sig\n)\n"
+        f"banded AS MATERIALIZED (\n  SELECT doc_id,\n         {bands}\n  FROM sig\n)\n"
         f"SELECT DISTINCT id_a, id_b FROM (\n  {per_band}\n)"
     )
 
@@ -304,8 +307,8 @@ def _oracle_cands_sql() -> str:
         for b in range(N_BANDS)
     )
     return (
-        f"banded AS (\n  SELECT doc_id,\n         {bands}\n  FROM sig\n),\n"
-        f"cands AS (\n  SELECT DISTINCT id_a, id_b FROM (\n    {per_band}\n  )\n)"
+        f"banded AS MATERIALIZED (\n  SELECT doc_id,\n         {bands}\n  FROM sig\n),\n"
+        f"cands AS MATERIALIZED (\n  SELECT DISTINCT id_a, id_b FROM (\n    {per_band}\n  )\n)"
     )
 
 

@@ -911,7 +911,10 @@ def _kcore_degree_hist(spark: SparkSession, sf_dir: str, rounds: int) -> DataFra
 
 
 def _kcore_oracle() -> str:
-    body = """e0 AS (
+    # MATERIALIZED on every multiply-referenced CTE: each peel round reads
+    # the previous edge set three times and its core twice, so DuckDB's
+    # per-reference inlining re-ran the whole chain per reference
+    body = """e0 AS MATERIALIZED (
   SELECT part_a, part_b FROM (
     SELECT a.part_id AS part_a, b.part_id AS part_b, count(*) AS n_orders
     FROM (SELECT DISTINCT src AS order_id, dst AS part_id FROM g_edges WHERE type = 'contains') a
@@ -928,8 +931,8 @@ d{r} AS (
     SELECT part_a AS node FROM {prev} UNION ALL SELECT part_b FROM {prev}
   ) GROUP BY node
 ),
-k{r} AS (SELECT node FROM d{r} WHERE deg >= {KCORE_K}),
-e{r} AS (
+k{r} AS MATERIALIZED (SELECT node FROM d{r} WHERE deg >= {KCORE_K}),
+e{r} AS MATERIALIZED (
   SELECT e.part_a, e.part_b FROM {prev} e
   WHERE e.part_a IN (SELECT node FROM k{r})
     AND e.part_b IN (SELECT node FROM k{r})

@@ -93,11 +93,13 @@ def _cluster_labels_from_pairs(shingled: DataFrame, adj: DataFrame) -> DataFrame
 def _oracle_cluster_ctes() -> str:
     """corpus → shingles → minhash sig → banded → cands → K propagation
     rounds, mirroring _cluster_labels on the same generated CTE chain the
-    dedup oracles use."""
-    body = f"""adj AS (
+    dedup oracles use.  Every round reads the previous labels twice, so
+    the adjacency and each round are MATERIALIZED: DuckDB otherwise
+    inlines a CTE per reference and re-runs the chain 2^K times."""
+    body = f"""adj AS MATERIALIZED (
   SELECT id_a, id_b FROM cands UNION ALL SELECT id_b AS id_a, id_a AS id_b FROM cands
 ),
-l0 AS (SELECT doc_id, doc_id AS label FROM shingled)"""
+l0 AS MATERIALIZED (SELECT doc_id, doc_id AS label FROM shingled)"""
     prev = "l0"
     for k in range(1, N_CLUSTER_ROUNDS + 1):
         body += f""",
@@ -106,7 +108,7 @@ nm{k} AS (
   FROM {prev} l JOIN adj a ON l.doc_id = a.id_a
   GROUP BY a.id_b
 ),
-l{k} AS (
+l{k} AS MATERIALIZED (
   SELECT l.doc_id, least(l.label, coalesce(n.nbr_label, l.label)) AS label
   FROM {prev} l LEFT JOIN nm{k} n ON l.doc_id = n.doc_id
 )"""

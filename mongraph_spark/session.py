@@ -22,7 +22,12 @@ from mongraph_spark.catalog import BulkGraph, GraphStore, MutableCatalog
 from mongraph_spark.document import Document, MongraphError, created_at_seconds
 from mongraph_spark.node import Node, Relationship
 from mongraph_spark.paths import shortest_path as bfs_shortest_path
-from mongraph_spark.populate import semi_populate
+from mongraph_spark.populate import (
+    attach_endpoint_documents,
+    filtered_documents,
+    relationships,
+    semi_populate,
+)
 from mongraph_spark.schema import CollectionSchema
 from mongraph_spark.sparkutil import bounded_collect
 from mongraph_spark.traversal import TraversalQuery
@@ -162,22 +167,7 @@ class Mongraph:
         """Distributed find: the Mongo-predicate subset compiled to a Column
         filter over the collection DataFrame (works on both store flavors;
         Catalyst pushes the resulting predicate into the scan)."""
-        from pyspark.sql import functions as F
-
-        from mongraph_spark.mongo_expr import mongo_to_column
-
-        df = self.store.documents_df(collection)
-        if not condition:
-            return df
-        cols = set(df.columns)
-
-        def resolve(field: str):
-            root = field.split(".")[0]
-            if root not in cols:
-                return F.lit(None).cast("string")
-            return F.col(field)
-
-        return df.filter(mongo_to_column(condition, resolver=resolve))
+        return filtered_documents(self.store, collection, condition)
 
     # -- node mirroring ------------------------------------------------------------
 
@@ -263,13 +253,11 @@ class Mongraph:
         ``max_rows`` overrides the default OLTP collect cap for intentional
         large collects — the reference API returns all rows unconditionally,
         so callers who really want that pass an explicit bound instead of
-        silently OOMing the driver.  Endpoint documents arrive through ONE
-        enrichment join (populate.attach_endpoint_documents), never a
+        silently OOMing the driver.  The matched edges are collected first;
+        their endpoint documents then arrive through ONE batched lookup per
+        touched collection (populate.attach_endpoint_documents), never a
         per-row lookup pair.
         """
-        import json as _json
-
-        from mongraph_spark.populate import attach_endpoint_documents
         from mongraph_spark.sparkutil import OLTP_COLLECT_CAP
 
         df = tq.apply(self.store.edges_df())
@@ -281,23 +269,13 @@ class Mongraph:
                 collections=collections,
                 reference_id=reference_id,
             )
-        if load_documents:
-            df = attach_endpoint_documents(self.store, df)
         rows = bounded_collect(
             df,
             cap=max_rows if max_rows is not None else OLTP_COLLECT_CAP,
             context="Mongraph.collect_relationships",
         )
-        rels = []
-        for r in rows:
-            rel = Relationship(
-                r.rel_id, r.src, r.dst, r.type, dict(r.props or {}), r._from, r._to, r._created_at
-            )
-            if load_documents:
-                rel.from_ = _json.loads(r.from_doc) if r.from_doc is not None else None
-                rel.to = _json.loads(r.to_doc) if r.to_doc is not None else None
-            rels.append(rel)
-        return rels
+        docs = attach_endpoint_documents(self.store, rows) if load_documents else None
+        return relationships(rows, docs)
 
     # -- shortest path ------------------------------------------------------------------
 

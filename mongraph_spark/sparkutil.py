@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -255,7 +256,9 @@ def adaptive_salted_join(
     is memoized per (facts plan, key, threshold, sample) via
     ``semanticHash`` — a key histogram is a property of the data, so
     re-joining the same facts DataFrame (bench's repeated passes, a dim
-    refreshed against stable facts) pays the scan once per session.
+    refreshed against stable facts) pays the scan once per session.  The
+    memo lives in the facts' session (:func:`salt_profiles`): another
+    session re-profiles, as data behind the same plan may have changed.
     """
     from pyspark.sql import functions as F
 
@@ -275,8 +278,9 @@ def adaptive_salted_join(
         )
     except Exception:  # pragma: no cover - hash unavailable → just profile
         pass
-    if cache_key is not None and cache_key in _SALT_PROFILE_CACHE:
-        skewed = _SALT_PROFILE_CACHE[cache_key]
+    memo = salt_profiles(facts.sparkSession)
+    if cache_key is not None and cache_key in memo:
+        skewed = memo[cache_key]
     else:
         stats = (
             profiled.groupBy(key)
@@ -291,14 +295,23 @@ def adaptive_salted_join(
             and stats.max_n >= hot_floor
         )
         if cache_key is not None:
-            _SALT_PROFILE_CACHE[cache_key] = skewed
+            if len(memo) >= _SALT_PROFILES_PER_SESSION:
+                memo.pop(next(iter(memo)))  # oldest first
+            memo[cache_key] = skewed
     if skewed:
         return salted_join(facts, dim, key, n_salts=n_salts, how=how), True
     return facts.join(dim, key, how), False
 
 
-# (plan semanticHash, key, threshold) -> skew decision; see adaptive_salted_join
-_SALT_PROFILE_CACHE: dict[tuple, bool] = {}
+# session -> {(plan semanticHash, key, threshold, min_hot_rows): skew decision}
+_SALT_PROFILES: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
+_SALT_PROFILES_PER_SESSION = 1024
+
+
+def salt_profiles(spark: SparkSession) -> dict:
+    """``spark``'s memo of :func:`adaptive_salted_join` skew decisions; it
+    holds at most ``_SALT_PROFILES_PER_SESSION`` and goes with the session."""
+    return _SALT_PROFILES.setdefault(spark, {})
 
 
 def lineage_cut(df, eager: bool = True):

@@ -137,7 +137,7 @@ def test_execute_collect_is_capped(engine):
 
 
 def test_execute_document_loads_are_one_join_not_per_row(engine, monkeypatch):
-    """Endpoint documents arrive via ONE enrichment join
+    """Endpoint documents arrive via ONE batched lookup per collection
     (populate.attach_endpoint_documents), never a find_document pair per
     collected relationship — the reference's N+1 populate anti-pattern
     (src/processtools.coffee:184-212) must not be reproduced."""
@@ -154,9 +154,9 @@ def test_execute_document_loads_are_one_join_not_per_row(engine, monkeypatch):
 
     orig_attach = cm.attach_endpoint_documents
 
-    def counting_attach(store, edges, collections=None):
+    def counting_attach(store, rows):
         calls["attach"] += 1
-        return orig_attach(store, edges, collections)
+        return orig_attach(store, rows)
 
     monkeypatch.setattr(cm, "attach_endpoint_documents", counting_attach)
 

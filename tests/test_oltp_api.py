@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import re
+import uuid
 
 import pytest
 from pyspark.sql import types as T
@@ -161,11 +162,16 @@ def test_shortest_path_releases_its_hop_cuts(engine, spark):
     """Every hop's frontier cut is unpersisted before the search returns,
     whether it found a route or ran out of frontier."""
     d = engine.fixture_docs
-    persisted = spark.sparkContext._jsc.getPersistentRDDs
-    before = persisted().size()
+
+    def persisted():
+        # by id, not count: the context cleaner may free an earlier test's
+        # RDDs while the search runs
+        return set(spark.sparkContext._jsc.getPersistentRDDs())
+
+    before = persisted()
     assert d["alice"].shortest_path_to(d["zoe"], "knows") is not None
     assert d["zoe"].shortest_path_to(d["bar"], "knows") is None
-    assert persisted().size() == before
+    assert persisted() - before == set()
 
 
 # -- creation semantics (tests.coffee:419-430) ---------------------------------------
@@ -476,19 +482,100 @@ def test_views_are_local_relations(engine):
         assert "PythonRDD" not in lineage, (name, lineage)
 
 
-def test_populated_read_plans_broadcast_joins(engine):
-    """A populated 1-hop read joins the endpoint documents by broadcast from
-    the first plan on: the views carry real size statistics."""
-    from mongraph_spark.populate import attach_endpoint_documents
-    from mongraph_spark.traversal import TraversalQuery
+def _jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it started, read by job tag."""
+    sc = spark.sparkContext
+    tag = f"jobs-{uuid.uuid4().hex}"
+    sc.addJobTag(tag)
+    try:
+        out = fn()
+    finally:
+        sc.removeJobTag(tag)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    return out, len(jsc.statusTracker().getJobIdsForTag(tag))
 
+
+def test_populated_reads_run_no_spark_job(engine):
+    """On a catalog the edge collect and the endpoint lookups fold into the
+    views' LocalRelations: a populated browse runs no Spark job at all."""
+    d = engine.fixture_docs
+    alice = d["alice"]
+    reads = {
+        "out": (lambda: alice.outgoing_relationships(), ["Bar", "Pub", "bob"]),
+        "in": (lambda: alice.incoming_relationships(), ["alice"]),
+        "all": (lambda: alice.all_relationships(), ["Bar", "Pub", "alice", "bob"]),
+        "to": (lambda: alice.outgoing_relationships_to(d["bob"]), ["bob"]),
+    }
+    for name, (read, to_names) in reads.items():
+        rels, jobs = _jobs(engine.spark, read)
+        assert names(rels, "to") == to_names, name
+        assert all(r.from_ is not None for r in rels), name
+        assert jobs == 0, (name, jobs)
+
+
+def test_bulk_populated_read_runs_one_job_per_collection(engine, tmp_path):
+    """On a bulk store a populated read is the edge collect plus one
+    ``_id IN`` lookup per touched collection.  Each table here is one
+    parquet file, so each collect is one job (a multi-partition source adds
+    bounded_collect's take scale-up jobs on top)."""
+    from mongraph_spark import Mongraph
+
+    spark, cat = engine.spark, engine.catalog
+    frames = {"nodes": cat.nodes_df(), "edges": cat.edges_df()}
+    frames.update({c: cat.documents_df(c) for c in cat.frame_collections()})
+    for name, df in frames.items():
+        df.coalesce(1).write.parquet(str(tmp_path / name))
+    read = {name: spark.read.parquet(str(tmp_path / name)) for name in frames}
+    docs = {c: read[c] for c in cat.frame_collections()}
+    bulk = Mongraph.from_dataframes(spark, read["nodes"], read["edges"], docs)
+    nid = engine.fixture_docs["alice"].get_node_id()
+    rels, jobs = _jobs(
+        spark, lambda: bulk.query_graph(f"START a = node({nid}) MATCH (a)-[r]->(b) RETURN r;")
+    )
+    assert names(rels, "to") == ["Bar", "Pub", "bob"]
+    assert names(rels, "from_") == ["alice"] * 3
+    assert 1 <= jobs <= 1 + 2, jobs  # the edges, then people and locations
+
+
+def test_schemaless_collection_leaves_populated_reads_working(engine):
+    """A collection created without a schema has no frame.  Populated reads
+    and document predicates on other collections keep working: they only
+    look at the collections a frame can be built for."""
+    engine.create_document("scratchpad", {"note": "x"}).save()
     alice = engine.fixture_docs["alice"]
-    tq = TraversalQuery(anchor=alice.get_node_id(), direction="outgoing")
-    df = attach_endpoint_documents(engine.store, tq.apply(engine.store.edges_df()))
-    assert len(df.collect()) == 3
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" not in plan, plan
-    assert "BroadcastHashJoin" in plan, plan
+    assert names(alice.outgoing_relationships(), "to") == ["Bar", "Pub", "bob"]
+    assert names(alice.all_relationships("knows"), "from_") == ["alice", "zoe"]
+    where = {"where": {"document": {"name": "Bar"}}}
+    assert names(alice.outgoing_relationships("*", where), "to") == ["Bar"]
+    assert names(alice.outgoing_relationships("*", {"collection": "scratchpad"}), "to") == []
+
+
+def test_locator_without_collection_reads_unpopulated(engine):
+    """An edge whose _to has no ':' keeps its row unpopulated and fails a
+    document predicate; splitting it no longer raises INVALID_ARRAY_INDEX
+    under ANSI."""
+    alice, bob = engine.fixture_docs["alice"], engine.fixture_docs["bob"]
+    engine.catalog.insert_edge(
+        alice.get_node_id(), bob.get_node_id(), "odd", _from=f"people:{alice._id}", _to="nocolon"
+    )
+    (rel,) = alice.outgoing_relationships("odd")
+    assert rel.from_["name"] == "alice" and rel.to is None
+    assert alice.outgoing_relationships("odd", {"where": {"document": {"name": "bob"}}}) == []
+
+
+def test_endpoint_lookup_rejects_duplicate_ids(spark):
+    """A document frame holding one _id twice fails the lookup loudly
+    instead of fanning the edge out into two rows."""
+    from pyspark.sql import Row
+
+    from mongraph_spark.catalog import BulkGraph
+    from mongraph_spark.populate import attach_endpoint_documents
+
+    docs = spark.createDataFrame([("a", 1), ("a", 2)], "_id string, n long")
+    store = BulkGraph(spark, None, None, {"c": docs})
+    with pytest.raises(RuntimeError, match="twice"):
+        attach_endpoint_documents(store, [Row(_from="c:a", _to="c:missing")])
 
 
 _TYPED = T.StructType(

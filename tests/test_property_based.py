@@ -749,3 +749,136 @@ def test_vacuum_retention_preserves_retained_readers(
     out2 = M.vacuum_retention(root, retention_s=1000.0, now=now)
     assert out2["removed"] == [] and out2["orphans_removed"] == []
     assert out2["retained"] == sorted(set(out1["retained"]))
+
+
+# -- populate: batched endpoint lookup == the old to_json left join -------------------
+
+_PERSON = (
+    "_id string, name string, age long, addr struct<city: string, zip: string>"
+)
+
+
+def _join_oracle(store) -> dict:
+    """The populate plan the batched lookup replaced, written out: every
+    document of every collection with a frame as ``to_json``, unioned and
+    left-joined once per endpoint side on the split locator (``F.get``
+    where the old plan's ``getItem`` raised under ANSI on a locator without
+    ``:``)."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    docs = None
+    for coll in store.frame_collections():
+        d = store.documents_df(coll)
+        part = d.select(
+            F.lit(coll).alias("c"),
+            F.col("_id").alias("i"),
+            F.to_json(F.struct(*[F.col(c) for c in d.columns])).alias("doc"),
+        )
+        docs = part if docs is None else docs.unionByName(part)
+    out = store.edges_df().select("rel_id", "_from", "_to")
+    for side, name in (("_from", "f"), ("_to", "t")):
+        loc = F.split(F.col(side), ":", 2)
+        side_docs = docs.select(
+            F.col("c").alias(f"{name}c"), F.col("i").alias(f"{name}i"), F.col("doc").alias(name)
+        )
+        cond = (loc.getItem(0) == F.col(f"{name}c")) & (F.get(loc, 1) == F.col(f"{name}i"))
+        out = out.join(side_docs, cond, "left").drop(f"{name}c", f"{name}i")
+
+    def load(j):
+        return None if j is None else json.loads(j)
+
+    return {r.rel_id: (load(r.f), load(r.t)) for r in out.collect()}
+
+
+def _lookup(store) -> dict:
+    from mongraph_spark.populate import attach_endpoint_documents, relationships
+
+    rows = store.edges_df().collect()
+    rels = relationships(rows, attach_endpoint_documents(store, rows))
+    return {r.id: (r.from_, r.to) for r in rels}
+
+
+def _catalog(spark, docs, edges, deleted=()):
+    """A catalog with ``people`` and ``pets`` (one schema) and a schemaless
+    ``scratch``; ``docs`` are (collection, doc), ``edges`` (_from, _to)."""
+    from pyspark.sql import types as T
+
+    from mongraph_spark.catalog import MutableCatalog
+
+    cat = MutableCatalog(spark)
+    for coll in ("people", "pets"):
+        cat.register_collection(coll, T.StructType.fromDDL(_PERSON))
+    cat.register_collection("scratch")
+    for coll, doc in docs:
+        cat.upsert_document(coll, doc)
+    for i, (f, t) in enumerate(edges):
+        cat.insert_edge(i, i, "e", {}, _from=f, _to=t)
+    for coll, _id in deleted:
+        cat.delete_document(coll, _id)
+    return cat
+
+
+def test_endpoint_lookup_matches_join_on_edge_cases(spark):
+    docs = [
+        ("people", {"_id": "p:1", "name": "ann", "age": 3, "addr": {"city": "Oslo", "zip": None}}),
+        ("people", {"_id": "p2", "name": None, "age": None, "addr": None}),
+        ("people", {"_id": "gone", "name": "x"}),
+        ("scratch", {"_id": "s1", "note": "no schema, so no frame"}),
+    ]
+    edges = [
+        ("people:p:1", "people:p2"),  # an _id with ':'; null and nested fields
+        ("people:p2", "people:gone"),  # its target is deleted
+        ("people:p2", "ghost:g1"),  # a collection the store never saw
+        (None, "people:p:1"),  # a null _from
+        ("people:p2", "scratch:s1"),  # a collection without a frame
+        ("people:p2", "nocolon"),  # a locator without a collection
+    ]
+    cat = _catalog(spark, docs, edges, deleted=[("people", "gone")])
+    got = _lookup(cat)
+    assert got == _join_oracle(cat)
+    ann = {"_id": "p:1", "name": "ann", "age": 3, "addr": {"city": "Oslo"}}
+    assert got[1] == (ann, {"_id": "p2"})
+    assert got[4] == (None, ann)
+    assert [got[r][1] for r in (2, 3, 5, 6)] == [None] * 4
+
+
+_lookup_ids = st.sampled_from(["a", "b", "c:d", ""])
+_person = st.fixed_dictionaries(
+    {"_id": _lookup_ids},
+    optional={
+        "name": st.one_of(st.none(), st.text("xyz\"é", max_size=3)),
+        "age": st.one_of(st.none(), st.integers(-(2**40), 2**40)),
+        "addr": st.one_of(
+            st.none(),
+            st.fixed_dictionaries(
+                {"city": st.one_of(st.none(), st.sampled_from(["Oslo", "Rome"]))},
+                optional={"zip": st.one_of(st.none(), st.just("0150"))},
+            ),
+        ),
+    },
+)
+_coll = st.sampled_from(["people", "pets"])
+_locator = st.one_of(
+    st.none(),
+    st.just("nocolon"),
+    st.builds(
+        lambda c, i: f"{c}:{i}", st.sampled_from(["people", "pets", "scratch", "ghost"]), _lookup_ids
+    ),
+)
+
+
+@settings(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    docs=st.lists(st.tuples(_coll, _person), max_size=8),
+    edges=st.lists(st.tuples(_locator, _locator), min_size=1, max_size=8),
+    deleted=st.lists(st.tuples(_coll, _lookup_ids), max_size=2),
+)
+def test_endpoint_lookup_matches_join(spark, docs, edges, deleted):
+    cat = _catalog(spark, docs, edges, deleted)
+    assert _lookup(cat) == _join_oracle(cat)

@@ -335,9 +335,10 @@ def test_adaptive_salted_join_profile_is_memoized(spark, monkeypatch):
     dim = spark.range(50).select(F.col("id").alias("k"), (F.col("id") * 2).alias("attr"))
     facts = spark.range(5_000).select((F.col("id") % 50).alias("k"), F.col("id").alias("p"))
 
-    su._SALT_PROFILE_CACHE.clear()
+    memo = su.salt_profiles(spark)
+    memo.clear()
     joined1, used1 = su.adaptive_salted_join(facts, dim, "k")
-    assert len(su._SALT_PROFILE_CACHE) == 1
+    assert len(memo) == 1
 
     # second call on the same plan: decision must come from the memo —
     # a groupBy would mean a second profile scan
@@ -349,6 +350,47 @@ def test_adaptive_salted_join_profile_is_memoized(spark, monkeypatch):
     assert used2 == used1
     monkeypatch.undo()
     assert joined2.count() == joined1.count()
+
+
+def test_salt_profiles_drop_the_oldest_past_the_cap(spark, monkeypatch):
+    import mongraph_spark.sparkutil as su
+
+    monkeypatch.setattr(su, "_SALT_PROFILES_PER_SESSION", 1)
+    memo = su.salt_profiles(spark)
+    memo.clear()
+    dim = spark.range(10).select(F.col("id").alias("k"))
+    for mod in (10, 7):
+        su.adaptive_salted_join(spark.range(100).select((F.col("id") % mod).alias("k")), dim, "k")
+    (kept,) = memo
+    later = spark.range(100).select((F.col("id") % 7).alias("k"))
+    assert kept[0] == later.semanticHash()
+
+
+def test_salt_profiles_are_per_session(spark, monkeypatch):
+    """A second session profiles the same plan again: it does not see the
+    first session's skew decisions (the data behind a plan may have moved)."""
+    import mongraph_spark.sparkutil as su
+
+    def facts_of(session):
+        return session.range(5_000).select((F.col("id") % 50).alias("k"))
+
+    dim = spark.range(50).select(F.col("id").alias("k"))
+    su.adaptive_salted_join(facts_of(spark), dim, "k")
+    assert len(su.salt_profiles(spark)) >= 1
+
+    other = spark.newSession()
+    assert su.salt_profiles(other) == {}
+    profiled = []
+    orig = type(dim).groupBy
+
+    def counting_groupby(self, *a, **k):
+        profiled.append(a)
+        return orig(self, *a, **k)
+
+    monkeypatch.setattr(type(dim), "groupBy", counting_groupby)
+    su.adaptive_salted_join(facts_of(other), other.range(50).select(F.col("id").alias("k")), "k")
+    assert ("k",) in profiled  # the key histogram ran in this session
+    assert len(su.salt_profiles(other)) == 1
 
 
 def test_kmv_small_regime_is_exact(spark):
