@@ -24,6 +24,7 @@ from __future__ import annotations
 import re
 from typing import Any
 
+from mongraph_spark.paths import LEVEL_DEEPNESS
 from mongraph_spark.populate import attach_endpoint_documents, relationships
 from mongraph_spark.sparkutil import OLTP_COLLECT_CAP, bounded_collect
 
@@ -172,10 +173,10 @@ def execute_cypher(engine, cypher: str, options: dict | None = None):
         right_ids = q["starts"].get(q.get("right_ident") or "b")
         if not left_ids or not right_ids or left_ids == "*" or right_ids == "*":
             raise CypherSubsetError("shortestPath needs two pinned start nodes")
-        path = engine.shortest_path(
-            left_ids[0], right_ids[0], q["types"]
+        hops = LEVEL_DEEPNESS if q["max_hops"] is None else q["max_hops"]
+        return engine.shortest_path(
+            left_ids[0], right_ids[0], q["types"], direction=q["direction"], max_hops=hops
         )
-        return path
 
     # -- delete-node template: START n=node(ids) [OPTIONAL] MATCH n-[r?]-() DELETE n, r
     if q["action"] == "DELETE" and q["parts"]:

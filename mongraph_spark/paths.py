@@ -1,23 +1,17 @@
-"""Iterative BFS shortest path (reference ``shortestPathTo``, SURVEY.md G8).
+"""Shortest paths by BFS (reference ``shortestPathTo``, SURVEY.md G8).
 
 The reference delegates to Neo4j's ``shortestPath(a-[:t*..15]->b)`` with a
 hard 15-hop bound (reference src/extendDocument.coffee:352-366,
-``levelDeepness = 15`` at :359) and takes whichever single path Neo4j
-returns.  Spark realization: frontier-expansion via self-joins on the edges
-DataFrame — one Spark job per hop, exactly how GraphFrames implements BFS
-under the hood (join-based message passing).
+``levelDeepness = 15`` at :359).  Among equal-length paths both searches
+here pin the lexicographically-smallest node-id sequence (the oracle
+hash-compares).
 
-Determinism (the oracle hash-compares): among equal-length paths we pin the
-lexicographically-smallest node-id sequence, which `F.min` over the path
-array gives directly (Spark arrays order lexicographically).
-
-Scale notes: the frontier is re-keyed on the join key each hop; ``visited``
-pruning is a broadcastable anti-join at moderate frontier sizes.  The
-single-pair search cuts each hop's frontier once and reads both the target
-hit and the frontier size from it in one aggregate, so no hop recomputes an
-earlier one and 15-hop plans don't blow up the optimizer.  For all-pairs /
-landmark workloads you'd switch to a Pregel-style aggregate-messages loop
-over the same edges DataFrame.
+``shortest_path`` (one pair: the per-document request) keeps its frontier
+and visited set on the driver and runs one capped ``frontier ⋈ edges``
+collect per hop; on a ``MutableCatalog`` that is a broadcast plus the
+collect, two jobs and no shuffle.  A hop past ``OLTP_COLLECT_CAP`` rows
+raises.  ``shortest_paths_from`` is the batch BFS for many origins or larger
+frontiers: a DataFrame loop whose job count grows with depth, not origins.
 """
 
 from __future__ import annotations
@@ -26,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mongraph_spark.catalog import GraphStore, local_df
-from mongraph_spark.sparkutil import lineage_cut, release_cut
+from mongraph_spark.sparkutil import OLTP_COLLECT_CAP, bounded_collect, lineage_cut
 
 LEVEL_DEEPNESS = 15  # reference src/extendDocument.coffee:359
 
@@ -55,53 +49,37 @@ def shortest_path(
 ) -> list[int] | None:
     """Return the node-id sequence of one shortest path, or None.
 
-    The reference's query is directed (``a-[…]->b``); ``direction`` mirrors
-    the traversal options for completeness.
-
-    Each hop's frontier is cut once; one aggregate over the cut reads both
-    the path to the target (if reached) and the frontier size.  The cuts are
-    released before returning.
+    ``direction`` mirrors the traversal options and cypher's arrow.  The
+    frontier (``{node: path}``) and the visited set live on the driver; each
+    hop collects ``frontier ⋈ edges`` once (at most ``OLTP_COLLECT_CAP``
+    rows) and keeps the smallest path per newly reached node.
     """
     if src_node_id == dst_node_id:
         return [src_node_id]
-    spark = store.spark
     edges = _directed_edges(store.edges_df(), types, direction)
-    dst = F.lit(int(dst_node_id))
-
-    seed = [(int(src_node_id), [int(src_node_id)])]
-    frontier = local_df(spark, seed, "node long, path array<long>")
-    visited = frontier.select("node")
-    cuts = []
-    try:
-        for _ in range(max_hops):
-            expanded = (
-                frontier.join(edges, frontier["node"] == edges["src"], "inner")
-                .select(
-                    F.col("dst").alias("node"),
-                    F.concat(F.col("path"), F.array(F.col("dst"))).alias("path"),
-                )
-                # smallest path per node → deterministic tie-breaking
-                .groupBy("node")
-                .agg(F.min("path").alias("path"))
-                .join(visited, on="node", how="left_anti")
-            )
-            frontier = lineage_cut(expanded, eager=False)
-            cuts.append(frontier)
-            # the first action over the lazy cut materializes it
-            probe = frontier.agg(
-                F.count(F.lit(1)).alias("size"),
-                F.min(F.when(F.col("node") == dst, F.col("path"))).alias("hit"),
-            ).first()
-            if probe.hit is not None:
-                return [int(x) for x in probe.hit]
-            if probe.size == 0:
-                return None
-            # frontier nodes are distinct and unvisited (grouped, anti-joined)
-            visited = visited.unionByName(frontier.select("node"))
-        return None
-    finally:
-        for cut in cuts:
-            release_cut(cut)
+    src, dst = int(src_node_id), int(dst_node_id)
+    frontier, visited = {src: [src]}, {src}
+    for _ in range(max_hops):
+        nodes = local_df(store.spark, [(n,) for n in frontier], "node long")
+        pairs = bounded_collect(
+            nodes.join(edges, nodes["node"] == edges["src"]).select("src", "dst"),
+            cap=OLTP_COLLECT_CAP,  # looked up per call, so a test can lower it
+            context="shortest_path hop",
+        )
+        reached: dict[int, list[int]] = {}
+        for s, d in pairs:
+            if d in visited:
+                continue
+            path = frontier[s] + [d]
+            if d not in reached or path < reached[d]:
+                reached[d] = path
+        if dst in reached:
+            return reached[dst]
+        if not reached:
+            return None
+        visited.update(reached)
+        frontier = reached
+    return None
 
 
 def shortest_paths_from(

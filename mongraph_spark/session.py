@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from mongraph_spark.catalog import BulkGraph, GraphStore, MutableCatalog
 from mongraph_spark.document import Document, MongraphError, created_at_seconds
 from mongraph_spark.node import Node, Relationship
-from mongraph_spark.paths import shortest_path as bfs_shortest_path
+from mongraph_spark.paths import LEVEL_DEEPNESS, shortest_path as bfs_shortest_path
 from mongraph_spark.populate import (
     attach_endpoint_documents,
     filtered_documents,
@@ -280,9 +280,15 @@ class Mongraph:
     # -- shortest path ------------------------------------------------------------------
 
     def shortest_path(
-        self, src_node_id: int, dst_node_id: int, types: list[str] | None = None
+        self,
+        src_node_id: int,
+        dst_node_id: int,
+        types: list[str] | None = None,
+        *,
+        direction: str = "outgoing",
+        max_hops: int = LEVEL_DEEPNESS,
     ) -> list[int] | None:
-        return bfs_shortest_path(self.store, src_node_id, dst_node_id, types=types)
+        return bfs_shortest_path(self.store, src_node_id, dst_node_id, types, direction, max_hops)
 
     # -- raw cypher-subset passthrough ----------------------------------------------------
 

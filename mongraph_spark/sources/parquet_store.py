@@ -23,6 +23,16 @@ from mongraph_spark.catalog import BulkGraph, MutableCatalog
 
 
 def save_catalog(catalog: MutableCatalog, root: str) -> None:
+    """Write ``catalog`` under ``root``.  A collection without a schema is
+    skipped when it is empty; one holding documents raises before anything
+    is written, so a refused save never leaves a half-written store."""
+    frames = catalog.frame_collections()
+    for coll in catalog.collection_names():
+        if coll not in frames and next(iter(catalog.iter_documents(coll)), None) is not None:
+            raise ValueError(
+                f"save_catalog: collection {coll!r} holds documents but has no schema; "
+                "register it with a schema before saving"
+            )
     nodes = catalog.nodes_df()
     edges = catalog.edges_df()
     nodes.repartition(1).sortWithinPartitions("node_id").write.mode("overwrite").partitionBy(
@@ -31,7 +41,7 @@ def save_catalog(catalog: MutableCatalog, root: str) -> None:
     edges.repartition("type").sortWithinPartitions("src", "dst").write.mode(
         "overwrite"
     ).partitionBy("type").parquet(f"{root}/edges.parquet")
-    for coll in catalog.collection_names():
+    for coll in frames:
         catalog.documents_df(coll).write.mode("overwrite").parquet(
             f"{root}/documents/{coll}.parquet"
         )

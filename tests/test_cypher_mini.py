@@ -107,6 +107,27 @@ def test_execute_shortest_path(engine):
     assert path == [a, d["bob"].get_node_id(), z]
 
 
+def test_execute_shortest_path_honours_max_hops(engine):
+    """``*..N`` bounds the search: alice reaches zoe in two hops, not one."""
+    d = engine.fixture_docs
+    a, z = d["alice"].get_node_id(), d["zoe"].get_node_id()
+    query = "START a = node({}), b = node({}) MATCH p = shortestPath(a-[:knows*..{}]->b) RETURN p;"
+    assert engine.query_graph(query.format(a, z, 1)) is None
+    assert engine.query_graph(query.format(a, z, 2)) == [a, d["bob"].get_node_id(), z]
+
+
+def test_execute_shortest_path_honours_direction(engine):
+    """The arrow picks the edge direction: against the arrows alice reaches
+    zoe in one hop (zoe->alice); undirected, charles reaches alice through
+    bob, where the outgoing search goes through zoe."""
+    d = engine.fixture_docs
+    a, b, c, z = (d[n].get_node_id() for n in ("alice", "bob", "charles", "zoe"))
+    query = "START a = node({}), b = node({}) MATCH p = shortestPath(a{}b) RETURN p;"
+    assert engine.query_graph(query.format(a, z, "<-[:knows*..15]-")) == [a, z]
+    assert engine.query_graph(query.format(c, a, "-[:knows*..15]->")) == [c, z, a]
+    assert engine.query_graph(query.format(c, a, "-[:knows*..15]-")) == [c, b, a]
+
+
 def test_execute_delete_node_template(engine):
     d = engine.fixture_docs
     nid = d["bob"].get_node_id()

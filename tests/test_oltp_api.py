@@ -159,8 +159,8 @@ def test_shortest_path_no_route(engine):
 
 
 def test_shortest_path_releases_its_hop_cuts(engine, spark):
-    """Every hop's frontier cut is unpersisted before the search returns,
-    whether it found a route or ran out of frontier."""
+    """The search leaves no persisted RDD behind, whether it found a route
+    or ran out of frontier."""
     d = engine.fixture_docs
 
     def persisted():
@@ -483,7 +483,7 @@ def test_views_are_local_relations(engine):
 
 
 def _jobs(spark, fn):
-    """``fn()`` and the number of Spark jobs it started, read by job tag."""
+    """``fn()`` and the ids of the Spark jobs it started, read by job tag."""
     sc = spark.sparkContext
     tag = f"jobs-{uuid.uuid4().hex}"
     sc.addJobTag(tag)
@@ -493,7 +493,47 @@ def _jobs(spark, fn):
         sc.removeJobTag(tag)
     jsc = sc._jsc.sc()
     jsc.listenerBus().waitUntilEmpty()
-    return out, len(jsc.statusTracker().getJobIdsForTag(tag))
+    return out, list(jsc.statusTracker().getJobIdsForTag(tag))
+
+
+def _shuffle_bytes(spark, job_ids) -> int:
+    """Shuffle bytes read plus written by the stages of ``job_ids``."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    total = 0
+    for job in job_ids:
+        info = sc.statusTracker().getJobInfo(job)
+        for stage in info.stageIds if info else []:
+            s = store.lastStageAttempt(stage)
+            total += s.shuffleReadBytes() + s.shuffleWriteBytes()
+    return total
+
+
+def test_route_runs_two_jobs_per_hop_and_no_shuffle(engine):
+    """On a catalog a hop is the frontier's broadcast plus one collect of
+    ``frontier ⋈ edges``: a 2-hop route runs at most 4 jobs and shuffles
+    nothing."""
+    d = engine.fixture_docs
+    path, jobs = _jobs(engine.spark, lambda: d["alice"].shortest_path_to(d["zoe"], "knows"))
+    assert [p["name"] for p in path] == ["alice", "bob", "zoe"]
+    assert 1 <= len(jobs) <= 2 * 2, jobs
+    assert _shuffle_bytes(engine.spark, jobs) == 0
+
+
+def test_route_hop_past_the_collect_cap_raises(engine, monkeypatch):
+    """A hop whose expansion exceeds the collect cap fails loudly; it never
+    returns a path built from a truncated expansion.  alice's first hop
+    reaches one node (bob), the second two (charles, zoe)."""
+    from mongraph_spark import paths
+
+    d = engine.fixture_docs
+    a, z = d["alice"].get_node_id(), d["zoe"].get_node_id()
+    monkeypatch.setattr(paths, "OLTP_COLLECT_CAP", 1)
+    assert engine.shortest_path(a, d["bob"].get_node_id(), ["knows"]) is not None
+    with pytest.raises(RuntimeError, match="OLTP collect cap"):
+        engine.shortest_path(a, z, ["knows"])
+    monkeypatch.setattr(paths, "OLTP_COLLECT_CAP", 2)
+    assert engine.shortest_path(a, z, ["knows"]) == [a, d["bob"].get_node_id(), z]
 
 
 def test_populated_reads_run_no_spark_job(engine):
@@ -511,7 +551,7 @@ def test_populated_reads_run_no_spark_job(engine):
         rels, jobs = _jobs(engine.spark, read)
         assert names(rels, "to") == to_names, name
         assert all(r.from_ is not None for r in rels), name
-        assert jobs == 0, (name, jobs)
+        assert jobs == [], (name, jobs)
 
 
 def test_bulk_populated_read_runs_one_job_per_collection(engine, tmp_path):
@@ -535,7 +575,7 @@ def test_bulk_populated_read_runs_one_job_per_collection(engine, tmp_path):
     )
     assert names(rels, "to") == ["Bar", "Pub", "bob"]
     assert names(rels, "from_") == ["alice"] * 3
-    assert 1 <= jobs <= 1 + 2, jobs  # the edges, then people and locations
+    assert 1 <= len(jobs) <= 1 + 2, jobs  # the edges, then people and locations
 
 
 def test_schemaless_collection_leaves_populated_reads_working(engine):

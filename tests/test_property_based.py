@@ -13,7 +13,7 @@ from __future__ import annotations
 import re
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from mongraph_spark.cypher_mini import parse
@@ -882,3 +882,100 @@ _locator = st.one_of(
 def test_endpoint_lookup_matches_join(spark, docs, edges, deleted):
     cat = _catalog(spark, docs, edges, deleted)
     assert _lookup(cat) == _join_oracle(cat)
+
+
+# -- paths.shortest_path == the smallest of all shortest paths, in pure Python ------
+
+
+def _all_shortest_paths_min(edges, src, dst, types, direction, max_hops):
+    """Every shortest path from ``src`` to ``dst`` within ``max_hops``,
+    enumerated level by level without any per-node pruning, and the
+    lexicographically smallest of them (the tie-break ``shortest_path``
+    pins), or None."""
+    if src == dst:
+        return [src]
+    adj = {}
+    for s, d, t in edges:
+        if types is None or t in types:
+            if direction in ("outgoing", "both"):
+                adj.setdefault(s, set()).add(d)
+            if direction in ("incoming", "both"):
+                adj.setdefault(d, set()).add(s)
+    paths, seen = [[src]], {src}
+    for _ in range(max_hops):
+        paths = [p + [n] for p in paths for n in adj.get(p[-1], ()) if n not in seen]
+        hits = [p for p in paths if p[-1] == dst]
+        if hits:
+            return min(hits)
+        if not paths:
+            return None
+        seen |= {p[-1] for p in paths}
+    return None
+
+
+_bfs_edges = st.lists(
+    st.tuples(st.integers(1, 5), st.integers(1, 5), st.sampled_from(["a", "b"])),
+    min_size=3,
+    max_size=14,
+)
+
+
+@settings(
+    max_examples=25,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    edges=_bfs_edges,
+    src=st.integers(1, 6),
+    dst=st.integers(1, 6),
+    types=st.sampled_from([None, ["a"], ["a", "b"]]),
+    max_hops=st.integers(1, 4),
+)
+@example(
+    # parallel edges, a self-loop, a cycle and two 2-hop routes 1 -> 4;
+    # node 6 never has an edge
+    edges=[(1, 3, "a"), (1, 3, "a"), (3, 3, "b"), (3, 4, "a"), (4, 1, "b"), (1, 2, "b"), (2, 4, "b")],
+    src=1,
+    dst=4,
+    types=None,
+    max_hops=2,
+)
+def test_shortest_path_matches_python_bfs(spark, edges, src, dst, types, max_hops):
+    """``paths.shortest_path`` on a MutableCatalog, in every direction,
+    returns the smallest shortest path a pure-Python enumeration finds:
+    through parallel edges, self-loops and cycles, for unreachable targets,
+    ``src == dst`` and a ``max_hops`` cutoff."""
+    from mongraph_spark.catalog import MutableCatalog
+    from mongraph_spark.paths import shortest_path
+
+    cat = MutableCatalog(spark)
+    for s, d, t in edges:
+        cat.insert_edge(s, d, t)
+    for direction in ("outgoing", "incoming", "both"):
+        want = _all_shortest_paths_min(edges, src, dst, types, direction, max_hops)
+        got = shortest_path(cat, src, dst, types, direction, max_hops)
+        assert got == want, direction
+
+
+def test_bulk_shortest_path_matches_batch_bfs(spark):
+    """On the tpch store, ``Mongraph.shortest_path`` from a supplier to its
+    region is the path ``g8_shortest_paths`` (the batch BFS) returns for
+    that origin."""
+    from conftest import SF_SMOKE
+    from pyspark.sql import functions as F
+
+    from mongraph_spark.graphs import tpch
+    from mongraph_spark.queries.graph import g8_shortest_paths
+
+    eng = tpch.bulk_engine(spark, SF_SMOKE)
+    batch = g8_shortest_paths(spark, SF_SMOKE)
+    first = batch.select("origin").distinct().orderBy("origin").limit(3)
+    origins = [r.origin for r in first.collect()]
+    want = {}
+    for r in batch.filter(F.col("origin").isin(origins)).orderBy("origin", "pos").collect():
+        want.setdefault(r.origin, []).append(r.path_node)
+    assert sorted(want) == origins
+    for origin, path in want.items():
+        got = eng.shortest_path(origin, path[-1], ["located_in", "in_region"])
+        assert got == path, origin

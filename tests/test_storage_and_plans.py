@@ -39,6 +39,20 @@ def test_catalog_snapshot_roundtrip(engine, spark, tmp_path):
     assert people.filter(F.col("name") == "alice").count() == 1
 
 
+def test_save_catalog_checks_every_collection_before_writing(engine, spark, tmp_path):
+    """An empty collection without a schema is skipped; one holding
+    documents is refused, by name, before any file is written."""
+    engine.catalog.register_collection("empty_scratch")
+    root = tmp_path / "snap"
+    save_catalog(engine.catalog, str(root))
+    assert "empty_scratch" not in load_bulk(spark, str(root)).collection_names()
+    engine.create_document("scratchpad", {"note": "x"}).save()
+    refused = tmp_path / "refused"
+    with pytest.raises(ValueError, match="'scratchpad'"):
+        save_catalog(engine.catalog, str(refused))
+    assert not refused.exists()
+
+
 # -- physical plan quality -----------------------------------------------------------
 
 
