@@ -13,7 +13,9 @@ Spark keeps that as a ``LocalRelation`` with real size statistics, so a scan
 starts no Python worker, joins against a view plan as broadcast hash joins,
 and Catalyst folds filters and projections over it on the driver.  Above
 ``spark.sql.execution.arrow.localRelationThreshold`` Spark itself keeps the
-Arrow batches as an RDD instead, which still needs no Python worker.
+Arrow batches as an RDD instead, which still needs no Python worker.  The
+catalog keeps each node and edge row's verified tuple, so a rebuild after a
+write type-checks only the rows that write staged.
 
 Two store flavors share one read interface:
 
@@ -72,6 +74,23 @@ def _stringify_props(props: dict[str, Any] | None) -> dict[str, str] | None:
     return out
 
 
+def _node_tuple(r: dict[str, Any]) -> tuple:
+    return (r["node_id"], r["_id"], r["_collection"], _stringify_props(r["props"]))
+
+
+def _edge_tuple(r: dict[str, Any]) -> tuple:
+    return (
+        r["rel_id"],
+        r["src"],
+        r["dst"],
+        r["type"],
+        r["_from"],
+        r["_to"],
+        r["_created_at"],
+        _stringify_props(r["props"]),
+    )
+
+
 def _arrow_value(dtype: T.DataType) -> Callable[[Any], Any] | None:
     """Converter from a value the Spark type verifier accepted to one
     ``pyarrow.array`` accepts, or None where the two already agree.
@@ -118,15 +137,20 @@ def local_df(
     ``createDataFrame`` applies to Python rows: Arrow alone would silently
     coerce ``2.5`` into a ``long`` column, or accept a null in a
     non-nullable one."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
     verify = T._make_type_verifier(schema)
     rows = list(rows)
     for row in rows:
         verify(row)
+    return _arrow_df(spark, rows, schema)
+
+
+def _arrow_df(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """The Arrow half of :func:`local_df`, for rows already verified."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     arrow_schema = to_arrow_schema(schema)
     columns = []
     for i, field in enumerate(schema.fields):
@@ -209,6 +233,9 @@ class MutableCatalog(GraphStore):
         self._version = {"nodes": 0, "edges": 0}
         self._doc_version: dict[str, int] = {}
         self._df_cache: dict[str, tuple[int, DataFrame]] = {}
+        # view -> key -> (staged row dict, its verified view tuple); a
+        # rebuild verifies only rows whose dict is new since the last build
+        self._verified: dict[str, dict[int, tuple[dict, tuple]]] = {"nodes": {}, "edges": {}}
 
     # -- registration -------------------------------------------------------
 
@@ -362,28 +389,28 @@ class MutableCatalog(GraphStore):
         self._df_cache[key] = (version, df)
         return df
 
+    def _staged_view(
+        self, view: str, staged: dict[int, dict], schema: T.StructType, to_tuple
+    ) -> DataFrame:
+        """``local_df`` over staged rows, type-checking only the rows added
+        or replaced since the last build (an upsert stores a new dict)."""
+        last, kept = self._verified[view], {}
+        verify = None
+        for key, row in staged.items():
+            hit = last.get(key)
+            if hit is None or hit[0] is not row:
+                verify = verify or T._make_type_verifier(schema)
+                hit = (row, to_tuple(row))
+                verify(hit[1])
+            kept[key] = hit
+        self._verified[view] = kept
+        return _arrow_df(self.spark, [t for _, t in kept.values()], schema)
+
     def _build_nodes_df(self) -> DataFrame:
-        rows = [
-            (r["node_id"], r["_id"], r["_collection"], _stringify_props(r["props"]))
-            for r in self._nodes.values()
-        ]
-        return local_df(self.spark, rows, NODE_SCHEMA)
+        return self._staged_view("nodes", self._nodes, NODE_SCHEMA, _node_tuple)
 
     def _build_edges_df(self) -> DataFrame:
-        rows = [
-            (
-                r["rel_id"],
-                r["src"],
-                r["dst"],
-                r["type"],
-                r["_from"],
-                r["_to"],
-                r["_created_at"],
-                _stringify_props(r["props"]),
-            )
-            for r in self._edges.values()
-        ]
-        return local_df(self.spark, rows, EDGE_SCHEMA)
+        return self._staged_view("edges", self._edges, EDGE_SCHEMA, _edge_tuple)
 
     def _build_docs_df(self, collection: str) -> DataFrame:
         docs = list(self._docs.get(collection, {}).values())

@@ -231,6 +231,6 @@ def execute_cypher(engine, cypher: str, options: dict | None = None):
     # ONE batched lookup per touched collection after the collect — not a
     # find_document pair per collected row (the reference's N+1 populate
     # anti-pattern, src/processtools.coffee:184-212, solved by construction).
-    load_documents = options.get("loadDocuments", True)
-    docs = attach_endpoint_documents(store, rows) if load_documents else None
-    return relationships(rows, docs)
+    if not options.get("loadDocuments", True):
+        return relationships(rows)
+    return relationships(*attach_endpoint_documents(store, rows))

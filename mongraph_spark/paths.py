@@ -18,25 +18,30 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from mongraph_spark.catalog import GraphStore, local_df
 from mongraph_spark.sparkutil import OLTP_COLLECT_CAP, bounded_collect, lineage_cut
+from mongraph_spark.traversal import types_condition
 
 LEVEL_DEEPNESS = 15  # reference src/extendDocument.coffee:359
 
 
 def _directed_edges(edges: DataFrame, types: list[str] | None, direction: str) -> DataFrame:
-    e = edges.select("src", "dst", "type")
+    """The ``src, dst`` pairs a hop expands along, as SQL text."""
     if types is not None:
-        e = e.filter(F.col("type").isin(types) if len(types) > 1 else F.col("type") == types[0])
+        edges = edges.filter(types_condition(types))
     if direction == "outgoing":
-        return e.select("src", "dst")
+        return edges.selectExpr("src", "dst")
+    reverse = edges.selectExpr("dst AS src", "src AS dst")
     if direction == "incoming":
-        return e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        return reverse
     # both: traverse each edge in either direction
-    return e.select("src", "dst").unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    return edges.selectExpr("src", "dst").unionByName(reverse)
+
+
+# the frontier shipped each hop, named for a USING join on the edges' src
+_FRONTIER = T.StructType([T.StructField("src", T.LongType(), False)])
 
 
 def shortest_path(
@@ -60,9 +65,9 @@ def shortest_path(
     src, dst = int(src_node_id), int(dst_node_id)
     frontier, visited = {src: [src]}, {src}
     for _ in range(max_hops):
-        nodes = local_df(store.spark, [(n,) for n in frontier], "node long")
+        nodes = local_df(store.spark, [(n,) for n in frontier], _FRONTIER)
         pairs = bounded_collect(
-            nodes.join(edges, nodes["node"] == edges["src"]).select("src", "dst"),
+            nodes.join(edges, "src"),
             cap=OLTP_COLLECT_CAP,  # looked up per call, so a test can lower it
             context="shortest_path hop",
         )

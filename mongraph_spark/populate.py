@@ -3,18 +3,21 @@
 The reference loads, per graph result row, each endpoint document with an
 N+1 ``findOne`` (reference src/processtools.coffee:119-256) and *drops the
 whole relationship row* when an endpoint fails the document predicate or the
-collection filter.  Here that splits in two:
+collection filter.  A per-document read has one shape here: collect the
+traversal's edges, then :func:`attach_endpoint_documents` looks up their
+endpoint documents, one batched ``_id IN (...)`` lookup per touched
+collection, not one per row.  A ``where.document`` or ``collection`` option
+rides on the same lookup as a pass flag, and rows whose endpoints fail are
+dropped on the driver.  On a catalog view the edge collect and every lookup
+fold into the views' ``LocalRelation``s and run no Spark job.  The plans are
+SQL text (``filter(str)``, ``selectExpr``): ``_id``s enter through
+``sparkutil.sql_string``.
 
-- :func:`semi_populate` is the drop semantics as a declarative plan: two
-  left-semi joins of the edges against the predicate-filtered
-  ``(collection, _id)`` keys, the predicate pushed into each document scan.
-- :func:`attach_endpoint_documents` loads the documents of edges already
-  collected: one batched ``_id IN (...)`` lookup per touched collection,
-  not one per row.  On a catalog view the lookup folds into the view's
-  ``LocalRelation`` and runs no Spark job.
-
-:func:`enrich_edges` is the typed join form for homogeneous bulk edge sets.
-The reference document itself is exempt from the predicate
+:func:`semi_populate` is the same drop rule as a declarative plan, for
+DataFrame callers: two left-semi joins of the edges against the
+predicate-filtered ``(collection, _id)`` keys, the predicate pushed into each
+document scan.  :func:`enrich_edges` is the typed join form for homogeneous
+bulk edge sets.  The reference document itself is exempt from the predicate
 (reference src/processtools.coffee:171,194,201).
 """
 
@@ -29,7 +32,7 @@ from pyspark.sql import functions as F
 from mongraph_spark.catalog import GraphStore
 from mongraph_spark.mongo_expr import mongo_to_column
 from mongraph_spark.node import Relationship
-from mongraph_spark.sparkutil import bounded_collect
+from mongraph_spark.sparkutil import bounded_collect, sql_string
 
 
 def split_locator(col: Column) -> tuple[Column, Column]:
@@ -51,6 +54,22 @@ def with_endpoint_locators(edges: DataFrame) -> DataFrame:
     )
 
 
+def document_predicate(df: DataFrame, where_document: dict[str, Any] | None) -> Column | None:
+    """A Mongo predicate over ``df``'s documents as one Column, or None.  A
+    predicate on a field the frame lacks matches nothing, as in Mongo, and
+    is never an analysis error."""
+    if not where_document:
+        return None
+    cols = set(df.columns)
+
+    def resolve(field: str) -> Column:
+        if field.split(".")[0] not in cols:
+            return F.lit(None).cast("string")
+        return F.col(field)
+
+    return mongo_to_column(where_document, resolver=resolve)
+
+
 def filtered_documents(
     store: GraphStore,
     collection: str,
@@ -61,23 +80,13 @@ def filtered_documents(
     Column filter Catalyst pushes into the scan); ``reference_id``'s
     document always matches."""
     df = store.documents_df(collection)
-    if where_document:
-        cols = set(df.columns)
-
-        def resolve(field: str) -> Column:
-            # Mongo semantics: a predicate on a field the document lacks
-            # simply doesn't match — never an analysis error.
-            root = field.split(".")[0]
-            if root not in cols:
-                return F.lit(None).cast("string")
-            return F.col(field)
-
-        pred = mongo_to_column(where_document, resolver=resolve)
-        if reference_id is not None:
-            # the anchor document always survives the predicate
-            pred = pred | (F.col("_id") == F.lit(reference_id))
-        df = df.filter(pred)
-    return df
+    pred = document_predicate(df, where_document)
+    if pred is None:
+        return df
+    if reference_id is not None:
+        # the anchor document always survives the predicate
+        pred = pred | (F.col("_id") == F.lit(reference_id))
+    return df.filter(pred)
 
 
 def semi_populate(
@@ -130,23 +139,42 @@ def semi_populate(
     return e.drop("_from_collection", "_from_id", "_to_collection", "_to_id")
 
 
-def attach_endpoint_documents(store: GraphStore, rows: list) -> dict[str, str]:
+def attach_endpoint_documents(
+    store: GraphStore,
+    rows: list,
+    where_document: dict[str, Any] | None = None,
+    collections: list[str] | None = None,
+    reference_id: str | None = None,
+) -> tuple[list, dict[str, str]]:
     """Look up the endpoint documents of collected edge ``rows``: one
     batched lookup per touched collection, the replacement for the
     reference's per-relationship ``findOne`` pair
     (src/processtools.coffee:184-212).
 
-    Returns ``{"<collection>:<_id>": doc_json}`` for every ``_from``/``_to``
-    locator whose document exists.  Each lookup is one
-    ``_id IN (...)`` filter plus a ``to_json`` projection over the
-    collection's frame: over a catalog view Catalyst folds both into the
+    Returns the rows kept and ``{"<collection>:<_id>": doc_json}`` for every
+    ``_from``/``_to`` locator whose document exists.  Each lookup is one
+    ``_id IN (...)`` filter plus a ``to_json(struct(...))`` projection over
+    the collection's frame: over a catalog view Catalyst folds both into the
     ``LocalRelation`` and the collect runs no Spark job; over a bulk store
     it is one filtered scan.  A locator without a ``:``, a missing document
     and a collection the store has no frame for all leave the endpoint
     unpopulated (``None``), as a failed point lookup would.  A duplicate
     ``_id`` raises instead of fanning the edge out; the collect is capped at
     the number of ids asked for.
+
+    With ``where_document`` or ``collections`` the lookup also projects
+    whether each document passes, and a row is kept only when both its
+    endpoints pass: the drop rule of :func:`semi_populate`.  An endpoint
+    passes when its ``_id`` is ``reference_id`` (the anchor, in any
+    collection), or when its document exists in a collection with a frame,
+    listed in ``collections`` (all of them when None) and matches
+    ``where_document``.  With no such collection no row is kept.
     """
+    check = bool(where_document or collections)
+    frames = store.frame_collections()
+    touched = {c for c in collections or frames if c in frames}
+    if check and not touched:
+        return [], {}
     wanted: dict[str, set[str]] = {}
     for r in rows:
         for loc in (r._from, r._to):
@@ -154,21 +182,41 @@ def attach_endpoint_documents(store: GraphStore, rows: list) -> dict[str, str]:
             if sep:
                 wanted.setdefault(coll, set()).add(_id)
     docs: dict[str, str] = {}
-    for coll in wanted.keys() & set(store.frame_collections()):
+    passed: set[str] = set()
+    for coll in wanted.keys() & set(frames):
         ids = wanted[coll]
         d = store.documents_df(coll)
+        lookup = d.filter(f"_id IN ({', '.join(sql_string(i) for i in sorted(ids))})")
+        fields = ", ".join("`" + c.replace("`", "``") + "`" for c in d.columns)
+        flag = "false"
+        if check and coll in touched:
+            pred = document_predicate(d, where_document)
+            flag = "true"
+            if pred is not None:
+                # longer than every field name: it replaces no field, and
+                # the struct of the fields leaves it out
+                flag = "__pass" + "_" * max(len(c) for c in d.columns)
+                lookup = lookup.withColumn(flag, pred)
         found = bounded_collect(
-            d.filter(F.col("_id").isin(sorted(ids))).select(
-                "_id", F.to_json(F.struct(*[F.col(c) for c in d.columns]))
-            ),
+            lookup.selectExpr("_id", f"to_json(struct({fields}))", flag),
             cap=len(ids),
             context=f"attach_endpoint_documents({coll!r})",
         )
-        for _id, doc in found:
-            if f"{coll}:{_id}" in docs:
+        for _id, doc, ok in found:
+            loc = f"{coll}:{_id}"
+            if loc in docs:
                 raise RuntimeError(f"collection {coll!r} holds _id {_id!r} twice")
-            docs[f"{coll}:{_id}"] = doc
-    return docs
+            docs[loc] = doc
+            if ok:
+                passed.add(loc)
+    if check:
+
+        def passes(loc: str | None) -> bool:
+            _, sep, _id = (loc or "").partition(":")
+            return bool(sep) and (_id == reference_id or loc in passed)
+
+        rows = [r for r in rows if passes(r._from) and passes(r._to)]
+    return rows, docs
 
 
 def relationships(rows: list, docs: dict[str, str] | None = None) -> list[Relationship]:

@@ -1774,7 +1774,7 @@ WITH flags AS (
   SELECT len(regexp_extract_all(text, '[^ ]+')) AS w,
          length(text) - (len(regexp_extract_all(text, '[^ ]+')) - 1) AS chars_adj,
          len(regexp_extract_all(text, '#')) AS hashes,
-         len(regexp_extract_all(text, '\.\.\.')) AS ell,
+         len(regexp_extract_all(text, '\\.\\.\\.')) AS ell,
          len(list_filter(string_split(text, ' '),
                          x -> regexp_matches(x, '[a-zA-Z]'))) AS alpha_words,
          len(list_intersect(list_distinct(string_split(lower(text), ' ')),

@@ -22,12 +22,7 @@ from mongraph_spark.catalog import BulkGraph, GraphStore, MutableCatalog
 from mongraph_spark.document import Document, MongraphError, created_at_seconds
 from mongraph_spark.node import Node, Relationship
 from mongraph_spark.paths import LEVEL_DEEPNESS, shortest_path as bfs_shortest_path
-from mongraph_spark.populate import (
-    attach_endpoint_documents,
-    filtered_documents,
-    relationships,
-    semi_populate,
-)
+from mongraph_spark.populate import attach_endpoint_documents, filtered_documents, relationships
 from mongraph_spark.schema import CollectionSchema
 from mongraph_spark.sparkutil import bounded_collect
 from mongraph_spark.traversal import TraversalQuery
@@ -253,28 +248,27 @@ class Mongraph:
         ``max_rows`` overrides the default OLTP collect cap for intentional
         large collects — the reference API returns all rows unconditionally,
         so callers who really want that pass an explicit bound instead of
-        silently OOMing the driver.  The matched edges are collected first;
-        their endpoint documents then arrive through ONE batched lookup per
-        touched collection (populate.attach_endpoint_documents), never a
-        per-row lookup pair.
+        silently OOMing the driver.  Every read has one shape: the matched
+        edges are collected first (capped), then their endpoint documents
+        arrive through ONE batched lookup per touched collection
+        (populate.attach_endpoint_documents), never a per-row lookup pair.
+        ``where_document`` and ``collections`` ride on that lookup, and the
+        rows whose endpoints fail them are dropped on the driver; so the cap
+        counts the edges the traversal matched, before the document
+        predicate.  On a MutableCatalog the whole read runs no Spark job.
         """
         from mongraph_spark.sparkutil import OLTP_COLLECT_CAP
 
-        df = tq.apply(self.store.edges_df())
-        if load_documents and (where_document or collections):
-            df = semi_populate(
-                self.store,
-                df,
-                where_document=where_document,
-                collections=collections,
-                reference_id=reference_id,
-            )
         rows = bounded_collect(
-            df,
+            tq.apply(self.store.edges_df()),
             cap=max_rows if max_rows is not None else OLTP_COLLECT_CAP,
             context="Mongraph.collect_relationships",
         )
-        docs = attach_endpoint_documents(self.store, rows) if load_documents else None
+        if not load_documents:
+            return relationships(rows)
+        rows, docs = attach_endpoint_documents(
+            self.store, rows, where_document, collections, reference_id
+        )
         return relationships(rows, docs)
 
     # -- shortest path ------------------------------------------------------------------

@@ -88,6 +88,14 @@ def const_part(col):
     return s - s
 
 
+def sql_string(text: str) -> str:
+    """``text`` as a Spark SQL string literal that cannot be injected: its
+    UTF-8 bytes in hex, cast back (``CAST(X'6162' AS STRING)`` is ``'ab'``).
+    Only hex digits reach the parser, and constant folding turns the cast
+    into a plain literal, so filters on it still push into scans."""
+    return f"CAST(X'{text.encode('utf-8').hex()}' AS STRING)"
+
+
 def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir}/{name}.parquet"
 

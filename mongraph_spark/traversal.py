@@ -4,7 +4,8 @@ This is the engine's realization of the reference's core operator
 ``queryRelationships`` (reference src/extendDocument.coffee:64-120): a 1-hop
 Cypher match with direction / type / end-node / predicate / count options.
 Here the "Cypher" never exists — the options *are* the logical plan, compiled
-straight to filters on the edges DataFrame.  Catalyst then pushes the
+straight to SQL-text filters on the edges DataFrame (node ids through
+``int()``, types through ``sparkutil.sql_string``).  Catalyst then pushes the
 filters into the scan (at scale: partition-prune on ``type``, min/max skip
 on ``src``/``dst``).
 
@@ -28,6 +29,7 @@ from pyspark.sql import functions as F
 
 from mongraph_spark.catalog import GraphStore
 from mongraph_spark.mongo_expr import cypher_where_to_sql, mongo_to_column
+from mongraph_spark.sparkutil import sql_string
 
 WILDCARD_TYPES = ("*", ":", "", None)
 
@@ -46,6 +48,14 @@ def parse_types(type_of_relationship: str | list[str] | None) -> list[str] | Non
     return s.split("|")
 
 
+def types_condition(types: list[str]) -> str:
+    """``type = <t>`` or ``type IN (...)`` as SQL text, each type through
+    ``sql_string``; Catalyst folds the literals, so a scan partitioned on
+    ``type`` still prunes."""
+    lits = ", ".join(sql_string(t) for t in types)
+    return f"type = {lits}" if len(types) == 1 else f"type IN ({lits})"
+
+
 @dataclass
 class TraversalQuery:
     """Logical plan for a 1-hop relationship query."""
@@ -62,45 +72,34 @@ class TraversalQuery:
 
     # -- plan construction ----------------------------------------------------
 
-    def edge_predicate(self) -> Column | None:
-        conds: list[Column] = []
-        if self.anchor is not None:
-            nid = F.lit(int(self.anchor))
+    def edge_predicate(self) -> str | None:
+        """The anchor, end-node and type conditions as SQL text (None when
+        there are none).  Node ids enter through ``int()`` and types through
+        ``sql_string``, so nothing else reaches the parser."""
+        conds: list[str] = []
+        nid = None if self.anchor is None else int(self.anchor)
+        if nid is not None:
             if self.direction == "incoming":
-                anchor_cond = F.col("dst") == nid
+                conds.append(f"dst = {nid}")
             elif self.direction == "outgoing":
-                anchor_cond = F.col("src") == nid
+                conds.append(f"src = {nid}")
             else:
-                anchor_cond = (F.col("src") == nid) | (F.col("dst") == nid)
-            conds.append(anchor_cond)
+                conds.append(f"(src = {nid} OR dst = {nid})")
         if self.end_node is not None:
-            other = F.lit(int(self.end_node))
+            other = int(self.end_node)
             if self.direction == "incoming":
-                conds.append(F.col("src") == other)
+                conds.append(f"src = {other}")
             elif self.direction == "outgoing":
-                conds.append(F.col("dst") == other)
+                conds.append(f"dst = {other}")
+            elif nid is not None:
+                conds.append(
+                    f"((src = {nid} AND dst = {other}) OR (src = {other} AND dst = {nid}))"
+                )
             else:
-                nid = F.lit(int(self.anchor)) if self.anchor is not None else None
-                if nid is not None:
-                    conds.append(
-                        ((F.col("src") == nid) & (F.col("dst") == other))
-                        | ((F.col("src") == other) & (F.col("dst") == nid))
-                    )
-                else:
-                    conds.append((F.col("src") == other) | (F.col("dst") == other))
+                conds.append(f"(src = {other} OR dst = {other})")
         if self.types is not None:
-            if len(self.types) == 1:
-                conds.append(F.col("type") == self.types[0])
-            else:
-                conds.append(F.col("type").isin(self.types))
-        if self.where_relationship is not None:
-            conds.append(self._relationship_where())
-        if not conds:
-            return None
-        out = conds[0]
-        for c in conds[1:]:
-            out = out & c
-        return out
+            conds.append(types_condition(self.types))
+        return " AND ".join(conds) or None
 
     def _relationship_where(self) -> Column:
         w = self.where_relationship
@@ -112,24 +111,30 @@ class TraversalQuery:
 
     def apply(self, edges: DataFrame) -> DataFrame:
         """Compile to a DataFrame over ``edges``; adds an ``other`` column
-        holding the non-anchor endpoint's node_id (Cypher's ``b``)."""
+        holding the non-anchor endpoint's node_id (Cypher's ``b``).
+
+        The plan is SQL text (``filter(str)``, ``selectExpr``), not nested
+        ``F.*`` Columns: in classic PySpark every ``F.*`` call is a few py4j
+        round trips, which is most of a per-document request's planning.
+        Only ``where.relationship`` keeps its Column (or ``F.expr``) form,
+        as its own filter, which Catalyst merges with the first."""
         pred = self.edge_predicate()
         out = edges if pred is None else edges.filter(pred)
+        if self.where_relationship is not None:
+            out = out.filter(self._relationship_where())
+        other = "dst"
         if self.anchor is not None:
-            nid = F.lit(int(self.anchor))
-            other = F.when(F.col("src") == nid, F.col("dst")).otherwise(F.col("src"))
-        else:
-            other = F.col("dst")
-        return out.withColumn("other", other.cast("long"))
+            other = f"CASE WHEN src = {int(self.anchor)} THEN dst ELSE src END"
+        return out.selectExpr("*", f"CAST({other} AS BIGINT) AS other")
 
     # -- execution -------------------------------------------------------------
 
     def run(self, store: GraphStore) -> DataFrame:
         df = self.apply(store.edges_df())
         if self.count_distinct is not None:
-            return df.agg(F.count_distinct("other").alias("count"))
+            return df.selectExpr("count(DISTINCT other) AS count")
         if self.count is not None:
-            return df.agg(F.count(F.lit(1)).alias("count"))
+            return df.selectExpr("count(1) AS count")
         return df
 
     def matching_rel_ids(self, store: GraphStore) -> list[int]:
@@ -140,7 +145,7 @@ class TraversalQuery:
         from mongraph_spark.sparkutil import bounded_collect
 
         rows = bounded_collect(
-            self.apply(store.edges_df()).select("rel_id"),
+            self.apply(store.edges_df()).selectExpr("rel_id"),
             context="TraversalQuery.matching_rel_ids",
         )
         return [r.rel_id for r in rows]
@@ -152,5 +157,5 @@ class TraversalQuery:
         reach the driver, and writing this DataFrame back IS the delete.
         Catalyst collapses the match-then-anti-join into a single negated
         filter scan when the predicate is deterministic (no shuffle at all)."""
-        matched = self.apply(edges).select("rel_id")
+        matched = self.apply(edges).selectExpr("rel_id")
         return edges.join(matched, "rel_id", "left_anti")

@@ -538,7 +538,8 @@ def test_route_hop_past_the_collect_cap_raises(engine, monkeypatch):
 
 def test_populated_reads_run_no_spark_job(engine):
     """On a catalog the edge collect and the endpoint lookups fold into the
-    views' LocalRelations: a populated browse runs no Spark job at all."""
+    views' LocalRelations: a populated browse runs no Spark job at all, with
+    a where.document or collection option too (it rides on the lookup)."""
     d = engine.fixture_docs
     alice = d["alice"]
     reads = {
@@ -546,12 +547,98 @@ def test_populated_reads_run_no_spark_job(engine):
         "in": (lambda: alice.incoming_relationships(), ["alice"]),
         "all": (lambda: alice.all_relationships(), ["Bar", "Pub", "alice", "bob"]),
         "to": (lambda: alice.outgoing_relationships_to(d["bob"]), ["bob"]),
+        "where": (
+            lambda: alice.outgoing_relationships("*", {"where": {"document": {"name": "Bar"}}}),
+            ["Bar"],
+        ),
+        "collection": (
+            lambda: alice.outgoing_relationships("*", {"collection": "locations"}),
+            ["Bar", "Pub"],
+        ),
     }
     for name, (read, to_names) in reads.items():
         rels, jobs = _jobs(engine.spark, read)
         assert names(rels, "to") == to_names, name
         assert all(r.from_ is not None for r in rels), name
         assert jobs == [], (name, jobs)
+
+
+def test_outgoing_browse_makes_few_py4j_calls(engine, monkeypatch):
+    """A browse's plans are SQL text, not nested F.* Columns (each F.* call
+    is a few py4j round trips): an outgoing browse on the fixture, views
+    built, makes at most 60 gateway calls.  Releases of Java objects are
+    not counted: py4j sends them whenever Python frees a handle, so they
+    mostly belong to earlier work."""
+    alice = engine.fixture_docs["alice"]
+    alice.outgoing_relationships()
+    client = engine.spark.sparkContext._gateway._gateway_client
+    calls = []
+    send = client.send_command
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\n"):
+            calls.append(command.split("\n", 2)[:2])
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    rels = alice.outgoing_relationships()
+    monkeypatch.undo()
+    assert names(rels, "to") == ["Bar", "Pub", "bob"]
+    assert len(calls) <= 60, calls
+
+
+def test_typed_traversal_prunes_type_partitions(engine, tmp_path):
+    """Types enter the plan as hex-cast literals; Catalyst folds them, so a
+    typed traversal over edges partitioned by type still prunes."""
+    from mongraph_spark.catalog import BulkGraph
+    from mongraph_spark.traversal import TraversalQuery
+
+    spark, cat = engine.spark, engine.catalog
+    cat.edges_df().write.partitionBy("type").parquet(str(tmp_path / "edges"))
+    edges = spark.read.parquet(str(tmp_path / "edges"))
+    bulk = BulkGraph(spark, cat.nodes_df(), edges)
+    for types in (["visits"], ["visits", "plays"]):
+        df = TraversalQuery(anchor=engine.fixture_docs["alice"].get_node_id(), types=types).apply(
+            bulk.edges_df()
+        )
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert re.search(r"PartitionFilters: \[[^\]]*type#\d+ (=|IN) \(?visits", plan), plan
+        assert sorted(r.type for r in df.collect()) == ["visits", "visits"]
+
+
+def test_view_rebuild_verifies_only_changed_rows(engine, monkeypatch):
+    """After one insert_edge the edges view rebuild type-checks that one
+    row, not the whole view; a mistyped row staged after a build still
+    raises at the next build."""
+    cat, d = engine.catalog, engine.fixture_docs
+    cat.edges_df()
+    checked = []
+    make = T._make_type_verifier
+
+    def counting(dtype, *args, **kwargs):
+        verify = make(dtype, *args, **kwargs)
+        if not isinstance(dtype, T.StructType):
+            return verify
+
+        def check(obj):
+            checked.append(obj)
+            return verify(obj)
+
+        return check
+
+    monkeypatch.setattr(T, "_make_type_verifier", counting)
+    a, z = d["alice"].get_node_id(), d["zoe"].get_node_id()
+    cat.insert_edge(a, z, "knows", {"since": "today"})
+    assert cat.edges_df().count() == 8
+    assert [row[1:4] for row in checked] == [(a, z, "knows")]
+    cat.delete_edges([1])
+    cat.edges_df()
+    assert len(checked) == 1
+    cat.insert_edge(a, z, 3)
+    with pytest.raises(TypeError):
+        cat.edges_df()
+    with pytest.raises(TypeError):
+        cat.edges_df()
 
 
 def test_bulk_populated_read_runs_one_job_per_collection(engine, tmp_path):

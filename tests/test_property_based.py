@@ -795,8 +795,7 @@ def _join_oracle(store) -> dict:
 def _lookup(store) -> dict:
     from mongraph_spark.populate import attach_endpoint_documents, relationships
 
-    rows = store.edges_df().collect()
-    rels = relationships(rows, attach_endpoint_documents(store, rows))
+    rels = relationships(*attach_endpoint_documents(store, store.edges_df().collect()))
     return {r.id: (r.from_, r.to) for r in rels}
 
 
@@ -882,6 +881,150 @@ _locator = st.one_of(
 def test_endpoint_lookup_matches_join(spark, docs, edges, deleted):
     cat = _catalog(spark, docs, edges, deleted)
     assert _lookup(cat) == _join_oracle(cat)
+
+
+# -- where.document / collection reads == the old semi-join plan ---------------------
+
+_where_docs = st.sampled_from(
+    [
+        None,
+        {},
+        {"name": "x"},
+        {"age": {"$gt": 0}},
+        {"addr.city": "Oslo"},
+        {"name": re.compile("x|é")},
+        {"missing": 1},  # a field no document has
+        {"missing": {"$ne": 1}},  # ... which a negation matches
+        {"$or": [{"age": {"$lt": 0}}, {"name": {"$ne": "y"}}]},
+    ]
+)
+_collection_lists = st.sampled_from(
+    [None, [], ["people"], ["pets", "people"], ["scratch"], ["ghost"], ["scratch", "pets"]]
+)
+
+
+def _semi_join_read(store, where, colls, ref) -> list:
+    """The read the driver-side drop replaced, written out: semi_populate on
+    the edges view, then the unfiltered endpoint lookup."""
+    from mongraph_spark.populate import attach_endpoint_documents, relationships, semi_populate
+
+    edges = store.edges_df()
+    if where or colls:
+        edges = semi_populate(store, edges, where, colls, ref)
+    rels = relationships(*attach_endpoint_documents(store, edges.collect()))
+    return sorted((r.id, r.from_, r.to) for r in rels)
+
+
+def _driver_read(store, where, colls, ref) -> list:
+    from mongraph_spark.populate import attach_endpoint_documents, relationships
+
+    rows = store.edges_df().collect()
+    rels = relationships(*attach_endpoint_documents(store, rows, where, colls, ref))
+    return sorted((r.id, r.from_, r.to) for r in rels)
+
+
+@settings(
+    max_examples=40,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    docs=st.lists(st.tuples(_coll, _person), max_size=8),
+    edges=st.lists(st.tuples(_locator, _locator), min_size=1, max_size=8),
+    where=_where_docs,
+    colls=_collection_lists,
+    ref=st.one_of(st.none(), _lookup_ids),
+)
+@example(
+    # anchor self-loops, an _id in both collections, the anchor in a
+    # collection without a frame and in one the store never saw
+    docs=[
+        ("people", {"_id": "a", "name": "x", "age": 1}),
+        ("pets", {"_id": "a", "name": "y", "age": -1}),
+        ("pets", {"_id": "b", "name": "x"}),
+        ("people", {"_id": "b", "name": "x"}),
+    ],
+    edges=[
+        ("people:a", "people:a"),
+        ("pets:a", "pets:a"),
+        ("people:a", "pets:b"),
+        ("scratch:a", "pets:a"),
+        ("ghost:a", "nocolon"),
+        ("pets:b", "people:a"),
+        ("pets:b", "people:b"),  # people is not a listed collection
+        (None, "people:a"),
+    ],
+    where={"name": "x"},
+    colls=["pets"],
+    ref="a",
+)
+@example(
+    # no listed collection has a frame: even the anchor's self-loop goes
+    docs=[("people", {"_id": "a", "name": "x"})],
+    edges=[("people:a", "people:a")],
+    where=None,
+    colls=["scratch", "ghost"],
+    ref="a",
+)
+@example(
+    # a locator without ':' is never the anchor, even for an empty _id
+    docs=[("people", {"_id": "", "name": "x"})],
+    edges=[("people:", "nocolon"), ("people:", "people:")],
+    where=None,
+    colls=["people"],
+    ref="",
+)
+def test_filtered_read_matches_semi_join(spark, docs, edges, where, colls, ref):
+    """A where.document and/or collection read drops rows on the driver
+    after the endpoint lookup; it keeps exactly the rows (and documents)
+    the old semi_populate plan kept: the anchor exempt by _id, schemaless
+    and unknown collections, locators without ':' and missing documents
+    failing, and no row at all when no listed collection has a frame."""
+    cat = _catalog(spark, docs, edges)
+    assert _driver_read(cat, where, colls, ref) == _semi_join_read(cat, where, colls, ref)
+
+
+# -- sql_string: any text is one literal -----------------------------------------------
+
+_NASTY = ["') OR (1=1", "a'b", 'q"q', "back\\slash\\", "new\nline", "\U0001F600", "", "x:y"]
+
+
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(texts=st.lists(st.one_of(st.sampled_from(_NASTY), st.text(max_size=6)), min_size=1, max_size=6))
+@example(texts=_NASTY)
+def test_sql_string_matches_exactly_the_equal_rows(spark, texts):
+    """Text used as a relationship type and as an _id, spelled into the SQL
+    plans by sparkutil.sql_string, matches exactly the rows holding equal
+    text: a quote, a backslash or ') OR (1=1 never leaves the literal."""
+    import json
+
+    from pyspark.sql import Row
+    from pyspark.sql import types as T
+
+    from mongraph_spark.catalog import MutableCatalog
+    from mongraph_spark.populate import attach_endpoint_documents
+    from mongraph_spark.traversal import TraversalQuery
+
+    cat = MutableCatalog(spark)
+    cat.register_collection("c", T.StructType.fromDDL("_id string, n long"))
+    for n, t in enumerate(texts):
+        cat.upsert_document("c", {"_id": t, "n": n})
+        cat.insert_edge(1, 2 + n, t)
+    edges = cat.edges_df()
+    for probe in set(texts) | {"') OR (1=1 --", texts[0] + "'"}:
+        for types in ([probe], [probe, probe + "'"]):
+            want = {e["rel_id"] for e in cat.iter_edges() if e["type"] in types}
+            got = TraversalQuery(anchor=1, direction="outgoing", types=types).apply(edges)
+            assert {r.rel_id for r in got.collect()} == want, types
+        _, docs = attach_endpoint_documents(cat, [Row(_from="c:" + probe, _to=None)])
+        doc = cat.get_document("c", probe)
+        want_doc = None if doc is None else {"_id": probe, "n": doc["n"]}
+        got_doc = docs.get("c:" + probe)
+        assert (got_doc and json.loads(got_doc)) == want_doc, probe
 
 
 # -- paths.shortest_path == the smallest of all shortest paths, in pure Python ------
