@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mongraph_spark.sparkutil import const_part, lineage_cut, read_table
+from mongraph_spark.sparkutil import const_part, lineage_cut, read_table, scratch_dir
 
 SESSION_GAP_MIN = 30
 
@@ -829,21 +829,9 @@ def store_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     smaller than raw events), classification and deltas are pure column
     expressions, the rollup is map-side combined.  Integer cents keep the
     deltas hash-exact."""
-    import shutil
-    import tempfile
-    import os as _os
-
     from mongraph_spark.sources import merge as merge_store
 
-    # Root is namespaced by Spark application id + SF so concurrent sessions
-    # (gate + bench, parallel pytest) never read each other's half-built
-    # versions; within one session the rebuild is idempotent by construction.
-    app_id = spark.sparkContext.applicationId
-    sf_tag = _os.path.basename(sf_dir.rstrip("/")) or "sf"
-    root = _os.path.join(
-        tempfile.gettempdir(), f"mg_snapshot_diff_store_{app_id}_{sf_tag}"
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir(spark, sf_dir, "snapshot_diff_store")
 
     ev = read_table(spark, sf_dir, "events")
     cutoff = ev.agg(

@@ -20,8 +20,6 @@ float sum diverges from Spark's sequential one at the last ulp).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -31,6 +29,7 @@ from mongraph_spark.sparkutil import (
     lineage_cut,
     maybe_broadcast,
     read_table,
+    scratch_dir,
 )
 
 # -- log-rank test ----------------------------------------------------------------
@@ -3254,18 +3253,12 @@ def store_row_tracking(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetically.  Hash-asserted: per-epoch row counts, doc_id sums,
     and min/max ids (an id drift of ±1, a lost inherit, a compaction
     remint, or a resurrected identity all break the hash)."""
-    import shutil
-    import tempfile
-
     from mongraph_spark.sources import merge as merge_store
 
     docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    app_id = spark.sparkContext.applicationId
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(tempfile.gettempdir(), f"mg_rowtrack_{app_id}_{sf_tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir(spark, sf_dir, "rowtrack")
     merge_store.init_table(docs, root, key="doc_id", n_buckets=8, row_tracking=True)
     updates = docs.filter(F.col("doc_id").isin(1, 2)).withColumn(
         "n_chars", F.col("n_chars") + 1000

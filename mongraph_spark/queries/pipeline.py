@@ -116,55 +116,6 @@ l{k} AS MATERIALIZED (
     return body, prev
 
 
-# -- canonical selection: keep the best member of every cluster ------------------
-
-
-def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The actual dedup write-back: one surviving row per cluster — the
-    member with the most tokens (most informative), ties to the lowest
-    doc_id.  One window over the cluster label; at 100 TB this is a single
-    shuffle keyed on cluster_id with bounded per-key fan-out (cluster sizes
-    are small by construction — near-dup groups, not topical groups)."""
-    shingled = _shingled_corpus(spark, sf_dir, drop_last=1).persist()
-    try:
-        labels = _cluster_labels(shingled)
-        corpus = dup_corpus(spark, sf_dir, drop_last=1).select(
-            "doc_id", F.size(F.split("text", " ")).alias("n_tokens")
-        )
-        member = labels.join(corpus, "doc_id")
-        w = Window.partitionBy("label").orderBy(F.desc("n_tokens"), F.asc("doc_id"))
-        return (
-            member.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") == 1)
-            .select(
-                "doc_id", F.col("label").alias("cluster_id"), "n_tokens"
-            )
-        )
-    finally:
-        shingled.unpersist()
-
-
-def _oracle_keep_best() -> str:
-    ctes, final = _oracle_cluster_ctes()
-    return f"""
-WITH {_oracle_corpus_droplast(1)},
-{_ORACLE_SHINGLES},
-{_oracle_minhash_sig_sql()},
-{_oracle_cands_sql()},
-{ctes}
-SELECT doc_id, label AS cluster_id, n_tokens FROM (
-  SELECT l.doc_id, l.label,
-         len(string_split(c.text, ' ')) AS n_tokens,
-         row_number() OVER (PARTITION BY l.label
-                            ORDER BY len(string_split(c.text, ' ')) DESC, l.doc_id ASC) AS rk
-  FROM {final} l JOIN corpus c ON l.doc_id = c.doc_id
-) WHERE rk = 1
-"""
-
-
-ORACLE_KEEP_BEST = _oracle_keep_best()
-
-
 # -- merged evidence row: clusters + canonical member in one propagation run ----
 
 

@@ -18,7 +18,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mongraph_spark.sparkutil import const_part, read_table
+from mongraph_spark.sparkutil import const_part, read_table, scratch_dir, scratch_path
 
 
 # -- declarative data-quality expectations -------------------------------------------
@@ -212,18 +212,10 @@ def store_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 checksum.  File-count mechanics (fragmented buckets actually
     shrink, untouched buckets are carried by manifest reference) are
     pinned in tests/test_merge_store.py."""
-    import shutil
-    import tempfile
-
     from mongraph_spark.sources import merge as merge_store
 
     docs = read_table(spark, sf_dir, "documents")
-    app_id = spark.sparkContext.applicationId
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(
-        tempfile.gettempdir(), f"mg_compaction_store_{app_id}_{sf_tag}"
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir(spark, sf_dir, "compaction_store")
     merge_store.init_table(docs, root, key="doc_id", n_buckets=8)
     # three trickle upserts: disjoint slices replayed verbatim
     for lo, hi in ((0, 200), (200, 400), (400, 600)):
@@ -273,16 +265,10 @@ def store_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same final state in plain SQL over ``documents`` — a wrong clause
     ordering, missed delete, or double-applied update breaks count,
     char-sum, or checksum."""
-    import shutil
-    import tempfile
-
     from mongraph_spark.sources import merge as merge_store
 
     docs = read_table(spark, sf_dir, "documents")
-    app_id = spark.sparkContext.applicationId
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(tempfile.gettempdir(), f"mg_merge_into_{app_id}_{sf_tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir(spark, sf_dir, "merge_into")
     merge_store.init_table(docs, root, key="doc_id", n_buckets=8)
     source = (
         docs.filter(F.col("doc_id") % 10 < 2)
@@ -338,18 +324,12 @@ def store_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest (structural sharing — only touched buckets differ) and the
     key-diffs are consecutive-version FULL OUTER joins on the bucketed
     key; version count, not data volume, drives the report."""
-    import shutil
-    import tempfile
-
     from mongraph_spark.sources import merge as merge_store
 
     docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    app_id = spark.sparkContext.applicationId
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(tempfile.gettempdir(), f"mg_history_{app_id}_{sf_tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir(spark, sf_dir, "history")
     merge_store.init_table(
         docs.filter(F.col("doc_id") % 3 != 0), root, key="doc_id", n_buckets=8
     )
@@ -456,18 +436,12 @@ def store_conflict_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
     At scale the claim file is one O_EXCL create per commit on the table
     root (an object-store conditional PUT in production) — contention cost
     is per-COMMIT, never per-row, and losers fail before reading data."""
-    import shutil
-    import tempfile
-
     from mongraph_spark.sources import merge as merge_store
 
     docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    app_id = spark.sparkContext.applicationId
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(tempfile.gettempdir(), f"mg_conflict_{app_id}_{sf_tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir(spark, sf_dir, "conflict")
     merge_store.init_table(docs, root, key="doc_id", n_buckets=8)
 
     # writer A: claims v1, then stalls (simulated live writer mid-commit)
@@ -531,23 +505,16 @@ def ivm_build_history(spark: SparkSession, sf_dir: str, tag: str) -> str:
     re-running the ~10-job 3-version construction each, and repeat runs of
     either skip it entirely.  A crashed partial build has no sentinel and
     is torn down and rebuilt."""
-    import shutil
-    import tempfile
-
     from mongraph_spark.sources import merge as merge_store
 
     docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    app_id = spark.sparkContext.applicationId
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(
-        tempfile.gettempdir(), f"mg_ivm_{tag}_{app_id}_{sf_tag}"
-    )
+    root = scratch_path(spark, sf_dir, f"ivm_{tag}")
     done = os.path.join(root, "_HISTORY_DONE")
     if os.path.exists(done):
         return root
-    shutil.rmtree(root, ignore_errors=True)
+    scratch_dir(spark, sf_dir, f"ivm_{tag}")  # a partial build starts over
     merge_store.init_table(docs, root, key="doc_id", n_buckets=8)  # v0
     batch = (
         docs.filter(F.col("doc_id") % 10 == 0)
@@ -826,18 +793,12 @@ def store_merge_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     resurrected, n_with_val explodes), the value sum, the v1/v2/v3 op
     sequence proving the evolution rode the standard protocol, final
     version 3."""
-    import shutil
-    import tempfile
-
     from mongraph_spark.sources import merge as merge_store
 
     docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    app_id = spark.sparkContext.applicationId
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(tempfile.gettempdir(), f"mg_mrgevo_{app_id}_{sf_tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir(spark, sf_dir, "mrgevo")
     merge_store.init_table(docs, root, key="doc_id", n_buckets=8)
     merge_store.drop_column(root, "n_chars")
     src = (
@@ -1016,16 +977,10 @@ def store_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     a full-table rewrite; the vector write is one predicate scan plus a
     KB-scale sidecar, and ``compact`` materializes at maintenance time
     (pinned in tests, not here)."""
-    import shutil
-    import tempfile
-
     from mongraph_spark.sources import merge as merge_store
 
     docs = read_table(spark, sf_dir, "documents")
-    app_id = spark.sparkContext.applicationId
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(tempfile.gettempdir(), f"mg_dv_{app_id}_{sf_tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir(spark, sf_dir, "dv")
     merge_store.init_table(docs, root, key="doc_id", n_buckets=8)
     merge_store.delete_where_dv(spark, root, F.col("n_chars") % 7 == 0)
     updates = docs.filter(F.col("doc_id") % 10 == 3).withColumn(
@@ -1643,18 +1598,12 @@ def store_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB this is O(#versions + #tags) metadata work plus unlinks —
     no data scan; the query's Spark work is only the final-state profile."""
-    import shutil
-    import tempfile
-
     from mongraph_spark.sources import merge as merge_store
 
     docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    app_id = spark.sparkContext.applicationId
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(tempfile.gettempdir(), f"mg_vacret_{app_id}_{sf_tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir(spark, sf_dir, "vacret")
     merge_store.init_table(docs, root, key="doc_id", n_buckets=16)
     merge_store.rebucket(spark, root, n_buckets=8)
     merge_store.upsert(
@@ -1722,18 +1671,12 @@ def store_read_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: version selection is O(#versions) metadata; each read is
     the normal manifest-resolved scan."""
     import json as _json
-    import shutil
-    import tempfile
-
     from mongraph_spark.sources import merge as merge_store
 
     docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    app_id = spark.sparkContext.applicationId
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(tempfile.gettempdir(), f"mg_asof_{app_id}_{sf_tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir(spark, sf_dir, "asof")
     merge_store.init_table(docs, root, key="doc_id", n_buckets=8)
     merge_store.upsert(
         spark,
@@ -1836,18 +1779,12 @@ def store_delete_rebase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the recheck reads ONLY the intervening writers' written
     bucket dirs (bounded by their write sets), never the table."""
-    import shutil
-    import tempfile
-
     from mongraph_spark.sources import merge as merge_store
 
     docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    app_id = spark.sparkContext.applicationId
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(tempfile.gettempdir(), f"mg_delreb_{app_id}_{sf_tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir(spark, sf_dir, "delreb")
     merge_store.init_table(docs, root, key="doc_id", n_buckets=8)
     meta_v0 = merge_store._read_meta(root)
 
@@ -1926,18 +1863,12 @@ def store_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per probe, one 1-row bucket-routing job + one
     single-file scan with the key filter pushed to parquet; never a
     table scan, never a shuffle."""
-    import shutil
-    import tempfile
-
     from mongraph_spark.sources import merge as merge_store
 
     docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    app_id = spark.sparkContext.applicationId
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(tempfile.gettempdir(), f"mg_point_{app_id}_{sf_tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir(spark, sf_dir, "point")
     merge_store.init_table(docs, root, key="doc_id", n_buckets=8)
     merge_store.upsert(
         spark,
@@ -1992,18 +1923,12 @@ def store_stats_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintenance job; every subsequent selective range scan prunes
     listing + footers + task scheduling, the dominant costs over
     millions of files."""
-    import shutil
-    import tempfile
-
     from mongraph_spark.sources import merge as merge_store
 
     docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    app_id = spark.sparkContext.applicationId
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(tempfile.gettempdir(), f"mg_skip_{app_id}_{sf_tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir(spark, sf_dir, "skip")
     merge_store.init_table(
         docs.repartition(16), root, key="doc_id", n_buckets=4
     )
@@ -2079,18 +2004,12 @@ def store_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets (default/0.25/NULL), the v1 commit record's op, final
     version 3 — a wrong fill version, a lost explicit NULL, or a
     non-committing add_column all break the hash."""
-    import shutil
-    import tempfile
-
     from mongraph_spark.sources import merge as merge_store
 
     docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    app_id = spark.sparkContext.applicationId
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(tempfile.gettempdir(), f"mg_schevo_{app_id}_{sf_tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir(spark, sf_dir, "schevo")
     merge_store.init_table(docs, root, key="doc_id", n_buckets=8)
     merge_store.add_column(root, "quality", "double", 1.0)
     with_q = (
@@ -2162,18 +2081,12 @@ def store_drop_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONLY doc 2's physical write — any resurrection of the original
     values breaks the hash massively), the v2 commit op, final
     version 6."""
-    import shutil
-    import tempfile
-
     from mongraph_spark.sources import merge as merge_store
 
     docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    app_id = spark.sparkContext.applicationId
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(tempfile.gettempdir(), f"mg_dropcol_{app_id}_{sf_tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir(spark, sf_dir, "dropcol")
     merge_store.init_table(docs, root, key="doc_id", n_buckets=8)
     merge_store.add_column(root, "quality", "double", 1.0)
     merge_store.drop_column(root, "n_chars")
@@ -2240,18 +2153,12 @@ def store_rename_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc 1 = 1000, doc 3 = +7 — any physical/logical mix-up shifts the
     sum), the v1 commit op, the surviving rename-map size (exactly 1:
     ``id``→``doc_id``), final version 6."""
-    import shutil
-    import tempfile
-
     from mongraph_spark.sources import merge as merge_store
 
     docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    app_id = spark.sparkContext.applicationId
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(tempfile.gettempdir(), f"mg_rencol_{app_id}_{sf_tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir(spark, sf_dir, "rencol")
     merge_store.init_table(docs, root, key="doc_id", n_buckets=8)
     merge_store.rename_column(root, "n_chars", "char_count")
     merge_store.upsert(
@@ -2316,18 +2223,12 @@ def store_compact_rebase(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction holds no claim during its Spark job (writers never queue
     behind it) and a lost bucket race skips that bucket instead of
     discarding the whole staged set."""
-    import shutil
-    import tempfile
-
     from mongraph_spark.sources import merge as merge_store
 
     docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    app_id = spark.sparkContext.applicationId
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(tempfile.gettempdir(), f"mg_cpreb_{app_id}_{sf_tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir(spark, sf_dir, "cpreb")
     merge_store.init_table(docs, root, key="doc_id", n_buckets=8)
     meta_v0 = merge_store._read_meta(root)
     manifest_v0 = merge_store._read_manifest(root, "v_00000")
@@ -2389,20 +2290,13 @@ def store_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB this is the milliseconds-vs-days difference between
     metadata clone and physical copy for a production-safe experiment."""
-    import shutil
-    import tempfile
-
     from mongraph_spark.sources import merge as merge_store
 
     docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    app_id = spark.sparkContext.applicationId
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(tempfile.gettempdir(), f"mg_clone_src_{app_id}_{sf_tag}")
-    dst = os.path.join(tempfile.gettempdir(), f"mg_clone_dst_{app_id}_{sf_tag}")
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(dst, ignore_errors=True)
+    src = scratch_dir(spark, sf_dir, "clone_src")
+    dst = scratch_dir(spark, sf_dir, "clone_dst")
     merge_store.init_table(docs, src, key="doc_id", n_buckets=8)
     merge_store.shallow_clone(src, dst)
     # zero-copy: the clone's v0 dir holds metadata only, no parquet
@@ -2503,18 +2397,12 @@ def store_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: restore is pure manifest metadata; the reads are normal
     manifest-resolved scans."""
-    import shutil
-    import tempfile
-
     from mongraph_spark.sources import merge as merge_store
 
     docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    app_id = spark.sparkContext.applicationId
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(tempfile.gettempdir(), f"mg_restore_{app_id}_{sf_tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir(spark, sf_dir, "restore")
     merge_store.init_table(docs, root, key="doc_id", n_buckets=8)
     merge_store.upsert(
         spark,
@@ -2578,18 +2466,12 @@ def store_check_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: enforcement is one short-circuiting ``limit(1)`` job per
     constraint over the UPDATE batch only (never the table), before any
     staging I/O."""
-    import shutil
-    import tempfile
-
     from mongraph_spark.sources import merge as merge_store
 
     docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    app_id = spark.sparkContext.applicationId
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(tempfile.gettempdir(), f"mg_chk_{app_id}_{sf_tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir(spark, sf_dir, "chk")
     merge_store.init_table(docs, root, key="doc_id", n_buckets=8)
     merge_store.add_check_constraint(spark, root, "chars_nonneg", "n_chars >= 0")
     merge_store.upsert(
@@ -2688,18 +2570,12 @@ def store_generated_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the ALTER is O(1) metadata; read-side fills are
     per-version projections (never a rewrite); write-side validation is
     one short-circuiting ``limit(1)`` probe over the batch."""
-    import shutil
-    import tempfile
-
     from mongraph_spark.sources import merge as merge_store
 
     docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    app_id = spark.sparkContext.applicationId
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(tempfile.gettempdir(), f"mg_gen_{app_id}_{sf_tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir(spark, sf_dir, "gen")
     merge_store.init_table(docs, root, key="doc_id", n_buckets=8)
     merge_store.add_generated_column(
         spark, root, "chars_x2", "long", "n_chars * 2 + 7"

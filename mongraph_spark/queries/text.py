@@ -276,50 +276,6 @@ SCAN_TERM_PATTERN = r"\b(table|key)\b"
 SCAN_EMAIL_PATTERN = r"[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}"
 
 
-# -- PII redaction: mask matches, emit auditable redacted fingerprints -----------
-
-
-def text_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The redaction (not just detection) shape: rewrite the text with every
-    match masked, and emit what an audit trail needs — per-doc redaction
-    count, redacted length, and a fingerprint of the redacted text (so the
-    downstream corpus can verify it never saw the raw form).  Map-only:
-    `regexp_replace` / `regexp_extract_all` are JVM codegen expressions; at
-    100 TB this runs as a pure scan-project with zero shuffles, and the
-    output parquet is the redacted corpus itself (here reduced to the audit
-    columns so the oracle hash stays small)."""
-    docs = read_table(spark, sf_dir, "documents")
-    masked = F.regexp_replace(
-        F.regexp_replace("text", F.lit(SCAN_EMAIL_PATTERN), F.lit("[EMAIL]")),
-        F.lit(SCAN_TERM_PATTERN),
-        F.lit("[TERM]"),
-    )
-    n_red = F.size(F.regexp_extract_all("text", F.lit(SCAN_TERM_PATTERN), F.lit(0))) + F.size(
-        F.regexp_extract_all("text", F.lit(SCAN_EMAIL_PATTERN), F.lit(0))
-    )
-    return docs.select(
-        "doc_id",
-        n_red.cast("long").alias("n_redactions"),
-        F.length(masked).cast("long").alias("n_chars_redacted"),
-        F.md5(masked).alias("redacted_hash"),
-    )
-
-
-ORACLE_PII_REDACT = f"""
-SELECT doc_id,
-       CAST(len(regexp_extract_all(text, '{SCAN_TERM_PATTERN}'))
-            + len(regexp_extract_all(text, '{SCAN_EMAIL_PATTERN}')) AS BIGINT) AS n_redactions,
-       CAST(length(masked) AS BIGINT) AS n_chars_redacted,
-       md5(masked) AS redacted_hash
-FROM (
-  SELECT doc_id, text,
-         regexp_replace(regexp_replace(text, '{SCAN_EMAIL_PATTERN}', '[EMAIL]', 'g'),
-                        '{SCAN_TERM_PATTERN}', '[TERM]', 'g') AS masked
-  FROM documents
-)
-"""
-
-
 # -- merged evidence rows ---------------------------------------------------------
 #
 # One scan computing every per-document text metric (tokens / quality /

@@ -2,15 +2,12 @@
 
 The reference's only "source" is a live MongoDB collection (documents arrive
 via Mongoose models); the Spark-native analog is file ingestion — JSON lines,
-CSV, or parquet — either into the OLTP catalog (small, mutable, mirrored
-into the graph on save, reference src/mongraphMongoosePlugin.coffee:43-61)
-or as a bulk DataFrame for analytics mode (any scale; schema-on-read, the
-``_id`` key derived deterministically when absent).
+CSV, or parquet — as a bulk DataFrame for analytics mode (any scale;
+schema-on-read, the ``_id`` key derived deterministically when absent).
 
 Scale notes: bulk ingestion is a pure scan — no driver materialization, and
 the derived ``_id`` is a projection, so Catalyst still prunes/pushes through
-it.  OLTP ingestion intentionally collects: it feeds the mutable staging
-catalog, which is a driver-side structure by design (SURVEY.md §7).
+it.
 """
 
 from __future__ import annotations
@@ -53,56 +50,3 @@ def read_documents(
     else:
         src = F.to_json(F.struct(*[F.col(c) for c in df.columns]))
     return df.withColumn("_id", F.substring(F.md5(src), 1, 24))
-
-
-def schema_from_struct(name: str, struct) -> "CollectionSchema":
-    """Infer a CollectionSchema (registration metadata) from a Spark schema."""
-    from pyspark.sql import types as T
-
-    from mongraph_spark.schema import CollectionSchema, FieldSpec
-
-    def to_spec(dtype) -> FieldSpec:
-        if isinstance(dtype, T.StructType):
-            return FieldSpec(fields={f.name: to_spec(f.dataType) for f in dtype.fields})
-        if isinstance(dtype, (T.LongType, T.IntegerType, T.ShortType)):
-            return FieldSpec(type=int)
-        if isinstance(dtype, (T.DoubleType, T.FloatType)):
-            return FieldSpec(type=float)
-        if isinstance(dtype, T.BooleanType):
-            return FieldSpec(type=bool)
-        return FieldSpec(type=str)
-
-    return CollectionSchema(
-        name=name,
-        fields={f.name: to_spec(f.dataType) for f in struct.fields if f.name != "_id"},
-    )
-
-
-def ingest_collection(engine, collection: str, path: str, fmt: str = "json", **options) -> int:
-    """Load a file into the OLTP catalog as saved documents (mirror nodes
-    created by the save hook, like every reference document).  Returns the
-    number of documents ingested."""
-    df = read_documents(engine.spark, path, fmt=fmt, **options)
-    if collection not in getattr(engine, "_schemas", {}):
-        engine.register_collection(schema_from_struct(collection, df.schema))
-    n = 0
-    for row in df.toLocalIterator():
-        doc = {k: v for k, v in row.asDict(recursive=True).items() if k != "_id"}
-        engine.create_document(collection, doc).save()
-        n += 1
-    return n
-
-
-def export_collection(
-    engine, collection: str, path: str, fmt: str = "json", mode: str = "overwrite"
-) -> None:
-    """Write a collection's current state out as JSON lines / CSV / parquet."""
-    if fmt not in _FORMATS:
-        raise ValueError(f"unsupported sink format: {fmt!r} (use {sorted(_FORMATS)})")
-    df = engine.store.documents_df(collection)
-    if fmt == "csv":
-        # CSV can't hold nested types; stringify map/struct/array columns
-        for name, dtype in df.dtypes:
-            if dtype.startswith(("map", "struct", "array")):
-                df = df.withColumn(name, F.to_json(F.col(name)))
-    df.write.mode(mode).format(fmt).save(path)

@@ -2,7 +2,11 @@
 
 from __future__ import annotations
 
+import atexit
 import os
+import re
+import shutil
+import tempfile
 import weakref
 
 from pyspark.sql import SparkSession
@@ -98,6 +102,64 @@ def sql_string(text: str) -> str:
 
 def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir}/{name}.parquet"
+
+
+# application id -> warehouse directories of its scratch tables, removed
+# with the application's scratch root when the process exits
+_SCRATCH_TABLES: dict[str, set] = {}
+
+
+def _remove_scratch(root: str, tables: set) -> None:
+    shutil.rmtree(root, ignore_errors=True)
+    for path in tables:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def _scratch(spark: SparkSession) -> tuple[str, set]:
+    """This application's scratch root ``<tmp>/mg_<appId>`` and its
+    scratch-table set.  The first call registers the exit hook that
+    removes both."""
+    app_id = spark.sparkContext.applicationId
+    root = os.path.join(tempfile.gettempdir(), f"mg_{app_id}")
+    if app_id not in _SCRATCH_TABLES:
+        _SCRATCH_TABLES[app_id] = set()
+        atexit.register(_remove_scratch, root, _SCRATCH_TABLES[app_id])
+    return root, _SCRATCH_TABLES[app_id]
+
+
+def _sf_tag(sf_dir: str) -> str:
+    return os.path.basename(os.path.normpath(sf_dir)) or "sf"
+
+
+def scratch_path(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """``<tmp>/mg_<appId>/<name>_<sf>``: a query's scratch directory,
+    namespaced so that concurrent sessions and SFs never share one.  The
+    whole per-application root is removed when the process exits."""
+    root, _ = _scratch(spark)
+    return os.path.join(root, f"{name}_{_sf_tag(sf_dir)}")
+
+
+def scratch_dir(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """:func:`scratch_path`, emptied: each run of a query starts clean."""
+    path = scratch_path(spark, sf_dir, name)
+    shutil.rmtree(path, ignore_errors=True)
+    return path
+
+
+def scratch_table(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """A warehouse table name for a query's scratch state,
+    ``<name>_<appId>_<sf>`` with non-word characters as ``_``; its warehouse
+    directory is removed with the scratch root at exit."""
+    app_id = spark.sparkContext.applicationId
+    table = re.sub(r"\W", "_", f"{name}_{app_id}_{_sf_tag(sf_dir)}")
+    _, tables = _scratch(spark)
+    tables.add(os.path.join(warehouse_dir(spark), table.lower()))
+    return table
+
+
+def warehouse_dir(spark: SparkSession) -> str:
+    path = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
+    return os.path.abspath(path.removeprefix("file:"))
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str):
@@ -331,11 +393,10 @@ def lineage_cut(df, eager: bool = True):
     executor loss IS driver loss — so the fast path stays the default
     there.  On any non-local master every cut (loop states, commit
     batches, a query's reused subplans) becomes a reliable ``checkpoint()``
-    into ``$SPARK_GRAFT_CHECKPOINT_DIR`` (default ``<tmp>/mg_ckpt_<appId>``),
-    which survives executor loss.  Override with
-    ``SPARK_GRAFT_CHECKPOINT=local|reliable`` (``auto`` = by master)."""
-    import tempfile
-
+    into ``$SPARK_GRAFT_CHECKPOINT_DIR`` (default ``<tmp>/mg_<appId>/ckpt``,
+    the scratch root, removed at exit), which survives executor loss.
+    Override with ``SPARK_GRAFT_CHECKPOINT=local|reliable`` (``auto`` = by
+    master)."""
     mode = os.environ.get("SPARK_GRAFT_CHECKPOINT", "auto")
     spark = df.sparkSession
     master = spark.sparkContext.master
@@ -345,10 +406,7 @@ def lineage_cut(df, eager: bool = True):
     if sc.getCheckpointDir() is None:
         sc.setCheckpointDir(
             os.environ.get(
-                "SPARK_GRAFT_CHECKPOINT_DIR",
-                os.path.join(
-                    tempfile.gettempdir(), f"mg_ckpt_{sc.applicationId}"
-                ),
+                "SPARK_GRAFT_CHECKPOINT_DIR", os.path.join(_scratch(spark)[0], "ckpt")
             )
         )
     return df.checkpoint(eager=eager)

@@ -1,17 +1,40 @@
-"""Structured Streaming realizations of the event analytics (SURVEY.md §2.7
-extension scope): readStream → watermark → window / session_window /
-applyInPandasWithState → sink.
+"""Structured Streaming twins of the batch analytics.
 
-Each operator here is the *same logic* as its batch twin in
-queries/events.py; on this finite dataset a replay with
-``trigger(availableNow=True)`` must produce identical results, which is what
-the oracle checks (and tests/test_streaming.py asserts against the batch
-DataFrames directly).
+A *twin* is the streaming version of one batch op: on this finite dataset
+a replay with ``trigger(availableNow=True)`` must return exactly the batch
+op's rows.  The oracle checks that: a twin whose answer is its batch op's
+answer shares that op's oracle by reference (``TWIN_OF``), and
+tests/test_streaming.py compares the two DataFrames.  The serving shape
+is per-arrival ingest analytics: cheap stream state at ingest, the
+analysis re-run on read.  A twin has one of three shapes:
 
-Scale notes: watermarks bound state (late events beyond 1 hour are dropped
-at the source); session_window and the stateful counter both keyed by
-user_id so state partitions horizontally; memory sink is test-only — a real
-deployment writes to kafka/delta with checkpointing.
+- **Rollup** (``_rollup``).  The stream keeps a watermarked window
+  rollup: per hour or per day, per event type or in total, by default the
+  integer-cents sum as ``y``, complete-mode into a memory sink.  The batch
+  op's own finisher runs over the sink table.  The rollup is the
+  finisher's entire input, so state is bounded by |types| x |windows| and
+  a refresh never replays raw events.  Integer cents keep the sum exact
+  under any micro-batch split.  A finisher that self-joins its input gets
+  a ``lineage_cut`` of the rollup first: through the memory-sink view the
+  shared attribute ids defeat Spark's self-join dedup.
+- **Arrival replay** (``_replay``).  The corpus is staged as a few parquet
+  files and replayed one file per micro-batch.  A ``foreachBatch``
+  function folds each arrival into a log, an index or a store, and the
+  batch op's finisher reads what accumulated.  Every pair or document is
+  decided exactly once across batches, so the union over batches is the
+  batch op's output.
+- **Bespoke.**  Operators whose stream itself is the point: sliding and
+  session windows, stream-stream joins, dedup within a watermark,
+  ``applyInPandasWithState``, sketches whose state store is the sketch,
+  and views fed by the store's change feed.  Each is written out, with its
+  own oracle SQL where no batch op shares it.
+
+Scale notes: watermarks bound state (late events beyond the watermark are
+dropped at the source); ``run_to_table`` sizes the state partitions from
+the input; scratch files live under ``sparkutil.scratch_dir`` and state
+tables under ``sparkutil.scratch_table``, both removed at process exit.
+The memory sink is test-only: a real deployment writes to kafka/delta with
+checkpointing.
 """
 
 from __future__ import annotations
@@ -19,6 +42,7 @@ from __future__ import annotations
 import contextlib
 import itertools
 import os
+import shutil
 import warnings
 
 import pandas as pd
@@ -27,11 +51,22 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from mongraph_spark.queries import corpus as corpus_ops
+from mongraph_spark.queries import dedup as dedup_ops
+from mongraph_spark.queries import events as events_ops
+from mongraph_spark.queries import inference as inference_ops
+from mongraph_spark.queries import quality as quality_ops
+from mongraph_spark.queries import relational as relational_ops
+from mongraph_spark.queries import similarity as similarity_ops
 from mongraph_spark.sparkutil import (
     const_part,
     lineage_cut,
     normalize_event_ts,
+    read_table,
     scale_out,
+    scratch_dir,
+    scratch_table,
+    warehouse_dir,
 )
 
 _sink_seq = itertools.count(1)
@@ -125,18 +160,22 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 LAST_STATE_METRICS: list[dict] = []
 
 
-def run_to_table(stream_df: DataFrame, output_mode: str = "complete") -> DataFrame:
-    """Execute a finite replay (availableNow) into a memory sink and return
-    the sink table."""
+def run_to_table(
+    stream_df: DataFrame, sf_dir: str, output_mode: str = "complete"
+) -> DataFrame:
+    """Execute a finite replay (availableNow) into a memory sink, with the
+    state partitions sized from ``sf_dir``'s events, and return the sink
+    table."""
     name = f"mg_stream_sink_{next(_sink_seq)}"
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with _state_partitioning(stream_df.sparkSession, sf_dir):
+        q = (
+            stream_df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     global LAST_STATE_METRICS
     try:
         prog = q.lastProgress or {}
@@ -153,6 +192,39 @@ def run_to_table(stream_df: DataFrame, output_mode: str = "complete") -> DataFra
     return stream_df.sparkSession.table(name)
 
 
+# -- arrival replay: staged files, one per micro-batch, into foreachBatch --------
+
+# the (doc_id, text) arrivals most corpus twins stage
+_DOC_TEXT = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("text", T.StringType()),
+    ]
+)
+
+
+def _arrivals(spark: SparkSession, staging: str, schema) -> DataFrame:
+    """The staged parquet files under ``staging`` as a stream that reads
+    one file per micro-batch."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(staging)
+    )
+
+
+def _replay(spark: SparkSession, staging: str, schema, process) -> None:
+    """Replay the staged arrivals to the end, each file a micro-batch
+    handed to ``process(batch_df, batch_id)``."""
+    q = (
+        _arrivals(spark, staging, schema)
+        .writeStream.foreachBatch(process)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
 # -- tumbling window with watermark -------------------------------------------------
 
 
@@ -167,8 +239,7 @@ def streaming_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 2).alias("sum_value"),
         )
     )
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(agg, output_mode="complete")
+    out = run_to_table(agg, sf_dir)
     return out.select(
         F.col("w.start").alias("window_start"),
         "event_type",
@@ -192,8 +263,7 @@ def streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum(cents).alias("sum_cents"),
     )
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(agg, output_mode="complete")
+    out = run_to_table(agg, sf_dir)
     return out.select(
         F.col("w.start").alias("window_start"),
         "event_type",
@@ -222,8 +292,7 @@ def streaming_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = ev.groupBy(
         F.session_window("ts", "30 minutes").alias("w"), "user_id"
     ).agg(F.count(F.lit(1)).alias("n_events"))
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(agg, output_mode="complete")
+    out = run_to_table(agg, sf_dir)
     return (
         out.groupBy("user_id")
         .agg(
@@ -264,8 +333,7 @@ def streaming_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFram
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(counted, output_mode="update")
+    out = run_to_table(counted, sf_dir, "update")
     # with multiple micro-batches the sink holds one row per update; keep the last
     return out.groupBy("user_id").agg(
         F.max("total_events").alias("total_events"),
@@ -298,8 +366,7 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 2).alias("sum_value"),
     )
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(agg, output_mode="complete")
+    out = run_to_table(agg, sf_dir)
     return out
 
 
@@ -378,8 +445,7 @@ def streaming_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame
             "AND p_ts <= c_ts + INTERVAL 30 MINUTES"
         ),
     )
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(joined, output_mode="append")
+    out = run_to_table(joined, sf_dir, "append")
     return out.groupBy(F.col("p_user").alias("user_id")).agg(
         F.count(F.lit(1)).alias("n_pairs"),
         F.round(F.sum("p_value"), 2).alias("attributed_value"),
@@ -413,18 +479,9 @@ def streaming_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one key-anti-join rewrite, and totals are integer counts/cents so
     replay order can't perturb the final table.  The final read is the
     store's pinned current version — what a downstream consumer would see."""
-    import shutil
-    import tempfile
-
     from mongraph_spark.sources import merge as merge_store
 
-    # app-id-namespaced root: concurrent sessions (gate + bench) must not
-    # race on one store dir (same isolation as store_snapshot_diff)
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"mg_stream_merge_store_{spark.sparkContext.applicationId}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir(spark, sf_dir, "stream_merge_store")
 
     ev = events_stream(spark, sf_dir)
     cents = F.round(F.col("value") * 100).cast("long")
@@ -500,9 +557,7 @@ def streaming_click_purchase_outer(spark: SparkSession, sf_dir: str) -> DataFram
         ),
         "left_outer",
     )
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(joined, output_mode="append")
-    from mongraph_spark.sparkutil import read_table
+    out = run_to_table(joined, sf_dir, "append")
 
     # The join's GLOBAL watermark is the min over both input watermarks,
     # and each is computed on its filtered stream — so the closed-window
@@ -576,7 +631,6 @@ def streaming_threshold_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     Stream-static joins keep NO state for the static side (it is re-read /
     re-broadcast per micro-batch); window state is watermark-bounded.  The
     finite availableNow replay must equal the batch SQL — the oracle."""
-    from mongraph_spark.sparkutil import read_table
 
     thr = (
         read_table(spark, sf_dir, "events")
@@ -590,8 +644,7 @@ def streaming_threshold_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = flagged.groupBy(F.window("ts", "1 hour").alias("w"), "event_type").agg(
         F.count(F.lit(1)).alias("n_anomalies")
     )
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(agg, output_mode="complete")
+    out = run_to_table(agg, sf_dir)
     return out.select(
         F.col("w.start").alias("window_start"), "event_type", "n_anomalies"
     )
@@ -671,8 +724,7 @@ def streaming_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(counted, output_mode="append")
+    out = run_to_table(counted, sf_dir, "append")
     mat = out.groupBy("from_type", "to_type").agg(
         F.sum("n").alias("n_transitions")
     )
@@ -708,16 +760,12 @@ def streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = events_stream(spark, sf_dir).select("event_type", "user_id")
     regs_stream = hll_register_table(ev)
-    with _state_partitioning(spark, sf_dir):
-        regs = run_to_table(regs_stream, output_mode="complete")
-    from mongraph_spark.sparkutil import read_table
+    regs = run_to_table(regs_stream, sf_dir)
 
     batch_ev = read_table(spark, sf_dir, "events").select("event_type", "user_id")
     return hll_finish(regs, batch_ev)
 
 
-from mongraph_spark.queries.events import ORACLE_MARKOV as ORACLE_STREAM_MARKOV  # noqa: E402
-from mongraph_spark.queries.relational import ORACLE_HLL as ORACLE_STREAM_HLL  # noqa: E402
 
 
 # -- streaming seasonal anomaly (batch-baseline twin) ---------------------------------
@@ -744,7 +792,6 @@ def streaming_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         _seasonal_baseline,
         _seasonal_dense,
     )
-    from mongraph_spark.sparkutil import read_table
 
     base = _seasonal_baseline(_seasonal_dense(spark, sf_dir))
     d0 = read_table(spark, sf_dir, "events").agg(
@@ -754,8 +801,7 @@ def streaming_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type").agg(
         F.count(F.lit(1)).alias("n")
     )
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(agg, output_mode="complete")
+    out = run_to_table(agg, sf_dir)
     cells = out.select(
         "event_type",
         F.to_date("w.start").alias("day"),
@@ -785,125 +831,159 @@ def streaming_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_stream_seasonal() -> str:
-    from mongraph_spark.queries.events import ORACLE_SEASONAL_ANOMALY
-
-    return ORACLE_SEASONAL_ANOMALY.rstrip() + "\n  AND d.n > 0\n"
+# -- rollup twins: a watermarked window rollup + the batch op's finisher ----------
 
 
-# -- streaming CUSUM changepoint twin -------------------------------------------------
-
-
-def streaming_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of ``queries.events.events_cusum_changepoint``: the
-    stream maintains the watermarked per-(type, day) count rollup; the
-    CUSUM screen itself (integer S_k = n·P_k − k·T, earliest-day argmax)
-    is the SHARED batch finisher over the continuously-updated rollup
-    table — the monitoring deployment shape (cheap stream state, the
-    level-shift scan re-runs on read).  Fully batch-equal: the batch op's
-    daily counts also carry no zero-fill, so the two rollups are
-    identical by construction.  State: O(types × days-in-watermark)."""
-    from mongraph_spark.queries.events import _cusum_finish
-
-    ev = events_stream(spark, sf_dir).withWatermark("ts", "1 day")
-    agg = ev.groupBy(F.window("ts", "1 day").alias("w"), "event_type").agg(
-        F.count(F.lit(1)).alias("x")
+def _rollup(
+    spark: SparkSession,
+    sf_dir: str,
+    grain: str,
+    *,
+    by_type: bool = True,
+    measure=None,
+    watermark: str = "1 day",
+    date: bool = True,
+) -> DataFrame:
+    """The rollup twins' stream: events watermarked by ``watermark``,
+    grouped per 1-``grain`` window (and per event type unless ``by_type``
+    is false), aggregated by ``measure`` (default: the integer-cents sum as
+    ``y``), complete-mode into a memory sink.  Returns the sink as
+    ``([event_type,] <grain>, <measure>)``; a daily window start is a date
+    unless ``date`` is false."""
+    ev = events_stream(spark, sf_dir).withWatermark("ts", watermark)
+    types = ["event_type"] if by_type else []
+    if measure is None:
+        measure = F.sum(F.round(F.col("value") * 100).cast("long")).alias("y")
+    out = run_to_table(
+        ev.groupBy(F.window("ts", f"1 {grain}").alias("w"), *types).agg(measure),
+        sf_dir,
     )
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(agg, output_mode="complete")
-    daily = out.select(
-        "event_type", F.to_date("w.start").alias("day"), F.col("x")
+    start = F.col("w.start")
+    if grain == "day" and date:
+        start = F.to_date(start)
+    return out.select(*types, start.alias(grain), out.columns[-1])
+
+
+def streaming_lttb_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rollup twin of ``events_lttb_downsample``."""
+    return events_ops.lttb_finish(_rollup(spark, sf_dir, "hour"))
+
+
+def streaming_stl_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rollup twin of ``events_stl_decompose``."""
+    return events_ops.stl_finish(_rollup(spark, sf_dir, "hour"))
+
+
+def streaming_regime_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rollup twin of ``events_regime_segments``."""
+    return events_ops.regime_finish(_rollup(spark, sf_dir, "hour"))
+
+
+def streaming_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rollup twin of ``events_mann_kendall`` (self-joining finisher)."""
+    return events_ops.mann_kendall_finish(lineage_cut(_rollup(spark, sf_dir, "hour")))
+
+
+def streaming_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rollup twin of ``events_page_hinkley``."""
+    return events_ops.page_hinkley_finish(_rollup(spark, sf_dir, "hour"))
+
+
+def streaming_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rollup twin of ``events_autocorrelation`` (self-joining finisher)."""
+    return events_ops.acf_finish(lineage_cut(_rollup(spark, sf_dir, "hour")))
+
+
+def streaming_hampel_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rollup twin of ``events_hampel_filter``."""
+    return events_ops.hampel_finish(_rollup(spark, sf_dir, "hour"))
+
+
+def streaming_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rollup twin of ``events_hurst_exponent`` (self-joining finisher)."""
+    return inference_ops.hurst_finish(lineage_cut(_rollup(spark, sf_dir, "hour")))
+
+
+def streaming_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rollup twin of ``events_permutation_entropy``."""
+    return inference_ops.perm_entropy_finish(_rollup(spark, sf_dir, "hour"))
+
+
+def streaming_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rollup twin of ``events_cross_correlation`` (self-joining finisher)."""
+    return inference_ops.ccf_finish(lineage_cut(_rollup(spark, sf_dir, "hour")))
+
+
+def streaming_granger_causality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rollup twin of ``stats_granger_causality`` (self-joining finisher)."""
+    return inference_ops.granger_finish(lineage_cut(_rollup(spark, sf_dir, "hour")))
+
+
+def streaming_dickey_fuller(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rollup twin of ``stats_dickey_fuller`` (self-joining finisher)."""
+    return inference_ops.dickey_fuller_finish(
+        lineage_cut(_rollup(spark, sf_dir, "hour"))
     )
-    return _cusum_finish(daily)
 
 
-def _oracle_stream_cusum() -> str:
-    from mongraph_spark.queries.events import ORACLE_CUSUM
-
-    return ORACLE_CUSUM
+def streaming_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rollup twin of ``stats_kendall_tau`` (self-joining finisher)."""
+    return inference_ops.kendall_finish(lineage_cut(_rollup(spark, sf_dir, "hour")))
 
 
 def streaming_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of ``queries.events.events_holt_trend``: the stream
-    maintains the watermarked per-day cents rollup — the forecast's
-    ENTIRE sufficient statistic, O(days) state — and the Holt recursion +
-    horizon finisher (``holt_finish``, shared verbatim) re-runs on read
-    over the continuously-updated rollup table.  The live-dashboard
-    forecasting shape: cheap associative stream state, an O(|days|)
-    finisher per refresh, never a history replay.  Fully batch-equal (the
-    batch op's daily rollup also carries no zero-fill), checked by the
-    batch op's own recursive-CTE oracle."""
-    from mongraph_spark.queries.events import holt_finish
-
-    ev = events_stream(spark, sf_dir).withWatermark("ts", "1 day")
-    agg = ev.groupBy(F.window("ts", "1 day").alias("w")).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("y")
-    )
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(agg, output_mode="complete")
-    daily = out.select(F.to_date("w.start").alias("day"), "y")
-    return holt_finish(daily)
-
-
-def _oracle_stream_holt() -> str:
-    from mongraph_spark.queries.events import ORACLE_HOLT
-
-    return ORACLE_HOLT
+    """Rollup twin of ``events_holt_trend`` (daily totals)."""
+    return events_ops.holt_finish(_rollup(spark, sf_dir, "day", by_type=False))
 
 
 def streaming_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of ``queries.events.events_holt_winters`` — the same
-    watermarked per-day cents rollup as the Holt twin (the seasonal
-    forecast's ENTIRE sufficient statistic, O(days) state) with the
-    Holt–Winters recursion + horizon finisher (``holt_winters_finish``,
-    shared verbatim) re-run on read over the continuously-updated rollup.
-    The live-dashboard seasonal-forecast shape: cheap associative stream
-    state, an O(|days|) finisher per refresh, never a history replay.
-    Fully batch-equal, checked by the batch op's recursive-CTE oracle."""
-    from mongraph_spark.queries.events import holt_winters_finish
-
-    ev = events_stream(spark, sf_dir).withWatermark("ts", "1 day")
-    agg = ev.groupBy(F.window("ts", "1 day").alias("w")).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("y")
-    )
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(agg, output_mode="complete")
-    daily = out.select(F.to_date("w.start").alias("day"), "y")
-    return holt_winters_finish(daily)
-
-
-def _oracle_stream_holt_winters() -> str:
-    from mongraph_spark.queries.events import ORACLE_HOLT_WINTERS
-
-    return ORACLE_HOLT_WINTERS
+    """Rollup twin of ``events_holt_winters`` (daily totals)."""
+    return events_ops.holt_winters_finish(_rollup(spark, sf_dir, "day", by_type=False))
 
 
 def streaming_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of ``queries.events.events_forecast_backtest`` — the
-    nightly-model-review shape: the stream maintains the same watermarked
-    daily rollup (the ENTIRE sufficient statistic for every model in the
-    ladder), and the backtest — hold out the trailing season, fit
-    naive/seasonal-naive/Holt/Holt–Winters on the prefix, score MAE +
-    MASE — re-runs as an O(|days|) finisher over the continuously-updated
-    state.  Model selection stays current as data arrives without ever
-    replaying history; fully batch-equal (shared finisher), checked by
-    the batch op's own oracle."""
-    from mongraph_spark.queries.events import backtest_finish
+    """Rollup twin of ``events_forecast_backtest`` (daily totals)."""
+    return events_ops.backtest_finish(_rollup(spark, sf_dir, "day", by_type=False))
 
-    ev = events_stream(spark, sf_dir).withWatermark("ts", "1 day")
-    agg = ev.groupBy(F.window("ts", "1 day").alias("w")).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("y")
+
+def streaming_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rollup twin of ``events_cusum_changepoint`` (daily counts as ``x``)."""
+    return events_ops._cusum_finish(
+        _rollup(spark, sf_dir, "day", measure=F.count(F.lit(1)).alias("x"))
     )
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(agg, output_mode="complete")
-    daily = out.select(F.to_date("w.start").alias("day"), "y")
-    return backtest_finish(daily)
 
 
-def _oracle_stream_forecast_backtest() -> str:
-    from mongraph_spark.queries.events import ORACLE_FORECAST_BACKTEST
+def streaming_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rollup twin of ``events_croston`` (daily high-value cents as ``d``)."""
+    cents = F.round(F.col("value") * 100).cast("long")
+    high = F.when(F.col("value") >= events_ops.CROSTON_THRESHOLD, cents).otherwise(0)
+    daily = _rollup(
+        spark, sf_dir, "day", measure=F.sum(high).alias("d"), watermark="2 days"
+    )
+    return events_ops.croston_finish(daily)
 
-    return ORACLE_FORECAST_BACKTEST
+
+def streaming_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rollup twin of ``events_conformal_interval`` (self-joining finisher)."""
+    daily = _rollup(spark, sf_dir, "day", watermark="2 days", date=False)
+    return events_ops.conformal_finish(lineage_cut(daily))
+
+
+def streaming_theta_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rollup twin of ``events_theta_forecast`` (self-joining finisher)."""
+    return inference_ops.theta_finish(lineage_cut(_rollup(spark, sf_dir, "day")))
+
+
+def streaming_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Twin of ``events_lorenz_curve``: per-user running cents totals (one
+    state row per user, no window), and the batch op's decile curve
+    (``lorenz_finish``) over them."""
+    ev = events_stream(spark, sf_dir).withWatermark("ts", "1 day")
+    agg = ev.groupBy("user_id").agg(
+        F.sum(F.round(F.col("value") * 100).cast("long")).alias("total")
+    )
+    out = run_to_table(agg, sf_dir)
+    return events_ops.lorenz_finish(out.select("user_id", "total"))
 
 
 def streaming_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -915,305 +995,9 @@ def streaming_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     sufficient statistic, and the Welch t + Satterthwaite ν finisher
     (``welch_finish``, shared verbatim) re-runs on read.  A dashboard
     refreshing mid-experiment pays the O(|types|) finisher, never a
-    history replay.  Fully batch-equal, checked by the batch op's own
-    oracle."""
-    from mongraph_spark.queries.events import welch_finish, welch_moments
-
-    ev = events_stream(spark, sf_dir)
-    agg = welch_moments(ev)
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(agg, output_mode="complete")
-    return welch_finish(out)
-
-
-def _oracle_stream_welch() -> str:
-    from mongraph_spark.queries.events import ORACLE_WELCH_TTEST
-
-    return ORACLE_WELCH_TTEST
-
-
-def streaming_lttb_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of ``queries.events.events_lttb_downsample`` — the
-    live-chart decimation shape: the stream maintains the watermarked
-    per-(type, hour) cents rollup (the decimation's ENTIRE input,
-    O(|series|·|hours|) state), and the parallel fixed-anchor LTTB pick
-    (``lttb_finish``, shared verbatim) re-runs on read over the
-    continuously-updated rollup.  A dashboard refresh pays the bounded
-    finisher — two windows + one join over hours — never a raw-event
-    replay.  Fully batch-equal, checked by the batch op's own oracle."""
-    from mongraph_spark.queries.events import lttb_finish
-
-    ev = events_stream(spark, sf_dir).withWatermark("ts", "1 day")
-    agg = ev.groupBy(
-        F.window("ts", "1 hour").alias("w"), "event_type"
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("y"))
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(agg, output_mode="complete")
-    hourly = out.select("event_type", F.col("w.start").alias("hour"), "y")
-    return lttb_finish(hourly)
-
-
-def _oracle_stream_lttb() -> str:
-    from mongraph_spark.queries.events import ORACLE_LTTB
-
-    return ORACLE_LTTB
-
-
-def streaming_stl_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of ``queries.events.events_stl_decompose`` — the
-    live dashboard-decomposition shape: the stream maintains the
-    watermarked per-(type, hour) cents rollup (the decomposition's
-    ENTIRE input, bounded |types|×|hours| state), and the moving-average
-    trend + hour-of-day seasonal scan (``stl_finish``, shared verbatim)
-    re-runs on read over the continuously-updated rollup.  Fully
-    batch-equal, checked by the batch op's own oracle."""
-    from mongraph_spark.queries.events import stl_finish
-
-    ev = events_stream(spark, sf_dir).withWatermark("ts", "1 day")
-    agg = ev.groupBy(
-        F.window("ts", "1 hour").alias("w"), "event_type"
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("y"))
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(agg, output_mode="complete")
-    hourly = out.select("event_type", F.col("w.start").alias("hour"), "y")
-    return stl_finish(hourly)
-
-
-def _oracle_stream_stl() -> str:
-    from mongraph_spark.queries.events import ORACLE_STL
-
-    return ORACLE_STL
-
-
-def streaming_regime_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of ``queries.events.events_regime_segments`` — the
-    live burst-monitor shape: the stream maintains the watermarked
-    per-(type, hour) cents rollup, and the gaps-and-islands segmentation
-    re-runs on read over the continuously-updated rollup
-    (``regime_finish``, shared verbatim).  Fully batch-equal, checked by
-    the batch op's oracle."""
-    from mongraph_spark.queries.events import regime_finish
-
-    ev = events_stream(spark, sf_dir).withWatermark("ts", "1 day")
-    agg = ev.groupBy(
-        F.window("ts", "1 hour").alias("w"), "event_type"
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("y"))
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(agg, output_mode="complete")
-    hourly = out.select("event_type", F.col("w.start").alias("hour"), "y")
-    return regime_finish(hourly)
-
-
-def streaming_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of ``queries.events.events_lorenz_curve`` — the
-    live concentration-monitor shape: the stream maintains per-user
-    running cents totals (one state row per user — the
-    stateful_user_totals state class), and the decile curve
-    (``lorenz_finish``, shared verbatim) re-runs on read over the
-    continuously-updated totals.  Fully batch-equal, checked by the
-    batch op's own oracle."""
-    from mongraph_spark.queries.events import lorenz_finish
-
-    ev = events_stream(spark, sf_dir).withWatermark("ts", "1 day")
-    agg = ev.groupBy("user_id").agg(
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("total")
-    )
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(agg, output_mode="complete")
-    return lorenz_finish(out.select("user_id", "total"))
-
-
-def streaming_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of ``queries.events.events_conformal_interval`` —
-    the live uncertainty-monitor shape: the stream maintains the
-    watermarked per-(type, day) cents rollup, and the split-conformal
-    calibration + coverage audit (``conformal_finish``, shared verbatim)
-    re-runs on read over the continuously-updated rollup.  Fully
-    batch-equal, checked by the batch op's own oracle."""
-    from mongraph_spark.queries.events import conformal_finish
-
-    ev = events_stream(spark, sf_dir).withWatermark("ts", "2 days")
-    agg = ev.groupBy(
-        F.window("ts", "1 day").alias("w"), "event_type"
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("y"))
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(agg, output_mode="complete")
-    # the finisher self-joins its input (calibration rank vs test
-    # audit); through the memory-sink view the shared attribute ids
-    # conflict — cut the BOUNDED rollup's lineage (the acf-twin fix)
-    daily = out.select(
-        "event_type", F.col("w.start").alias("day"), "y"
-    ).transform(lineage_cut)
-    return conformal_finish(daily)
-
-
-def _oracle_stream_conformal() -> str:
-    from mongraph_spark.queries.events import ORACLE_CONFORMAL
-
-    return ORACLE_CONFORMAL
-
-
-def _oracle_stream_lorenz() -> str:
-    from mongraph_spark.queries.events import ORACLE_LORENZ
-
-    return ORACLE_LORENZ
-
-
-def _oracle_stream_regime() -> str:
-    from mongraph_spark.queries.events import ORACLE_REGIME
-
-    return ORACLE_REGIME
-
-
-def streaming_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of ``queries.events.events_mann_kendall`` — the
-    live trend-monitor shape: the stream maintains the watermarked
-    per-(type, hour) cents rollup (the test's ENTIRE input, bounded
-    |types|×|hours| state), and the pairwise-sign scan
-    (``mann_kendall_finish``, shared verbatim) re-runs on read over the
-    continuously-updated rollup.  A monitoring poll pays the bounded
-    per-type pair join, never a raw-event replay.  Fully batch-equal,
-    checked by the batch op's own oracle."""
-    from mongraph_spark.queries.events import mann_kendall_finish
-
-    ev = events_stream(spark, sf_dir).withWatermark("ts", "1 day")
-    agg = ev.groupBy(
-        F.window("ts", "1 hour").alias("w"), "event_type"
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("y"))
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(agg, output_mode="complete")
-    # the finisher self-joins its input; through the memory-sink view the
-    # shared attribute ids defeat Spark's self-join dedup — a lineage cut
-    # of the BOUNDED rollup detaches the lineage (the acf-twin pattern)
-    hourly = out.select(
-        "event_type", F.col("w.start").alias("hour"), "y"
-    ).transform(lineage_cut)
-    return mann_kendall_finish(hourly)
-
-
-def _oracle_stream_mann_kendall() -> str:
-    from mongraph_spark.queries.events import ORACLE_MANN_KENDALL
-
-    return ORACLE_MANN_KENDALL
-
-
-def streaming_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of ``queries.events.events_page_hinkley`` — the
-    live-drift-monitor shape: the stream maintains the watermarked
-    per-(type, hour) cents rollup (O(|types|·|hours|) state — the
-    detector's ENTIRE input), and the Page–Hinkley scan
-    (``page_hinkley_finish``, shared verbatim) re-runs on read over the
-    continuously-updated rollup.  A monitoring poll pays three bounded
-    per-type prefix windows, never a raw-event replay.  Fully
-    batch-equal, checked by the batch op's own oracle."""
-    from mongraph_spark.queries.events import page_hinkley_finish
-
-    ev = events_stream(spark, sf_dir).withWatermark("ts", "1 day")
-    agg = ev.groupBy(
-        F.window("ts", "1 hour").alias("w"), "event_type"
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("y"))
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(agg, output_mode="complete")
-    hourly = out.select("event_type", F.col("w.start").alias("hour"), "y")
-    return page_hinkley_finish(hourly)
-
-
-def _oracle_stream_page_hinkley() -> str:
-    from mongraph_spark.queries.events import ORACLE_PAGE_HINKLEY
-
-    return ORACLE_PAGE_HINKLEY
-
-
-def streaming_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of ``queries.events.events_autocorrelation`` — the
-    live seasonality readout: the stream maintains the watermarked
-    per-(type, hour) cents rollup (the ACF's ENTIRE input), and the lag
-    correlation scan (``acf_finish``, shared verbatim) re-runs on read
-    over the continuously-updated rollup.  A dashboard poll pays the
-    bounded per-series lag joins, never a raw-event replay.  Fully
-    batch-equal, checked by the batch op's own oracle."""
-    from mongraph_spark.queries.events import acf_finish
-
-    ev = events_stream(spark, sf_dir).withWatermark("ts", "1 day")
-    agg = ev.groupBy(
-        F.window("ts", "1 hour").alias("w"), "event_type"
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("y"))
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(agg, output_mode="complete")
-    # the finisher self-joins its input; through the memory-sink view the
-    # shared attribute ids defeat Spark's self-join dedup (the lttb twin's
-    # rename workaround) — a local checkpoint of the BOUNDED rollup state
-    # (|types|x|hours| rows) detaches the lineage cleanly instead
-    hourly = out.select(
-        "event_type", F.col("w.start").alias("hour"), "y"
-    ).transform(lineage_cut)
-    return acf_finish(hourly)
-
-
-def _oracle_stream_acf() -> str:
-    from mongraph_spark.queries.events import ORACLE_ACF
-
-    return ORACLE_ACF
-
-
-def streaming_hampel_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of ``queries.events.events_hampel_filter`` — the
-    live-despiking shape: the stream maintains the watermarked
-    per-(type, hour) cents rollup, and the rolling-median Hampel scan
-    (``hampel_finish``, shared verbatim) re-runs on read over the
-    continuously-updated rollup.  A monitoring poll pays one bounded
-    7-row rolling window per series, never a raw-event replay.  Fully
-    batch-equal, checked by the batch op's own oracle."""
-    from mongraph_spark.queries.events import hampel_finish
-
-    ev = events_stream(spark, sf_dir).withWatermark("ts", "1 day")
-    agg = ev.groupBy(
-        F.window("ts", "1 hour").alias("w"), "event_type"
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("y"))
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(agg, output_mode="complete")
-    hourly = out.select("event_type", F.col("w.start").alias("hour"), "y")
-    return hampel_finish(hourly)
-
-
-def _oracle_stream_hampel() -> str:
-    from mongraph_spark.queries.events import ORACLE_HAMPEL
-
-    return ORACLE_HAMPEL
-
-
-def streaming_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of ``queries.events.events_croston`` — the
-    intermittent-demand forecast maintained at ingest: the stream keeps
-    the watermarked per-(type, day) HIGH-VALUE cents rollup (threshold
-    applied inside the streaming aggregate, so silent-demand days carry
-    d=0 state rows exactly as the batch grid does), and the Croston fold
-    (``croston_finish``, shared verbatim) re-runs on read over O(|days|)
-    state per type.  Fully batch-equal, checked by the batch op's own
-    oracle."""
-    from mongraph_spark.queries.events import CROSTON_THRESHOLD, croston_finish
-
-    ev = events_stream(spark, sf_dir).withWatermark("ts", "2 days")
-    cents = F.round(F.col("value") * 100).cast("long")
-    agg = ev.groupBy(
-        F.window("ts", "1 day").alias("w"), "event_type"
-    ).agg(
-        F.sum(
-            F.when(F.col("value") >= CROSTON_THRESHOLD, cents).otherwise(0)
-        ).alias("d")
-    )
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(agg, output_mode="complete")
-    daily = out.select(
-        "event_type", F.to_date(F.col("w.start")).alias("day"), "d"
-    )
-    return croston_finish(daily)
-
-
-def _oracle_stream_croston() -> str:
-    from mongraph_spark.queries.events import ORACLE_CROSTON
-
-    return ORACLE_CROSTON
+    history replay."""
+    out = run_to_table(events_ops.welch_moments(events_stream(spark, sf_dir)), sf_dir)
+    return events_ops.welch_finish(out)
 
 
 def streaming_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1229,52 +1013,21 @@ def streaming_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the production crawl-intake shape: reject/score at ingest,
     keep the per-doc decisions queryable for rule-tuning reviews, never
     rescan the corpus to re-total the funnel."""
-    import shutil
-    import tempfile
-
-    from mongraph_spark.queries.corpus import GOPHER_RULES, gopher_flags
+    from mongraph_spark.queries.corpus import GOPHER_RULES, gopher_flags, gopher_funnel
     from mongraph_spark.queries.text import STOPWORDS  # noqa: F401 (rule dep)
 
-    app_id = spark.sparkContext.applicationId
-    sf_tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    base = os.path.join(tempfile.gettempdir(), f"mg_stream_gopher_{app_id}_{sf_tag}")
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, sf_dir, "stream_gopher")
     staging = os.path.join(base, "arrivals")
     flags_dir = os.path.join(base, "flags")
-    from mongraph_spark.sparkutil import read_table
-
     read_table(spark, sf_dir, "documents").select("doc_id", "text").repartition(
         4, "doc_id"
     ).write.parquet(staging)
 
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-
     def process(batch_df: DataFrame, batch_id: int) -> None:
         gopher_flags(batch_df).write.mode("append").parquet(flags_dir)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-        .writeStream.foreachBatch(process)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from mongraph_spark.queries.corpus import gopher_funnel
-
+    _replay(spark, staging, _DOC_TEXT, process)
     return gopher_funnel(spark.read.parquet(flags_dir), GOPHER_RULES)
-
-
-def _oracle_stream_gopher() -> str:
-    from mongraph_spark.queries.corpus import ORACLE_GOPHER
-
-    return ORACLE_GOPHER
 
 
 def streaming_soft_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1295,27 +1048,14 @@ def streaming_soft_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters, docs, raw tokens, effective bp tokens = c·floor(10000·t/c))
     reads the state table alone and must equal the batch op — checked by
     that op's own SQL oracle."""
-    import shutil
-    import tempfile
-
     from mongraph_spark.queries.dedup import dup_corpus
     from mongraph_spark.sources import merge as merge_store
 
-    app_id = spark.sparkContext.applicationId
-    sf_tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    base = os.path.join(tempfile.gettempdir(), f"mg_stream_soft_{app_id}_{sf_tag}")
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, sf_dir, "stream_soft")
     staging = os.path.join(base, "arrivals")
     state_root = os.path.join(base, "clusters")
 
     dup_corpus(spark, sf_dir).repartition(4, "doc_id").write.parquet(staging)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
@@ -1338,15 +1078,7 @@ def streaming_soft_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 when_matched_set={"c": "c + src_c"},
             )
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-        .writeStream.foreachBatch(process)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _replay(spark, staging, _DOC_TEXT, process)
     state = merge_store.read_current(spark, state_root).drop("__bucket")
     return (
         state.groupBy("c")
@@ -1364,12 +1096,6 @@ def streaming_soft_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_stream_soft_dedup() -> str:
-    from mongraph_spark.queries.corpus import ORACLE_SOFT_DEDUP
-
-    return ORACLE_SOFT_DEDUP
-
-
 # -- streaming count-min sketch twin -------------------------------------------------
 
 
@@ -1384,19 +1110,11 @@ def streaming_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe as the batch op, so the streaming answer is CELL-EXACTLY the
     batch answer (shared SQL oracle; equality pinned in tests)."""
     from mongraph_spark.queries.events import cms_finish, cms_sketch
-    from mongraph_spark.sparkutil import read_table
 
     ev = events_stream(spark, sf_dir).select("user_id")
-    with _state_partitioning(spark, sf_dir):
-        sketch = run_to_table(cms_sketch(ev), output_mode="complete")
+    sketch = run_to_table(cms_sketch(ev), sf_dir)
     batch_ev = read_table(spark, sf_dir, "events").select("user_id")
     return cms_finish(sketch, batch_ev)
-
-
-def _oracle_stream_cms() -> str:
-    from mongraph_spark.queries.events import ORACLE_COUNT_MIN
-
-    return ORACLE_COUNT_MIN
 
 
 # -- streaming DDSketch quantile twin --------------------------------------------------
@@ -1424,7 +1142,6 @@ def streaming_ddsketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         dd_exact,
         dd_targets,
     )
-    from mongraph_spark.sparkutil import read_table
 
     # One-cent domain floor: DDSketch is defined on positive reals, and
     # sf0.1 events contain rows with round(value*100)=0 whose bucket
@@ -1438,8 +1155,7 @@ def streaming_ddsketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     agg = dd_binned(ev).groupBy("e", "m").agg(F.count(F.lit(1)).alias("c"))
-    with _state_partitioning(spark, sf_dir):
-        sketch = run_to_table(agg, output_mode="complete")
+    sketch = run_to_table(agg, sf_dir)
     batch = read_table(spark, sf_dir, "events").select(
         F.greatest(F.round(F.col("value") * 100).cast("long"), F.lit(1)).alias(
             "cents"
@@ -1464,8 +1180,7 @@ def streaming_ddsketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from mongraph_spark.queries.relational import DD_PCTS as _DD_PCTS  # noqa: E402
-from mongraph_spark.queries.relational import DD_SUB as _DD_SUB  # noqa: E402
+_DD_PCTS, _DD_SUB = relational_ops.DD_PCTS, relational_ops.DD_SUB
 
 ORACLE_STREAM_DDSKETCH = f"""
 WITH o AS (
@@ -1519,19 +1234,11 @@ def streaming_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming answer is register-exactly the batch answer (shared SQL
     oracle; equality pinned in tests)."""
     from mongraph_spark.queries.events import ams_finish, ams_xs
-    from mongraph_spark.sparkutil import read_table
 
     ev = events_stream(spark, sf_dir).select("user_id")
-    with _state_partitioning(spark, sf_dir):
-        xs = run_to_table(ams_xs(ev), output_mode="complete")
+    xs = run_to_table(ams_xs(ev), sf_dir)
     batch_ev = read_table(spark, sf_dir, "events").select("user_id")
     return ams_finish(xs, batch_ev)
-
-
-def _oracle_stream_ams() -> str:
-    from mongraph_spark.queries.events import ORACLE_AMS_F2
-
-    return ORACLE_AMS_F2
 
 
 # -- streaming CCNet quality-scoring twin ----------------------------------------------
@@ -1554,16 +1261,9 @@ def streaming_ccnet_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream — the leaderboard argument), run over the accumulated scores,
     making the final table EXACTLY the batch op's (shared SQL oracle;
     collect-equality pinned in tests)."""
-    import shutil
-    import tempfile
-
     from mongraph_spark.queries.corpus import ccnet_finish, ccnet_model, ccnet_score
-    from mongraph_spark.sparkutil import read_table
 
-    app_id = spark.sparkContext.applicationId
-    sf_tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    base = os.path.join(tempfile.gettempdir(), f"mg_stream_ccnet_{app_id}_{sf_tag}")
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, sf_dir, "stream_ccnet")
     staging = os.path.join(base, "arrivals")
     model_dir = os.path.join(base, "model")
     scored_dir = os.path.join(base, "scored")
@@ -1590,8 +1290,6 @@ def streaming_ccnet_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             "append"
         ).parquet(staging)
 
-    schema = spark.read.parquet(staging).schema
-
     def process(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
         mb = s.read.parquet(os.path.join(model_dir, "c_bg"))
@@ -1599,22 +1297,8 @@ def streaming_ccnet_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         mv = s.read.parquet(os.path.join(model_dir, "vocab"))
         ccnet_score(batch_df, mb, mx, mv).write.mode("append").parquet(scored_dir)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-        .writeStream.foreachBatch(process)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _replay(spark, staging, spark.read.parquet(staging).schema, process)
     return ccnet_finish(spark.read.parquet(scored_dir))
-
-
-def _oracle_stream_ccnet() -> str:
-    from mongraph_spark.queries.corpus import ORACLE_CCNET_BUCKETS
-
-    return ORACLE_CCNET_BUCKETS
 
 
 # -- streaming hourly top-type twin ----------------------------------------------------
@@ -1633,8 +1317,7 @@ def streaming_hourly_top_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = ev.groupBy(
         F.window("ts", "1 hour").alias("w"), "event_type"
     ).agg(F.count(F.lit(1)).alias("n"))
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(agg, output_mode="complete")
+    out = run_to_table(agg, sf_dir)
     from pyspark.sql import Window as W
 
     hourly = out.select(F.col("w.start").alias("hour"), "event_type", "n")
@@ -1644,12 +1327,6 @@ def streaming_hourly_top_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") == 1)
         .select("hour", F.col("event_type").alias("top_type"), "n")
     )
-
-
-def _oracle_stream_hourly_top() -> str:
-    from mongraph_spark.queries.events import ORACLE_HOURLY_TOP
-
-    return ORACLE_HOURLY_TOP
 
 
 # -- streaming SLO burn-rate twin ------------------------------------------------------
@@ -1675,8 +1352,7 @@ def streaming_slo_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("total"),
         F.sum((F.col("event_type") == "error").cast("long")).alias("errors"),
     )
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(agg, output_mode="complete")
+    out = run_to_table(agg, sf_dir)
     hourly = out.select(F.col("w.start").alias("hour"), "total", "errors")
     from pyspark.sql import Window as W
 
@@ -1710,36 +1386,15 @@ def streaming_slo_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_stream_slo() -> str:
-    from mongraph_spark.queries.events import ORACLE_SLO_BURN
-
-    return ORACLE_SLO_BURN
-
-
 # -- streaming span dedup: incremental gram index over arriving documents -----------
-
-
-def _state_table_name(prefix: str, spark: SparkSession, sf_dir: str) -> str:
-    import re
-
-    sf_tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    raw = f"{prefix}_{spark.sparkContext.applicationId}_{sf_tag}"
-    return re.sub(r"\W", "_", raw)
 
 
 def _fresh_state_table(spark: SparkSession, name: str) -> None:
     """Reset a warehouse-backed state table so each run starts empty; a
     leftover warehouse dir from a dead session has lost its catalog bucket
     spec, so it is cleared too (same hygiene as graphs.tpch.bucketed_edges)."""
-    import shutil
-
     spark.sql(f"DROP TABLE IF EXISTS {name}")
-    warehouse = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    leftover = os.path.join(warehouse, name.lower())
-    if os.path.exists(leftover):
-        shutil.rmtree(leftover)
+    shutil.rmtree(os.path.join(warehouse_dir(spark), name.lower()), ignore_errors=True)
 
 
 STATE_BUCKETS = 8
@@ -1796,9 +1451,6 @@ def streaming_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (plan-pinned by test_streaming_dedup_index_probe_is_bucketed).  At
     100 TB the index is additionally df-capped and md5-keyed
     (dedup_span_capped's form)."""
-    import shutil
-    import tempfile
-
     from mongraph_spark.queries.dedup import (
         MIN_SPAN,
         SPAN_GRAM,
@@ -1807,13 +1459,10 @@ def streaming_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         spans_from_hits,
     )
 
-    app_id = spark.sparkContext.applicationId
-    sf_tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    base = os.path.join(tempfile.gettempdir(), f"mg_stream_span_{app_id}_{sf_tag}")
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, sf_dir, "stream_span")
     staging = os.path.join(base, "arrivals")
     out_dir = os.path.join(base, "spans")
-    idx_tab = _state_table_name("mg_ss_gram_idx", spark, sf_dir)
+    idx_tab = scratch_table(spark, sf_dir, "mg_ss_gram_idx")
     _fresh_state_table(spark, idx_tab)
 
     # stage the corpus as 4 arrival files in ONE map-side job: a hash
@@ -1822,13 +1471,6 @@ def streaming_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # output is a SET; which batch a doc lands in only moves a pair
     # between the cross and intra legs, both of which are exercised)
     span_corpus(spark, sf_dir).repartition(4, "doc_id").write.parquet(staging)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
@@ -1880,22 +1522,8 @@ def streaming_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         spans.write.mode("append").parquet(out_dir)
         _append_bucketed(grams_b, idx_tab, "gram")
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-        .writeStream.foreachBatch(process)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _replay(spark, staging, _DOC_TEXT, process)
     return spark.read.parquet(out_dir)
-
-
-def _oracle_stream_span() -> str:
-    from mongraph_spark.queries.dedup import ORACLE_SPAN_EXACT
-
-    return ORACLE_SPAN_EXACT
 
 
 def streaming_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1946,9 +1574,6 @@ def streaming_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the minhash stage (the dominant cost was 12 md5s per shingle
     on ONE stranded core) the warm 4-batch wall measured 12.1 → ~7.5 s
     at sf0.1."""
-    import shutil
-    import tempfile
-
     from mongraph_spark.queries.dedup import (
         N_BANDS,
         _banded_sigs,
@@ -1956,26 +1581,16 @@ def streaming_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         dup_corpus,
     )
 
-    app_id = spark.sparkContext.applicationId
-    sf_tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    base = os.path.join(tempfile.gettempdir(), f"mg_stream_lsh_{app_id}_{sf_tag}")
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, sf_dir, "stream_lsh")
     staging = os.path.join(base, "arrivals")
     out_dir = os.path.join(base, "pairs")
-    band_tab = _state_table_name("mg_lsh_band_idx", spark, sf_dir)
+    band_tab = scratch_table(spark, sf_dir, "mg_lsh_band_idx")
     _fresh_state_table(spark, band_tab)
 
     # same one-job hash-split staging as streaming_span_dedup (the output
     # is a set; arrival composition is irrelevant)
     dup_corpus(spark, sf_dir, drop_last=2).repartition(4, "doc_id").write.parquet(
         staging
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
     )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -2070,22 +1685,8 @@ def streaming_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         verified.write.mode("append").parquet(out_dir)
         _append_bucketed(bl, band_tab, "band_cell")
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-        .writeStream.foreachBatch(process)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _replay(spark, staging, _DOC_TEXT, process)
     return spark.read.parquet(out_dir)
-
-
-def _oracle_stream_lsh() -> str:
-    from mongraph_spark.queries.dedup import ORACLE_JACCARD
-
-    return ORACLE_JACCARD
 
 
 def streaming_ivm_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2114,12 +1715,9 @@ def streaming_ivm_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     per batch the sink rewrites only changed groups' buckets.  At 100 TB
     the CDC feed is the store's commit log, and view refresh cost tracks
     the change rate, never the base — the entire point of IVM."""
-    import shutil
-
-    from mongraph_spark.queries.quality import ivm_build_history
     from mongraph_spark.sources import merge as merge_store
 
-    root = ivm_build_history(spark, sf_dir, tag="shared")
+    root = quality_ops.ivm_build_history(spark, sf_dir, tag="shared")
 
     def rv(n: int) -> DataFrame:
         return merge_store.read_version(spark, root, n).drop("__bucket")
@@ -2249,12 +1847,9 @@ def streaming_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     State model: the current-state table holds exactly one row per LIVE
     key (the dimension's natural size) and the closed log is append-only
     — at 100 TB both are what the warehouse stores anyway."""
-    import shutil
-
-    from mongraph_spark.queries.quality import ivm_build_history
     from mongraph_spark.sources import merge as merge_store
 
-    root = ivm_build_history(spark, sf_dir, tag="shared")
+    root = quality_ops.ivm_build_history(spark, sf_dir, tag="shared")
     cur_tab = root + "_scd2cur"
     log_dir = root + "_scd2log"
     for d in (cur_tab, log_dir):
@@ -2352,18 +1947,6 @@ def streaming_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_stream_scd2() -> str:
-    from mongraph_spark.queries.quality import ORACLE_SCD2
-
-    return ORACLE_SCD2
-
-
-def _oracle_stream_ivm() -> str:
-    from mongraph_spark.queries.quality import ORACLE_IVM_AGG
-
-    return ORACLE_IVM_AGG
-
-
 def streaming_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of queries.similarity.ann_ivf — IVF vector-index
     maintenance in the INGEST path (the FAISS operational contract: the
@@ -2395,9 +1978,6 @@ def streaming_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB so query-time probes prune to nprobe buckets; state grows
     with the indexed corpus because the index is itself the product (same
     framing as the dedup twins' band/gram stores)."""
-    import shutil
-    import tempfile
-
     from mongraph_spark.queries.similarity import (
         IVF_NPROBE,
         N_QUERIES,
@@ -2406,12 +1986,8 @@ def streaming_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ivf_lists,
         _ivf_probe_score,
     )
-    from mongraph_spark.sparkutil import read_table
 
-    app_id = spark.sparkContext.applicationId
-    sf_tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    base = os.path.join(tempfile.gettempdir(), f"mg_stream_ivf_{app_id}_{sf_tag}")
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, sf_dir, "stream_ivf")
     staging = os.path.join(base, "arrivals")
     cent_dir = os.path.join(base, "quantizer")
     lists_dir = os.path.join(base, "inverted_lists")
@@ -2430,13 +2006,6 @@ def streaming_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             1
         ).write.mode("append").parquet(staging)
 
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("vec", T.ArrayType(T.DoubleType())),
-        ]
-    )
-
     def process(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
         if not os.path.isdir(cent_dir):
@@ -2449,15 +2018,13 @@ def streaming_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             "append"
         ).parquet(lists_dir)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-        .writeStream.foreachBatch(process)
-        .trigger(availableNow=True)
-        .start()
+    schema = T.StructType(
+        [
+            T.StructField("vec_id", T.LongType()),
+            T.StructField("vec", T.ArrayType(T.DoubleType())),
+        ]
     )
-    q.awaitTermination()
+    _replay(spark, staging, schema, process)
 
     lists = spark.read.parquet(lists_dir)
     cents = spark.read.parquet(cent_dir)
@@ -2473,215 +2040,6 @@ def streaming_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_stream_ivf() -> str:
-    from mongraph_spark.queries.similarity import ORACLE_IVF_FROZEN
-
-    return ORACLE_IVF_FROZEN
-
-
-def streaming_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of ``queries.inference.events_hurst_exponent`` —
-    the live long-memory monitor: the stream maintains the watermarked
-    per-(type, hour) cents rollup (the R/S analysis' ENTIRE input,
-    bounded |types|×|hours| state), and the block-rescaled-range scan
-    (``hurst_finish``, shared verbatim) re-runs on read over the
-    continuously-updated rollup.  A monitoring poll pays bounded
-    per-(type, scale, block) windows, never a raw-event replay.  Fully
-    batch-equal, checked by the batch op's own oracle."""
-    from mongraph_spark.queries.inference import hurst_finish
-
-    ev = events_stream(spark, sf_dir).withWatermark("ts", "1 day")
-    agg = ev.groupBy(
-        F.window("ts", "1 hour").alias("w"), "event_type"
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("y"))
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(agg, output_mode="complete")
-    # hurst_finish joins the rollup against its own per-type hour counts;
-    # lineage_cut detaches the memory-sink lineage (the acf pattern)
-    hourly = out.select(
-        "event_type", F.col("w.start").alias("hour"), "y"
-    ).transform(lineage_cut)
-    return hurst_finish(hourly)
-
-
-def _oracle_stream_hurst() -> str:
-    from mongraph_spark.queries.inference import ORACLE_HURST
-
-    return ORACLE_HURST
-
-
-def streaming_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of ``queries.inference.events_permutation_entropy``
-    — the live complexity monitor: the stream maintains the watermarked
-    per-(type, hour) cents rollup, and the ordinal-pattern entropy scan
-    (``perm_entropy_finish``, shared verbatim) re-runs on read over the
-    continuously-updated rollup.  A poll pays two lead() windows plus a
-    ≤6-row histogram per series, never a raw-event replay.  Fully
-    batch-equal, checked by the batch op's own oracle."""
-    from mongraph_spark.queries.inference import perm_entropy_finish
-
-    ev = events_stream(spark, sf_dir).withWatermark("ts", "1 day")
-    agg = ev.groupBy(
-        F.window("ts", "1 hour").alias("w"), "event_type"
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("y"))
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(agg, output_mode="complete")
-    hourly = out.select("event_type", F.col("w.start").alias("hour"), "y")
-    return perm_entropy_finish(hourly)
-
-
-def _oracle_stream_perm_entropy() -> str:
-    from mongraph_spark.queries.inference import ORACLE_PERM_ENTROPY
-
-    return ORACLE_PERM_ENTROPY
-
-
-def streaming_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of ``queries.inference.events_cross_correlation`` —
-    the live lead/lag monitor between the two highest-revenue streams:
-    the stream maintains the watermarked per-(type, hour) cents rollup,
-    and the per-lag Pearson scan (``ccf_finish``, shared verbatim)
-    re-runs on read over the continuously-updated rollup.  A poll pays
-    13 bounded hour-grid equi-joins, never a raw-event replay.  Fully
-    batch-equal, checked by the batch op's own oracle."""
-    from mongraph_spark.queries.inference import ccf_finish
-
-    ev = events_stream(spark, sf_dir).withWatermark("ts", "1 day")
-    agg = ev.groupBy(
-        F.window("ts", "1 hour").alias("w"), "event_type"
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("y"))
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(agg, output_mode="complete")
-    # ccf_finish self-joins the rollup (x vs y legs + the top-2 ranking);
-    # lineage_cut detaches the memory-sink lineage (the acf pattern)
-    hourly = out.select(
-        "event_type", F.col("w.start").alias("hour"), "y"
-    ).transform(lineage_cut)
-    return ccf_finish(hourly)
-
-
-def _oracle_stream_ccf() -> str:
-    from mongraph_spark.queries.inference import ORACLE_CCF
-
-    return ORACLE_CCF
-
-
-def streaming_theta_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of ``queries.inference.events_theta_forecast`` —
-    the forecast-at-ingest shape: the stream maintains the watermarked
-    per-(type, day) cents rollup (the method's ENTIRE input, bounded
-    |types|×|days| state), and the theta combination (``theta_finish``,
-    shared verbatim — exact micro-grid trend fit + shiftright SES fold)
-    re-runs on read over the continuously-updated rollup.  A forecast
-    poll pays one bounded per-type fold, never a raw-event replay.
-    Fully batch-equal, checked by the batch op's own oracle."""
-    from mongraph_spark.queries.inference import theta_finish
-
-    ev = events_stream(spark, sf_dir).withWatermark("ts", "1 day")
-    agg = ev.groupBy(
-        F.window("ts", "1 day").alias("w"), "event_type"
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("y"))
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(agg, output_mode="complete")
-    # theta_finish joins the rollup against its own per-type trend fit;
-    # lineage_cut detaches the memory-sink lineage (the acf pattern)
-    daily = out.select(
-        "event_type", F.col("w.start").cast("date").alias("day"), "y"
-    ).transform(lineage_cut)
-    return theta_finish(daily)
-
-
-def _oracle_stream_theta() -> str:
-    from mongraph_spark.queries.inference import ORACLE_THETA
-
-    return ORACLE_THETA
-
-
-def streaming_granger_causality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of ``queries.inference.stats_granger_causality`` —
-    the live does-A-predict-B monitor: the stream maintains the
-    watermarked per-(type, hour) cents rollup (bounded |types|×|hours|
-    state, the test's ENTIRE input), and the lag-1 Granger F-test
-    (``granger_finish``, shared verbatim) re-runs on read over the
-    continuously-updated rollup.  A poll pays two bounded hour-grid
-    joins + one 1-row moment aggregate, never a raw-event replay.
-    Fully batch-equal, checked by the batch op's own oracle."""
-    from mongraph_spark.queries.inference import granger_finish
-
-    ev = events_stream(spark, sf_dir).withWatermark("ts", "1 day")
-    agg = ev.groupBy(
-        F.window("ts", "1 hour").alias("w"), "event_type"
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("y"))
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(agg, output_mode="complete")
-    hourly = out.select(
-        "event_type", F.col("w.start").alias("hour"), "y"
-    ).transform(lineage_cut)
-    return granger_finish(hourly)
-
-
-def _oracle_stream_granger() -> str:
-    from mongraph_spark.queries.inference import ORACLE_GRANGER
-
-    return ORACLE_GRANGER
-
-
-def streaming_dickey_fuller(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of ``queries.inference.stats_dickey_fuller`` — the
-    live stationarity monitor: the stream maintains the watermarked
-    per-(type, hour) cents rollup, and the DF regression
-    (``dickey_fuller_finish``, shared verbatim) re-runs on read over the
-    continuously-updated rollup.  A poll pays one bounded hour-grid join
-    + one per-type moment aggregate, never a raw-event replay.  Fully
-    batch-equal, checked by the batch op's own oracle."""
-    from mongraph_spark.queries.inference import dickey_fuller_finish
-
-    ev = events_stream(spark, sf_dir).withWatermark("ts", "1 day")
-    agg = ev.groupBy(
-        F.window("ts", "1 hour").alias("w"), "event_type"
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("y"))
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(agg, output_mode="complete")
-    hourly = out.select(
-        "event_type", F.col("w.start").alias("hour"), "y"
-    ).transform(lineage_cut)
-    return dickey_fuller_finish(hourly)
-
-
-def _oracle_stream_df() -> str:
-    from mongraph_spark.queries.inference import ORACLE_DICKEY_FULLER
-
-    return ORACLE_DICKEY_FULLER
-
-
-def streaming_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of ``queries.inference.stats_kendall_tau`` — the
-    live rank-dependence monitor: the stream maintains the watermarked
-    per-(type, hour) cents rollup, and the τ-b pair count
-    (``kendall_finish``, shared verbatim) re-runs on read over the
-    continuously-updated rollup.  A poll pays the bounded |hours|²
-    pair self-join, never a raw-event replay.  Fully batch-equal,
-    checked by the batch op's own oracle."""
-    from mongraph_spark.queries.inference import kendall_finish
-
-    ev = events_stream(spark, sf_dir).withWatermark("ts", "1 day")
-    agg = ev.groupBy(
-        F.window("ts", "1 hour").alias("w"), "event_type"
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("y"))
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(agg, output_mode="complete")
-    hourly = out.select(
-        "event_type", F.col("w.start").alias("hour"), "y"
-    ).transform(lineage_cut)
-    return kendall_finish(hourly)
-
-
-def _oracle_stream_kendall() -> str:
-    from mongraph_spark.queries.inference import ORACLE_KENDALL_TAU
-
-    return ORACLE_KENDALL_TAU
-
-
 def streaming_kl_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of ``queries.inference.corpus_kl_drift`` — the
     drift-monitor-at-ingest shape: arriving documents are tokenized in
@@ -2692,23 +2050,13 @@ def streaming_kl_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     continuously-updated counts.  A drift poll pays one bounded
     vocab-size pass, never a corpus rescan.  Fully batch-equal, checked
     by the batch op's own oracle."""
-    import shutil
-    import tempfile
-
     from mongraph_spark.queries.inference import kl_from_counts
-    from mongraph_spark.sparkutil import read_table
 
-    app_id = spark.sparkContext.applicationId
-    sf_tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    base = os.path.join(tempfile.gettempdir(), f"mg_stream_kl_{app_id}_{sf_tag}")
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, sf_dir, "stream_kl")
     staging = os.path.join(base, "arrivals")
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     docs.repartition(4, "doc_id").write.parquet(staging)
-    stream = (
-        spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-    )
+    stream = _arrivals(spark, staging, docs.schema)
     grp = F.when(
         F.substring("source", 4, 10).cast("int") < 10, F.lit("a")
     ).otherwise(F.lit("b"))
@@ -2720,15 +2068,8 @@ def streaming_kl_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((F.col("grp") == "a").cast("long")).alias("ca"),
         F.sum((F.col("grp") == "b").cast("long")).alias("cb"),
     )
-    with _state_partitioning(spark, sf_dir):
-        out = run_to_table(counts, output_mode="complete")
+    out = run_to_table(counts, sf_dir)
     return kl_from_counts(out)
-
-
-def _oracle_stream_kl() -> str:
-    from mongraph_spark.queries.inference import ORACLE_KL_DRIFT
-
-    return ORACLE_KL_DRIFT
 
 
 QUERIES = {
@@ -2782,47 +2123,62 @@ QUERIES = {
     "streaming_click_purchase_outer": streaming_click_purchase_outer,
 }
 
+# twin -> the batch op whose oracle (and answer) it shares
+TWIN_OF = {
+    "streaming_theta_forecast": "events_theta_forecast",
+    "streaming_granger_causality": "stats_granger_causality",
+    "streaming_kendall_tau": "stats_kendall_tau",
+    "streaming_dickey_fuller": "stats_dickey_fuller",
+    "streaming_kl_drift": "corpus_kl_drift",
+    "streaming_hurst_exponent": "events_hurst_exponent",
+    "streaming_permutation_entropy": "events_permutation_entropy",
+    "streaming_cross_correlation": "events_cross_correlation",
+    "streaming_lsh_dedup": "dedup_ngram_jaccard",
+    "streaming_ivm_agg": "ivm_agg_delta",
+    "streaming_scd2_history": "store_scd2_history",
+    "streaming_span_dedup": "dedup_span_exact",
+    "streaming_slo_burn_rate": "events_slo_burn_rate",
+    "streaming_hourly_top_type": "events_hourly_top_type",
+    "streaming_count_min": "events_count_min",
+    "streaming_ccnet_score": "corpus_ccnet_buckets",
+    "streaming_ams_f2": "events_ams_f2",
+    "streaming_cusum_changepoint": "events_cusum_changepoint",
+    "streaming_holt_trend": "events_holt_trend",
+    "streaming_welch_ttest": "stats_welch_ttest",
+    "streaming_lttb_downsample": "events_lttb_downsample",
+    "streaming_page_hinkley": "events_page_hinkley",
+    "streaming_mann_kendall": "events_mann_kendall",
+    "streaming_stl_decompose": "events_stl_decompose",
+    "streaming_regime_segments": "events_regime_segments",
+    "streaming_lorenz_curve": "events_lorenz_curve",
+    "streaming_conformal_interval": "events_conformal_interval",
+    "streaming_autocorrelation": "events_autocorrelation",
+    "streaming_hampel_filter": "events_hampel_filter",
+    "streaming_croston": "events_croston",
+    "streaming_holt_winters": "events_holt_winters",
+    "streaming_forecast_backtest": "events_forecast_backtest",
+    "streaming_gopher_rules": "corpus_gopher_rules",
+    "streaming_soft_dedup": "corpus_soft_dedup",
+    "streaming_hll_distinct": "sketch_hll_mergeable",
+    "streaming_markov_transitions": "events_markov_transitions",
+}
+
+_BATCH_ORACLES = {
+    **corpus_ops.ORACLES,
+    **dedup_ops.ORACLES,
+    **events_ops.ORACLES,
+    **inference_ops.ORACLES,
+    **quality_ops.ORACLES,
+    **relational_ops.ORACLES,
+}
+
 ORACLES = {
-    "streaming_theta_forecast": _oracle_stream_theta(),
-    "streaming_granger_causality": _oracle_stream_granger(),
-    "streaming_kendall_tau": _oracle_stream_kendall(),
-    "streaming_dickey_fuller": _oracle_stream_df(),
-    "streaming_kl_drift": _oracle_stream_kl(),
-    "streaming_hurst_exponent": _oracle_stream_hurst(),
-    "streaming_permutation_entropy": _oracle_stream_perm_entropy(),
-    "streaming_cross_correlation": _oracle_stream_ccf(),
-    "streaming_lsh_dedup": _oracle_stream_lsh(),
-    "streaming_ann_ivf": _oracle_stream_ivf(),
-    "streaming_ivm_agg": _oracle_stream_ivm(),
-    "streaming_scd2_history": _oracle_stream_scd2(),
-    "streaming_span_dedup": _oracle_stream_span(),
-    "streaming_slo_burn_rate": _oracle_stream_slo(),
-    "streaming_hourly_top_type": _oracle_stream_hourly_top(),
-    "streaming_count_min": _oracle_stream_cms(),
+    **{twin: _BATCH_ORACLES[op] for twin, op in TWIN_OF.items()},
+    "streaming_ann_ivf": similarity_ops.ORACLE_IVF_FROZEN,
     "streaming_ddsketch_quantiles": ORACLE_STREAM_DDSKETCH,
-    "streaming_ccnet_score": _oracle_stream_ccnet(),
-    "streaming_ams_f2": _oracle_stream_ams(),
-    "streaming_seasonal_anomaly": _oracle_stream_seasonal(),
-    "streaming_cusum_changepoint": _oracle_stream_cusum(),
-    "streaming_holt_trend": _oracle_stream_holt(),
-    "streaming_welch_ttest": _oracle_stream_welch(),
-    "streaming_lttb_downsample": _oracle_stream_lttb(),
-    "streaming_page_hinkley": _oracle_stream_page_hinkley(),
-    "streaming_mann_kendall": _oracle_stream_mann_kendall(),
-    "streaming_stl_decompose": _oracle_stream_stl(),
-    "streaming_regime_segments": _oracle_stream_regime(),
-    "streaming_lorenz_curve": _oracle_stream_lorenz(),
-    "streaming_conformal_interval": _oracle_stream_conformal(),
-    "streaming_autocorrelation": _oracle_stream_acf(),
-    "streaming_hampel_filter": _oracle_stream_hampel(),
-    "streaming_croston": _oracle_stream_croston(),
-    "streaming_holt_winters": _oracle_stream_holt_winters(),
-    "streaming_forecast_backtest": _oracle_stream_forecast_backtest(),
-    "streaming_gopher_rules": _oracle_stream_gopher(),
-    "streaming_soft_dedup": _oracle_stream_soft_dedup(),
-    "streaming_hll_distinct": ORACLE_STREAM_HLL,
+    "streaming_seasonal_anomaly": events_ops.ORACLE_SEASONAL_ANOMALY.rstrip()
+    + "\n  AND d.n > 0\n",
     "streaming_threshold_anomaly": ORACLE_STREAM_ANOMALY,
-    "streaming_markov_transitions": ORACLE_STREAM_MARKOV,
     "streaming_click_purchase_outer": ORACLE_STREAM_OUTER,
     "streaming_tumbling_window": ORACLE_STREAM_TUMBLING,
     "streaming_sliding_window": ORACLE_STREAM_SLIDING,

@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from mongraph_spark.queries.dedup import _shingled_corpus, ID_SHIFT
 from mongraph_spark.queries.pipeline import (
     _cluster_labels,
-    dedup_keep_best,
     embedding_quantize_int8,
     N_CLUSTER_ROUNDS,
     sample_stratified,
@@ -58,14 +57,6 @@ def test_cluster_labels_contain_planted_pairs(spark):
     assert n_planted_merged >= 0.8 * n_copies
     # labels are canonical: every label is itself a member and <= its doc
     assert all(label <= doc_id and label in rows for doc_id, label in rows.items())
-
-
-def test_keep_best_is_one_per_cluster_and_in_cluster(spark):
-    best = dedup_keep_best(spark, SF)
-    assert best.groupBy("cluster_id").count().filter(F.col("count") > 1).count() == 0
-    # canonical doc of a merged pair keeps the longer (original) text
-    merged = best.filter(F.col("cluster_id") < ID_SHIFT)
-    assert merged.filter(F.col("doc_id") >= ID_SHIFT).count() == 0
 
 
 def test_quantization_bounds_and_scale(spark):

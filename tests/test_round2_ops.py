@@ -26,7 +26,7 @@ from mongraph_spark.queries.search import QUERY_TERMS, text_bm25_topk
 from mongraph_spark.queries.text import (
     SCAN_EMAIL_PATTERN,
     SCAN_TERM_PATTERN,
-    text_pii_redact,
+    text_scan_redact,
 )
 from mongraph_spark.queries.events import events_minmax_downsample
 from mongraph_spark.sparkutil import read_table
@@ -118,7 +118,7 @@ def test_pii_redaction_masks_everything(spark):
     ).agg(F.sum("t").alias("t"), F.sum("e").alias("e")).first()
     assert residue.t == 0 and residue.e == 0
     # and the operator counted at least one redaction somewhere
-    total = text_pii_redact(spark, SF).agg(F.sum("n_redactions")).first()[0]
+    total = text_scan_redact(spark, SF).agg(F.sum("n_redactions")).first()[0]
     assert total > 0
 
 

@@ -119,32 +119,6 @@ def test_bucketed_edge_join_skips_big_side_shuffle(spark):
 # -- ingestion sources ---------------------------------------------------------------
 
 
-def test_ingest_json_into_oltp_catalog(spark, tmp_path):
-    import json
-
-    from mongraph_spark import Mongraph
-    from mongraph_spark.sources.ingest import export_collection, ingest_collection
-
-    src = tmp_path / "people.jsonl"
-    src.write_text(
-        "\n".join(json.dumps({"name": n, "age": a}) for n, a in
-                  [("alice", 30), ("bob", 25), ("zoe", 28)])
-    )
-    eng = Mongraph(spark)
-    n = ingest_collection(eng, "people", str(src), fmt="json")
-    assert n == 3
-    # saved documents got mirror nodes (the reference's save hook semantics)
-    assert eng.count_nodes() == 3
-    found = eng.find_documents("people", {"age": {"$gte": 28}})
-    assert sorted(d.data["name"] for d in found) == ["alice", "zoe"]
-
-    out = tmp_path / "export"
-    export_collection(eng, "people", str(out), fmt="json")
-    back = spark.read.json(str(out))
-    assert back.count() == 3
-    assert "_id" in back.columns
-
-
 def test_read_documents_csv_derives_id(spark, tmp_path):
     from mongraph_spark.sources.ingest import read_documents
 
@@ -190,37 +164,6 @@ def test_quantization_is_map_only(spark):
 
     p = _executed_plan(embedding_quantize_int8(spark, "/root/testdata/sf0.001"))
     assert p.count("Exchange") == 0
-
-
-def test_corpus_export_partitioned_sink(spark, tmp_path):
-    """write_corpus lays out split/lang directories, bounds files, and a
-    split-filtered read prunes partitions (PartitionFilters in the scan)."""
-    import os
-
-    from mongraph_spark.queries.pipeline import TRAIN_PCT, VAL_PCT, _doc_hash
-    from mongraph_spark.sources.export import read_corpus, write_corpus
-    from mongraph_spark.sparkutil import read_table
-
-    sf = "/root/testdata/sf0.001"
-    docs = read_table(spark, sf, "documents")
-    bucket = _doc_hash() % 100
-    split = (
-        F.when(bucket < TRAIN_PCT, F.lit("train"))
-        .when(bucket < TRAIN_PCT + VAL_PCT, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
-    labeled = docs.withColumn("split", split)
-    root = str(tmp_path / "corpus")
-    write_corpus(labeled, root)
-
-    assert any(d.startswith("split=") for d in os.listdir(root))
-    back = read_corpus(spark, root)
-    assert back.count() == docs.count()
-    # pruned read: the split filter becomes a partition filter, not a row filter
-    train = back.filter(F.col("split") == "train")
-    plan = train._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "split" in plan.split("PartitionFilters")[1][:200]
-    assert train.count() == labeled.filter(F.col("split") == "train").count()
 
 
 # -- salted join: skew-resistant placement ----------------------------------------

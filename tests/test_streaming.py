@@ -3,11 +3,30 @@ finite replay (availableNow)."""
 
 from __future__ import annotations
 
+import os
+import re
+import subprocess
+import sys
+import tempfile
+
+import pytest
 from pyspark.sql import functions as F
 
+from mongraph_spark.queries import (
+    collect_suites,
+    corpus,
+    dedup,
+    events,
+    inference,
+    quality,
+    relational,
+)
 from mongraph_spark.queries.events import events_tumbling_window
 from mongraph_spark.sparkutil import read_table
 from mongraph_spark.streaming.events import (
+    ORACLES,
+    QUERIES,
+    TWIN_OF,
     streaming_stateful_user_totals,
     streaming_tumbling_window,
 )
@@ -111,18 +130,13 @@ def test_streaming_ddsketch_equals_batch_buckets(spark):
     )
     # the estimate path consumed the stream sketch already; re-derive the
     # stream cells the same way the op did to compare state content
-    from mongraph_spark.streaming.events import (
-        _state_partitioning,
-        events_stream,
-        run_to_table,
-    )
+    from mongraph_spark.streaming.events import events_stream, run_to_table
 
     sev = events_stream(spark, SF_DIR).select(
         F.round(F.col("value") * 100).cast("long").alias("cents")
     )
     agg = dd_binned(sev).groupBy("e", "m").agg(F.count(F.lit(1)).alias("c"))
-    with _state_partitioning(spark, SF_DIR):
-        stream_cells = run_to_table(agg, output_mode="complete")
+    stream_cells = run_to_table(agg, SF_DIR)
     assert _sorted_rows(stream_cells, "e", "m") == _sorted_rows(
         batch_cells, "e", "m"
     )
@@ -181,3 +195,107 @@ def test_streaming_ccnet_equals_batch(spark):
     batch = corpus_ccnet_buckets(spark, SF_DIR)
     keys = ("lang", "bucket")
     assert _sorted_rows(stream, *keys) == _sorted_rows(batch, *keys)
+
+
+BATCH_QUERIES, BATCH_ORACLES = collect_suites(
+    corpus, dedup, events, inference, quality, relational
+)
+
+ROLLUP_TWINS = [
+    # hourly, per event type
+    "streaming_lttb_downsample",
+    "streaming_stl_decompose",
+    "streaming_regime_segments",
+    "streaming_mann_kendall",
+    "streaming_page_hinkley",
+    "streaming_autocorrelation",
+    "streaming_hampel_filter",
+    "streaming_hurst_exponent",
+    "streaming_permutation_entropy",
+    "streaming_cross_correlation",
+    "streaming_granger_causality",
+    "streaming_dickey_fuller",
+    "streaming_kendall_tau",
+    # daily totals
+    "streaming_holt_trend",
+    "streaming_holt_winters",
+    "streaming_forecast_backtest",
+    # daily, per event type
+    "streaming_cusum_changepoint",
+    "streaming_croston",
+    "streaming_conformal_interval",
+    "streaming_theta_forecast",
+]
+
+
+@pytest.mark.parametrize("twin", [*ROLLUP_TWINS, "streaming_lorenz_curve"])
+def test_rollup_twin_equals_batch_op(spark, twin):
+    """A rollup twin's stream-maintained rollup feeds its batch op's own
+    finisher, so it returns the batch op's schema and rows exactly."""
+    stream = QUERIES[twin](spark, SF_DIR)
+    batch = BATCH_QUERIES[TWIN_OF[twin]](spark, SF_DIR)
+    assert stream.schema.simpleString() == batch.schema.simpleString()
+    assert sorted(map(tuple, stream.collect()), key=repr) == sorted(
+        map(tuple, batch.collect()), key=repr
+    )
+
+
+def test_twin_oracles_are_their_batch_ops_oracles():
+    """A twin that shares its batch op's answer shares the oracle object
+    itself, not a copy that could drift."""
+    for twin, op in TWIN_OF.items():
+        assert ORACLES[twin] is BATCH_ORACLES[op], twin
+
+
+def test_only_sparkutil_names_the_temp_dir():
+    """One scratch-dir rule: every scratch path comes from
+    sparkutil.scratch_dir/scratch_path, whose root is removed at exit."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    offenders = [
+        str(path.relative_to(root))
+        for path in sorted(root.glob("mongraph_spark/**/*.py"))
+        if path.name != "sparkutil.py" and "gettempdir" in path.read_text()
+    ]
+    assert offenders == []
+
+
+_SCRATCH_RUN = """
+import os, sys
+sys.path.insert(0, {repo!r})
+from mongraph_spark.sparkutil import get_spark, scratch_path, warehouse_dir
+from mongraph_spark.streaming.events import streaming_span_dedup
+
+spark = get_spark("scratch-at-exit", cpus=1)
+streaming_span_dedup(spark, {sf!r}).collect()
+print(os.path.isdir(scratch_path(spark, {sf!r}, "stream_span")))
+print(sorted(os.listdir(warehouse_dir(spark))))
+print(spark.sparkContext.applicationId)
+"""
+
+
+def test_scratch_is_removed_at_exit(tmp_path):
+    """A process that ran a scratch-using twin leaves nothing behind: its
+    scratch root under the temp dir and its state tables' warehouse
+    directories go when it exits."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    run = subprocess.run(
+        [sys.executable, "-c", _SCRATCH_RUN.format(repo=repo, sf=SF_DIR)],
+        cwd=tmp_path,
+        env={**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"},
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    had_scratch, tables, app_id = run.stdout.strip().splitlines()[-3:]
+    tag = re.sub(r"\W", "_", app_id).lower()
+    # the run did make both kinds of scratch
+    assert had_scratch == "True"
+    assert tag in tables
+    left = [p for p in os.listdir(tempfile.gettempdir()) if app_id in p]
+    warehouse = tmp_path / "spark-warehouse"
+    if warehouse.exists():
+        left += [p for p in os.listdir(warehouse) if tag in p.lower()]
+    assert left == []
