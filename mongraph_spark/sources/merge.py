@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from mongraph_spark.catalog import local_df
 from mongraph_spark.sparkutil import lineage_cut
 
 _POINTER = "_CURRENT"
@@ -500,7 +501,7 @@ def add_generated_column(
         raise ValueError(f"no table meta under {root}")
     schema = T.StructType.fromJson(json.loads(meta["schema"]))
     # fail-fast resolution: expr must be computable from the CURRENT schema
-    spark.createDataFrame([], schema).select(
+    local_df(spark, [], schema).select(
         F.expr(expr).cast(dtype).alias(name)
     )
     cur = current_version(root)
@@ -940,6 +941,10 @@ def _carry_dv(root: str, ver: str, cleared=()) -> None:
     _write_dv(root, ver, dv)
 
 
+# deletion-vector rows applied as a literal key set rather than a join
+_DV_LITERAL_KEYS = 10_000
+
+
 def _apply_dv(
     spark: SparkSession,
     root: str,
@@ -950,8 +955,10 @@ def _apply_dv(
 ) -> DataFrame:
     """Merge-on-read: anti-join ``df`` against the deletion-vector keys of
     the given buckets (all buckets when ``None``).  The DV side is the
-    deleted-key set — small relative to data by construction — so it
-    broadcasts under the same 1M-row gate the upsert key-probe uses; a
+    deleted-key set, small relative to data by construction, and its files'
+    footers count its rows on the driver: up to ``_DV_LITERAL_KEYS`` rows
+    it is read on the driver and applied as a literal key set (no job);
+    up to 1M rows it broadcasts (the upsert key-probe's gate); past that a
     pathological mass-delete falls back to a shuffled anti-join via AQE,
     and ``compact`` exists precisely to materialize such vectors away."""
     if not dv or meta.get("key") is None:
@@ -965,14 +972,31 @@ def _apply_dv(
     ]
     if not paths:
         return df
+    import pyarrow.parquet as pq
+
     key = meta["key"]
     # DV sidecars store the key under its PHYSICAL name (stable across
     # renames, like the data files); alias to logical for the anti-join
     phys_key = _phys_name(meta, key)
-    keys = spark.read.parquet(*paths).select(
-        F.col(phys_key).alias(key)
-    ).distinct()
-    if keys.count() <= 1_000_000:
+    files = [
+        os.path.join(p, f) for p in paths for f in os.listdir(p) if f.endswith(".parquet")
+    ]
+    # rows bound distinct keys from above
+    n_rows = sum(pq.read_metadata(f).num_rows for f in files)
+    if n_rows <= _DV_LITERAL_KEYS:
+        deleted = {
+            v for f in files
+            for v in pq.read_table(f, columns=[phys_key]).column(0).to_pylist()
+        }
+        deleted.discard(None)  # a null key matches no row
+        if not deleted:
+            return df
+        return df.filter(~F.coalesce(F.col(key).isin(list(deleted)), F.lit(False)))
+    key_type = T.StructType.fromJson(json.loads(meta["schema"]))[key].dataType
+    keys = spark.read.schema(
+        T.StructType([T.StructField(phys_key, key_type)])
+    ).parquet(*paths).select(F.col(phys_key).alias(key)).distinct()
+    if n_rows <= 1_000_000:
         keys = F.broadcast(keys)
     return df.join(keys, key, "left_anti")
 
@@ -1032,7 +1056,7 @@ def _read_paths(
     if not paths:
         if schema_json is None:
             raise ValueError(f"empty table with no recorded schema under {root}")
-        return spark.createDataFrame([], T.StructType.fromJson(json.loads(schema_json)))
+        return local_df(spark, [], T.StructType.fromJson(json.loads(schema_json)))
     if renames:
         # unified rename-aware path (covers added-fills AND dropped-column
         # pruning): read each writer-version group under the PHYSICAL
@@ -1067,21 +1091,16 @@ def _read_paths(
             out = part if out is None else out.unionByName(part)
         return out
     if not added:
-        df = spark.read.parquet(*paths)
-        if schema_json is not None:
-            # project to the RECORDED schema: a metadata-only drop_column
-            # narrows the schema while old files still physically carry the
-            # column — the projection (parquet column pruning, the bytes
-            # are never scanned) is what makes the drop real for readers.
-            # __bucket (the partition dir column) rides along when present.
-            cols = [
-                f.name
-                for f in T.StructType.fromJson(json.loads(schema_json)).fields
-            ]
-            keep = cols + ([_BUCKET] if _BUCKET in df.columns else [])
-            if [c for c in df.columns if c not in keep]:
-                df = df.select(*keep)
-        return df
+        if schema_json is None:
+            return spark.read.parquet(*paths)
+        # read under the RECORDED schema: no footer-inference job, and a
+        # metadata-only drop_column stays dropped although old files still
+        # physically carry the column (parquet column pruning: its bytes
+        # are never scanned).  __bucket (the partition dir column) rides
+        # along when the paths hold partition dirs.
+        return spark.read.schema(
+            T.StructType.fromJson(json.loads(schema_json))
+        ).parquet(*paths)
     schema = T.StructType.fromJson(json.loads(schema_json))
     ordered = [f.name for f in schema.fields]
 
@@ -1498,9 +1517,9 @@ def read_point(spark: SparkSession, root: str, key_value) -> DataFrame:
     generalization of the reference's findCorrespondingNode id fetch,
     src/processtools.coffee:117-131): compute the key's bucket with the
     SAME ``pmod(xxhash64(key), n)`` expression the writers route rows by
-    (one 1-row local job — replicating Spark's xxhash64 in Python would
-    be a silent-divergence trap), then read ONLY that bucket's directory from
-    the current manifest and filter to the key.
+    (folded on the driver, no Spark job — replicating Spark's xxhash64 in
+    Python would be a silent-divergence trap), then read ONLY that
+    bucket's directory from the current manifest and filter to the key.
 
     At 100 TB this is the difference between a point read costing one
     file's footer + one row group and a full-table scan: the manifest IS
@@ -1521,13 +1540,14 @@ def read_point(spark: SparkSession, root: str, key_value) -> DataFrame:
     schema = T.StructType.fromJson(json.loads(schema_json))
     key_type = next(f.dataType for f in schema.fields if f.name == key)
     lit = F.lit(key_value).cast(key_type)
-    bucket = spark.range(1).select(
+    # over a one-row local relation Catalyst folds the hash on the driver
+    bucket = local_df(spark, [(0,)], "z int").select(
         F.pmod(F.xxhash64(lit), F.lit(n_buckets)).alias("b")
     ).collect()[0]["b"]
     mapping = _read_manifest(root, ver)
     rel = mapping.get(str(bucket))
     if rel is None:
-        return spark.createDataFrame([], schema)
+        return local_df(spark, [], schema)
     df = _read_paths(
         spark, root, {str(bucket): rel}, schema_json, meta.get("added"), meta.get("renames")
     )
@@ -1635,7 +1655,7 @@ def read_where(spark: SparkSession, root: str, col: str, lo, hi) -> DataFrame:
             if f.endswith(".parquet") and f not in known:
                 paths.append(os.path.join(bucket_dir, f))
     if not paths:
-        return spark.createDataFrame([], schema)
+        return local_df(spark, [], schema)
     df = spark.read.schema(_phys_schema(meta, schema)).parquet(*paths)
     if _BUCKET in df.columns:
         df = df.drop(_BUCKET)
@@ -3288,7 +3308,7 @@ def read_changes(
                 T.StructField("_commit_version", T.LongType(), False),
             ]
         )
-        return spark.createDataFrame([], empty)
+        return local_df(spark, [], empty)
     return out
 
 

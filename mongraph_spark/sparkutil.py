@@ -32,6 +32,14 @@ def _host_driver_mem() -> str:
     return f"{max(1024, int(total * 0.6) >> 20)}m"
 
 
+def _workers_pythonpath() -> str:
+    """The package's parent directory ahead of the driver's ``PYTHONPATH``,
+    so Python workers import the library from any working directory."""
+    parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [parent, *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    return os.pathsep.join(dict.fromkeys(p for p in paths if p))
+
+
 def get_spark(app_name: str = "mongraph_spark", cpus: int | None = None) -> SparkSession:
     """Local session sized to the host (single JVM, one task slot per core).
 
@@ -42,6 +50,12 @@ def get_spark(app_name: str = "mongraph_spark", cpus: int | None = None) -> Spar
     joins re-plan at runtime; shuffle partitions match local cores instead
     of the 200 default (at cluster scale this is set per-job or left to AQE
     coalescing).
+
+    Python workers start through :mod:`mongraph_spark.worker_daemon`
+    (``spark.python.daemon.module``), which stops each task from re-reading
+    ``pyspark.zip``'s directory, so every executor must be able to import
+    this package: ``spark.executorEnv.PYTHONPATH`` puts the package's parent
+    directory ahead of the driver's ``PYTHONPATH``.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or _host_cpus())
@@ -62,6 +76,8 @@ def get_spark(app_name: str = "mongraph_spark", cpus: int | None = None) -> Spar
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_mem(),
         )
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "mongraph_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _workers_pythonpath())
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

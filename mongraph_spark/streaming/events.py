@@ -164,8 +164,9 @@ def run_to_table(
     stream_df: DataFrame, sf_dir: str, output_mode: str = "complete"
 ) -> DataFrame:
     """Execute a finite replay (availableNow) into a memory sink, with the
-    state partitions sized from ``sf_dir``'s events, and return the sink
-    table."""
+    state partitions sized from ``sf_dir``'s events, and return the sink's
+    rows.  The returned frame holds the sink itself, not its name: the
+    sink's view is dropped, so the rows live only as long as the frame."""
     name = f"mg_stream_sink_{next(_sink_seq)}"
     with _state_partitioning(stream_df.sparkSession, sf_dir):
         q = (
@@ -189,7 +190,10 @@ def run_to_table(
         ]
     except Exception:  # pragma: no cover — metrics are evidence, not output
         LAST_STATE_METRICS = []
-    return stream_df.sparkSession.table(name)
+    spark = stream_df.sparkSession
+    out = spark.table(name)  # analyzed now: the plan references the sink
+    spark.catalog.dropTempView(name)
+    return out
 
 
 # -- arrival replay: staged files, one per micro-batch, into foreachBatch --------

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -22,6 +23,26 @@ SF_ORACLE = "/root/testdata/sf0.01"
 def spark():
     s = get_spark("mongraph-tests")
     yield s
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``spark_jobs(fn)``: ``fn()`` and the ids of the Spark jobs it
+    started, read by job tag."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        tag = f"jobs-{uuid.uuid4().hex}"
+        sc.addJobTag(tag)
+        try:
+            out = fn()
+        finally:
+            sc.removeJobTag(tag)
+        jsc = sc._jsc.sc()
+        jsc.listenerBus().waitUntilEmpty()
+        return out, list(jsc.statusTracker().getJobIdsForTag(tag))
+
+    return run
 
 
 @pytest.fixture()

@@ -369,3 +369,27 @@ def test_dv_read_where_and_as_of(spark, tmp_path):
         M.read_as_of(spark, root, t0 - 75).count() == 16  # pre-delete
         and M.read_as_of(spark, root, t0 - 25).count() == 10
     )
+
+
+def test_read_point_with_vectors_runs_one_job(spark, tmp_path, spark_jobs):
+    """A small vector is read on the driver (its footers count its rows)
+    and applied as a literal key set: a point read in a vectored bucket is
+    still one job."""
+    root = _tbl(spark, tmp_path)
+    M.delete_where_dv(spark, root, F.col("v") >= 100)
+    for key, want in [(12, 0), (3, 1), (9, 1)]:
+        n, jobs = spark_jobs(lambda: len(M.read_point(spark, root, key).collect()))
+        assert n == want, key
+        assert len(jobs) == 1, (key, jobs)
+
+
+def test_large_vectors_join_like_small_ones(spark, tmp_path, monkeypatch):
+    """Past the literal-key gate the vector is read by Spark and
+    anti-joined; both tiers hide the same rows."""
+    root = _tbl(spark, tmp_path, n=40)
+    M.delete_where_dv(spark, root, (F.col("v") >= 100) & (F.col("v") < 300))
+    M.delete_where_dv(spark, root, F.col("id") == 35)
+    small = (_ids(spark, root), M.read_point(spark, root, 12).count())
+    monkeypatch.setattr(M, "_DV_LITERAL_KEYS", 0)
+    assert (_ids(spark, root), M.read_point(spark, root, 12).count()) == small
+    assert small == ([i for i in range(40) if not 10 <= i < 30 and i != 35], 0)

@@ -759,3 +759,65 @@ def test_first_upsert_creates_table_without_init(spark, tmp_path):
     # and the claim was released: a second upsert commits v1 cleanly
     upsert(spark, root, spark.createDataFrame([(2, "b2")], "id long, name string"), key="id")
     assert {r.name for r in read_current(spark, root).filter("id = 2").collect()} == {"b2"}
+
+
+# -- request job budgets, counted by job tag ------------------------------------
+
+
+def test_read_point_is_one_job_through_schema_changes(spark, tmp_path, spark_jobs):
+    """A point read runs only its read: the key's bucket hash folds on the
+    driver and the scan passes the recorded schema (no footer-inference
+    job).  So after a drop, an add and a rename too; the dropped column,
+    which old files still carry, stays invisible and ``__bucket`` never
+    surfaces."""
+    from mongraph_spark.sources.merge import (
+        add_column,
+        drop_column,
+        read_point,
+        rename_column,
+    )
+
+    root = str(tmp_path / "tbl")
+    init_table(
+        spark.createDataFrame([(i, f"t{i}", 2 * i) for i in range(60)], "id long, txt string, n long"),
+        root, key="id", n_buckets=4,
+    )
+    steps = [
+        ("plain", lambda: None, {"id": 5, "txt": "t5", "n": 10}),
+        ("drop", lambda: drop_column(root, "n"), {"id": 5, "txt": "t5"}),
+        ("add", lambda: add_column(root, "extra", "string", "d"), {"id": 5, "txt": "t5", "extra": "d"}),
+        ("rename", lambda: rename_column(root, "txt", "body"), {"id": 5, "body": "t5", "extra": "d"}),
+    ]
+    for name, change, want in steps:
+        change()
+        rows, jobs = spark_jobs(lambda: read_point(spark, root, 5).collect())
+        assert [r.asDict() for r in rows] == [want], name
+        assert len(jobs) == 1, (name, jobs)
+
+
+def test_read_point_on_an_empty_bucket_runs_no_job(spark, tmp_path, spark_jobs):
+    """A key whose bucket holds no file returns the recorded schema's empty
+    frame, a local relation: no Spark job at all."""
+    from mongraph_spark.sources.merge import read_point
+
+    root = str(tmp_path / "tbl")
+    init_table(_base(spark).limit(3), root, key="id", n_buckets=64)
+    present = {d.split("=", 1)[1] for d in _bucket_dirs(root, current_version(root))}
+    hashed = spark.range(100, 400).select(
+        "id", F.pmod(F.xxhash64("id"), F.lit(64)).alias("b")
+    ).collect()
+    key = next(r.id for r in hashed if str(r.b) not in present)
+    rows, jobs = spark_jobs(lambda: read_point(spark, root, key).collect())
+    assert rows == [] and jobs == []
+
+
+def test_bucketed_upsert_job_budget(spark, tmp_path, spark_jobs):
+    """A trickle upsert's base read passes the recorded schema: 6 jobs,
+    one fewer than when the read inferred it from the footers."""
+    root = str(tmp_path / "tbl")
+    init_table(_base(spark), root, key="id", n_buckets=8)
+    updates = spark.createDataFrame([(5, "x", 1), (500, "y", 1)], "id long, name string, rev long")
+    _, jobs = spark_jobs(lambda: upsert(spark, root, updates, key="id"))
+    assert len(jobs) <= 6, jobs
+    got = {r.id: r.name for r in read_current(spark, root).filter(F.col("id").isin(5, 500)).collect()}
+    assert got == {5: "x", 500: "y"}

@@ -4,7 +4,6 @@
 from __future__ import annotations
 
 import re
-import uuid
 
 import pytest
 from pyspark.sql import types as T
@@ -482,20 +481,6 @@ def test_views_are_local_relations(engine):
         assert "PythonRDD" not in lineage, (name, lineage)
 
 
-def _jobs(spark, fn):
-    """``fn()`` and the ids of the Spark jobs it started, read by job tag."""
-    sc = spark.sparkContext
-    tag = f"jobs-{uuid.uuid4().hex}"
-    sc.addJobTag(tag)
-    try:
-        out = fn()
-    finally:
-        sc.removeJobTag(tag)
-    jsc = sc._jsc.sc()
-    jsc.listenerBus().waitUntilEmpty()
-    return out, list(jsc.statusTracker().getJobIdsForTag(tag))
-
-
 def _shuffle_bytes(spark, job_ids) -> int:
     """Shuffle bytes read plus written by the stages of ``job_ids``."""
     sc = spark.sparkContext
@@ -509,12 +494,12 @@ def _shuffle_bytes(spark, job_ids) -> int:
     return total
 
 
-def test_route_runs_two_jobs_per_hop_and_no_shuffle(engine):
+def test_route_runs_two_jobs_per_hop_and_no_shuffle(engine, spark_jobs):
     """On a catalog a hop is the frontier's broadcast plus one collect of
     ``frontier ⋈ edges``: a 2-hop route runs at most 4 jobs and shuffles
     nothing."""
     d = engine.fixture_docs
-    path, jobs = _jobs(engine.spark, lambda: d["alice"].shortest_path_to(d["zoe"], "knows"))
+    path, jobs = spark_jobs(lambda: d["alice"].shortest_path_to(d["zoe"], "knows"))
     assert [p["name"] for p in path] == ["alice", "bob", "zoe"]
     assert 1 <= len(jobs) <= 2 * 2, jobs
     assert _shuffle_bytes(engine.spark, jobs) == 0
@@ -536,7 +521,7 @@ def test_route_hop_past_the_collect_cap_raises(engine, monkeypatch):
     assert engine.shortest_path(a, z, ["knows"]) == [a, d["bob"].get_node_id(), z]
 
 
-def test_populated_reads_run_no_spark_job(engine):
+def test_populated_reads_run_no_spark_job(engine, spark_jobs):
     """On a catalog the edge collect and the endpoint lookups fold into the
     views' LocalRelations: a populated browse runs no Spark job at all, with
     a where.document or collection option too (it rides on the lookup)."""
@@ -557,7 +542,7 @@ def test_populated_reads_run_no_spark_job(engine):
         ),
     }
     for name, (read, to_names) in reads.items():
-        rels, jobs = _jobs(engine.spark, read)
+        rels, jobs = spark_jobs(read)
         assert names(rels, "to") == to_names, name
         assert all(r.from_ is not None for r in rels), name
         assert jobs == [], (name, jobs)
@@ -641,7 +626,7 @@ def test_view_rebuild_verifies_only_changed_rows(engine, monkeypatch):
         cat.edges_df()
 
 
-def test_bulk_populated_read_runs_one_job_per_collection(engine, tmp_path):
+def test_bulk_populated_read_runs_one_job_per_collection(engine, tmp_path, spark_jobs):
     """On a bulk store a populated read is the edge collect plus one
     ``_id IN`` lookup per touched collection.  Each table here is one
     parquet file, so each collect is one job (a multi-partition source adds
@@ -657,8 +642,8 @@ def test_bulk_populated_read_runs_one_job_per_collection(engine, tmp_path):
     docs = {c: read[c] for c in cat.frame_collections()}
     bulk = Mongraph.from_dataframes(spark, read["nodes"], read["edges"], docs)
     nid = engine.fixture_docs["alice"].get_node_id()
-    rels, jobs = _jobs(
-        spark, lambda: bulk.query_graph(f"START a = node({nid}) MATCH (a)-[r]->(b) RETURN r;")
+    rels, jobs = spark_jobs(
+        lambda: bulk.query_graph(f"START a = node({nid}) MATCH (a)-[r]->(b) RETURN r;")
     )
     assert names(rels, "to") == ["Bar", "Pub", "bob"]
     assert names(rels, "from_") == ["alice"] * 3

@@ -46,6 +46,17 @@ def test_streaming_tumbling_equals_batch(spark):
     )
 
 
+def test_stream_sinks_are_not_left_registered(spark):
+    """A memory sink's view is dropped once its frame is analyzed: three
+    runs leave no ``mg_stream_sink_*`` in the session, and every returned
+    frame still reads all its rows."""
+    outs = [streaming_tumbling_window(spark, SF_DIR) for _ in range(3)]
+    sinks = [t.name for t in spark.catalog.listTables() if t.name.startswith("mg_stream_sink_")]
+    assert sinks == []
+    want = events_tumbling_window(spark, SF_DIR).count()
+    assert want > 0 and [o.count() for o in outs] == [want] * 3
+
+
 def test_stateful_totals_equal_batch_groupby(spark):
     stream = streaming_stateful_user_totals(spark, SF_DIR)
     ev = read_table(spark, SF_DIR, "events")
