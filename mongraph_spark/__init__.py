@@ -13,7 +13,16 @@ a MongoDB<->Neo4j glue layer) as idiomatic Spark DataFrame plans:
 See SURVEY.md for the operator inventory this package implements.
 """
 
-from mongraph_spark.session import Mongraph
-
 __all__ = ["Mongraph"]
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    # loaded on first use: Python workers start through
+    # mongraph_spark.worker_daemon, which imports this package first and
+    # needs nothing but pyspark
+    if name == "Mongraph":
+        from mongraph_spark.session import Mongraph
+
+        return Mongraph
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

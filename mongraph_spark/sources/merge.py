@@ -941,10 +941,6 @@ def _carry_dv(root: str, ver: str, cleared=()) -> None:
     _write_dv(root, ver, dv)
 
 
-# deletion-vector rows applied as a literal key set rather than a join
-_DV_LITERAL_KEYS = 10_000
-
-
 def _apply_dv(
     spark: SparkSession,
     root: str,
@@ -955,12 +951,11 @@ def _apply_dv(
 ) -> DataFrame:
     """Merge-on-read: anti-join ``df`` against the deletion-vector keys of
     the given buckets (all buckets when ``None``).  The DV side is the
-    deleted-key set, small relative to data by construction, and its files'
-    footers count its rows on the driver: up to ``_DV_LITERAL_KEYS`` rows
-    it is read on the driver and applied as a literal key set (no job);
-    up to 1M rows it broadcasts (the upsert key-probe's gate); past that a
-    pathological mass-delete falls back to a shuffled anti-join via AQE,
-    and ``compact`` exists precisely to materialize such vectors away."""
+    deleted-key set, small relative to data by construction: its files'
+    footers count its rows on the driver (no job), and up to 1M rows it
+    broadcasts (the upsert key-probe's gate); past that a pathological
+    mass-delete falls back to a shuffled anti-join via AQE, and
+    ``compact`` exists precisely to materialize such vectors away."""
     if not dv or meta.get("key") is None:
         return df
     wanted = None if buckets is None else {str(b) for b in buckets}
@@ -978,24 +973,18 @@ def _apply_dv(
     # DV sidecars store the key under its PHYSICAL name (stable across
     # renames, like the data files); alias to logical for the anti-join
     phys_key = _phys_name(meta, key)
-    files = [
-        os.path.join(p, f) for p in paths for f in os.listdir(p) if f.endswith(".parquet")
-    ]
-    # rows bound distinct keys from above
-    n_rows = sum(pq.read_metadata(f).num_rows for f in files)
-    if n_rows <= _DV_LITERAL_KEYS:
-        deleted = {
-            v for f in files
-            for v in pq.read_table(f, columns=[phys_key]).column(0).to_pylist()
-        }
-        deleted.discard(None)  # a null key matches no row
-        if not deleted:
-            return df
-        return df.filter(~F.coalesce(F.col(key).isin(list(deleted)), F.lit(False)))
     key_type = T.StructType.fromJson(json.loads(meta["schema"]))[key].dataType
     keys = spark.read.schema(
         T.StructType([T.StructField(phys_key, key_type)])
-    ).parquet(*paths).select(F.col(phys_key).alias(key)).distinct()
+    ).parquet(*paths).select(F.col(phys_key).alias(key))
+    # no distinct(): a repeated key changes no anti-join row, and its
+    # shuffle would be a job of its own
+    n_rows = sum(
+        pq.read_metadata(os.path.join(p, f)).num_rows
+        for p in paths
+        for f in os.listdir(p)
+        if f.endswith(".parquet")
+    )
     if n_rows <= 1_000_000:
         keys = F.broadcast(keys)
     return df.join(keys, key, "left_anti")

@@ -9,6 +9,7 @@ time — required once a delete may touch every bucket of a 100 TB table.
 from __future__ import annotations
 
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -371,25 +372,32 @@ def test_dv_read_where_and_as_of(spark, tmp_path):
     )
 
 
-def test_read_point_with_vectors_runs_one_job(spark, tmp_path, spark_jobs):
-    """A small vector is read on the driver (its footers count its rows)
-    and applied as a literal key set: a point read in a vectored bucket is
-    still one job."""
+def test_read_point_with_vectors_runs_two_jobs(spark, tmp_path, spark_jobs):
+    """The vector's footers count its rows on the driver, so a point read
+    in a vectored bucket is the read plus the vector's broadcast."""
     root = _tbl(spark, tmp_path)
     M.delete_where_dv(spark, root, F.col("v") >= 100)
     for key, want in [(12, 0), (3, 1), (9, 1)]:
         n, jobs = spark_jobs(lambda: len(M.read_point(spark, root, key).collect()))
         assert n == want, key
-        assert len(jobs) == 1, (key, jobs)
+        assert len(jobs) == 2, (key, jobs)
 
 
-def test_large_vectors_join_like_small_ones(spark, tmp_path, monkeypatch):
-    """Past the literal-key gate the vector is read by Spark and
-    anti-joined; both tiers hide the same rows."""
-    root = _tbl(spark, tmp_path, n=40)
-    M.delete_where_dv(spark, root, (F.col("v") >= 100) & (F.col("v") < 300))
-    M.delete_where_dv(spark, root, F.col("id") == 35)
-    small = (_ids(spark, root), M.read_point(spark, root, 12).count())
-    monkeypatch.setattr(M, "_DV_LITERAL_KEYS", 0)
-    assert (_ids(spark, root), M.read_point(spark, root, 12).count()) == small
-    assert small == ([i for i in range(40) if not 10 <= i < 30 and i != 35], 0)
+def test_timestamp_keys_stay_deleted_off_utc(spark, tmp_path, monkeypatch):
+    """Deleted timestamp keys stay hidden when the process's local zone is
+    not the session's UTC: keys are compared by Spark, never as Python
+    datetimes."""
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        root = str(tmp_path / "ts")
+        df = spark.range(16).selectExpr("timestamp_seconds(id * 3600) AS ts", "id AS v")
+        M.init_table(df, root, key="ts", n_buckets=4)
+        M.delete_where_dv(spark, root, F.col("v") >= 10)
+        live = sorted(r.v for r in M.read_current(spark, root).collect())
+        assert live == list(range(10))
+        assert M.read_point(spark, root, "1970-01-01 12:00:00").count() == 0
+        assert M.read_point(spark, root, "1970-01-01 03:00:00").count() == 1
+    finally:
+        monkeypatch.undo()
+        time.tzset()

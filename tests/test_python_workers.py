@@ -90,3 +90,23 @@ def test_workers_import_the_library_from_any_directory(tmp_path):
         "[Row(k=1, v='a'), Row(k=2, v='b')]",
         "mongraph_spark.worker_daemon",
     ]
+
+
+def test_daemon_imports_no_library_module():
+    """Importing the daemon loads the package's ``__init__`` and nothing
+    else of the library, so Python workers need only pyspark to start."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    run = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "import sys, mongraph_spark.worker_daemon; "
+            "print(sorted(m for m in sys.modules if m.startswith('mongraph_spark')))",
+        ],
+        cwd=repo,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    assert run.stdout.split() == ["['mongraph_spark',", "'mongraph_spark.worker_daemon']"]
