@@ -1799,9 +1799,7 @@ def store_delete_rebase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cond1 = F.col("doc_id") == 1
     n_rebased = 0
-    ver = merge_store._delete_rebase(
-        spark, root, cond1, ~F.coalesce(cond1, F.lit(False)), meta_v0, "v_00000"
-    )
+    ver = merge_store._delete_where(spark, root, cond1, "rebase", meta_v0, "v_00000")
     if ver == "v_00002":
         n_rebased += 1
 
@@ -1815,9 +1813,7 @@ def store_delete_rebase(spark: SparkSession, sf_dir: str) -> DataFrame:
     cond2 = F.col("doc_id").isin(3, 9000002)
     n_conflicts = 0
     try:
-        merge_store._delete_rebase(
-            spark, root, cond2, ~F.coalesce(cond2, F.lit(False)), meta_now, snap
-        )
+        merge_store._delete_where(spark, root, cond2, "rebase", meta_now, snap)
     except merge_store.CommitConflict:
         n_conflicts += 1
     merge_store.delete_where(spark, root, cond2, occ="rebase")
@@ -2231,7 +2227,6 @@ def store_compact_rebase(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = scratch_dir(spark, sf_dir, "cpreb")
     merge_store.init_table(docs, root, key="doc_id", n_buckets=8)
     meta_v0 = merge_store._read_meta(root)
-    manifest_v0 = merge_store._read_manifest(root, "v_00000")
     plan = {"0": 1, "6": 1}  # buckets of doc 12 and doc 14 under xxhash64%8
 
     # intervening writer rewrites bucket 6 AFTER the plan read it
@@ -2243,8 +2238,8 @@ def store_compact_rebase(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         key="doc_id",
     )
-    ver, committed = merge_store._compact_rebase(
-        spark, root, meta_v0, "v_00000", manifest_v0, plan
+    ver, committed = merge_store._compact(
+        spark, root, meta_v0, "v_00000", lambda _snap: plan, "rebase"
     )
     man = merge_store._read_manifest(root, ver)
     b0_dir = os.path.join(root, man["0"])

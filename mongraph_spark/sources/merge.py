@@ -33,6 +33,31 @@ manifest-reuse, one level simpler).
 - Readers pin a version at open time (the pointer flip is atomic via
   os.replace), so a long scan never sees a half-written version.
 
+**The commit path.**  Every version goes through :func:`_claim_first`:
+claim the next version name (an ``O_EXCL`` marker file), stage the
+version dir (data, manifest, deletion vectors, an optional staged meta),
+write the commit record, flip the pointer.  Any exception while staging
+removes the version dir and releases the claim, so a failed write never
+wedges the table for :data:`CLAIM_TTL_S`.  Metadata-only changes
+(``add_column`` and friends) build their staged meta as one ``stage``
+function through :func:`_commit_meta`.  Data mutations (``upsert``,
+``merge_into``, ``delete_where``, ``compact``) compute their rewrite once,
+as a function of (snapshot, destination dir), and :func:`_commit_data`
+runs it in one of two OCC (optimistic concurrency) modes:
+
+- ``occ="failfast"`` (default) claims FIRST: a racing live writer gets
+  :class:`CommitConflict` before any compute, and the rewrite runs under
+  the claim into the version dir against the claim's predecessor
+  (:func:`_claim_base`).
+- ``occ="rebase"`` stages FIRST into a private ``_staging`` dir against
+  the caller's snapshot, then claims and checks every commit that landed
+  since (:func:`_classify_conflict`; ``delete_where`` also re-runs its
+  predicate over the intervening writers' files, ``compact`` skips the
+  buckets someone rewrote).  Bucket-disjoint writers both commit with
+  zero recompute; a logical conflict raises :class:`CommitConflict` for
+  the whole-closure retry of :func:`commit_with_retry`.  Row-tracking,
+  flat and not-yet-initialized tables always commit fail-fast.
+
 ``init_table`` without a ``key`` keeps the legacy single-directory layout
 (one pseudo-bucket ``*``; every mutation is a full rewrite) — the semantics
 reference the bucketed path must match row-for-row.
@@ -402,18 +427,15 @@ def _to_physical(df: DataFrame, meta: dict) -> DataFrame:
     )
 
 
-def _carry_constraints(meta: dict, staged: dict) -> dict:
-    """Copy the optional constraint set AND the logical->physical rename
-    map into a hand-built staged meta so a schema/layout commit never
-    silently drops the table's CHECK rules — or, worse, its column
-    mapping (a dropped rename map would make every reader look for
-    logical names the files do not physically contain)."""
-    if meta.get("constraints"):
-        staged["constraints"] = meta["constraints"]
-    if meta.get("renames"):
-        staged["renames"] = meta["renames"]
-    if meta.get("row_tracking"):
-        staged["row_tracking"] = True
+def _replace_meta(meta: dict, **fields) -> dict:
+    """A staged meta: ``meta`` with ``fields`` replaced, every other field
+    (constraints, renames, row tracking, fences) carried as it is.  An
+    emptied ``dropped`` / ``constraints`` / ``renames`` entry is removed
+    rather than stored empty."""
+    staged = {**meta, **fields}
+    for name in ("dropped", "constraints", "renames"):
+        if name in fields and not fields[name]:
+            del staged[name]
     return staged
 
 
@@ -446,20 +468,6 @@ def _check_generated(df: DataFrame, col: dict, schema, op: str) -> None:
         )
 
 
-def _drop_rename_entry(staged: dict, name: str) -> None:
-    """Remove ``name``'s logical->physical mapping from a staged meta
-    (without mutating the dict `_carry_constraints` shallow-copied from
-    the live meta).  A dropped column's physical bytes are never read
-    again, so its mapping dies with it; the LOGICAL name is what the
-    tombstone list records."""
-    renames = dict(staged.get("renames") or {})
-    renames.pop(name, None)
-    if renames:
-        staged["renames"] = renames
-    else:
-        staged.pop("renames", None)
-
-
 def _refuse_phys_collision(meta: dict, name: str) -> None:
     """A new column's physical name is its logical name; refuse a name
     that is already the PHYSICAL name of a live renamed column — two
@@ -470,6 +478,37 @@ def _refuse_phys_collision(meta: dict, name: str) -> None:
             f"column name {name!r} is the physical name of a renamed live "
             "column; pick another name (or rename that column back first)"
         )
+
+
+def _new_column_stage(name: str, dtype, **fill):
+    """The staged-meta step of :func:`add_column` and
+    :func:`add_generated_column`: append ``name`` to the schema and record
+    its version-fenced fill (``fill`` holds ``default`` and, for a
+    generated column, ``expr``).
+
+    Re-adding a DROPPED name is safe REINCARNATION, not resurrection:
+    every file written before this version's ``added_in`` reads the new
+    fill — the fill in :func:`_read_paths` REPLACES the column for those
+    files unconditionally, so stale pre-drop bytes are never surfaced
+    (and Catalyst prunes the replaced column out of the scan entirely,
+    which also makes a TYPE-CHANGED re-add safe: the old physical
+    incarnation is never even decoded).  This is the guarantee Delta
+    needs column-mapping ids for; the version-fenced fill gives it to
+    this store for free."""
+
+    def stage(meta: dict, n: int) -> dict:
+        schema = T.StructType.fromJson(json.loads(meta["schema"]))
+        if name in schema.fieldNames():
+            raise ValueError(f"column {name!r} already exists")
+        _refuse_phys_collision(meta, name)
+        return _replace_meta(
+            meta,
+            schema=schema.add(name, _as_dtype(dtype), True).json(),
+            added=[*(meta.get("added") or []), {"name": name, "added_in": n, **fill}],
+            dropped=[d for d in meta.get("dropped") or [] if d != name],
+        )
+
+    return stage
 
 
 def add_generated_column(
@@ -504,68 +543,9 @@ def add_generated_column(
     local_df(spark, [], schema).select(
         F.expr(expr).cast(dtype).alias(name)
     )
-    cur = current_version(root)
-    if cur is None:
-        if name in schema.fieldNames():
-            raise ValueError(f"column {name!r} already exists")
-        _refuse_phys_collision(meta, name)
-        added = list(meta.get("added") or [])
-        added.append(
-            {"name": name, "added_in": 0, "default": None, "expr": expr}
-        )
-        _write_meta(
-            root,
-            meta["key"],
-            meta["n_buckets"],
-            schema.add(name, _as_dtype(dtype), True),
-            added,
-            bucketed_since=meta.get("bucketed_since"),
-            dropped=[d for d in (meta.get("dropped") or []) if d != name],
-            constraints=meta.get("constraints"),
-            renames=meta.get("renames"),
-        )
-        return
-    ver = _claim_next(root)
-    try:
-        meta = _read_meta(root)  # revalidate under the claim
-        schema = T.StructType.fromJson(json.loads(meta["schema"]))
-        if name in schema.fieldNames():
-            raise ValueError(f"column {name!r} already exists")
-        _refuse_phys_collision(meta, name)
-        dropped = [d for d in (meta.get("dropped") or []) if d != name]
-        added = list(meta.get("added") or [])
-        added.append(
-            {
-                "name": name,
-                "added_in": int(ver.split("_")[1]),
-                "default": None,
-                "expr": expr,
-            }
-        )
-        staged = {
-            "key": meta["key"],
-            "n_buckets": meta["n_buckets"],
-            "schema": schema.add(name, _as_dtype(dtype), True).json(),
-            "added": added,
-        }
-        if dropped:
-            staged["dropped"] = dropped
-        if meta.get("bucketed_since") is not None:
-            staged["bucketed_since"] = meta["bucketed_since"]
-        _carry_constraints(meta, staged)
-        cur2 = current_version(root)  # pinned by the claim
-        os.makedirs(os.path.join(root, ver))
-        _write_manifest(root, ver, _read_manifest(root, cur2))
-        _carry_dv(root, ver)  # metadata-only version: vectors ride along
-        with open(os.path.join(root, ver, _META), "w") as fh:
-            json.dump(staged, fh)
-        _write_commit(root, ver, "add_generated", "*")
-    except BaseException:
-        shutil.rmtree(os.path.join(root, ver), ignore_errors=True)
-        _release_claim(root, ver)
-        raise
-    _flip(root, ver)
-    _sync_root_meta(root, staged)
+    _commit_meta(
+        root, "add_generated", _new_column_stage(name, dtype, default=None, expr=expr)
+    )
 
 
 def add_check_constraint(
@@ -597,41 +577,19 @@ def add_check_constraint(
     if name in (meta.get("constraints") or {}):
         raise ValueError(f"constraint {name!r} already exists")
     F.expr(expr)  # fail fast on unparseable SQL
-    cur = current_version(root)
-    existing = read_current(spark, root) if cur is not None else None
+    existing = read_current(spark, root)
     if existing is not None:
         _check_constraints(
             existing, {"constraints": {name: expr}}, "add_check_constraint"
         )
-    if cur is None:
-        constraints = dict(meta.get("constraints") or {})
-        constraints[name] = expr
-        new_meta = dict(meta)
-        new_meta["constraints"] = constraints
-        _sync_root_meta(root, new_meta)
-        return
-    ver = _claim_next(root)
-    try:
-        meta = _read_meta(root)  # revalidate under the claim
-        constraints = dict(meta.get("constraints") or {})
+
+    def stage(meta: dict, _n: int) -> dict:
+        constraints = meta.get("constraints") or {}
         if name in constraints:
             raise ValueError(f"constraint {name!r} already exists")
-        constraints[name] = expr
-        staged = dict(meta)
-        staged["constraints"] = constraints
-        cur2 = current_version(root)  # pinned by the claim
-        os.makedirs(os.path.join(root, ver))
-        _write_manifest(root, ver, _read_manifest(root, cur2))
-        _carry_dv(root, ver)  # metadata-only version: vectors ride along
-        with open(os.path.join(root, ver, _META), "w") as fh:
-            json.dump(staged, fh)
-        _write_commit(root, ver, "add_constraint", "*")
-    except BaseException:
-        shutil.rmtree(os.path.join(root, ver), ignore_errors=True)
-        _release_claim(root, ver)
-        raise
-    _flip(root, ver)
-    _sync_root_meta(root, staged)
+        return _replace_meta(meta, constraints={**constraints, name: expr})
+
+    _commit_meta(root, "add_constraint", stage)
 
 
 def drop_check_constraint(root: str, name: str) -> None:
@@ -641,47 +599,21 @@ def drop_check_constraint(root: str, name: str) -> None:
     through the claim (and bumps the meta fingerprint) so concurrent
     rebase writers re-read a consistent rule set rather than racing a
     half-applied ALTER."""
-    meta = _read_meta(root)
-    if name not in (meta.get("constraints") or {}):
-        raise ValueError(f"no constraint {name!r} under {root}")
-    cur = current_version(root)
-    if cur is None:
-        new_meta = dict(meta)
-        new_meta["constraints"] = {
-            k: v for k, v in meta["constraints"].items() if k != name
-        }
-        if not new_meta["constraints"]:
-            del new_meta["constraints"]
-        _sync_root_meta(root, new_meta)
-        return
-    ver = _claim_next(root)
-    try:
-        meta = _read_meta(root)  # revalidate under the claim
-        staged = dict(meta)
-        staged["constraints"] = {
-            k: v for k, v in (meta.get("constraints") or {}).items() if k != name
-        }
-        if not staged["constraints"]:
-            del staged["constraints"]
-        cur2 = current_version(root)
-        os.makedirs(os.path.join(root, ver))
-        _write_manifest(root, ver, _read_manifest(root, cur2))
-        _carry_dv(root, ver)  # metadata-only version: vectors ride along
-        with open(os.path.join(root, ver, _META), "w") as fh:
-            json.dump(staged, fh)
-        _write_commit(root, ver, "drop_constraint", "*")
-    except BaseException:
-        shutil.rmtree(os.path.join(root, ver), ignore_errors=True)
-        _release_claim(root, ver)
-        raise
-    _flip(root, ver)
-    _sync_root_meta(root, staged)
+
+    def stage(meta: dict, _n: int) -> dict:
+        constraints = dict(meta.get("constraints") or {})
+        if constraints.pop(name, None) is None:
+            raise ValueError(f"no constraint {name!r} under {root}")
+        return _replace_meta(meta, constraints=constraints)
+
+    _commit_meta(root, "drop_constraint", stage)
 
 
 def _claim_next(root: str, wait_s: float = 5.0, poll_s: float = 0.05) -> str:
-    """Claim the next version, WAITING (bounded) on a live holder instead
-    of failing fast: used by the rebase commit path, where the caller has
-    already spent the compute.  The holder's claim window is short when
+    """Claim the next version, WAITING up to ``wait_s`` on a live holder
+    (``0`` fails fast, as a fail-fast writer does; metadata commits wait
+    the default).  The rebase commit path has already spent the compute
+    when it claims.  The holder's claim window is short when
     every writer uses rebase mode (manifest write + pointer flip), but a
     coexisting ``occ="failfast"`` writer claims BEFORE its compute and
     holds across the whole Spark job — which is why the rebase commit
@@ -791,43 +723,186 @@ def _classify_conflict(
     return None
 
 
-def _write_meta(
+def _check_occ(occ: str) -> None:
+    if occ not in ("failfast", "rebase"):
+        raise ValueError(f"occ must be 'failfast' or 'rebase', got {occ!r}")
+
+
+def _claim_first(root: str, op: str, stage, wait_s: float = 0.0):
+    """The one commit sequence every version goes through: claim the next
+    version (waiting up to ``wait_s`` on a live holder), let
+    ``stage(ver)`` fill its dir — data, manifest, vectors, an optional
+    staged meta — and return the write set (sorted bucket ids or ``"*"``),
+    write the commit record, flip.  Returns ``(ver, write_set)``.
+
+    ``stage`` returning ``None`` means nothing to commit: the claim is
+    released and ``(snapshot under the claim, [])`` is returned.  Any
+    exception while staging removes the version dir and releases the
+    claim, so no failed write holds the table for :data:`CLAIM_TTL_S`.
+    A staged meta becomes authoritative at the flip (``_read_meta``
+    prefers it); the root copy is synced right after."""
+    ver = _claim_next(root, wait_s)
+    try:
+        buckets = stage(ver)
+        if buckets is not None:
+            _write_commit(root, ver, op, buckets)
+    except BaseException:
+        shutil.rmtree(os.path.join(root, ver), ignore_errors=True)
+        _release_claim(root, ver)
+        raise
+    if buckets is None:
+        shutil.rmtree(os.path.join(root, ver), ignore_errors=True)
+        _release_claim(root, ver)
+        return _claim_base(ver), []
+    _flip(root, ver)
+    try:
+        with open(os.path.join(root, ver, _META)) as fh:
+            _sync_root_meta(root, json.load(fh))
+    except FileNotFoundError:
+        pass
+    return ver, buckets
+
+
+def _stage_meta(root: str, ver: str, meta: dict) -> None:
+    """Stage ``meta`` inside the version dir: the flip commits data and
+    meta as one unit (a crash on either side leaves them consistent)."""
+    with open(os.path.join(root, ver, _META), "w") as fh:
+        json.dump(meta, fh)
+
+
+def _commit_meta(root: str, op: str, stage) -> None:
+    """Commit a metadata-only change as a version of its own, so it
+    serializes with every writer through the claim: an in-flight rebase
+    committer conflicts on the meta fingerprint and the whole-table write
+    set, a fail-fast writer on :func:`_recheck_meta`.  ``stage(meta, n)``
+    validates and returns the staged meta for version number ``n``; it
+    runs on the meta re-read UNDER the claim.  The new version's manifest
+    and vectors are the prior version's.  With no committed version yet
+    nothing can race and there is no manifest: the root meta is rewritten
+    with ``stage(meta, 0)``."""
+    meta = _read_meta(root)
+    if meta["schema"] is None:
+        raise ValueError(f"no table meta under {root}")
+    if current_version(root) is None:
+        _sync_root_meta(root, stage(meta, 0))
+        return
+
+    def write(ver: str) -> str:
+        staged = stage(_read_meta(root), int(ver.split("_")[1]))
+        os.makedirs(os.path.join(root, ver))
+        _write_manifest(root, ver, _read_manifest(root, _claim_base(ver)))
+        _carry_dv(root, ver)
+        _stage_meta(root, ver, staged)
+        return "*"
+
+    _claim_first(root, op, write, wait_s=5.0)
+
+
+def _publish(root: str, ver: str, base: dict[str, str], touched) -> None:
+    """Write ``ver``'s manifest: ``base`` without the touched buckets (a
+    rewritten bucket can empty out entirely), plus every bucket dir
+    ``ver`` wrote; the touched buckets' vectors are cleared (each rewrite
+    read them vector-applied, so the new files materialize them)."""
+    dropped = set(base) if touched == "*" else set(touched)
+    new_map = {b: rel for b, rel in base.items() if b not in dropped}
+    new_map.update(_written_buckets(root, ver))
+    _write_manifest(root, ver, new_map)
+    _carry_dv(root, ver, cleared=dropped)
+
+
+def _check_serializable(root: str, snapshot: str, cur: str, ver: str, touched):
+    """The default rebase commit check: every commit since ``snapshot``
+    must be bucket-disjoint from ours (:func:`_classify_conflict`)."""
+    if cur != snapshot:
+        reason = _classify_conflict(root, snapshot, cur, set(touched))
+        if reason is not None:
+            raise CommitConflict(root, ver, reason)
+    return touched
+
+
+def _commit_data(
     root: str,
-    key: str | None,
-    n_buckets: int | None,
-    schema: T.StructType,
-    added: list[dict] | None = None,
-    bucketed_since: int | None = None,
-    dropped: list[str] | None = None,
-    constraints: dict[str, str] | None = None,
-    renames: dict[str, str] | None = None,
-    row_tracking: bool | None = None,
-) -> None:
-    if row_tracking is None:
-        # metadata commits (add_column, rebucket, ...) rebuild the dict from
-        # explicit args — the init-time row-tracking flag must survive them
-        row_tracking = bool(_read_meta(root).get("row_tracking"))
-    meta = {
-        "key": key,
-        "n_buckets": n_buckets,
-        "schema": schema.json(),
-        "added": added or [],
-    }
-    if row_tracking:
-        meta["row_tracking"] = True
-    if dropped:
-        meta["dropped"] = sorted(dropped)
-    if bucketed_since is not None:
-        meta["bucketed_since"] = bucketed_since
-    if constraints:
-        meta["constraints"] = constraints
-    if renames:
-        meta["renames"] = renames
-    # If the current version dir carries a staged meta copy (it is
-    # authoritative after a rebucket commit — see _read_meta), update it
-    # first so a crash between the two writes leaves the authoritative
-    # copy new and the root cache stale (read-repaired), never the
-    # reverse.
+    op: str,
+    meta: dict,
+    snapshot: str | None,
+    rewrite,
+    rebase: bool,
+    check=_check_serializable,
+):
+    """Commit a data mutation computed once by ``rewrite(snap, dest,
+    ver_num)``: it writes the new bucket files for snapshot ``snap`` into
+    ``dest`` and returns the touched buckets (``"*"`` for a flat table),
+    or ``None`` when there is nothing to commit.  ``ver_num`` is the
+    version number in fail-fast mode and ``None`` in rebase mode.
+
+    Fail-fast (``rebase=False``): claim first, then run the rewrite into
+    the version dir against :func:`_claim_base`, after
+    :func:`_recheck_meta`.  Rebase: run it into a private staging dir
+    against ``snapshot``, then :func:`_rebase_commit` with ``check``.
+    Returns ``(version, committed buckets)``; a no-op returns the snapshot
+    and ``[]``."""
+    if rebase:
+        from uuid import uuid4
+
+        staging = os.path.join(root, _STAGING, f"{op}_{os.getpid()}_{uuid4().hex}")
+        os.makedirs(os.path.dirname(staging), exist_ok=True)
+        try:
+            touched = rewrite(snapshot, staging, None)
+            if touched is None:
+                return snapshot, []
+            os.makedirs(staging, exist_ok=True)
+            return _rebase_commit(root, op, meta, snapshot, staging, touched, check)
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+
+    def stage(ver: str):
+        snap = _claim_base(ver)
+        _recheck_meta(root, ver, meta)
+        dest = os.path.join(root, ver)
+        touched = rewrite(snap, dest, int(ver.split("_")[1]))
+        if touched is not None:
+            os.makedirs(dest, exist_ok=True)
+            _publish(root, ver, _read_manifest(root, snap) if snap else {}, touched)
+        return touched
+
+    return _claim_first(root, op, stage)
+
+
+def _rebase_commit(
+    root: str, op: str, meta: dict, snapshot: str, staging: str, touched, check
+):
+    """Claim-last commit of a staged rewrite: claim (waiting up to
+    :data:`REBASE_CLAIM_WAIT_S` — the compute is already paid, and the
+    holder is most likely a fail-fast writer holding across its Spark
+    job), re-check the meta fingerprint, promote the staged dir, then
+    ``check(root, snapshot, cur, ver, touched)`` against everything that
+    committed since ``snapshot``: it raises :class:`CommitConflict` or
+    returns the buckets to commit (``None``: none).  Those overlay the
+    ADVANCED manifest — every intervening commit was bucket-disjoint, so
+    every other bucket's latest files are theirs and ours stay correct."""
+
+    def stage(ver: str):
+        cur = current_version(root)
+        if _meta_fingerprint(_read_meta(root)) != _meta_fingerprint(meta):
+            raise CommitConflict(
+                root, ver,
+                "table metadata changed since snapshot (schema/layout evolution)",
+            )
+        os.rename(staging, os.path.join(root, ver))
+        committed = check(root, snapshot, cur, ver, touched)
+        if committed is not None:
+            _publish(root, ver, _read_manifest(root, cur), committed)
+        return committed
+
+    return _claim_first(root, op, stage, wait_s=REBASE_CLAIM_WAIT_S)
+
+
+def _write_meta(root: str, meta: dict) -> None:
+    """Write the table meta outside a commit (``init_table``).  If the
+    current version dir carries a staged meta copy (authoritative — see
+    :func:`_read_meta`), update it first so a crash between the two
+    writes leaves the authoritative copy new and the root cache stale
+    (read-repaired), never the reverse."""
     cur = current_version(root)
     if cur is not None and os.path.exists(os.path.join(root, cur, _META)):
         staged = os.path.join(root, cur, _META)
@@ -995,13 +1070,22 @@ def _bucket_expr(key: str, n_buckets: int):
 
 
 def _written_buckets(root: str, ver: str) -> dict[str, str]:
-    """Bucket dirs actually produced by a partitionBy write of ``ver``."""
+    """Bucket dirs actually produced by a partitionBy write of ``ver``; a
+    flat table's ``data`` dir is its one pseudo-bucket ``*``."""
     out = {}
     base = os.path.join(root, ver)
     for d in os.listdir(base):
         if d.startswith(_BUCKET + "="):
             out[d.split("=", 1)[1]] = f"{ver}/{d}"
+        elif d == "data":
+            out["*"] = f"{ver}/data"
     return out
+
+
+def _write_buckets(df: DataFrame, meta: dict, dest: str) -> None:
+    """Write a ``__bucket``-carrying logical frame as bucket dirs under
+    ``dest``, in physical column names."""
+    _to_physical(df, meta).write.mode("errorifexists").partitionBy(_BUCKET).parquet(dest)
 
 
 def _rel_version(rel: str) -> int:
@@ -1019,96 +1103,60 @@ def _rel_version(rel: str) -> int:
 def _read_paths(
     spark: SparkSession,
     root: str,
+    meta: dict,
     mapping: dict[str, str],
-    schema_json: str | None,
-    added: list[dict] | None = None,
-    renames: dict[str, str] | None = None,
-    row_tracking: bool = False,
+    row_ids: bool = False,
 ) -> DataFrame:
-    """Read a manifest's files.  ``added`` (from table meta) carries
-    metadata-only ADD COLUMN facts: files written BEFORE a column's
-    ``added_in`` version lack it physically and read as the recorded
-    default; files written at-or-after read it normally (including
-    explicit NULLs) — the Delta/Iceberg schema-evolution contract with no
-    data rewrite.  ``renames`` (logical -> physical) makes the scan speak
-    the files' PHYSICAL names and alias back to logical immediately, so
-    everything above this function lives purely in logical space."""
-    if row_tracking and schema_json is not None:
-        # writer-path reads on row-tracking tables widen the recorded
-        # schema with the physical _row_id column so rewrites carry ids;
-        # plain readers (row_tracking=False) project it away as usual
-        _s = T.StructType.fromJson(json.loads(schema_json))
-        if _ROW_ID not in _s.fieldNames():
-            _s = T.StructType(list(_s.fields) + [T.StructField(_ROW_ID, T.LongType())])
-        schema_json = _s.json()
-    paths = [os.path.join(root, rel) for rel in mapping.values()]
-    if not paths:
-        if schema_json is None:
-            raise ValueError(f"empty table with no recorded schema under {root}")
-        return local_df(spark, [], T.StructType.fromJson(json.loads(schema_json)))
-    if renames:
-        # unified rename-aware path (covers added-fills AND dropped-column
-        # pruning): read each writer-version group under the PHYSICAL
-        # schema, alias to logical, then apply fills in logical space —
-        # fill/generated expressions were recorded against logical names
-        schema = T.StructType.fromJson(json.loads(schema_json))
-        meta_view = {"renames": renames}
-        phys = _phys_schema(meta_view, schema)
-        ordered = [f.name for f in schema.fields]
-        by_ver: dict[int, list[str]] = {}
-        for rel in mapping.values():
-            by_ver.setdefault(_rel_version(rel), []).append(
-                os.path.join(root, rel)
-            )
-        out: DataFrame | None = None
-        for ver, ps in sorted(by_ver.items()):
-            part = spark.read.schema(phys).parquet(*ps).select(
-                *[
-                    F.col(renames.get(n, n)).alias(n)
-                    if renames.get(n, n) != n
-                    else F.col(n)
-                    for n in ordered
-                ]
-            )
-            for col in added or []:
-                if ver < col["added_in"]:
-                    part = part.withColumn(
-                        col["name"],
-                        _fill_expr(col, schema[col["name"]].dataType),
-                    )
-            part = part.select(*ordered)
-            out = part if out is None else out.unionByName(part)
-        return out
-    if not added:
-        if schema_json is None:
-            return spark.read.parquet(*paths)
-        # read under the RECORDED schema: no footer-inference job, and a
-        # metadata-only drop_column stays dropped although old files still
-        # physically carry the column (parquet column pruning: its bytes
-        # are never scanned).  __bucket (the partition dir column) rides
-        # along when the paths hold partition dirs.
-        return spark.read.schema(
-            T.StructType.fromJson(json.loads(schema_json))
-        ).parquet(*paths)
-    schema = T.StructType.fromJson(json.loads(schema_json))
-    ordered = [f.name for f in schema.fields]
+    """Read a manifest's files under the recorded schema, in logical
+    column names.
 
-    # one scan per distinct writer VERSION (bounded by version count, not
-    # file count): all files written by the same version share a physical
-    # schema, so they share one fill set
-    by_ver: dict[int, list[str]] = {}
-    for rel in mapping.values():
-        by_ver.setdefault(_rel_version(rel), []).append(os.path.join(root, rel))
+    - ``added`` (metadata-only ADD COLUMN facts): files written BEFORE a
+      column's ``added_in`` version lack it physically and read its fill;
+      files written at-or-after read it normally (including explicit
+      NULLs) — the Delta/Iceberg schema-evolution contract with no data
+      rewrite.  Files group by the fills they need, one scan per group.
+    - ``renames`` (logical -> physical): each scan speaks the files'
+      PHYSICAL names and aliases back to logical immediately, so
+      everything above this function lives purely in logical space.
+    - ``row_ids``: writer-path reads on row-tracking tables widen the
+      schema with the physical ``_row_id`` so rewrites carry the ids.
+
+    A plain table is one scan with no projection: the recorded schema
+    means no footer-inference job, and a metadata-only drop_column stays
+    dropped although old files still carry the column (its bytes are
+    never scanned).  ``__bucket`` rides along when the paths hold
+    partition dirs."""
+    paths = [os.path.join(root, rel) for rel in mapping.values()]
+    if meta["schema"] is None:
+        if not paths:
+            raise ValueError(f"empty table with no recorded schema under {root}")
+        return spark.read.parquet(*paths)
+    schema = T.StructType.fromJson(json.loads(meta["schema"]))
+    if row_ids and meta.get("row_tracking") and _ROW_ID not in schema.fieldNames():
+        schema = T.StructType([*schema.fields, T.StructField(_ROW_ID, T.LongType())])
+    if not paths:
+        return local_df(spark, [], schema)
+    renames = meta.get("renames") or {}
+    added = meta.get("added") or []
+    by_fills: dict[tuple[str, ...], list[str]] = {}
+    for rel, path in zip(mapping.values(), paths):
+        fills = tuple(c["name"] for c in added if _rel_version(rel) < c["added_in"])
+        by_fills.setdefault(fills, []).append(path)
+    if not renames and list(by_fills) == [()]:
+        return spark.read.schema(schema).parquet(*paths)
+    phys = _phys_schema(meta, schema)
+    logical = [
+        F.col(renames[n]).alias(n) if n in renames else F.col(n)
+        for n in schema.fieldNames()
+    ]
     out: DataFrame | None = None
-    for ver, ps in sorted(by_ver.items()):
-        part = spark.read.schema(schema).parquet(*ps)
+    for fills, ps in sorted(by_fills.items()):
+        part = spark.read.schema(phys).parquet(*ps).select(*logical)
         for col in added:
-            if ver < col["added_in"]:
+            if col["name"] in fills:
                 part = part.withColumn(
-                    col["name"],
-                    _fill_expr(col, schema[col["name"]].dataType),
+                    col["name"], _fill_expr(col, schema[col["name"]].dataType)
                 )
-        part = part.select(*ordered)
         out = part if out is None else out.unionByName(part)
     return out
 
@@ -1145,79 +1193,21 @@ def add_column(root: str, name: str, dtype: str | T.DataType, default) -> None:
     the difference between an O(1) catalog update and rewriting the
     table.
 
-    The change COMMITS AS A VERSION of its own — claim, metadata-only
-    version dir whose manifest references the same data as the prior
-    current, commit record ``op="add_column"``, pointer flip — so it
-    serializes with every concurrent writer through the same claim
-    protocol instead of racing them: a fail-fast writer mid-compute holds
-    the claim and add_column waits (bounded) or conflicts; a rebase
-    committer that claims first wins the version number and add_column
-    lands AFTER it (``added_in`` = the version after theirs, so their
-    files correctly read as default-filled); a rebase committer arriving
-    after add_column sees a fingerprint mismatch AND a non-bucket-scoped
-    commit record and retries.  Without this, add_column could land
-    between a rebase committer's fingerprint check and its flip and stamp
-    ``added_in`` equal to the in-flight writer's version, making readers
-    treat files written WITHOUT the column as physically carrying it.
-
-    The new meta is staged INSIDE the new version dir and becomes
-    authoritative at the atomic flip (the rebucket pattern): a crash
-    before the flip aborts cleanly (root meta untouched, claim
-    TTL-expires), after the flip ``_read_meta`` prefers the staged copy."""
-    meta = _read_meta(root)
-    if meta["schema"] is None:
-        raise ValueError(f"no table meta under {root}")
-    cur = current_version(root)
-    if cur is None:
-        # no committed version yet: nothing can race a claim window, and
-        # there is no manifest to reference — plain metadata update
-        _append_column_meta(root, meta, name, dtype, default, added_in=0)
-        return
-    ver = _claim_next(root)
-    try:
-        # revalidate UNDER the claim: a racing add_column may have landed
-        meta = _read_meta(root)
-        schema = T.StructType.fromJson(json.loads(meta["schema"]))
-        if name in schema.fieldNames():
-            raise ValueError(f"column {name!r} already exists")
-        _refuse_phys_collision(meta, name)
-        # Re-adding a DROPPED name is safe REINCARNATION, not resurrection:
-        # every file written before this version's added_in reads the new
-        # default — the fill in _read_paths REPLACES the column for those
-        # files unconditionally, so stale pre-drop bytes are never
-        # surfaced (and Catalyst prunes the replaced column out of the
-        # scan entirely, which also makes a TYPE-CHANGED re-add safe: the
-        # old physical incarnation is never even decoded).  This is the
-        # guarantee Delta needs column-mapping ids for; the version-fenced
-        # default fill gives it to this store for free.
-        dropped = [d for d in (meta.get("dropped") or []) if d != name]
-        added_in = int(ver.split("_")[1])
-        added = list(meta.get("added") or [])
-        added.append({"name": name, "added_in": added_in, "default": default})
-        staged = {
-            "key": meta["key"],
-            "n_buckets": meta["n_buckets"],
-            "schema": schema.add(name, _as_dtype(dtype), True).json(),
-            "added": added,
-        }
-        if dropped:
-            staged["dropped"] = dropped
-        if meta.get("bucketed_since") is not None:
-            staged["bucketed_since"] = meta["bucketed_since"]
-        _carry_constraints(meta, staged)
-        cur2 = current_version(root)  # the claim pins it: cur2 == cur
-        os.makedirs(os.path.join(root, ver))
-        _write_manifest(root, ver, _read_manifest(root, cur2))
-        _carry_dv(root, ver)  # metadata-only version: vectors ride along
-        with open(os.path.join(root, ver, _META), "w") as fh:
-            json.dump(staged, fh)
-        _write_commit(root, ver, "add_column", "*")
-    except BaseException:
-        shutil.rmtree(os.path.join(root, ver), ignore_errors=True)
-        _release_claim(root, ver)
-        raise
-    _flip(root, ver)
-    _sync_root_meta(root, staged)
+    The change COMMITS AS A VERSION of its own (:func:`_commit_meta`,
+    op=``add_column``), so it serializes with every concurrent writer
+    through the claim instead of racing them: a fail-fast writer
+    mid-compute holds the claim and add_column waits (bounded) or
+    conflicts; a rebase committer that claims first wins the version
+    number and add_column lands AFTER it (``added_in`` = the version after
+    theirs, so their files correctly read as default-filled); a rebase
+    committer arriving after add_column sees a fingerprint mismatch AND a
+    non-bucket-scoped commit record and retries.  Without this, add_column
+    could land between a rebase committer's fingerprint check and its flip
+    and stamp ``added_in`` equal to the in-flight writer's version, making
+    readers treat files written WITHOUT the column as physically carrying
+    it.  Re-adding a dropped name reincarnates it safely (see
+    :func:`_new_column_stage`)."""
+    _commit_meta(root, "add_column", _new_column_stage(name, dtype, default=default))
 
 
 def drop_column(root: str, name: str) -> None:
@@ -1240,62 +1230,27 @@ def drop_column(root: str, name: str) -> None:
     change (the old physical incarnation is pruned out of the scan).
     Time travel reads through the CURRENT schema (this store's meta is
     table-level, not per-version) — a pre-drop version read after the
-    drop also projects the column away.
+    drop also projects the column away.  A dropped column's physical
+    bytes are never read again, so its rename mapping dies with it.
 
     The table key and any not-null base column can be dropped only over
     the store's dead body: the key is the bucket layout."""
-    meta = _read_meta(root)
-    if meta["schema"] is None:
-        raise ValueError(f"no table meta under {root}")
-    if name == meta.get("key"):
-        raise ValueError(f"cannot drop the table key {name!r} (bucket layout)")
-    schema = T.StructType.fromJson(json.loads(meta["schema"]))
-    if name not in schema.fieldNames():
-        raise ValueError(f"no column {name!r} to drop")
-    cur = current_version(root)
-    new_schema = T.StructType([f for f in schema.fields if f.name != name])
-    added = [c for c in (meta.get("added") or []) if c["name"] != name]
-    dropped = sorted(set(meta.get("dropped") or []) | {name})
-    if cur is None:
-        new_meta = {
-            "key": meta["key"],
-            "n_buckets": meta["n_buckets"],
-            "schema": new_schema.json(),
-            "added": added,
-            "dropped": dropped,
-        }
-        if meta.get("bucketed_since") is not None:
-            new_meta["bucketed_since"] = meta["bucketed_since"]
-        _carry_constraints(meta, new_meta)
-        _drop_rename_entry(new_meta, name)
-        _sync_root_meta(root, new_meta)
-        return
-    ver = _claim_next(root)
-    try:
-        staged = {
-            "key": meta["key"],
-            "n_buckets": meta["n_buckets"],
-            "schema": new_schema.json(),
-            "added": added,
-            "dropped": dropped,
-        }
-        if meta.get("bucketed_since") is not None:
-            staged["bucketed_since"] = meta["bucketed_since"]
-        _carry_constraints(meta, staged)
-        _drop_rename_entry(staged, name)
-        cur2 = current_version(root)  # pinned by the claim
-        os.makedirs(os.path.join(root, ver))
-        _write_manifest(root, ver, _read_manifest(root, cur2))
-        _carry_dv(root, ver)  # metadata-only version: vectors ride along
-        with open(os.path.join(root, ver, _META), "w") as fh:
-            json.dump(staged, fh)
-        _write_commit(root, ver, "drop_column", "*")
-    except BaseException:
-        shutil.rmtree(os.path.join(root, ver), ignore_errors=True)
-        _release_claim(root, ver)
-        raise
-    _flip(root, ver)
-    _sync_root_meta(root, staged)
+
+    def stage(meta: dict, _n: int) -> dict:
+        if name == meta.get("key"):
+            raise ValueError(f"cannot drop the table key {name!r} (bucket layout)")
+        schema = T.StructType.fromJson(json.loads(meta["schema"]))
+        if name not in schema.fieldNames():
+            raise ValueError(f"no column {name!r} to drop")
+        return _replace_meta(
+            meta,
+            schema=T.StructType([f for f in schema.fields if f.name != name]).json(),
+            added=[c for c in meta.get("added") or [] if c["name"] != name],
+            dropped=sorted(set(meta.get("dropped") or []) | {name}),
+            renames={k: v for k, v in (meta.get("renames") or {}).items() if k != name},
+        )
+
+    _commit_meta(root, "drop_column", stage)
 
 
 def _expr_references(meta: dict, name: str) -> list[str]:
@@ -1354,117 +1309,50 @@ def rename_column(root: str, old: str, new: str) -> None:
     :func:`add_column`: in-flight rebase writers conflict on the meta
     fingerprint (their plan spoke the old logical language), fail-fast
     writers on the post-claim :func:`_recheck_meta`."""
-    meta = _read_meta(root)
-    if meta["schema"] is None:
-        raise ValueError(f"no table meta under {root}")
-    schema = T.StructType.fromJson(json.loads(meta["schema"]))
-    if old not in schema.fieldNames():
-        raise ValueError(f"no column {old!r} to rename")
     if new == old:
         raise ValueError("rename target equals the current name")
-    if new in schema.fieldNames():
-        raise ValueError(f"column {new!r} already exists")
     if new == _BUCKET:
         raise ValueError(f"{new!r} is a reserved name")
-    if new in set(meta.get("dropped") or []):
-        raise ValueError(
-            f"{new!r} is a tombstoned dropped name; add_column reincarnates "
-            "dropped names — renaming onto one would conflate the two fences"
-        )
-    refs = _expr_references(meta, old)
-    if refs:
-        raise ValueError(
-            f"cannot rename {old!r}: referenced by recorded expressions "
-            f"({'; '.join(refs)}) — drop and re-add those rules under the "
-            "new name instead"
-        )
 
-    def _staged_meta(meta: dict) -> dict:
-        schema = T.StructType.fromJson(json.loads(meta["schema"]))
-        new_schema = T.StructType(
-            [
-                T.StructField(new, f.dataType, f.nullable)
-                if f.name == old
-                else f
-                for f in schema.fields
-            ]
-        )
-        renames = dict(meta.get("renames") or {})
-        physical = renames.pop(old, old)  # chains collapse to the origin
-        if new != physical:
-            renames[new] = physical
-        added = [
-            {**c, "name": new} if c["name"] == old else c
-            for c in (meta.get("added") or [])
-        ]
-        staged = {
-            "key": new if meta.get("key") == old else meta.get("key"),
-            "n_buckets": meta.get("n_buckets"),
-            "schema": new_schema.json(),
-            "added": added,
-        }
-        if meta.get("dropped"):
-            staged["dropped"] = meta["dropped"]
-        if meta.get("bucketed_since") is not None:
-            staged["bucketed_since"] = meta["bucketed_since"]
-        if meta.get("row_tracking"):
-            staged["row_tracking"] = True
-        if meta.get("constraints"):
-            staged["constraints"] = meta["constraints"]
-        if renames:
-            staged["renames"] = renames
-        return staged
-
-    cur = current_version(root)
-    if cur is None:
-        _sync_root_meta(root, _staged_meta(meta))
-        return
-    ver = _claim_next(root)
-    try:
-        meta = _read_meta(root)  # revalidate under the claim
+    def stage(meta: dict, _n: int) -> dict:
         schema = T.StructType.fromJson(json.loads(meta["schema"]))
         if old not in schema.fieldNames():
             raise ValueError(f"no column {old!r} to rename")
         if new in schema.fieldNames():
             raise ValueError(f"column {new!r} already exists")
-        staged = _staged_meta(meta)
-        cur2 = current_version(root)  # pinned by the claim
-        os.makedirs(os.path.join(root, ver))
-        _write_manifest(root, ver, _read_manifest(root, cur2))
-        _carry_dv(root, ver)  # metadata-only version: vectors ride along
-        with open(os.path.join(root, ver, _META), "w") as fh:
-            json.dump(staged, fh)
-        _write_commit(root, ver, "rename_column", "*")
-    except BaseException:
-        shutil.rmtree(os.path.join(root, ver), ignore_errors=True)
-        _release_claim(root, ver)
-        raise
-    _flip(root, ver)
-    _sync_root_meta(root, staged)
+        if new in set(meta.get("dropped") or []):
+            raise ValueError(
+                f"{new!r} is a tombstoned dropped name; add_column reincarnates "
+                "dropped names — renaming onto one would conflate the two fences"
+            )
+        refs = _expr_references(meta, old)
+        if refs:
+            raise ValueError(
+                f"cannot rename {old!r}: referenced by recorded expressions "
+                f"({'; '.join(refs)}) — drop and re-add those rules under the "
+                "new name instead"
+            )
+        renames = dict(meta.get("renames") or {})
+        physical = renames.pop(old, old)  # chains collapse to the origin
+        if new != physical:
+            renames[new] = physical
+        return _replace_meta(
+            meta,
+            key=new if meta.get("key") == old else meta.get("key"),
+            schema=T.StructType(
+                [
+                    T.StructField(new, f.dataType, f.nullable) if f.name == old else f
+                    for f in schema.fields
+                ]
+            ).json(),
+            added=[
+                {**c, "name": new} if c["name"] == old else c
+                for c in meta.get("added") or []
+            ],
+            renames=renames,
+        )
 
-
-def _append_column_meta(
-    root: str, meta: dict, name: str, dtype: str, default, added_in: int
-) -> None:
-    schema = T.StructType.fromJson(json.loads(meta["schema"]))
-    if name in schema.fieldNames():
-        raise ValueError(f"column {name!r} already exists")
-    _refuse_phys_collision(meta, name)
-    added = list(meta.get("added") or [])
-    added.append({"name": name, "added_in": added_in, "default": default})
-    _write_meta(
-        root,
-        meta["key"],
-        meta["n_buckets"],
-        schema.add(name, _as_dtype(dtype), True),
-        added,
-        bucketed_since=meta.get("bucketed_since"),
-        # reincarnation: a re-added name leaves the tombstone list (no
-        # committed version exists here, so there are no old files at all)
-        dropped=[d for d in (meta.get("dropped") or []) if d != name],
-        constraints=meta.get("constraints"),
-        renames=meta.get("renames"),
-    )
+    _commit_meta(root, "rename_column", stage)
 
 
 def read_version(
@@ -1478,11 +1366,7 @@ def read_version(
     on row-tracking tables (absent otherwise)."""
     ver = _version_name(n)
     meta = _read_meta(root)
-    df = _read_paths(
-        spark, root, _read_manifest(root, ver), meta["schema"],
-        meta.get("added"), meta.get("renames"),
-        with_row_ids and bool(meta.get("row_tracking")),
-    )
+    df = _read_paths(spark, root, meta, _read_manifest(root, ver), with_row_ids)
     return _apply_dv(spark, root, df, meta, _read_dv(root, ver))
 
 
@@ -1493,11 +1377,7 @@ def read_current(
     if ver is None:
         return None
     meta = _read_meta(root)
-    df = _read_paths(
-        spark, root, _read_manifest(root, ver), meta["schema"],
-        meta.get("added"), meta.get("renames"),
-        with_row_ids and bool(meta.get("row_tracking")),
-    )
+    df = _read_paths(spark, root, meta, _read_manifest(root, ver), with_row_ids)
     return _apply_dv(spark, root, df, meta, _read_dv(root, ver))
 
 
@@ -1521,12 +1401,11 @@ def read_point(spark: SparkSession, root: str, key_value) -> DataFrame:
     if ver is None:
         raise ValueError(f"no committed version under {root}")
     meta = _read_meta(root)
-    schema_json = meta["schema"]
     key, n_buckets = meta.get("key"), meta.get("n_buckets")
     if key is None:
         df = read_current(spark, root)
         return df.filter(F.col(df.columns[0]) == key_value)
-    schema = T.StructType.fromJson(json.loads(schema_json))
+    schema = T.StructType.fromJson(json.loads(meta["schema"]))
     key_type = next(f.dataType for f in schema.fields if f.name == key)
     lit = F.lit(key_value).cast(key_type)
     # over a one-row local relation Catalyst folds the hash on the driver
@@ -1537,9 +1416,7 @@ def read_point(spark: SparkSession, root: str, key_value) -> DataFrame:
     rel = mapping.get(str(bucket))
     if rel is None:
         return local_df(spark, [], schema)
-    df = _read_paths(
-        spark, root, {str(bucket): rel}, schema_json, meta.get("added"), meta.get("renames")
-    )
+    df = _read_paths(spark, root, meta, {str(bucket): rel})
     if _BUCKET in df.columns:
         df = df.drop(_BUCKET)
     df = _apply_dv(
@@ -1548,16 +1425,15 @@ def read_point(spark: SparkSession, root: str, key_value) -> DataFrame:
     return df.filter(F.col(key) == lit)
 
 
-def _record_stats(root: str, ver: str, col: str) -> None:
-    """Per-file [min, max] of ``col`` for every bucket dir the version
-    wrote, read from the parquet FOOTERS (row-group statistics — metadata
-    only, the data is never re-scanned), persisted as a ``_stats.json``
-    sidecar inside the version dir.  Bounded by the version's own file
-    count — a maintenance-job cost, never a read-path one."""
+def _record_stats(base: str, col: str) -> None:
+    """Per-file [min, max] of ``col`` for every bucket dir under ``base``
+    (a version or staging dir), read from the parquet FOOTERS (row-group
+    statistics — metadata only, the data is never re-scanned), persisted
+    as a ``_stats.json`` sidecar next to them.  Bounded by the version's
+    own file count — a maintenance-job cost, never a read-path one."""
     import pyarrow.parquet as pq
 
     stats: dict[str, dict[str, list]] = {}
-    base = os.path.join(root, ver)
     for d in sorted(os.listdir(base)):
         if not d.startswith(_BUCKET + "="):
             continue
@@ -1645,17 +1521,9 @@ def read_where(spark: SparkSession, root: str, col: str, lo, hi) -> DataFrame:
                 paths.append(os.path.join(bucket_dir, f))
     if not paths:
         return local_df(spark, [], schema)
-    df = spark.read.schema(_phys_schema(meta, schema)).parquet(*paths)
+    df = _read_paths(spark, root, meta, {p: p for p in paths})
     if _BUCKET in df.columns:
         df = df.drop(_BUCKET)
-    renames = meta.get("renames") or {}
-    if renames:
-        df = df.select(
-            *[
-                F.col(renames.get(f.name, f.name)).alias(f.name)
-                for f in schema.fields
-            ]
-        )
     df = _apply_dv(spark, root, df, meta, _read_dv(root, ver))
     return df.filter(pred)
 
@@ -1754,25 +1622,29 @@ def init_table(
     with_row_ids=True)`` surfaces it.  Mutations on row-tracking tables
     always commit fail-fast: ids embed the commit version, which a
     compute-first rebase does not know until after staging."""
-    os.makedirs(root, exist_ok=True)
-    ver = _next_version(root)
     if row_tracking and key is None:
         raise ValueError("row_tracking requires a bucketed (keyed) table")
-    if key is not None:
-        _write_meta(root, key, n_buckets, df.schema, row_tracking=row_tracking)
-        if row_tracking:
-            df = _assign_row_ids_init(df, key, 0, n_buckets)
-        df.withColumn(_BUCKET, _bucket_expr(key, n_buckets)).write.mode(
-            "errorifexists"
-        ).partitionBy(_BUCKET).parquet(os.path.join(root, ver))
+    meta = {
+        "key": key,
+        "n_buckets": None if key is None else n_buckets,
+        "schema": df.schema.json(),
+        "added": [],
+    }
+    if row_tracking:
+        meta["row_tracking"] = True
+
+    def stage(ver: str) -> str:
+        _write_meta(root, meta)
+        dest = os.path.join(root, ver)
+        if key is None:
+            df.write.mode("errorifexists").parquet(os.path.join(dest, "data"))
+        else:
+            rows = _assign_row_ids_init(df, key, 0, n_buckets) if row_tracking else df
+            _write_buckets(rows.withColumn(_BUCKET, _bucket_expr(key, n_buckets)), meta, dest)
         _write_manifest(root, ver, _written_buckets(root, ver))
-    else:
-        _write_meta(root, None, None, df.schema)
-        df.write.mode("errorifexists").parquet(os.path.join(root, ver, "data"))
-        _write_manifest(root, ver, {"*": f"{ver}/data"})
-    _write_commit(root, ver, "init", "*")
-    _flip(root, ver)
-    return ver
+        return "*"
+
+    return _claim_first(root, "init", stage)[0]
 
 
 def _dedupe_updates(updates: DataFrame, key: str, order_col: str | None) -> DataFrame:
@@ -1808,26 +1680,32 @@ def upsert(
     buckets containing update keys are read, anti-joined, and rewritten —
     every other bucket is carried forward by manifest reference.
 
-    ``occ`` picks the optimistic-concurrency commit protocol:
+    ``occ`` picks the commit protocol (module docstring): ``"failfast"``
+    (default) is cheapest when conflicts are likely to be logical
+    (overlapping keys); under ``"rebase"`` two writers upserting disjoint
+    keys both commit with zero recompute."""
+    _check_occ(occ)
+    return _upsert(
+        spark, root, updates, key, order_col, occ, _read_meta(root), current_version(root)
+    )
 
-    - ``"failfast"`` (default): claim the next version BEFORE any compute;
-      a racing live writer gets :class:`CommitConflict` immediately and
-      its :func:`commit_with_retry` recomputes against the advanced
-      snapshot.  Cheapest when conflicts are likely to be logical
-      (overlapping keys).
-    - ``"rebase"``: compute the new bucket files FIRST into a private
-      ``_staging`` dir, then claim and run the Delta-style
-      serializability check (:func:`_classify_conflict`) against every
-      commit that landed since this writer's snapshot.  If all of them
-      are bucket-DISJOINT (or content-preserving compactions), the staged
-      files commit as-is on top of the advanced manifest — two writers
-      upserting disjoint keys both commit with ZERO recompute.  Only a
-      logical conflict (overlapping buckets, whole-table write, schema /
-      layout evolution) raises :class:`CommitConflict` for the
-      whole-closure retry.  Requires a bucketed, already-initialized
-      table; otherwise falls back to fail-fast (a first-write or flat
-      table is a whole-table write — nothing to rebase onto)."""
-    meta = _read_meta(root)
+
+def _upsert(
+    spark: SparkSession,
+    root: str,
+    updates: DataFrame,
+    key: str,
+    order_col: str | None,
+    occ: str,
+    meta: dict,
+    snapshot: str | None,
+) -> str:
+    """:func:`upsert` planned against an explicit ``meta`` / ``snapshot``
+    pair (a rebase commit on top of a stale snapshot)."""
+    if meta["key"] is not None and meta["key"] != key:
+        raise ValueError(
+            f"table is bucketed on {meta['key']!r}, upsert keyed on {key!r}"
+        )
     # evolved columns a batch omits are filled with their recorded default
     # (the write-side half of the add_column contract)
     if meta.get("added") and meta["schema"]:
@@ -1854,57 +1732,56 @@ def upsert(
     # healthy commit instead
     deduped = lineage_cut(_dedupe_updates(updates, key, order_col), eager=True)
     _check_constraints(deduped, meta, "upsert")
-    cur = current_version(root)
-    row_tracking = bool(meta.get("row_tracking"))
-    if (
-        occ == "rebase"
-        and meta["key"] is not None
-        and cur is not None
-        and not row_tracking
-    ):
-        # row-tracking ids embed the commit version, unknown until the
-        # claim — mutations on those tables always commit fail-fast
-        return _upsert_rebase(spark, root, deduped, key, meta, cur)
-    ver = _next_version(root)
-    cur = _claim_base(ver)  # re-base the snapshot under the claim
-    _recheck_meta(root, ver, meta)  # conflict out on mid-gap meta evolution
-    ver_num = int(ver.split("_")[1])
+    if meta["key"] is None:
 
-    if meta["key"] is not None:
-        if meta["key"] != key:
-            raise ValueError(
-                f"table is bucketed on {meta['key']!r}, upsert keyed on {key!r}"
+        def rewrite_flat(snap, dest, _ver_num):
+            merged = deduped
+            if snap is not None:
+                keys = deduped.select(key)
+                if keys.count() <= 1_000_000:
+                    keys = F.broadcast(keys)
+                base = _read_paths(spark, root, meta, _read_manifest(root, snap))
+                merged = base.join(keys, key, "left_anti").unionByName(deduped)
+            _to_physical(merged, meta).write.mode("errorifexists").parquet(
+                os.path.join(dest, "data")
             )
-        n_buckets = meta["n_buckets"]
-        deduped = deduped.withColumn(_BUCKET, _bucket_expr(key, n_buckets))
-        # ONE action yields both commit decisions: the touched-bucket set
-        # AND the broadcast-gate key count (post-dedup rows are unique by
-        # key, so the row total IS the key count).  These were two
-        # separate jobs over the checkpointed batch per commit — pure
-        # fixed cost on trickle commits (streaming sinks, OLTP saves).
-        bucket_rows = deduped.groupBy(_BUCKET).agg(
-            F.count(F.lit(1)).alias("n")
-        ).collect()
-        touched = sorted(str(r[_BUCKET]) for r in bucket_rows)
-        n_update_keys = sum(r["n"] for r in bucket_rows)
-        manifest = _read_manifest(root, cur) if cur is not None else {}
+            return "*"
+
+        return _commit_data(root, "upsert", meta, snapshot, rewrite_flat, rebase=False)[0]
+
+    n_buckets = meta["n_buckets"]
+    row_tracking = bool(meta.get("row_tracking"))
+    batch = deduped.withColumn(_BUCKET, _bucket_expr(key, n_buckets))
+    # ONE action yields both commit decisions: the touched-bucket set AND
+    # the broadcast-gate key count (post-dedup rows are unique by key, so
+    # the row total IS the key count) — pure fixed cost on trickle commits
+    # (streaming sinks, OLTP saves), so never two jobs.  Neither depends
+    # on the snapshot, so a fail-fast writer runs it before claiming.
+    bucket_rows = batch.groupBy(_BUCKET).agg(F.count(F.lit(1)).alias("n")).collect()
+    touched = sorted(str(r[_BUCKET]) for r in bucket_rows)
+    n_update_keys = sum(r["n"] for r in bucket_rows)
+
+    def rewrite(snap, dest, ver_num):
+        manifest = _read_manifest(root, snap) if snap is not None else {}
         base_map = {b: manifest[b] for b in touched if b in manifest}
-        if base_map:
-            base = _read_paths(spark, root, base_map, meta["schema"], meta.get("added"), meta.get("renames"), bool(meta.get("row_tracking")))
+        rows = batch
+        if not base_map:
+            merged = _assign_row_ids(rows, key, ver_num) if row_tracking else rows
+        else:
             # pending deletion vectors on the touched buckets are applied
-            # here and cleared below: the rewrite MATERIALIZES them (and a
-            # re-inserted key genuinely resurrects)
+            # here and cleared at commit: the rewrite MATERIALIZES them
+            # (and a re-inserted key genuinely resurrects)
             base = _apply_dv(
-                spark, root, base, meta, _read_dv(root, cur), buckets=touched
+                spark, root, _read_paths(spark, root, meta, base_map, row_ids=True),
+                meta, _read_dv(root, snap), buckets=touched,
             )
             if row_tracking:
                 # updates INHERIT the matched key's id (stable identity
                 # across updates); only genuinely new keys mint ids
-                ids = base.select(key, _ROW_ID)
-                deduped = _assign_row_ids(
-                    deduped.join(ids, key, "left"), key, ver_num
+                rows = _assign_row_ids(
+                    rows.join(base.select(key, _ROW_ID), key, "left"), key, ver_num
                 )
-            keys = deduped.select(key)
+            keys = rows.select(key)
             # The common case is a trickle of saves against a huge base,
             # where broadcasting the key set skips shuffling the base
             # entirely.  A big batch must NOT be forced driver-side, so the
@@ -1912,157 +1789,16 @@ def upsert(
             # from runtime stats.
             if n_update_keys <= 1_000_000:
                 keys = F.broadcast(keys)
-            survivors = base.join(keys, key, "left_anti").withColumn(
+            merged = base.join(keys, key, "left_anti").withColumn(
                 _BUCKET, _bucket_expr(key, n_buckets)
-            )
-            merged = survivors.unionByName(deduped)
-        else:
-            merged = (
-                _assign_row_ids(deduped, key, ver_num)
-                if row_tracking
-                else deduped
-            )
-        _to_physical(merged, meta).write.mode("errorifexists").partitionBy(
-            _BUCKET
-        ).parquet(os.path.join(root, ver))
-        new_map = dict(manifest)
-        new_map.update(_written_buckets(root, ver))
-        _write_manifest(root, ver, new_map)
-        _carry_dv(root, ver, cleared=touched)
-        _write_commit(root, ver, "upsert", touched)
-    else:
-        base = read_current(spark, root)
-        if base is None:
-            merged = deduped
-        else:
-            keys = deduped.select(key)
-            if keys.count() <= 1_000_000:
-                keys = F.broadcast(keys)
-            merged = base.join(keys, key, "left_anti").unionByName(deduped)
-        _to_physical(merged, meta).write.mode("errorifexists").parquet(
-            os.path.join(root, ver, "data")
-        )
-        _write_manifest(root, ver, {"*": f"{ver}/data"})
-        _write_commit(root, ver, "upsert", "*")
-    _flip(root, ver)
-    return ver
+            ).unionByName(rows)
+        _write_buckets(merged, meta, dest)
+        return touched
 
-
-def _upsert_rebase(
-    spark: SparkSession,
-    root: str,
-    deduped: DataFrame,
-    key: str,
-    meta: dict,
-    snapshot: str,
-) -> str:
-    """The compute-first / claim-last half of :func:`upsert` (see its
-    docstring for the protocol).  The staged parquet is identical to what
-    the fail-fast path writes; only the commit sequencing differs."""
-    from uuid import uuid4
-
-    if meta["key"] != key:
-        raise ValueError(
-            f"table is bucketed on {meta['key']!r}, upsert keyed on {key!r}"
-        )
-    fp = _meta_fingerprint(meta)
-    n_buckets = meta["n_buckets"]
-    deduped = deduped.withColumn(_BUCKET, _bucket_expr(key, n_buckets))
-    # one action for touched buckets + key count (see upsert)
-    bucket_rows = deduped.groupBy(_BUCKET).agg(
-        F.count(F.lit(1)).alias("n")
-    ).collect()
-    touched = sorted(str(r[_BUCKET]) for r in bucket_rows)
-    n_update_keys = sum(r["n"] for r in bucket_rows)
-    manifest = _read_manifest(root, snapshot)
-    base_map = {b: manifest[b] for b in touched if b in manifest}
-    if base_map:
-        base = _read_paths(spark, root, base_map, meta["schema"], meta.get("added"), meta.get("renames"), bool(meta.get("row_tracking")))
-        base = _apply_dv(
-            spark, root, base, meta, _read_dv(root, snapshot), buckets=touched
-        )
-        keys = deduped.select(key)
-        if n_update_keys <= 1_000_000:
-            keys = F.broadcast(keys)
-        survivors = base.join(keys, key, "left_anti").withColumn(
-            _BUCKET, _bucket_expr(key, n_buckets)
-        )
-        merged = survivors.unionByName(deduped)
-    else:
-        merged = deduped
-    staging = os.path.join(root, _STAGING, f"up_{os.getpid()}_{uuid4().hex}")
-    os.makedirs(os.path.dirname(staging), exist_ok=True)
-    _to_physical(merged, meta).write.mode("errorifexists").partitionBy(
-        _BUCKET
-    ).parquet(staging)
-    return _rebase_commit(
-        root, staging, touched, fp, snapshot, manifest, op="upsert"
-    )
-
-
-def _rebase_commit(
-    root: str,
-    staging: str,
-    touched: list[str],
-    fp: str,
-    snapshot: str,
-    manifest: dict[str, str],
-    op: str,
-    drop_touched_first: bool = False,
-    recheck=None,
-    claim_wait_s: float = REBASE_CLAIM_WAIT_S,
-) -> str:
-    """Shared claim-last commit loop for staged (rebase-mode) mutations:
-    claim the next version (bounded wait — staging survives the whole
-    wait, see :data:`REBASE_CLAIM_WAIT_S`), run the serializability check
-    against everything that committed since ``snapshot``, then promote
-    the staged dir and overlay OUR buckets onto the winning manifest.
-    ``drop_touched_first`` is the merge_into/delete contract — a touched
-    bucket can empty out entirely (all rows deleted), so its old manifest
-    entry is removed even when no new files replace it.  ``recheck``, if
-    given, is called with the list of intervening version names AFTER the
-    bucket-disjointness check passes and may return an extra conflict
-    reason — delete_where uses it to re-evaluate its predicate over the
-    intervening writers' files (bucket-disjointness alone does not prove
-    a DELETE serializes: a disjoint upsert may have inserted rows the
-    predicate matches)."""
-    try:
-        ver = _claim_next(root, wait_s=claim_wait_s)
-    except CommitConflict:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    cur2 = current_version(root)
-    reason: str | None = None
-    if _meta_fingerprint(_read_meta(root)) != fp:
-        reason = "table metadata changed since snapshot (schema/layout evolution)"
-    elif cur2 != snapshot:
-        reason = _classify_conflict(root, snapshot, cur2, set(touched))
-        if reason is None and recheck is not None:
-            lo, hi = int(snapshot.split("_")[1]), int(cur2.split("_")[1])
-            reason = recheck([_version_name(n) for n in range(lo + 1, hi + 1)])
-        if reason is None:
-            # rebase: overlay OUR buckets onto the ADVANCED manifest — the
-            # intervening commits were bucket-disjoint, so every other
-            # bucket's latest files are theirs and ours stay correct
-            manifest = _read_manifest(root, cur2)
-    if reason is not None:
-        shutil.rmtree(staging, ignore_errors=True)
-        _release_claim(root, ver)
-        raise CommitConflict(root, ver, reason)
-    os.rename(staging, os.path.join(root, ver))
-    new_map = dict(manifest)
-    if drop_touched_first:
-        for b in touched:
-            new_map.pop(b, None)
-    new_map.update(_written_buckets(root, ver))
-    _write_manifest(root, ver, new_map)
-    # every rebase-mode mutation reads its touched buckets DV-applied, so
-    # the rewrite materialized their vectors; an intervening delete_dv on
-    # an overlapping bucket is a classified conflict, never a silent clear
-    _carry_dv(root, ver, cleared=touched)
-    _write_commit(root, ver, op, touched)
-    _flip(root, ver)
-    return ver
+    # row-tracking ids embed the commit version, unknown until the claim —
+    # mutations on those tables always commit fail-fast
+    rebase = occ == "rebase" and snapshot is not None and not row_tracking
+    return _commit_data(root, "upsert", meta, snapshot, rewrite, rebase)[0]
 
 
 def compact(
@@ -2092,17 +1828,14 @@ def compact(
     ``(new_version, compacted_bucket_ids)``; no-op (no fragmented
     buckets) returns the current version and ``[]``.
 
-    ``occ="rebase"``: compute-first / claim-last, with a commit rule
-    STRONGER than the generic serializability check — compaction is
-    content-preserving, so the per-bucket condition is simply "nobody
-    rewrote bucket b since we read it" (current manifest[b] == snapshot
-    manifest[b]).  Buckets that lost that race are SKIPPED, not
-    conflicted: their staged files are discarded and the newer writer's
-    files stay, while every still-valid bucket commits.  A long
+    ``occ`` (module docstring): under ``"rebase"`` compaction's commit
+    check is per bucket — it is content-preserving, so a bucket commits
+    iff nobody rewrote it (or changed its vectors) since the snapshot.
+    Buckets that lost that race are SKIPPED, not conflicted: the newer
+    writer's files stay and every still-valid bucket commits.  A long
     compaction therefore neither blocks concurrent writers (no claim is
     held during the Spark job) nor redoes work when one of its buckets
-    is overwritten mid-flight — the operational posture a 100 TB table's
-    maintenance job needs.  Only schema/layout evolution (fingerprint
+    is overwritten mid-flight.  Only schema/layout evolution (fingerprint
     change) discards the whole staged set.
 
     ``cluster_by``: liquid-clustering-lite (the Delta OPTIMIZE ZORDER /
@@ -2117,51 +1850,71 @@ def compact(
     that from footers) — it's never listing, opening, or scheduling
     tasks for the pruned files at all, which is why Delta keeps stats in
     the log rather than relying on footers."""
+    _check_occ(occ)
     meta = _read_meta(root)
     cur = current_version(root)
     if cur is None:
         raise ValueError(f"no current version under {root}")
     if meta["key"] is None:
         raise ValueError("compact requires a bucketed table (init_table with key)")
-    manifest = _read_manifest(root, cur)
 
-    plan = _compact_plan(root, manifest, max_files_per_bucket, target_bytes)
-    if not plan:
-        return cur, []
-    if occ == "rebase":
-        return _compact_rebase(
-            spark, root, meta, cur, manifest, plan, cluster_by=cluster_by
+    def plan_at(snap: str) -> dict[str, int]:
+        return _compact_plan(
+            root, _read_manifest(root, snap), max_files_per_bucket, target_bytes
         )
 
-    ver = _next_version(root)
-    cur = _claim_base(ver)  # re-base snapshot + plan under the claim
-    _recheck_meta(root, ver, meta)  # conflict out on mid-gap meta evolution
-    manifest = _read_manifest(root, cur)
-    plan = _compact_plan(root, manifest, max_files_per_bucket, target_bytes)
-    if not plan:
-        _release_claim(root, ver)
+    if not plan_at(cur):
         return cur, []
-    _compact_write(
-        spark,
-        root,
-        meta,
-        manifest,
-        plan,
-        os.path.join(root, ver),
-        cluster_by,
-        dv=_read_dv(root, cur),
+    return _compact(spark, root, meta, cur, plan_at, occ, cluster_by)
+
+
+def _compact(
+    spark: SparkSession,
+    root: str,
+    meta: dict,
+    snapshot: str,
+    plan_at,
+    occ: str,
+    cluster_by: str | None = None,
+) -> tuple[str, list[str]]:
+    """:func:`compact` against an explicit ``meta`` / ``snapshot`` pair;
+    ``plan_at(snap)`` names the buckets to rewrite at a snapshot and their
+    target file counts."""
+    phys_cluster = None if cluster_by is None else _phys_name(meta, cluster_by)
+
+    def rewrite(snap, dest, _ver_num):
+        plan = plan_at(snap)
+        if not plan:
+            return None
+        _compact_write(
+            spark, root, meta, _read_manifest(root, snap), plan, dest, cluster_by,
+            dv=_read_dv(root, snap),
+        )
+        if phys_cluster is not None:
+            # footers carry PHYSICAL names; key the sidecar by physical too
+            # so read_where keeps skipping across later renames
+            _record_stats(dest, phys_cluster)
+        return sorted(plan)
+
+    def skip_rewritten(root, snapshot, cur, ver, touched):
+        # a staged re-layout of bucket b is committable iff b still points
+        # at the files we compacted AND its deletion-vector set is
+        # unchanged — an intervening delete_dv on b would be silently
+        # UNDONE by committing files that materialized the older vectors
+        man, dv = _read_manifest(root, snapshot), _read_dv(root, snapshot)
+        man2, dv2 = _read_manifest(root, cur), _read_dv(root, cur)
+        valid = [b for b in touched if man2.get(b) == man.get(b) and dv2.get(b) == dv.get(b)]
+        if valid and len(valid) < len(touched):
+            dest = os.path.join(root, ver)
+            for b in set(touched) - set(valid):
+                shutil.rmtree(os.path.join(dest, f"{_BUCKET}={b}"), ignore_errors=True)
+            if phys_cluster is not None:
+                _record_stats(dest, phys_cluster)
+        return valid or None
+
+    return _commit_data(
+        root, "compact", meta, snapshot, rewrite, occ == "rebase", check=skip_rewritten
     )
-    if cluster_by is not None:
-        # footers carry PHYSICAL names; key the sidecar by physical too so
-        # read_where keeps skipping across later renames
-        _record_stats(root, ver, _phys_name(meta, cluster_by))
-    new_map = dict(manifest)
-    new_map.update(_written_buckets(root, ver))
-    _write_manifest(root, ver, new_map)
-    _carry_dv(root, ver, cleared=sorted(plan))
-    _write_commit(root, ver, "compact", sorted(plan))
-    _flip(root, ver)
-    return ver, sorted(plan)
 
 
 def _compact_plan(
@@ -2200,7 +1953,7 @@ def _compact_write(
     are tight; without it, a content-hash slice (no clustering claim)."""
     W = Window
     base_map = {b: manifest[b] for b in plan}
-    df = _read_paths(spark, root, base_map, meta["schema"], meta.get("added"), meta.get("renames"), bool(meta.get("row_tracking")))
+    df = _read_paths(spark, root, meta, base_map, row_ids=True)
     # compaction MATERIALIZES pending deletion vectors for the buckets it
     # rewrites (the Delta "purge" half of merge-on-read); the commit paths
     # clear the applied buckets' vectors
@@ -2228,75 +1981,7 @@ def _compact_write(
     )
     if cluster_by is not None:
         out = out.sortWithinPartitions(cluster_by)
-    _to_physical(out, meta).write.mode("errorifexists").partitionBy(
-        _BUCKET
-    ).parquet(dest)
-
-
-def _compact_rebase(
-    spark: SparkSession,
-    root: str,
-    meta: dict,
-    snapshot: str,
-    manifest: dict[str, str],
-    plan: dict[str, int],
-    cluster_by: str | None = None,
-) -> tuple[str, list[str]]:
-    """The compute-first / per-bucket-commit half of :func:`compact` (see
-    its docstring).  Not routed through :func:`_rebase_commit` because
-    compaction's conflict rule is per-bucket SKIP, not all-or-nothing."""
-    from uuid import uuid4
-
-    fp = _meta_fingerprint(meta)
-    dv_snap = _read_dv(root, snapshot)
-    staging = os.path.join(root, _STAGING, f"cp_{os.getpid()}_{uuid4().hex}")
-    os.makedirs(os.path.dirname(staging), exist_ok=True)
-    _compact_write(spark, root, meta, manifest, plan, staging, cluster_by, dv=dv_snap)
-    try:
-        ver = _claim_next(root, wait_s=REBASE_CLAIM_WAIT_S)
-    except CommitConflict:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    cur2 = current_version(root)
-    if _meta_fingerprint(_read_meta(root)) != fp:
-        shutil.rmtree(staging, ignore_errors=True)
-        _release_claim(root, ver)
-        raise CommitConflict(
-            root, ver,
-            "table metadata changed since snapshot (schema/layout evolution)",
-        )
-    man2 = _read_manifest(root, cur2)
-    dv2 = _read_dv(root, cur2)
-    # per-bucket validity: our staged re-layout of bucket b is committable
-    # iff b still points at the files we compacted AND its deletion-vector
-    # set is unchanged — an intervening delete_dv on b would be silently
-    # UNDONE by committing staged files that materialized the older vector
-    # state and then clearing b's vectors
-    valid = {
-        b
-        for b in plan
-        if man2.get(b) == manifest.get(b) and dv2.get(b) == dv_snap.get(b)
-    }
-    for d in os.listdir(staging):
-        if d.startswith(_BUCKET + "=") and d.split("=", 1)[1] not in valid:
-            shutil.rmtree(os.path.join(staging, d))
-    if not valid:
-        shutil.rmtree(staging, ignore_errors=True)
-        _release_claim(root, ver)
-        return cur2, []
-    os.rename(staging, os.path.join(root, ver))
-    if cluster_by is not None:
-        # physical name: see the fail-fast path's note
-        _record_stats(root, ver, _phys_name(meta, cluster_by))
-    written = _written_buckets(root, ver)
-    committed = sorted(b for b in written if b in valid)
-    new_map = dict(man2)
-    new_map.update({b: written[b] for b in committed})
-    _write_manifest(root, ver, new_map)
-    _carry_dv(root, ver, cleared=committed)
-    _write_commit(root, ver, "compact", committed)
-    _flip(root, ver)
-    return ver, committed
+    _write_buckets(out, meta, dest)
 
 
 def delete_where(
@@ -2304,162 +1989,98 @@ def delete_where(
 ) -> str:
     """Delete rows matching ``condition`` (a Column) by rewriting the
     survivors of the buckets that contain matching rows into the next
-    version (legacy flat tables rewrite in full).
+    version (legacy flat tables rewrite in full).  Returns the new version,
+    or the current one when nothing matched.
 
     SQL DELETE semantics: only rows where the predicate is TRUE are removed.
     A bare ``filter(~condition)`` would also drop NULL-predicate rows (e.g. a
     comparison against a NULL column), so NULL is coalesced to "keep".
 
-    ``occ="rebase"`` (bucketed tables): compute the survivors FIRST into a
-    private staging dir, then claim-last with the serializability check —
-    but DELETE's read set is the whole predicate scan, not just its write
-    set, so bucket-disjointness alone is not sufficient: an intervening
-    bucket-disjoint upsert may have inserted/updated rows the predicate
-    MATCHES, which the serial order "theirs, then ours" would delete.  The
-    commit therefore re-evaluates the predicate over ONLY the intervening
-    writers' written files (bounded by their write sets, never a table
-    rescan); zero matches proves the staged survivors equal the serial
-    result, any match raises :class:`CommitConflict` for the
+    ``occ`` picks the commit protocol (module docstring).  DELETE's read
+    set is the whole predicate scan, not just its write set, so under
+    ``"rebase"`` bucket-disjointness alone is not sufficient: an
+    intervening bucket-disjoint upsert may have inserted/updated rows the
+    predicate MATCHES, which the serial order "theirs, then ours" would
+    delete.  The commit therefore re-evaluates the predicate over ONLY the
+    intervening writers' written files (bounded by their write sets, never
+    a table rescan); zero matches proves the staged survivors equal the
+    serial result, any match raises :class:`CommitConflict` for the
     whole-closure retry."""
-    meta = _read_meta(root)
-    cur = current_version(root)
-    if cur is None:
-        raise ValueError(f"no current version under {root}")
-    keep = ~F.coalesce(condition, F.lit(False))
-    if occ == "rebase" and meta["key"] is not None:
-        return _delete_rebase(spark, root, condition, keep, meta, cur)
-    ver = _next_version(root)
-    cur = _claim_base(ver)  # re-base the snapshot under the claim
-    _recheck_meta(root, ver, meta)  # conflict out on mid-gap meta evolution
+    _check_occ(occ)
+    return _delete_where(
+        spark, root, condition, occ, _read_meta(root), current_version(root)
+    )
 
-    if meta["key"] is not None:
+
+def _delete_where(
+    spark: SparkSession,
+    root: str,
+    condition,
+    occ: str,
+    meta: dict,
+    snapshot: str | None,
+) -> str:
+    """:func:`delete_where` against an explicit ``meta`` / ``snapshot``
+    pair (a rebase commit on top of a stale snapshot)."""
+    if snapshot is None:
+        raise ValueError(f"no current version under {root}")
+    doomed = F.coalesce(condition, F.lit(False))
+    key = meta["key"]
+
+    def rewrite(snap, dest, _ver_num):
+        manifest = _read_manifest(root, snap)
+        if key is None:
+            base = _read_paths(spark, root, meta, manifest)
+            _to_physical(base.filter(~doomed), meta).write.mode(
+                "errorifexists"
+            ).parquet(os.path.join(dest, "data"))
+            return "*"
         n_buckets = meta["n_buckets"]
-        manifest = _read_manifest(root, cur)
-        dv = _read_dv(root, cur)
+        dv = _read_dv(root, snap)
         full = _apply_dv(
-            spark,
-            root,
-            _read_paths(spark, root, manifest, meta["schema"], meta.get("added"), meta.get("renames"), bool(meta.get("row_tracking"))),
-            meta,
-            dv,
-        ).withColumn(_BUCKET, _bucket_expr(meta["key"], n_buckets))
+            spark, root, _read_paths(spark, root, meta, manifest), meta, dv
+        ).withColumn(_BUCKET, _bucket_expr(key, n_buckets))
         # one pushdown-friendly scan to find which buckets hold doomed rows
         touched = sorted(
             str(r[_BUCKET])
-            for r in full.filter(~keep).select(_BUCKET).distinct().collect()
+            for r in full.filter(doomed).select(_BUCKET).distinct().collect()
         )
+        if not touched:
+            return None
         base_map = {b: manifest[b] for b in touched if b in manifest}
-        os.makedirs(os.path.join(root, ver), exist_ok=True)
-        if base_map:
-            dv_applied = _apply_dv(
-                spark,
-                root,
-                _read_paths(spark, root, base_map, meta["schema"], meta.get("added"), meta.get("renames"), bool(meta.get("row_tracking"))),
-                meta,
-                dv,
-                buckets=touched,
-            )
-            survivors = _to_physical(
-                dv_applied.filter(keep).withColumn(
-                    _BUCKET, _bucket_expr(meta["key"], n_buckets)
-                ),
-                meta,
-            )
-            survivors.write.mode("overwrite").partitionBy(_BUCKET).parquet(
-                os.path.join(root, ver)
-            )
-        new_map = {b: rel for b, rel in manifest.items() if b not in set(touched)}
-        new_map.update(_written_buckets(root, ver))  # survivors only; empty dropped
-        _write_manifest(root, ver, new_map)
-        _carry_dv(root, ver, cleared=touched)
-        _write_commit(root, ver, "delete", touched)
-    else:
-        base = read_current(spark, root)
-        _to_physical(base.filter(keep), meta).write.mode(
-            "errorifexists"
-        ).parquet(os.path.join(root, ver, "data"))
-        _write_manifest(root, ver, {"*": f"{ver}/data"})
-        _write_commit(root, ver, "delete", "*")
-    _flip(root, ver)
-    return ver
+        base = _apply_dv(
+            spark, root, _read_paths(spark, root, meta, base_map, row_ids=True),
+            meta, dv, buckets=touched,
+        )
+        _write_buckets(
+            base.filter(~doomed).withColumn(_BUCKET, _bucket_expr(key, n_buckets)),
+            meta, dest,
+        )  # survivors only: a bucket that empties out leaves the manifest
+        return touched
 
-
-def _delete_rebase(
-    spark: SparkSession, root: str, condition, keep, meta: dict, snapshot: str
-) -> str:
-    """The compute-first / claim-last half of :func:`delete_where` (see its
-    docstring for the protocol and the predicate-recheck rationale)."""
-    from uuid import uuid4
-
-    n_buckets = meta["n_buckets"]
-    fp = _meta_fingerprint(meta)
-    manifest = _read_manifest(root, snapshot)
-    dv = _read_dv(root, snapshot)
-    full = _apply_dv(
-        spark,
-        root,
-        _read_paths(spark, root, manifest, meta["schema"], meta.get("added"), meta.get("renames"), bool(meta.get("row_tracking"))),
-        meta,
-        dv,
-    ).withColumn(_BUCKET, _bucket_expr(meta["key"], n_buckets))
-    touched = sorted(
-        str(r[_BUCKET])
-        for r in full.filter(~keep).select(_BUCKET).distinct().collect()
-    )
-    if not touched:
-        return snapshot  # nothing matched at this snapshot: DELETE is a no-op
-    base_map = {b: manifest[b] for b in touched if b in manifest}
-    staging = os.path.join(root, _STAGING, f"dl_{os.getpid()}_{uuid4().hex}")
-    os.makedirs(os.path.dirname(staging), exist_ok=True)
-    _apply_dv(
-        spark,
-        root,
-        _read_paths(spark, root, base_map, meta["schema"], meta.get("added"), meta.get("renames"), bool(meta.get("row_tracking"))),
-        meta,
-        dv,
-        buckets=touched,
-    ).filter(keep).withColumn(
-        _BUCKET, _bucket_expr(meta["key"], n_buckets)
-    ).transform(lambda d: _to_physical(d, meta)).write.mode(
-        "errorifexists"
-    ).partitionBy(_BUCKET).parquet(staging)
-
-    match = F.coalesce(condition, F.lit(False))
-
-    def recheck(intervening: list[str]) -> str | None:
-        # bucket-disjointness already passed; re-evaluate the predicate over
-        # ONLY the files the intervening writers wrote (bounded by their
-        # write sets).  Compactions are skipped: they re-lay out rows the
+    def unmatched_since(root, snapshot, cur, ver, touched):
+        _check_serializable(root, snapshot, cur, ver, touched)
+        # re-evaluate the predicate over ONLY the files the intervening
+        # writers wrote.  Compactions are skipped: they re-lay out rows the
         # snapshot scan already saw and judged.
         paths: dict[str, str] = {}
-        for v in intervening:
-            rec = _read_commit(root, v)
-            if rec is not None and rec.get("op") in _CONTENT_PRESERVING_OPS:
+        for n in range(int(snapshot.split("_")[1]) + 1, int(cur.split("_")[1]) + 1):
+            v = _version_name(n)
+            if (_read_commit(root, v) or {}).get("op") in _CONTENT_PRESERVING_OPS:
                 continue
-            paths.update(
-                {f"{v}:{b}": rel for b, rel in _written_buckets(root, v).items()}
-            )
-        if not paths:
-            return None
-        wrote = _read_paths(spark, root, paths, meta["schema"], meta.get("added"), meta.get("renames"), bool(meta.get("row_tracking")))
-        if wrote.filter(match).limit(1).count() > 0:
-            return (
+            paths.update({f"{v}:{b}": rel for b, rel in _written_buckets(root, v).items()})
+        if paths and _read_paths(spark, root, meta, paths).filter(doomed).limit(1).count() > 0:
+            raise CommitConflict(
+                root, ver,
                 "an intervening writer added rows matching the DELETE "
-                "predicate; the staged survivors are not the serial result"
+                "predicate; the staged survivors are not the serial result",
             )
-        return None
+        return touched
 
-    return _rebase_commit(
-        root,
-        staging,
-        touched,
-        fp,
-        snapshot,
-        manifest,
-        op="delete",
-        drop_touched_first=True,
-        recheck=recheck,
-    )
+    rebase = occ == "rebase" and key is not None
+    return _commit_data(
+        root, "delete", meta, snapshot, rewrite, rebase, check=unmatched_since
+    )[0]
 
 
 def delete_where_dv(spark: SparkSession, root: str, condition) -> str:
@@ -2489,23 +2110,21 @@ def delete_where_dv(spark: SparkSession, root: str, condition) -> str:
     meta = _read_meta(root)
     if meta.get("key") is None:
         raise ValueError("delete_where_dv requires a bucketed table")
-    cur = current_version(root)
-    if cur is None:
+    if current_version(root) is None:
         raise ValueError(f"no current version under {root}")
-    ver = _next_version(root)
-    cur = _claim_base(ver)  # re-base the snapshot under the claim
-    _recheck_meta(root, ver, meta)  # conflict out on mid-gap meta evolution
-    try:
+
+    def stage(ver: str):
+        snap = _claim_base(ver)  # re-base the snapshot under the claim
+        _recheck_meta(root, ver, meta)  # conflict out on mid-gap meta evolution
         # the predicate runs over the DV-APPLIED view: rows already
         # vector-deleted are invisible, so re-deleting them is a no-op
         # rather than a duplicate vector entry
         base = read_current(spark, root)
-        match = F.coalesce(condition, F.lit(False))
         # the sidecar stores the key under its PHYSICAL name so it stays
         # readable across later renames (like the data files themselves)
         phys_key = _phys_name(meta, meta["key"])
         doomed = (
-            base.filter(match)
+            base.filter(F.coalesce(condition, F.lit(False)))
             .select(F.col(meta["key"]).alias(phys_key))
             .withColumn(_BUCKET, _bucket_expr(phys_key, meta["n_buckets"]))
         )
@@ -2517,22 +2136,16 @@ def delete_where_dv(spark: SparkSession, root: str, condition) -> str:
             if d.startswith(_BUCKET + "=")
         )
         if not touched:
-            shutil.rmtree(os.path.join(root, ver))
-            _release_claim(root, ver)
-            return cur
-    except Exception:
-        shutil.rmtree(os.path.join(root, ver), ignore_errors=True)
-        _release_claim(root, ver)
-        raise
-    # data files carry forward untouched — that is the whole point
-    _write_manifest(root, ver, dict(_read_manifest(root, cur)))
-    dv = _read_dv(root, cur)
-    for b in touched:
-        dv.setdefault(b, []).append(f"{ver}/dv/{_BUCKET}={b}")
-    _write_dv(root, ver, dv)
-    _write_commit(root, ver, "delete_dv", touched)
-    _flip(root, ver)
-    return ver
+            return None
+        # data files carry forward untouched — that is the whole point
+        _write_manifest(root, ver, _read_manifest(root, snap))
+        dv = _read_dv(root, snap)
+        for b in touched:
+            dv.setdefault(b, []).append(f"{ver}/dv/{_BUCKET}={b}")
+        _write_dv(root, ver, dv)
+        return touched
+
+    return _claim_first(root, "delete_dv", stage)[0]
 
 
 def merge_into(
@@ -2563,12 +2176,10 @@ def merge_into(
     full-outer-shaped pass (left join target←source inside the touched
     buckets + anti join for inserts), never a second scan.
 
-    ``occ="rebase"`` uses the same compute-first / claim-last commit
-    protocol as :func:`upsert` (see its docstring and
-    :func:`_classify_conflict`): the staged merge commits on top of
-    bucket-disjoint intervening writers with zero recompute.  MERGE's
-    read AND write sets are both exactly the source keys' buckets, so the
-    bucket-overlap test is its full serializability condition.
+    ``occ`` picks the commit protocol (module docstring).  MERGE's read
+    AND write sets are both exactly the source keys' buckets, so under
+    ``"rebase"`` the bucket-overlap test is its full serializability
+    condition.
 
     ``schema_evolution=True`` is the Delta ``mergeSchema`` behavior:
     source columns absent from the target schema are AUTO-ADDED through
@@ -2589,6 +2200,7 @@ def merge_into(
     ``insert_not_matched=False``) returns the CURRENT version unchanged,
     which is ``None`` on a still-empty table — callers that parse or
     version-compare the return must handle that one case."""
+    _check_occ(occ)
     meta = _read_meta(root)
     if meta["key"] is None:
         raise ValueError("merge_into requires a bucketed table")
@@ -2612,8 +2224,6 @@ def merge_into(
         for c in (meta.get("added") or [])
         if c.get("expr") is not None
     }
-    # refused BEFORE the fail-fast claim below — a bad request must not
-    # wedge the table for CLAIM_TTL_S
     if when_matched_set and set(when_matched_set) & set(gen_cols):
         raise ValueError(
             "cannot SET a generated column "
@@ -2640,126 +2250,84 @@ def merge_into(
         *[F.col(c).alias(f"src_{c}") for c in cols],  # incl. src_<key>
         F.lit(True).alias("__src_present"),
     )
-
     n_buckets = meta["n_buckets"]
-    cur = current_version(root)
+    touched = sorted(
+        str(r[_BUCKET])
+        for r in src.select(key)
+        .withColumn(_BUCKET, _bucket_expr(key, n_buckets))
+        .select(_BUCKET)
+        .distinct()
+        .collect()
+    )
     row_tracking = bool(meta.get("row_tracking"))
+    carry = [_ROW_ID] if row_tracking else []
+
+    def rewrite(snap, dest, ver_num):
+        manifest = _read_manifest(root, snap) if snap is not None else {}
+        base_map = {b: manifest[b] for b in touched if b in manifest}
+        parts = []
+        new_rows = None
+        if base_map:
+            base = _apply_dv(
+                spark, root, _read_paths(spark, root, meta, base_map, row_ids=True),
+                meta, _read_dv(root, snap), buckets=touched,
+            )
+            joined = base.join(
+                F.broadcast(src_pref), base[key] == src_pref["__src_key"], "left"
+            )
+            matched = joined.filter(F.col("__src_present").isNotNull())
+            unmatched_target = joined.filter(F.col("__src_present").isNull()).select(
+                *cols, *carry
+            )
+            if when_matched_delete is not None:
+                matched = matched.filter(
+                    ~F.coalesce(F.expr(when_matched_delete), F.lit(False))
+                )
+            if when_matched_set:
+                updated = matched.select(
+                    *[
+                        F.expr(when_matched_set[c]).cast(schema[c].dataType).alias(c)
+                        if c in when_matched_set
+                        else F.col(c)
+                        for c in cols
+                    ],
+                    *carry,  # updates keep the target row's stable id
+                )
+                # generated columns re-derive from the POST-update base values
+                # (a second step — the select above still sees pre-update rows)
+                for name, col in gen_cols.items():
+                    updated = updated.withColumn(
+                        name, F.expr(col["expr"]).cast(schema[name].dataType)
+                    )
+            else:  # matched rows kept as-is (MERGE with only DELETE/INSERT clauses)
+                updated = matched.select(*cols, *carry)
+            parts += [unmatched_target, updated]
+            new_rows = updated  # unmatched_target rows are carried unchanged —
+            # they satisfied the constraints when THEY were written
+            if insert_not_matched:
+                inserts = src.join(base.select(key), key, "left_anti")
+                if row_tracking:
+                    inserts = _assign_row_ids(inserts, key, ver_num)
+                parts.append(inserts)
+                new_rows = new_rows.unionByName(inserts)
+        elif insert_not_matched:
+            new_rows = _assign_row_ids(src, key, ver_num) if row_tracking else src
+            parts.append(new_rows)
+        if not parts:
+            return None  # nothing to do
+        if new_rows is not None:
+            _check_constraints(new_rows, meta, "merge")
+        merged = parts[0]
+        for p in parts[1:]:
+            merged = merged.unionByName(p)
+        _write_buckets(merged.withColumn(_BUCKET, _bucket_expr(key, n_buckets)), meta, dest)
+        return touched
+
+    snapshot = current_version(root)
     # row-tracking ids embed the commit version, unknown until the claim —
     # mutations on those tables always commit fail-fast
-    rebase = occ == "rebase" and cur is not None and not row_tracking
-    ver = None if rebase else _next_version(root)
-    ver_num = None if ver is None else int(ver.split("_")[1])
-    if ver is not None:
-        cur = _claim_base(ver)  # re-base the snapshot under the claim
-        _recheck_meta(root, ver, meta)  # conflict out on mid-gap meta evolution
-    keys_b = src.select(key).withColumn(_BUCKET, _bucket_expr(key, n_buckets))
-    touched = sorted(
-        str(r[_BUCKET]) for r in keys_b.select(_BUCKET).distinct().collect()
-    )
-    manifest = _read_manifest(root, cur) if cur is not None else {}
-    base_map = {b: manifest[b] for b in touched if b in manifest}
-
-    parts = []
-    if base_map:
-        base = _read_paths(spark, root, base_map, meta["schema"], meta.get("added"), meta.get("renames"), bool(meta.get("row_tracking")))
-        base = _apply_dv(
-            spark, root, base, meta, _read_dv(root, cur), buckets=touched
-        )
-        joined = base.join(
-            F.broadcast(src_pref), base[key] == src_pref["__src_key"], "left"
-        )
-        carry = [_ROW_ID] if row_tracking else []
-        matched = joined.filter(F.col("__src_present").isNotNull())
-        unmatched_target = joined.filter(F.col("__src_present").isNull()).select(
-            *cols, *carry
-        )
-        if when_matched_delete is not None:
-            matched = matched.filter(
-                ~F.coalesce(F.expr(when_matched_delete), F.lit(False))
-            )
-        if when_matched_set:
-            updated = matched.select(
-                *[
-                    F.expr(when_matched_set[c]).cast(schema[c].dataType).alias(c)
-                    if c in when_matched_set
-                    else F.col(c)
-                    for c in cols
-                ],
-                *carry,  # updates keep the target row's stable id
-            )
-            # generated columns re-derive from the POST-update base values
-            # (a second step — the select above still sees pre-update rows)
-            for name, col in gen_cols.items():
-                updated = updated.withColumn(
-                    name, F.expr(col["expr"]).cast(schema[name].dataType)
-                )
-        else:  # matched rows kept as-is (MERGE with only DELETE/INSERT clauses)
-            updated = matched.select(*cols, *carry)
-        parts.append(unmatched_target)
-        parts.append(updated)
-        new_rows = updated  # unmatched_target rows are carried unchanged —
-        # they satisfied the constraints when THEY were written
-        if insert_not_matched:
-            inserts = src.join(base.select(key), key, "left_anti")
-            if row_tracking:
-                inserts = _assign_row_ids(inserts, key, ver_num)
-            parts.append(inserts)
-            new_rows = new_rows.unionByName(inserts)
-    else:
-        new_rows = None
-        if insert_not_matched:
-            if row_tracking:
-                src = _assign_row_ids(src, key, ver_num)
-            parts.append(src)
-            new_rows = src
-
-    if not parts:
-        if ver is not None:
-            _release_claim(root, ver)  # fail-fast path claimed eagerly
-        return cur  # nothing to do
-    if new_rows is not None:
-        try:
-            _check_constraints(new_rows, meta, "merge")
-        except ConstraintViolation:
-            if ver is not None:
-                _release_claim(root, ver)  # fail-fast claimed eagerly —
-                # a rejected merge must not wedge the table for CLAIM_TTL_S
-            raise
-    merged = parts[0]
-    for p in parts[1:]:
-        merged = merged.unionByName(p)
-    merged = merged.withColumn(_BUCKET, _bucket_expr(key, n_buckets))
-    if rebase:
-        from uuid import uuid4
-
-        staging = os.path.join(root, _STAGING, f"mg_{os.getpid()}_{uuid4().hex}")
-        os.makedirs(os.path.dirname(staging), exist_ok=True)
-        _to_physical(merged, meta).write.mode("errorifexists").partitionBy(
-            _BUCKET
-        ).parquet(staging)
-        return _rebase_commit(
-            root,
-            staging,
-            touched,
-            _meta_fingerprint(meta),
-            cur,
-            manifest,
-            op="merge",
-            drop_touched_first=True,
-        )
-    os.makedirs(os.path.join(root, ver), exist_ok=True)
-    _to_physical(merged, meta).write.mode("overwrite").partitionBy(
-        _BUCKET
-    ).parquet(os.path.join(root, ver))
-    new_map = dict(manifest)
-    for b in touched:  # a bucket can empty out entirely (all rows deleted)
-        new_map.pop(b, None)
-    new_map.update(_written_buckets(root, ver))
-    _write_manifest(root, ver, new_map)
-    _carry_dv(root, ver, cleared=touched)
-    _write_commit(root, ver, "merge", touched)
-    _flip(root, ver)
-    return ver
+    rebase = occ == "rebase" and snapshot is not None and not row_tracking
+    return _commit_data(root, "merge", meta, snapshot, rewrite, rebase)[0]
 
 
 def vacuum(root: str, keep_last: int = 1) -> list[str]:
@@ -2979,38 +2547,26 @@ def rebucket(spark: SparkSession, root: str, n_buckets: int) -> str:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     if current_version(root) is None:
         raise ValueError(f"no current version under {root}")
-    ver = _next_version(root)
-    # resolve the snapshot UNDER the claim: read_current binds the manifest
-    # at call time, so reading before the claim could rewrite a stale state
-    # (with_row_ids: the rewrite must carry row identities, not remint them)
-    cur = read_current(spark, root, with_row_ids=True)
-    _to_physical(
-        cur.withColumn(_BUCKET, _bucket_expr(meta["key"], n_buckets)), meta
-    ).write.mode("errorifexists").partitionBy(_BUCKET).parquet(
-        os.path.join(root, ver)
-    )
-    _write_manifest(root, ver, _written_buckets(root, ver))
-    staged = {
-        "key": meta["key"],
-        "n_buckets": n_buckets,
-        "schema": meta["schema"],
-        "added": meta.get("added") or [],
-        "bucketed_since": int(ver.split("_")[1]),
-    }
-    if meta.get("dropped"):
-        staged["dropped"] = meta["dropped"]
-    _carry_constraints(meta, staged)
-    # Stage the new-layout meta INSIDE the version dir, then commit data
-    # and meta together with the single atomic pointer flip: a crash on
-    # either side of the flip leaves meta and current layout consistent
-    # (old/old before, new/new after — _read_meta prefers the current
-    # version's staged copy).  The root copy is a synced fast path only.
-    with open(os.path.join(root, ver, _META), "w") as fh:
-        json.dump(staged, fh)
-    _write_commit(root, ver, "rebucket", "*")
-    _flip(root, ver)
-    _sync_root_meta(root, staged)
-    return ver
+
+    def stage(ver: str) -> str:
+        # resolve the snapshot UNDER the claim: read_current binds the
+        # manifest at call time, so reading before the claim could rewrite
+        # a stale state (with_row_ids: the rewrite must carry row
+        # identities, not remint them)
+        meta = _read_meta(root)
+        rows = read_current(spark, root, with_row_ids=True)
+        dest = os.path.join(root, ver)
+        _write_buckets(rows.withColumn(_BUCKET, _bucket_expr(meta["key"], n_buckets)), meta, dest)
+        _write_manifest(root, ver, _written_buckets(root, ver))
+        # the new-layout meta commits with the data at the flip: a crash on
+        # either side leaves meta and current layout consistent
+        _stage_meta(
+            root, ver,
+            _replace_meta(meta, n_buckets=n_buckets, bucketed_since=int(ver.split("_")[1])),
+        )
+        return "*"
+
+    return _claim_first(root, "rebucket", stage)[0]
 
 
 def restore(root: str, version: int | None = None, tag: str | None = None) -> str:
@@ -3053,15 +2609,16 @@ def restore(root: str, version: int | None = None, tag: str | None = None) -> st
         raise ValueError(
             f"cannot restore {target}: referenced dirs vacuumed: {missing}"
         )
-    ver = _next_version(root)
-    os.makedirs(os.path.join(root, ver), exist_ok=True)
-    _write_manifest(root, ver, mapping)
-    # restore reproduces the TARGET's logical state, deletion vectors
-    # included (not the abandoned current's — that is what is rolled back)
-    _write_dv(root, ver, _read_dv(root, target))
-    _write_commit(root, ver, "restore", "*")
-    _flip(root, ver)
-    return ver
+
+    def stage(ver: str) -> str:
+        os.makedirs(os.path.join(root, ver))
+        _write_manifest(root, ver, mapping)
+        # restore reproduces the TARGET's logical state, deletion vectors
+        # included (not the abandoned current's — that is what is rolled back)
+        _write_dv(root, ver, _read_dv(root, target))
+        return "*"
+
+    return _claim_first(root, "restore", stage)[0]
 
 
 def create_tag(root: str, name: str, version: int | None = None) -> str:
@@ -3134,29 +2691,27 @@ def shallow_clone(src_root: str, dst_root: str) -> str:
         raise ValueError(f"no current version under {src_root}")
     if current_version(dst_root) is not None:
         raise ValueError(f"destination {dst_root} already has a table")
-    os.makedirs(dst_root, exist_ok=True)
-    ver = _next_version(dst_root)  # v_00000 under the clone's own claim
     src_abs = os.path.abspath(src_root)
-    mapping = {
-        b: os.path.join(src_abs, rel)
-        for b, rel in _read_manifest(src_root, cur).items()
-    }
-    os.makedirs(os.path.join(dst_root, ver))
-    _write_manifest(dst_root, ver, mapping)
-    # pending deletion vectors are part of the cloned logical state; like
-    # the data files they are referenced in place (absolute paths)
-    _write_dv(
-        dst_root,
-        ver,
-        {
-            b: [os.path.join(src_abs, rel) for rel in rels]
-            for b, rels in _read_dv(src_root, cur).items()
-        },
-    )
-    _sync_root_meta(dst_root, meta)
-    _write_commit(dst_root, ver, "clone", "*")
-    _flip(dst_root, ver)
-    return ver
+
+    def stage(ver: str) -> str:  # v_00000 under the clone's own claim
+        os.makedirs(os.path.join(dst_root, ver))
+        _write_manifest(
+            dst_root, ver,
+            {b: os.path.join(src_abs, rel) for b, rel in _read_manifest(src_root, cur).items()},
+        )
+        # pending deletion vectors are part of the cloned logical state; like
+        # the data files they are referenced in place (absolute paths)
+        _write_dv(
+            dst_root, ver,
+            {
+                b: [os.path.join(src_abs, rel) for rel in rels]
+                for b, rels in _read_dv(src_root, cur).items()
+            },
+        )
+        _sync_root_meta(dst_root, meta)
+        return "*"
+
+    return _claim_first(dst_root, "clone", stage)[0]
 
 
 # ops whose commit can never change a ROW of the logical table: schema /
@@ -3225,10 +2780,7 @@ def read_changes(
             man = {b: rel for b, rel in man.items() if b in wanted}
         if not man:
             return None
-        df = _read_paths(
-            spark, root, man, meta["schema"], meta.get("added"),
-            meta.get("renames"),
-        )
+        df = _read_paths(spark, root, meta, man)
         df = _apply_dv(
             spark, root, df, meta, _read_dv(root, _version_name(vn)),
             buckets=buckets,

@@ -208,7 +208,7 @@ def test_dv_rebase_conflict_on_vector_overlap(spark, tmp_path):
     # force the general case: delete the exact bucket our upsert touches
     M.delete_where_dv(spark, root, F.col("id") == 0)
     with pytest.raises(M.CommitConflict):
-        M._upsert_rebase(spark, root, deduped, "id", meta, snapshot)
+        M._upsert(spark, root, deduped, "id", None, "rebase", meta, snapshot)
     # the failed rebase left no staging behind
     staging = os.path.join(root, M._STAGING)
     assert not os.path.isdir(staging) or not os.listdir(staging)

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from mongraph_spark.sources.merge import (
@@ -821,3 +822,112 @@ def test_bucketed_upsert_job_budget(spark, tmp_path, spark_jobs):
     assert len(jobs) <= 6, jobs
     got = {r.id: r.name for r in read_current(spark, root).filter(F.col("id").isin(5, 500)).collect()}
     assert got == {5: "x", 500: "y"}
+
+
+def _small_table(spark, root):
+    """16 rows over 4 buckets: the fixture the per-commit job pins and the
+    rejection tests share."""
+    init_table(
+        spark.createDataFrame([(i, f"n{i}", 0) for i in range(16)], "id long, name string, rev long"),
+        root, key="id", n_buckets=4,
+    )
+
+
+# Spark jobs per store request on the 16-row, 4-bucket fixture, counted by
+# job tag and applied in this order on one table.
+_STORE_JOBS = [
+    ("upsert", 6),
+    ("merge_into", 8),
+    ("delete_where", 3),
+    ("delete_where_dv", 1),
+    ("compact", 3),
+    ("add_column", 0),
+    ("read_point", 1),
+]
+
+
+
+@pytest.mark.parametrize("occ", ["failfast", "rebase"])
+def test_store_request_job_counts(spark, tmp_path, spark_jobs, occ):
+    """Each commit and point read runs a fixed number of Spark jobs; the
+    rebase mode computes the same rewrite, so it runs the same counts."""
+    from mongraph_spark.sources import merge as M
+
+    root = str(tmp_path / "tbl")
+    _small_table(spark, root)
+    rows = "id long, name string, rev long"
+    ops = {
+        "upsert": lambda: M.upsert(
+            spark, root, spark.createDataFrame([(3, "u", 1), (100, "new", 1)], rows),
+            key="id", occ=occ,
+        ),
+        "merge_into": lambda: M.merge_into(
+            spark, root, spark.createDataFrame([(4, "m", 2), (101, "ins", 2)], rows),
+            when_matched_set={"name": "src_name"}, occ=occ,
+        ),
+        "delete_where": lambda: M.delete_where(spark, root, F.col("id") == 5, occ=occ),
+        "compact": lambda: M.compact(spark, root, occ=occ),
+        "read_point": lambda: M.read_point(spark, root, 7).collect(),
+        "add_column": lambda: M.add_column(root, "extra", "long", 0),
+        "delete_where_dv": lambda: M.delete_where_dv(spark, root, F.col("id") == 6),
+    }
+    got = [(op, len(spark_jobs(ops[op])[1])) for op, _ in _STORE_JOBS]
+    assert got == _STORE_JOBS
+    assert M.current_version(root) == "v_00006"
+    ids = sorted(r.id for r in M.read_current(spark, root).collect())
+    assert ids == sorted(set(range(16)) - {5, 6} | {100, 101})
+
+
+@pytest.mark.parametrize("op", ["upsert", "merge_into", "delete_where", "compact"])
+def test_unknown_occ_is_rejected(spark, tmp_path, op):
+    """``occ`` is "failfast" or "rebase"; anything else raises before any
+    claim or compute instead of silently meaning fail-fast."""
+    from mongraph_spark.sources import merge as M
+
+    root = str(tmp_path / "tbl")
+    _small_table(spark, root)
+    batch = spark.createDataFrame([(3, "u", 1)], "id long, name string, rev long")
+    call = {
+        "upsert": lambda: M.upsert(spark, root, batch, key="id", occ="Rebase"),
+        "merge_into": lambda: M.merge_into(spark, root, batch, occ="Rebase"),
+        "delete_where": lambda: M.delete_where(spark, root, F.col("id") == 3, occ="Rebase"),
+        "compact": lambda: M.compact(spark, root, occ="Rebase"),
+    }[op]
+    with pytest.raises(ValueError, match="occ"):
+        call()
+    assert M.current_version(root) == "v_00000"
+    assert not [f for f in os.listdir(root) if f.endswith(".claim")]
+
+
+def test_rejected_init_leaves_no_claim(spark, tmp_path):
+    """An init_table that fails validation claims nothing: a corrected
+    init on the same root commits v_00000."""
+    from mongraph_spark.sources import merge as M
+
+    root = str(tmp_path / "tbl")
+    df = spark.createDataFrame([(i, f"n{i}") for i in range(4)], "id long, name string")
+    with pytest.raises(ValueError, match="row_tracking"):
+        M.init_table(df, root, row_tracking=True)
+    assert M.init_table(df, root, key="id", n_buckets=2, row_tracking=True) == "v_00000"
+    assert M.read_current(spark, root).count() == 4
+
+
+def test_only_commit_helpers_claim_and_flip():
+    """Every version is claimed and flipped by the commit helpers, so each
+    commit releases its claim on error in one place."""
+    import ast
+    import pathlib
+
+    from mongraph_spark.sources import merge as M
+
+    helpers = {"_claim_next", "_claim_first"}
+    guarded = {"_next_version", "_claim_next", "_flip"}
+    tree = ast.parse(pathlib.Path(M.__file__).read_text())
+    offenders = [
+        f"{fn.name}:{node.lineno}"
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef) and fn.name not in helpers
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Name) and node.id in guarded
+    ]
+    assert offenders == []

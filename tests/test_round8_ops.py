@@ -69,8 +69,8 @@ def test_rebase_disjoint_stale_snapshot_commits(spark, tmp_path):
     b_batch = spark.createDataFrame(
         [(idb, "B", 1)], "id long, name string, rev long"
     )
-    ver = M._upsert_rebase(
-        spark, root, M._dedupe_updates(b_batch, "id", "rev"), "id",
+    ver = M._upsert(
+        spark, root, b_batch, "id", "rev", "rebase",
         meta_v0, "v_00000",
     )
     assert ver == "v_00002" and M.current_version(root) == "v_00002"
@@ -104,8 +104,8 @@ def test_rebase_overlapping_buckets_conflicts(spark, tmp_path):
         [(idc, "C", 1)], "id long, name string, rev long"
     )
     with pytest.raises(M.CommitConflict, match="overlapping buckets"):
-        M._upsert_rebase(
-            spark, root, M._dedupe_updates(b_batch, "id", "rev"), "id",
+        M._upsert(
+            spark, root, b_batch, "id", "rev", "rebase",
             meta_v0, "v_00000",
         )
     assert M.current_version(root) == "v_00001"  # nothing committed
@@ -133,8 +133,8 @@ def test_rebase_whole_table_and_meta_changes_conflict(spark, tmp_path):
         [(idb, "B", 1)], "id long, name string, rev long"
     )
     with pytest.raises(M.CommitConflict, match="whole-table write set"):
-        M._upsert_rebase(
-            spark, root, M._dedupe_updates(batch, "id", "rev"), "id",
+        M._upsert(
+            spark, root, batch, "id", "rev", "rebase",
             meta_v0, "v_00000",
         )
 
@@ -142,8 +142,8 @@ def test_rebase_whole_table_and_meta_changes_conflict(spark, tmp_path):
     meta_now = M._read_meta(root)
     M.add_column(root, "flag", "long", 7)
     with pytest.raises(M.CommitConflict, match="metadata changed"):
-        M._upsert_rebase(
-            spark, root, M._dedupe_updates(batch, "id", "rev"), "id",
+        M._upsert(
+            spark, root, batch, "id", "rev", "rebase",
             meta_now, M.current_version(root),
         )
 
@@ -158,8 +158,8 @@ def test_rebase_whole_table_and_meta_changes_conflict(spark, tmp_path):
     )
     os.unlink(os.path.join(root2, "v_00001", M._COMMIT))
     with pytest.raises(M.CommitConflict, match="no commit record"):
-        M._upsert_rebase(
-            spark, root2, M._dedupe_updates(batch, "id", "rev"), "id",
+        M._upsert(
+            spark, root2, batch, "id", "rev", "rebase",
             meta2, "v_00000",
         )
 
@@ -223,8 +223,8 @@ def test_rebase_intervening_compact_is_safe(spark, tmp_path):
     batch = spark.createDataFrame(
         [(idb, "B", 9)], "id long, name string, rev long"
     )
-    out = M._upsert_rebase(
-        spark, root, M._dedupe_updates(batch, "id", "rev"), "id",
+    out = M._upsert(
+        spark, root, batch, "id", "rev", "rebase",
         meta_now, snap_before_compact,
     )
     assert M.current_version(root) == out

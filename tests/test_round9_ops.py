@@ -161,7 +161,6 @@ def test_delete_rebase_predicate_recheck_conflicts(spark, tmp_path):
     M.init_table(_base(spark), root, key="id", n_buckets=4)
     ida, idb, _ = _pick_disjoint_and_overlapping(spark)
     meta_v0 = M._read_meta(root)
-    keep = ~F.coalesce(F.col("name").startswith("doomed"), F.lit(False))
 
     # plant a doomed row in ida's bucket so the delete has a write set
     M.upsert(
@@ -184,9 +183,8 @@ def test_delete_rebase_predicate_recheck_conflicts(spark, tmp_path):
         key="id", order_col="rev",
     )
     with pytest.raises(M.CommitConflict, match="matching the DELETE"):
-        M._delete_rebase(
-            spark, root,
-            F.col("name").startswith("doomed"), keep, meta, snapshot,
+        M._delete_where(
+            spark, root, F.col("name").startswith("doomed"), "rebase", meta, snapshot
         )
     # whole-closure retry against the advanced snapshot deletes BOTH
     M.delete_where(
@@ -260,7 +258,7 @@ def test_compact_rebase_skips_overwritten_bucket(spark, tmp_path):
         ),
         key="id", order_col="rev",
     )
-    ver, committed = M._compact_rebase(spark, root, meta, snapshot, manifest, plan)
+    ver, committed = M._compact(spark, root, meta, snapshot, lambda _snap: plan, "rebase")
     assert committed == sorted([b_b])  # ida's bucket skipped, idb's committed
     cur = M.read_current(spark, root)
     assert cur.filter(F.col("id") == ida).first().name == "newer"  # winner kept
@@ -334,7 +332,6 @@ def test_compact_rebase_all_skipped_is_noop(spark, tmp_path):
     _fragment(spark, root, [ida])
     meta = M._read_meta(root)
     snapshot = M.current_version(root)
-    manifest = M._read_manifest(root, snapshot)
     b_a = _bucket_of(spark, [ida])[ida]
     plan = {b_a: 1}
     M.upsert(  # rewrites ida's bucket after the read
@@ -345,9 +342,7 @@ def test_compact_rebase_all_skipped_is_noop(spark, tmp_path):
         key="id", order_col="rev",
     )
     cur_before = M.current_version(root)
-    out, committed = M._compact_rebase(
-        spark, root, meta, snapshot, manifest, plan
-    )
+    out, committed = M._compact(spark, root, meta, snapshot, lambda _snap: plan, "rebase")
     assert out == cur_before and committed == []
     next_claim = M._claim_path(
         root, M._version_name(int(cur_before.split("_")[1]) + 1)

@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from mongraph_spark.sources import merge as M
@@ -84,9 +85,10 @@ def test_check_constraint_survives_schema_and_layout_commits(spark, tmp_path):
 
 
 def test_rejected_merge_releases_claim_immediately(spark, tmp_path):
-    """merge_into's fail-fast path claims BEFORE the constraint check; a
-    rejected merge must release that claim so the very next writer
-    commits instead of waiting out CLAIM_TTL_S."""
+    """merge_into's fail-fast path claims BEFORE the constraint check and
+    before its update expressions resolve; a rejected merge must release
+    that claim so the very next writer commits instead of waiting out
+    CLAIM_TTL_S."""
     root = _tbl(spark, tmp_path)
     M.add_check_constraint(spark, root, "v_nonneg", "v >= 0")
     with pytest.raises(M.ConstraintViolation):
@@ -100,6 +102,17 @@ def test_rejected_merge_releases_claim_immediately(spark, tmp_path):
     # immediate follow-up write succeeds without a conflict/wait
     ver = M.upsert(spark, root, spark.createDataFrame([(8, "x", 1)], "id long, s string, v long"), key="id")
     assert ver == "v_00002"
+    # an update expression that does not resolve fails after the claim too
+    with pytest.raises(AnalysisException):
+        M.merge_into(
+            spark,
+            root,
+            spark.createDataFrame([(1, "n1", 0)], "id long, s string, v long"),
+            when_matched_set={"s": "no_such_col"},
+        )
+    assert _no_claims(root)
+    ver = M.upsert(spark, root, spark.createDataFrame([(9, "y", 1)], "id long, s string, v long"), key="id")
+    assert ver == "v_00003"
 
 
 def test_add_constraint_conflicts_inflight_rebase(spark, tmp_path):
